@@ -60,10 +60,6 @@ object EntryQueries {
         .build(spark, corpus(spark, sfDir),
           IndexConfig(cfg, fields =
             Seq("body", "title", "url", "inlink", "keywords"))).cacheAll()
-      // the compressed block table is a build product (the persisted
-      // serving form in IndexStore snapshots) — cache it like the other
-      // index tables so BMW queries measure serving, not re-encoding
-      idx.blocks.cache()
       Ctx(idx, new SearchEngine(idx, cfg))
     })
 
@@ -201,13 +197,13 @@ object EntryQueries {
     "q_wand" -> scoredQ("#WAND(0.7 spark 0.3 merge)", IndriModel, 6),
     "q_wsum" -> scoredQ("#WSUM(0.4 spark 0.6 merge)", IndriModel),
 
-    // the reference's flagship SDM shape through the PRUNED Indri
-    // block-max path (IndriBlockMax), oracle-gated against an
-    // independent SQL re-derivation — rank by exact score, report
+    // the reference's flagship SDM shape, which search routes to the
+    // pruned Indri block-max engine (IndriBlockMax), oracle-gated against
+    // an independent SQL re-derivation — rank by exact score, report
     // round 6 (StrictMath vs libm pow ulp)
     "q_sdm_topk" -> ((s, d) => {
       val c = ctx(s, d)
-      c.engine.searchPruned("#WAND(0.7 #AND(spark merge) " +
+      c.engine.search("#WAND(0.7 #AND(spark merge) " +
           "0.2 #NEAR/1(hash join) 0.1 #WINDOW/8(spark merge batch))",
           IndriModel, 100)
         .join(docIdMap(c), "docid")
@@ -265,13 +261,13 @@ object EntryQueries {
         .select(col("doc_id"), col("len")).orderBy("doc_id")
     }),
 
-    // --- block-max WAND pruned top-k (north-rule extension): same
-    // answer as q_bm25_topk, independently re-derived by the DuckDB
-    // oracle — the pruned path is verified against SQL, not just
-    // against our own exhaustive planner
+    // --- block-max WAND pruned top-k (north-rule extension): bag-of-
+    // words BM25, which search routes to BlockMaxWand, independently
+    // re-derived by the DuckDB oracle — the pruned path is verified
+    // against SQL, not just against our own exhaustive planner
     "q_bmw_topk" -> ((s, d) => {
       val c = ctx(s, d)
-      c.engine.searchPruned("spark hash join merge", Bm25Model, 100)
+      c.engine.search("spark hash join merge", Bm25Model, 100)
         .join(docIdMap(c), "docid")
         .select(col("doc_id"), col("rank"), col("score"))
         .orderBy("rank")

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.analysis.{AnalyzerConfig, Stemming}
-import graft.exec.Planner
+import graft.exec.{BlockMaxWand, IndriBlockMax, Planner}
 import graft.index.Index
 import graft.model._
 import org.apache.spark.sql.DataFrame
@@ -36,13 +36,16 @@ final class SearchEngine(val index: Index,
         "the index, or query with AnalyzerConfig.englishLight / code.")
   }
 
-  /** (docid, score) for a raw query string (post default-op wrap). */
-  def scores(queryText: String, model: RetrievalModel): DataFrame = {
-    val ast = QueryParser.parseQuery(queryText, model, analyzer)
+  private def parse(queryText: String, model: RetrievalModel): Qry =
+    QueryParser.parseQuery(queryText, model, analyzer)
       .getOrElse(throw new IllegalArgumentException(
         s"Query syntax is incorrect. $queryText"))
-    new Planner(index, model).plan(ast)
-  }
+
+  /** (docid, score) of EVERY matching document for a raw query string
+    * (post default-op wrap), from the exhaustive planner — the reference
+    * that the pruned routes of [[search]] are rank-identical to. */
+  def scores(queryText: String, model: RetrievalModel): DataFrame =
+    new Planner(index, model).plan(parse(queryText, model))
 
   /** O18 internal↔external id lookup (`QryEval/src/QryEval.java:295-323`):
     * pushed-down point filters against the docs table (the reference's
@@ -143,36 +146,60 @@ final class SearchEngine(val index: Index,
     (learned, combined)
   }
 
-  /** Pruned top-k over the compressed block table:
-    *  - BM25 bag-of-words `#SUM` (free text under BM25 always is — the
-    *    default-op wrap) → block-max WAND ([[graft.exec.BlockMaxWand]]);
-    *  - Indri product-form `#WAND`/`#AND` trees — including the
-    *    reference's flagship SDM shape — → Dirichlet block-max pruning
-    *    ([[graft.exec.IndriBlockMax]]).
-    * Falls back to the exhaustive planner for any other shape.
-    * Rank-identical to [[search]] by construction (property-tested in
-    * BlockMaxWandSpec / IndriBlockMaxSpec). */
-  def searchPruned(queryText: String, model: RetrievalModel,
-                   k: Int = 100): DataFrame = model match {
-    case bm: graft.model.BM25 =>
-      val ast = QueryParser.parseQuery(queryText, model, analyzer)
-        .getOrElse(throw new IllegalArgumentException(
-          s"Query syntax is incorrect. $queryText"))
-      bagOfWords(ast) match {
-        case Some((children, field)) =>
-          rank(graft.exec.BlockMaxWand.topK(
-            index, index.blocks, bm, children, field, k), k)
-        case None => searchAst(ast, model, k)
+  /** Ranked top-k: descending score, ascending extid tiebreak
+    * (`ScoreList.java:54-80`) — the tiebreak is part of the distributed
+    * sort key, so `orderBy(...).limit(k)` lowers to Catalyst's
+    * TakeOrderedAndProject (the reference's bounded heap,
+    * `QryEval.java:640-660`, distributed). The candidates come from the
+    * route [[routed]] picks from the query's shape. */
+  def search(queryText: String, model: RetrievalModel,
+             k: Int = 100): DataFrame =
+    rank(routed(queryText, model, k)._2, k, tieProne(model))
+
+  /** The query router: picks the execution route from the parsed AST and
+    * returns it with the (docid, score) candidates of that route.
+    *  - BM25 `#SUM` of plain terms in one field (free text under BM25
+    *    always is — the default-op wrap) → block-max WAND
+    *    ([[graft.exec.BlockMaxWand]]);
+    *  - an Indri product-form `#WAND`/`#AND` tree with a term leaf — the
+    *    reference's flagship SDM shape, PRF's combined query — →
+    *    Dirichlet block-max pruning ([[graft.exec.IndriBlockMax]]), which
+    *    declines multi-field and zero-ctf trees;
+    *  - anything else → the exhaustive [[Planner]].
+    * Every route is rank-identical to `rank(scores(...))` (property-tested
+    * in BlockMaxWandSpec / IndriBlockMaxSpec / RoutingSpec). */
+  private[graft] def routed(queryText: String, model: RetrievalModel,
+                            k: Int): (Route, DataFrame) = {
+    val ast = parse(queryText, model)
+    def exhaustive(reason: String) =
+      (Route.Exhaustive(reason), new Planner(index, model).plan(ast))
+    model match {
+      case bm: BM25 => bagOfWords(ast) match {
+        case Some((terms, field)) =>
+          (Route.Bmw(s"bag-of-words #SUM in field $field"),
+            BlockMaxWand.topK(index, index.blocks, bm, terms, field, k))
+        case None => exhaustive("not a #SUM of plain terms in one field")
       }
-    case ind: graft.model.Indri =>
-      val ast = QueryParser.parseQuery(queryText, model, analyzer)
-        .getOrElse(throw new IllegalArgumentException(
-          s"Query syntax is incorrect. $queryText"))
-      graft.exec.IndriBlockMax.topK(index, Qry.asSl(ast), ind, k) match {
-        case Some(cands) => rank(cands, k)
-        case None        => searchAst(ast, model, k)
-      }
-    case _ => search(queryText, model, k)
+      case ind: Indri =>
+        val sl = Qry.asSl(ast)
+        // a pure-positional tree gives the block loop nothing to skip
+        if (!hasTermLeaf(sl)) exhaustive("no term leaf")
+        else IndriBlockMax.topK(index, index.blocks, sl, ind, k)
+          .fold(exhaustive, (Route.IndriBlockMax("product-form tree"), _))
+      case _ => exhaustive("boolean model")
+    }
+  }
+
+  /** A scored plain term anywhere in the score tree (positional
+    * operators below a #SCORE do not count). */
+  private def hasTermLeaf(q: Qry): Boolean = q match {
+    case Score(il)   => il.isInstanceOf[Term]
+    case And(as)     => as.exists(hasTermLeaf)
+    case Or(as)      => as.exists(hasTermLeaf)
+    case Sum(as)     => as.exists(hasTermLeaf)
+    case WAnd(_, as) => as.exists(hasTermLeaf)
+    case WSum(_, as) => as.exists(hasTermLeaf)
+    case _: Il       => false
   }
 
   /** `#SUM(t1 t2 ...)` over one field → the child-ordered term bag. */
@@ -190,25 +217,13 @@ final class SearchEngine(val index: Index,
     case _ => None
   }
 
-  /** Ranked top-k: descending score, ascending extid tiebreak
-    * (`ScoreList.java:54-80`) — the tiebreak is part of the distributed
-    * sort key, so `orderBy(...).limit(k)` lowers to Catalyst's
-    * TakeOrderedAndProject (the reference's bounded heap,
-    * `QryEval.java:640-660`, distributed). */
-  def search(queryText: String, model: RetrievalModel,
-             k: Int = 100): DataFrame =
-    rank(scores(queryText, model), k, tieProne(model))
-
-  def searchAst(ast: Qry, model: RetrievalModel, k: Int = 100): DataFrame =
-    rank(new Planner(index, model).plan(ast), k, tieProne(model))
-
   /** Coarse-score models (constant 1.0 / small-integer tf scores) tie
     * MANY docs at the k boundary, so their rank() calls routinely take
     * the overflow branch — cache the narrow score frame for them so that
     * branch reuses phase 1's computation instead of re-executing the
     * query. Float-scored models (BM25/Indri) tie only on duplicate docs
     * and skip the cache. */
-  private def tieProne(model: RetrievalModel): Boolean = model match {
+  private[graft] def tieProne(model: RetrievalModel): Boolean = model match {
     case UnrankedBoolean | RankedBoolean => true
     case _                               => false
   }
@@ -330,16 +345,17 @@ final class SearchEngine(val index: Index,
     * interleaves their tasks instead of idling between small jobs) and
     * the surviving docids of ALL queries resolve extids in ONE docs
     * point-lookup job. The rare boundary-overflow passes stay per-query.
-    * Per-query results are identical to [[rank]] by construction (same
-    * classify/boundary/finalize helpers). */
+    * Per-query results are identical to [[search]] by construction (same
+    * route and classify/boundary/finalize helpers). */
   def searchBatch(queries: Seq[(Int, String)], model: RetrievalModel,
                   k: Int = 100): Seq[(Int, Seq[(Long, String, Int, Double)])] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val cache = tieProne(model)
-    // plan serially: parsing + leaf-stat lookups mutate planner caches
+    // route and plan serially: parsing + leaf-stat lookups mutate
+    // planner caches
     val planned: Seq[(Int, DataFrame)] = queries.map { case (qid, q) =>
-      qid -> narrowScores(scores(q, model), cache)
+      qid -> narrowScores(routed(q, model, k)._2, cache)
     }
     try {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -377,6 +393,14 @@ final class SearchEngine(val index: Index,
       }
     } finally if (cache) planned.foreach(_._2.unpersist(false)) // safety net
   }
+}
+
+/** The execution route [[SearchEngine.routed]] picked, and why. */
+private[graft] sealed trait Route { def reason: String }
+private[graft] object Route {
+  final case class Bmw(reason: String) extends Route
+  final case class IndriBlockMax(reason: String) extends Route
+  final case class Exhaustive(reason: String) extends Route
 }
 
 object TrecWriter {

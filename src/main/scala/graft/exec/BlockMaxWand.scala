@@ -241,11 +241,10 @@ object BlockMaxWand {
     val n = index.stats.numDocs
     val fs = index.fieldStats(field)
     val avgDocLen = fs.avgDocLen
-    val dfMap = index.termStats
-      .filter($"field" === field && $"term".isin(terms: _*))
-      .select($"term", $"df").as[(String, Long)].collect().toMap
+    // the exhaustive planner's leaf-stat job: same field validation
+    val dfMap = Planner.leafStats(index, terms.map((_, field)))
     val params: Map[String, TermParams] = terms.flatMap { t =>
-      dfMap.get(t).map { df =>
+      dfMap.get((t, field)).map { case (df, _) =>
         val rsj = StrictMath.log((n - df + 0.5) / (df + 0.5)).toFloat
         t -> TermParams(rsj, mult(t), 0.0)
       }

@@ -375,131 +375,126 @@ object IndriBlockMax {
   // ------------------------------------------------------------ driver
 
   /** Pruned (docid, score) top-k candidates for a product-form Indri
-    * query, or None when the shape/statistics force the exhaustive path
-    * (non-product operators, multi-field leaves, or a zero-ctf leaf —
-    * whose default score is 0, zeroing every document identically). */
-  def topK(index: Index, ast: Sl, model: Indri, k: Int)
-      : Option[DataFrame] = topK(index, index.blocks, ast, model, k)
-
+    * query, or Left(reason) when the shape or the statistics call for the
+    * exhaustive path: non-product operators, multi-field leaves, or a
+    * zero-ctf leaf (its default score is 0, zeroing every document
+    * identically). */
   def topK(index: Index, blocks: org.apache.spark.sql.Dataset[PostingBlock],
-           ast: Sl, model: Indri, k: Int): Option[DataFrame] =
-    extract(ast).flatMap { case (tree, leaves) =>
-      val spark = index.spark
-      import spark.implicits._
-      val fields = leaves.flatMap(l => fieldsOf(l._2)).toSet
-      if (fields.size != 1) return None
-      val field = fields.head
-      val cl = index.fieldStats(field).collectionLength
-      if (cl <= 0) return None
-      val planner = new Planner(index, model)
-      planner.prepare(ast) // leaf stats for #WINDOW's df-ascending sort
-
-      // split leaves: terms read blocks; positional lists are evaluated
-      // exhaustively (small) and shipped per segment
-      val termLeaves = leaves.collect { case (id, Term(t, _)) => (id, t) }
-      val listLeaves = leaves.collect {
-        case (id, il) if !il.isInstanceOf[Term] => (id, il)
-      }
-
-      // per-leaf ctf → mle (float quotient, QryopSlScore.java:200);
-      // planner.plan initializes leaf stats for Term lookups
-      val termStats = index.termStats
-        .filter($"field" === field &&
-          $"term".isin(termLeaves.map(_._2).distinct: _*))
-        .select($"term", $"ctf").as[(String, Long)].collect().toMap
-
-      // Positional-leaf segment pruning (round-4 VERDICT item 3): a
-      // #NEAR/#WINDOW leaf can only match in segments where EVERY
-      // argument co-occurs; per-term segment presence comes from block
-      // METADATA (no decode, one tiny aggregate). Ineligible segments
-      // are cut from the leaf's exhaustive evaluation by docid-range
-      // predicates that Catalyst pushes through the k-way join into the
-      // postings scans — with a rare term among hot ones, the hot terms'
-      // positional scans skip whole segment partitions. EXACT: a pruned
-      // segment holds no matches, so the lists and the leaf's ctf (the
-      // Indri pMLE numerator) are unchanged.
-      val memberTerms = listLeaves.flatMap(l => termsOf(l._2)).toSet
-      val segsByTerm: Map[String, Set[Long]] =
-        if (memberTerms.isEmpty) Map.empty
-        else blocks.toDF()
-          .filter($"field" === field && $"term".isin(memberTerms.toSeq: _*))
-          .select($"term", $"segment").distinct()
-          .as[(String, Long)].collect()
-          .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toSet }
-      val listRes = listLeaves.map { case (id, il) =>
-        val elig = eligibleSegs(il, segsByTerm)
-        val touched = termsOf(il)
-          .flatMap(t => segsByTerm.getOrElse(t, Set.empty))
-        val res =
-          if (elig.isEmpty)
-            // no co-occurrence anywhere — empty list, ctf 0 (the zero-mle
-            // guard below routes to the exhaustive path, like today)
-            planner.planIlRestricted(il, lit(false))
-          else if (elig.size < touched.size)
-            segRangePred(elig) match {
-              case Some(pred) => planner.planIlRestricted(il, pred)
-              case None       => planner.planIl(il) // too fragmented
-            }
-          else planner.planIl(il) // every touched segment is eligible
-        (id, res)
-      }
-      val mles: Map[Int, Float] =
-        (termLeaves.map { case (id, t) =>
-          id -> (termStats.getOrElse(t, 0L).toFloat / cl)
-        } ++ listRes.map { case (id, r) => id -> (r.ctf().toFloat / cl) })
-          .toMap
-      if (mles.values.exists(_ <= 0f)) return None // all-zero scores
-
-      val (mu, lambda) = (model.mu, model.lambda)
-      val uMap = mutable.Map.empty[Int, Double]
-      exponents(tree, 1.0, uMap)
-      val u = uMap.toMap
-      val logDefUb: Map[Int, Double] = mles.map { case (id, m) =>
-        val raw = math.log(dflt(1L, mu, lambda, m))
-        id -> (raw + Eps * (1.0 + math.abs(raw)))
-      }
-      val termOf = termLeaves.toMap // id -> term
-      val idsByTerm = termLeaves.groupBy(_._2).map {
-        case (t, ids) => t -> ids.map(_._1)
-      }
-
-      // (leafId, segment, docid, tf, len) rows of the positional lists
-      val listRows: org.apache.spark.sql.Dataset[(Int, Long, Long, Int, Long)] =
-        listRes.map { case (id, r) =>
-          r.df.select(
-            org.apache.spark.sql.functions.lit(id).as("leafId"),
-            org.apache.spark.sql.functions
-              .shiftright($"docid", graft.index.IndexBuilder.BucketShift)
-              .as("segment"),
-            $"docid", $"tf", $"len")
-            .as[(Int, Long, Long, Int, Long)]
-        } match {
-          case Seq()       => spark.emptyDataset[(Int, Long, Long, Int, Long)]
-          case s @ Seq(_*) => s.reduce(_ union _)
-        }
-
-      val blocksK = blocks
-        .filter($"field" === field &&
-          $"term".isin(termLeaves.map(_._2).distinct: _*))
-        .groupByKey(_.segment)
-      val listsK = listRows.groupByKey(_._2)
-
-      val treeB = tree
-      val mlesB = mles
-      Some(blocksK.cogroup(listsK) { (_, bIt, lIt) =>
-        val byTerm = bIt.toArray.groupBy(_.term)
-        val listArr = lIt.toArray.groupBy(_._1)
-        val cursors: Map[Int, Cursor] =
-          (byTerm.iterator.flatMap { case (t, bks) =>
-            val sortedBks = bks.sortBy(_.blockId)
-            idsByTerm(t).map(id =>
-              id -> (new BlockCursor(sortedBks, mu, lambda, mlesB(id)): Cursor))
-          } ++ listArr.iterator.map { case (id, rows) =>
-            id -> (new ListCursor(
-              rows.map(r => (r._3, r._4, r._5)).sortBy(_._1),
-              mu, lambda, mlesB(id)): Cursor)
-          }).toMap
-        segmentTopK(cursors, treeB, u, logDefUb, mu, lambda, mlesB, k)
-      }.toDF("docid", "score"))
+           ast: Sl, model: Indri, k: Int): Either[String, DataFrame] = {
+    val spark = index.spark
+    import spark.implicits._
+    val (tree, leaves) = extract(ast) match {
+      case Some(x) => x
+      case None    => return Left("not a product-form #WAND/#AND tree")
     }
+    val fields = leaves.flatMap(l => fieldsOf(l._2)).toSet
+    if (fields.size != 1) return Left("leaves span more than one field")
+    val field = fields.head
+    val cl = index.fieldStats(field).collectionLength
+    if (cl <= 0) return Left(s"field $field holds no documents")
+    // split leaves: terms read blocks; positional lists are evaluated
+    // exhaustively (small) and shipped per segment
+    val termLeaves = leaves.collect { case (id, Term(t, _)) => (id, t) }
+    val planner = new Planner(index, model)
+    // one leaf-stat job: #WINDOW's df-ascending sort and every term
+    // leaf's ctf → mle (float quotient, QryopSlScore.java:200)
+    val stats = planner.prepare(ast)
+    val termMles = termLeaves.map { case (id, t) =>
+      id -> (stats.getOrElse((t, field), (0L, 0L))._2.toFloat / cl)
+    }
+    if (termMles.exists(_._2 <= 0f)) return Left("zero-ctf leaf")
+    val listLeaves = leaves.collect {
+      case (id, il) if !il.isInstanceOf[Term] => (id, il)
+    }
+
+    // Positional-leaf segment pruning (round-4 VERDICT item 3): a
+    // #NEAR/#WINDOW leaf can only match in segments where EVERY
+    // argument co-occurs; per-term segment presence comes from block
+    // METADATA (no decode, one tiny aggregate). Ineligible segments
+    // are cut from the leaf's exhaustive evaluation by docid-range
+    // predicates that Catalyst pushes through the k-way join into the
+    // postings scans — with a rare term among hot ones, the hot terms'
+    // positional scans skip whole segment partitions. EXACT: a pruned
+    // segment holds no matches, so the lists and the leaf's ctf (the
+    // Indri pMLE numerator) are unchanged.
+    val memberTerms = listLeaves.flatMap(l => termsOf(l._2)).toSet
+    val segsByTerm: Map[String, Set[Long]] =
+      if (memberTerms.isEmpty) Map.empty
+      else blocks.toDF()
+        .filter($"field" === field && $"term".isin(memberTerms.toSeq: _*))
+        .select($"term", $"segment").distinct()
+        .as[(String, Long)].collect()
+        .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toSet }
+    val listRes = listLeaves.map { case (id, il) =>
+      val elig = eligibleSegs(il, segsByTerm)
+      val touched = termsOf(il)
+        .flatMap(t => segsByTerm.getOrElse(t, Set.empty))
+      val res =
+        if (elig.isEmpty)
+          // no co-occurrence anywhere — empty list, ctf 0 (the zero-mle
+          // guard below routes to the exhaustive path)
+          planner.planIlRestricted(il, lit(false))
+        else if (elig.size < touched.size)
+          segRangePred(elig) match {
+            case Some(pred) => planner.planIlRestricted(il, pred)
+            case None       => planner.planIl(il) // too fragmented
+          }
+        else planner.planIl(il) // every touched segment is eligible
+      (id, res)
+    }
+    val mles: Map[Int, Float] = (termMles ++
+      listRes.map { case (id, r) => id -> (r.ctf().toFloat / cl) }).toMap
+    if (mles.values.exists(_ <= 0f)) return Left("zero-ctf leaf")
+
+    val (mu, lambda) = (model.mu, model.lambda)
+    val uMap = mutable.Map.empty[Int, Double]
+    exponents(tree, 1.0, uMap)
+    val u = uMap.toMap
+    val logDefUb: Map[Int, Double] = mles.map { case (id, m) =>
+      val raw = math.log(dflt(1L, mu, lambda, m))
+      id -> (raw + Eps * (1.0 + math.abs(raw)))
+    }
+    val idsByTerm = termLeaves.groupBy(_._2).map {
+      case (t, ids) => t -> ids.map(_._1)
+    }
+
+    // (leafId, segment, docid, tf, len) rows of the positional lists
+    val listRows: org.apache.spark.sql.Dataset[(Int, Long, Long, Int, Long)] =
+      listRes.map { case (id, r) =>
+        r.df.select(
+          org.apache.spark.sql.functions.lit(id).as("leafId"),
+          org.apache.spark.sql.functions
+            .shiftright($"docid", graft.index.IndexBuilder.BucketShift)
+            .as("segment"),
+          $"docid", $"tf", $"len")
+          .as[(Int, Long, Long, Int, Long)]
+      } match {
+        case Seq()       => spark.emptyDataset[(Int, Long, Long, Int, Long)]
+        case s @ Seq(_*) => s.reduce(_ union _)
+      }
+
+    val blocksK = blocks
+      .filter($"field" === field &&
+        $"term".isin(termLeaves.map(_._2).distinct: _*))
+      .groupByKey(_.segment)
+    val listsK = listRows.groupByKey(_._2)
+
+    val treeB = tree
+    val mlesB = mles
+    Right(blocksK.cogroup(listsK) { (_, bIt, lIt) =>
+      val byTerm = bIt.toArray.groupBy(_.term)
+      val listArr = lIt.toArray.groupBy(_._1)
+      val cursors: Map[Int, Cursor] =
+        (byTerm.iterator.flatMap { case (t, bks) =>
+          val sortedBks = bks.sortBy(_.blockId)
+          idsByTerm(t).map(id =>
+            id -> (new BlockCursor(sortedBks, mu, lambda, mlesB(id)): Cursor))
+        } ++ listArr.iterator.map { case (id, rows) =>
+          id -> (new ListCursor(
+            rows.map(r => (r._3, r._4, r._5)).sortBy(_._1),
+            mu, lambda, mlesB(id)): Cursor)
+        }).toMap
+      segmentTopK(cursors, treeB, u, logDefUb, mu, lambda, mlesB, k)
+    }.toDF("docid", "score"))
+  }
 }

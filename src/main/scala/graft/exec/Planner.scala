@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.DoubleType
   *  - #SYN           → union + `groupBy(docid)` with flatten/sort.
   *  - #NEAR/#WINDOW  → k-way equi-join on docid + the exact greedy
   *                     position matchers as codegen'd Catalyst
-  *                     expressions ([[PositionMatch]] ≡ [[PositionOps]]).
+  *                     expressions ([[PositionMatch]] ≡ the test-only
+  *                     `PositionOps`).
   *  - #SCORE         → doclen join + float-faithful scoring expressions
   *                     (SURVEY §2.4 — float intermediates, widened to
   *                     double, bit-identical to the reference).
@@ -50,15 +51,19 @@ final class Planner(index: Index, model: RetrievalModel) {
   import spark.implicits._
 
   // Position matching runs as codegen'd Catalyst expressions
-  // ([[PositionMatch]]) — semantics identical to [[PositionOps]], which
-  // remains as the independently-tested reference implementation.
+  // ([[PositionMatch]]) — semantics identical to the test-only
+  // `PositionOps`, the independently-tested reference implementation.
 
   // ---------------------------------------------------------------- leaves
 
-  /** All (term, field) leaf stats for this query, collected once — the
-    * few query terms against the termStats table (broadcast-semi-join
-    * analog of `InvList`'s df/ctf fetch, `InvList.java:68-106`). */
-  private def collectLeafStats(q: Qry): Map[(String, String), (Long, Long)] = {
+  private var leafStats: Map[(String, String), (Long, Long)] = Map.empty
+
+  /** Collect this query's leaf stats without planning, and return them —
+    * for callers that drive [[planIl]] directly (e.g. [[IndriBlockMax]]
+    * evaluating positional leaves: #WINDOW's df-ascending arg sort needs
+    * the same stats the full plan would see) or that need the term
+    * leaves' ctf themselves. */
+  private[exec] def prepare(q: Qry): Map[(String, String), (Long, Long)] = {
     def leaves(q: Qry): Seq[(String, String)] = q match {
       case Term(t, f)    => Seq((t, f))
       case Syn(as)       => as.flatMap(leaves)
@@ -71,39 +76,8 @@ final class Planner(index: Index, model: RetrievalModel) {
       case WAnd(_, as)   => as.flatMap(leaves)
       case WSum(_, as)   => as.flatMap(leaves)
     }
-    val ls = leaves(q).distinct
-    // Unknown field = syntax error (reference indexes a fixed field set,
-    // `QryEval/src/QryEval.java:467`; silently matching nothing hid typos)
-    ls.map(_._2).distinct.foreach { f =>
-      require(index.indexedFields.contains(f),
-        s"Query syntax is incorrect. Unknown field: $f")
-      // Legacy snapshots carry no indexedFields; a default-named field
-      // accepted only through the DefaultFields union matched nothing at
-      // build time, so a typo would look identical — warn (round-3
-      // ADVICE).
-      if (index.legacyAssumedFields.contains(f))
-        System.err.println(s"[graft] WARNING: field '$f' accepted via the" +
-          " legacy default-field fallback (snapshot lists no" +
-          " indexedFields); it holds no documents and matches nothing")
-    }
-    if (ls.isEmpty) return Map.empty
-    val conds = ls.map { case (t, f) => $"term" === t && $"field" === f }
-      .reduce(_ || _)
-    index.termStats.filter(conds)
-      .select($"term", $"field", $"df", $"ctf")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-  }
-
-  private var leafStats: Map[(String, String), (Long, Long)] = Map.empty
-
-  /** Collect leaf stats without planning — for callers that drive
-    * [[planIl]] directly (e.g. [[IndriBlockMax]] evaluating positional
-    * leaves: #WINDOW's df-ascending arg sort needs the same stats the
-    * full plan would see). */
-  private[exec] def prepare(q: Qry): Unit = {
-    leafStats = collectLeafStats(q)
+    leafStats = Planner.leafStats(index, leaves(q))
+    leafStats
   }
 
   /** Docid restriction applied at every term-leaf scan while set —
@@ -448,7 +422,42 @@ final class Planner(index: Index, model: RetrievalModel) {
     * see `Index.scratchLru`); [[graft.index.Index.releaseScratch]]
     * drops them all when serving stops. */
   def plan(q: Qry): DataFrame = {
-    leafStats = collectLeafStats(q)
+    prepare(q)
     planSl(Qry.asSl(q)).scores
+  }
+}
+
+object Planner {
+
+  /** (df, ctf) of every distinct (term, field) leaf, collected in one job
+    * — the few query terms against the termStats table (broadcast-semi-
+    * join analog of `InvList`'s df/ctf fetch, `InvList.java:68-106`).
+    * Shared by every execution route, so each validates fields alike. */
+  private[exec] def leafStats(index: Index, leaves0: Seq[(String, String)])
+      : Map[(String, String), (Long, Long)] = {
+    val ls = leaves0.distinct
+    // Unknown field = syntax error (reference indexes a fixed field set,
+    // `QryEval/src/QryEval.java:467`; silently matching nothing hid typos)
+    ls.map(_._2).distinct.foreach { f =>
+      require(index.indexedFields.contains(f),
+        s"Query syntax is incorrect. Unknown field: $f")
+      // Legacy snapshots carry no indexedFields; a default-named field
+      // accepted only through the DefaultFields union matched nothing at
+      // build time, so a typo would look identical — warn (round-3
+      // ADVICE).
+      if (index.legacyAssumedFields.contains(f))
+        System.err.println(s"[graft] WARNING: field '$f' accepted via the" +
+          " legacy default-field fallback (snapshot lists no" +
+          " indexedFields); it holds no documents and matches nothing")
+    }
+    if (ls.isEmpty) return Map.empty
+    import index.spark.implicits._
+    val conds = ls.map { case (t, f) => $"term" === t && $"field" === f }
+      .reduce(_ || _)
+    index.termStats.filter(conds)
+      .select($"term", $"field", $"df", $"ctf")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
+      .toMap
   }
 }

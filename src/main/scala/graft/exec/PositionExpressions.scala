@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 /** Primitive-int kernels for the reference's greedy positional matchers,
   * operating directly on Catalyst [[ArrayData]] — no `Seq[Seq[Int]]`
   * boxing, no CatalystTypeConverters round-trip. Semantics are the exact
-  * transliterations of [[PositionOps]] (`QryEval/src/QryopIlNear.java:74-120`,
-  * `QryopIlWindow.java:92-166`); a property spec asserts kernel ≡
-  * PositionOps on random inputs.
+  * transliterations in the test-only `PositionOps`
+  * (`QryEval/src/QryopIlNear.java:74-120`, `QryopIlWindow.java:92-166`);
+  * a property spec asserts kernel ≡ PositionOps on random inputs.
   *
   * Inputs are the engine's own position lists: non-null, ascending ints
   * (the index builder emits them sorted). Null elements are not handled —

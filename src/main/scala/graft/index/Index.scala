@@ -87,10 +87,16 @@ final class Index(
 
   /** Delta-gap + varbyte compressed posting blocks (north rule), keyed by
     * (term, field, segment) with block-max metadata — the serving form of
-    * the index and the input of [[graft.exec.BlockMaxWand]]. */
+    * the index and the input of the block-max routes
+    * ([[graft.exec.BlockMaxWand]], [[graft.exec.IndriBlockMax]]). An index
+    * with no stored table (a fresh build, a streaming merge) derives it
+    * ONCE and keeps it persisted like the other index tables: the
+    * derivation shuffles and sorts every posting, which no routed query
+    * may repeat. */
   lazy val blocks: Dataset[PostingBlock] =
     blocksOpt.getOrElse(
-      PostingBlocks.fromPostings(spark, postings, doclen))
+      PostingBlocks.fromPostings(spark, postings, doclen)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Forward index (doc vector) — reference `TermVector`
     * (`QryEval/src/TermVector.java:19-89`): the persisted snapshot table

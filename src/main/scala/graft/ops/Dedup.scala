@@ -56,27 +56,6 @@ object Dedup {
     hashed.join(canon, "text_md5").select("id", "canonical_id", "text_md5")
   }
 
-  /** Exact n-gram Jaccard for all intra-block pairs with sim ≥ threshold.
-    * Blocking keeps the pair join linear-ish; at scale pass a selective
-    * block (e.g. an LSH band bucket) instead of a corpus
-    * attribute. Jaccard = |A∩B| / |A∪B| on DISTINCT shingles (exact
-    * integer ratio → bit-exact across engines). */
-  def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                   blockCol: String, n: Int, threshold: Double): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), col(blockCol).as("block"),
-      shinglesCol(col(textCol), n).as("sh"))
-    val a = sh.select(col("block"), col("id").as("a_id"), col("sh").as("a_sh"))
-    val b = sh.select(col("block"), col("id").as("b_id"), col("sh").as("b_sh"))
-    a.join(b, Seq("block"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("inter", size(array_intersect(col("a_sh"), col("b_sh"))).cast("long"))
-      .withColumn("uni", size(array_union(col("a_sh"), col("b_sh"))).cast("long"))
-      .filter(col("uni") > 0)
-      .withColumn("jaccard", col("inter").cast("double") / col("uni").cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-  }
-
   /** n-gram Jaccard over hashed shingle sets, restricted to an explicit
     * candidate-pair set (normally [[lshCandidates]] output): two narrow
     * equi-joins of (a_id, b_id) back to the per-doc sets. Cost is linear

@@ -135,9 +135,16 @@ object StreamingIndexer {
       s"streaming segments under $dir record ${distinctRecorded.size} " +
       "different analyzer configs — they were built by different streams " +
       "and cannot be merged")
-    val analyzer =
-      if (analyzers.forall(_.isDefined)) distinctRecorded.headOption
-      else None // some legacy segment predates analyzer recording
+    val legacy = segs.zip(analyzers).collect { case (b, None) => b }
+    // a legacy segment predates analyzer recording: nothing to check its
+    // vocabulary against, so the merge records none either
+    if (legacy.nonEmpty && distinctRecorded.nonEmpty)
+      System.err.println(s"[graft] WARNING: streaming segments under $dir " +
+        s"mix recorded analyzers with legacy segments ${legacy.mkString(",")}" +
+        " that record none; the merged index records no analyzer, so " +
+        "SearchEngine's analyzer guard is OFF for it until the legacy " +
+        "segments are rebuilt")
+    val analyzer = if (legacy.isEmpty) distinctRecorded.headOption else None
     new Index(spark, docs, postings, doclen, termStats,
       statsThunk = () => IndexBuilder.statsOf(docs, doclen),
       analyzerOpt = analyzer)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.analysis.AnalyzerConfig
-import graft.api.SearchEngine
+import graft.api.{Route, SearchEngine}
 import graft.corpus.CorpusGen
 import graft.exec.BlockMaxWand
 import graft.index.{IndexBuilder, IndexConfig, PostingBlocks}
@@ -33,7 +33,8 @@ class BlockMaxWandSpec extends AnyFunSpec {
 
   private def runBoth(terms: Seq[String], k: Int): Unit = {
     val q = terms.mkString(" ")
-    val exhaustive = engine.search(s"#SUM(${terms.mkString(" ")})", model, k)
+    val exhaustive = engine
+      .rank(engine.scores(s"#SUM(${terms.mkString(" ")})", model), k)
       .select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toVector
     val pruned = engine.rank(
@@ -80,21 +81,22 @@ class BlockMaxWandSpec extends AnyFunSpec {
     }
   }
 
-  describe("searchPruned facade") {
-    it("free text under BM25 takes the pruned path and matches search()") {
+  describe("routed search") {
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.select("extid", "score").collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toVector
+    it("free text under BM25 takes the pruned path and matches the " +
+       "exhaustive reference") {
       val q = "open inverted index query"
-      val a = engine.search(q, model, 50).select("extid", "score").collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toVector
-      val b = engine.searchPruned(q, model, 50)
-        .select("extid", "score").collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toVector
-      assert(a == b)
+      assert(engine.routed(q, model, 50)._1.isInstanceOf[Route.Bmw])
+      assert(ranked(engine.search(q, model, 50)) ==
+        ranked(engine.rank(engine.scores(q, model), 50)))
     }
     it("structured queries fall back to the exhaustive planner") {
       val q = "#SUM(#NEAR/1(inverted index) open)"
-      val a = engine.search(q, model, 20).select("extid").collect().toSeq
-      val b = engine.searchPruned(q, model, 20).select("extid").collect().toSeq
-      assert(a == b)
+      assert(engine.routed(q, model, 20)._1.isInstanceOf[Route.Exhaustive])
+      assert(ranked(engine.search(q, model, 20)) ==
+        ranked(engine.rank(engine.scores(q, model), 20)))
     }
   }
 }

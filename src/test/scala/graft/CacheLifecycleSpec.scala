@@ -33,7 +33,7 @@ class CacheLifecycleSpec extends AnyFunSpec {
         fields = Seq("body", "title", "url"))).cacheAll()
     // materialize the deliberate index-scoped caches before baselining
     idx.postings.count(); idx.doclen.count()
-    idx.termStats.count(); idx.docs.count()
+    idx.termStats.count(); idx.docs.count(); idx.blocks.count()
     new SearchEngine(idx, cfg)
   }
 

@@ -39,11 +39,11 @@ class IndriBlockMaxSpec extends AnyFunSpec {
     val ast = QueryParser.parseQuery(q, model, cfg).get
     val cands = IndriBlockMax.topK(engine.index, blocks4, Qry.asSl(ast),
       model, k)
-    assert(cands.isDefined, s"[$q] expected the pruned path")
-    val pruned = engine.rank(cands.get, k)
+    assert(cands.isRight, s"[$q] expected the pruned path: $cands")
+    val pruned = engine.rank(cands.toOption.get, k)
       .select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toVector
-    val exhaustive = engine.search(q, model, k)
+    val exhaustive = engine.rank(engine.scores(q, model), k)
       .select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toVector
     assert(pruned.length == exhaustive.length, s"[$q] row count")
@@ -89,7 +89,7 @@ class IndriBlockMaxSpec extends AnyFunSpec {
       // restriction (visible in the candidate plan's list sub-plan)
       val ast = QueryParser.parseQuery(q, model, cfg).get
       val cands = IndriBlockMax.topK(engine.index, blocks4,
-        Qry.asSl(ast), model, 10).get
+        Qry.asSl(ast), model, 10).toOption.get
       val plan = cands.queryExecution.optimizedPlan.toString
       assert(plan.contains("docid") &&
              (plan.contains(">=") && plan.contains("<=")), plan.take(1200))
@@ -145,12 +145,15 @@ class IndriBlockMaxSpec extends AnyFunSpec {
         val ast = QueryParser.parseQuery(q, model, cfg).get
         IndriBlockMax.topK(engine.index, blocks4, Qry.asSl(ast), model, 10)
       }
-      assert(ext("#AND(zzznotaterm open)").isEmpty)       // mle = 0
-      assert(ext("#WSUM(0.5 open 0.5 inverted)").isEmpty) // not product-form
-      assert(ext("#AND(open f12.title)").isEmpty)         // multi-field
-      // and searchPruned still answers them (exhaustive fallback)
-      val r = engine.searchPruned("#WSUM(0.5 open 0.5 inverted)", model, 5)
+      assert(ext("#AND(zzznotaterm open)").isLeft)       // mle = 0
+      assert(ext("#WSUM(0.5 open 0.5 inverted)").isLeft) // not product-form
+      assert(ext("#AND(open f12.title)").isLeft)         // multi-field
+      // and the routed search still answers them (exhaustive fallback)
+      val q = "#WSUM(0.5 open 0.5 inverted)"
+      val r = engine.search(q, model, 5)
       assert(r.count() == 5)
+      assert(r.collect().toSeq ==
+        engine.rank(engine.scores(q, model), 5).collect().toSeq)
     }
   }
 }

@@ -123,6 +123,35 @@ class StreamingIndexerSpec extends AnyFunSpec {
       assert(e.getMessage.contains("different analyzer"))
     }
 
+    it("warns that the analyzer guard is off when recorded and legacy " +
+       "segments are merged") {
+      import spark.implicits._
+      val dir = Files.createTempDirectory("graft-stream7-").toString
+      val english = IndexConfig(AnalyzerConfig.english, buckets = 8)
+      StreamingIndexer.processBatch(dir, english)(
+        CorpusGen.docs(10).toDF(), 0L)
+      StreamingIndexer.processBatch(dir, english)(
+        CorpusGen.docs(20).drop(10).toDF(), 1L)
+      // rewrite segment 1's stats.json as a legacy segment would have it:
+      // no analyzer record
+      val statsPath = s"$dir/seg=1/stats.json"
+      val (stats, buckets, fields, _) =
+        graft.index.IndexStore.readStats(statsPath)
+      graft.index.IndexStore.writeStats(stats, statsPath, buckets, fields)
+      val err = new java.io.ByteArrayOutputStream()
+      val stderr = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      val merged =
+        try StreamingIndexer.loadMerged(spark, dir)
+        finally System.setErr(stderr)
+      assert(merged.analyzerOpt.isEmpty)
+      val warning = err.toString
+      assert(warning.contains("analyzer guard is OFF"), warning)
+      assert(warning.contains("legacy segments 1 "), warning)
+      // the guard is off indeed: a mismatched profile is not refused
+      new SearchEngine(merged, AnalyzerConfig.code)
+    }
+
     it("compaction: merged segments persist via IndexStore and reload identically") {
       import spark.implicits._
       val segDir = Files.createTempDirectory("graft-stream4-").toString

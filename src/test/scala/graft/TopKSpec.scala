@@ -3,7 +3,7 @@ package graft
 import graft.api.SearchEngine
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.model.{BM25, RankedBoolean, UnrankedBoolean}
+import graft.model.{BM25, Indri, RankedBoolean, UnrankedBoolean}
 import org.apache.spark.sql.functions._
 import org.scalatest.funspec.AnyFunSpec
 
@@ -98,12 +98,14 @@ class TopKSpec extends AnyFunSpec {
   it("searchBatch equals per-query search, including overflow queries " +
      "(round-4 VERDICT item 6)") {
     for (model <- Seq(BM25(1.2f, 0.75f, 0f): graft.model.RetrievalModel,
-                      UnrankedBoolean, RankedBoolean)) {
+                      Indri(), UnrankedBoolean, RankedBoolean)) {
       val boolean = model == UnrankedBoolean || model == RankedBoolean
       val qs = Seq(
         1 -> "open inverted index",
         // #OR/#AND throw under BM25 (the reference NPEs there too) — the
-        // boolean models get the constant-score overflow case instead
+        // boolean models get the constant-score overflow case instead;
+        // Indri free text takes the block-max route, 4 the zero-ctf
+        // fallback
         2 -> (if (boolean) "#OR(the a index)" else "the a index"),
         3 -> (if (boolean) "#AND(open inverted)" else "open inverted"),
         4 -> "zzznotaterm")

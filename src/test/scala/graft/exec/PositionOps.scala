@@ -5,8 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 /** Exact transliterations of the reference's positional-match algorithms.
   * These are deliberately NOT textbook proximity predicates — the greedy
   * single-consume matching changes tf, which changes scores (SURVEY §2
-  * O3/O4 "hard parts"). Pure functions, used inside a Spark UDF after the
-  * k-way docid join.
+  * O3/O4 "hard parts"). Pure functions kept as the test-side reference:
+  * the engine runs the codegen'd kernels of [[PositionExpressions]], and
+  * PositionExprSpec checks them against these.
   */
 object PositionOps extends Serializable {
 
