@@ -97,9 +97,8 @@ object ScalingBench {
         idx.blocks.count()
         val engine = new SearchEngine(idx, AnalyzerConfig.code)
         // rare+hot positional pair: a hapax identifier inside #NEAR with a
-        // hot keyword — the shape positional-leaf segment pruning targets
-        // (the hot term's positional scan skips every segment the hapax
-        // does not reach). Term selected data-driven so any corpus works.
+        // hot keyword — the leaf matches only in the segments the hapax
+        // reaches. Term selected data-driven so any corpus works.
         import org.apache.spark.sql.functions.col
         import spark.implicits._
         // headOption: a tiny corpus may contain no df=1 uid term — fall

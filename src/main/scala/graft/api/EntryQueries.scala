@@ -198,7 +198,7 @@ object EntryQueries {
     "q_wsum" -> scoredQ("#WSUM(0.4 spark 0.6 merge)", IndriModel),
 
     // the reference's flagship SDM shape, which search routes to the
-    // pruned Indri block-max engine (IndriBlockMax), oracle-gated against
+    // pruned block-max engine (BlockMax), oracle-gated against
     // an independent SQL re-derivation — rank by exact score, report
     // round 6 (StrictMath vs libm pow ulp)
     "q_sdm_topk" -> ((s, d) => {
@@ -262,7 +262,7 @@ object EntryQueries {
     }),
 
     // --- block-max WAND pruned top-k (north-rule extension): bag-of-
-    // words BM25, which search routes to BlockMaxWand, independently
+    // words BM25, which search routes to BlockMax, independently
     // re-derived by the DuckDB oracle — the pruned path is verified
     // against SQL, not just against our own exhaustive planner
     "q_bmw_topk" -> ((s, d) => {

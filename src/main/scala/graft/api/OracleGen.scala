@@ -298,7 +298,7 @@ object OracleGen {
 
   /** The flagship SDM shape, ranked top-100:
     * `#WAND(w0 #AND(a b) w1 #NEAR/1(c d) w2 #WINDOW/8(e f g))` — the
-    * oracle for the PRUNED Indri path (IndriBlockMax): per-doc score =
+    * oracle for the PRUNED Indri path (BlockMax): per-doc score =
     * pow(geoMean(and-children), w0) × pow(nearVal, w1) × pow(winVal, w2)
     * over the docid union of all leaf lists, where the positional
     * leaves' pMLE comes from THEIR list's summed tf. Scores rounded to 6
@@ -679,7 +679,7 @@ object OracleGen {
     }.mkString(" + ")
 
   /** Banded multi-probe SRP: candidate iff ≥1 of the 4 8-bit band keys
-    * matches the probe's (`Similarity.lshTopKBanded`). */
+    * matches the probe's (`Similarity.lshTopKStored`). */
   def annBanded(k: Int): String = {
     val bands = 0 until Similarity.BandCount
     "WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
@@ -789,7 +789,7 @@ object OracleGen {
       "q_unranked_and" -> unrankedAnd("spark", "window"),
       "q_indri_and" -> indriAnd(Seq("spark", "merge")),
       "q_wand" -> indriWand(Seq("spark", "merge"), wandN),
-      // the pruned IndriBlockMax path vs an independent SQL re-derivation
+      // the pruned BlockMax path vs an independent SQL re-derivation
       "q_sdm_topk" -> sdmTopK(Seq("spark", "merge"), ("hash", "join"),
         Seq("spark", "merge", "batch"), 8, Seq(0.7f, 0.2f, 0.1f)),
       "q_wsum" -> indriWsum(Seq("spark", "merge"), wsumN),

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.analysis.{AnalyzerConfig, Stemming}
-import graft.exec.{BlockMaxWand, IndriBlockMax, Planner}
+import graft.exec.{BlockMax, Planner}
 import graft.index.Index
 import graft.model._
 import org.apache.spark.sql.DataFrame
@@ -132,11 +132,10 @@ final class SearchEngine(val index: Index,
   def expand(queryText: String, model: RetrievalModel,
              fb: graft.exec.Expansion.FbParams,
              initial: Option[Seq[(Long, Double)]] = None): (String, String) = {
-    val topDocs = initial.getOrElse {
-      search(queryText, model, fb.fbDocs)
-        .orderBy("rank").select("docid", "score").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    }
+    // rank order straight from the ranked rows, on the driver
+    val topDocs = initial.getOrElse(
+      rankedRows(routed(queryText, model, fb.fbDocs)._2, fb.fbDocs,
+        tieProne(model)).map { case (d, _, _, s) => (d, s) })
     val learned = graft.exec.Expansion
       .learnedQuery(index, topDocs, fb.fbMu, fb.fbTerms)
     // Java string concatenation of doubles (`QryEval.java:182-183`)
@@ -158,63 +157,22 @@ final class SearchEngine(val index: Index,
 
   /** The query router: picks the execution route from the parsed AST and
     * returns it with the (docid, score) candidates of that route.
-    *  - BM25 `#SUM` of plain terms in one field (free text under BM25
-    *    always is — the default-op wrap) → block-max WAND
-    *    ([[graft.exec.BlockMaxWand]]);
-    *  - an Indri product-form `#WAND`/`#AND` tree with a term leaf — the
-    *    reference's flagship SDM shape, PRF's combined query — →
-    *    Dirichlet block-max pruning ([[graft.exec.IndriBlockMax]]), which
-    *    declines multi-field and zero-ctf trees;
-    *  - anything else → the exhaustive [[Planner]].
+    *  - a BM25 `#SUM` of scored leaves (terms, `#NEAR`, `#WINDOW`, `#SYN`;
+    *    free text under BM25 always is — the default-op wrap) or an Indri
+    *    product-form `#WAND`/`#AND` tree — the reference's flagship SDM
+    *    shape, PRF's combined query, a bare `#WINDOW` — in one field →
+    *    the segment-local block-max engine ([[graft.exec.BlockMax]]),
+    *    which declines multi-field trees and zero-ctf Indri leaves;
+    *  - anything else (boolean models, `#WSUM`, `#OR`, a `#SUM` over
+    *    operators) → the exhaustive [[Planner]].
     * Every route is rank-identical to `rank(scores(...))` (property-tested
     * in BlockMaxWandSpec / IndriBlockMaxSpec / RoutingSpec). */
   private[graft] def routed(queryText: String, model: RetrievalModel,
                             k: Int): (Route, DataFrame) = {
     val ast = parse(queryText, model)
-    def exhaustive(reason: String) =
-      (Route.Exhaustive(reason), new Planner(index, model).plan(ast))
-    model match {
-      case bm: BM25 => bagOfWords(ast) match {
-        case Some((terms, field)) =>
-          (Route.Bmw(s"bag-of-words #SUM in field $field"),
-            BlockMaxWand.topK(index, index.blocks, bm, terms, field, k))
-        case None => exhaustive("not a #SUM of plain terms in one field")
-      }
-      case ind: Indri =>
-        val sl = Qry.asSl(ast)
-        // a pure-positional tree gives the block loop nothing to skip
-        if (!hasTermLeaf(sl)) exhaustive("no term leaf")
-        else IndriBlockMax.topK(index, index.blocks, sl, ind, k)
-          .fold(exhaustive, (Route.IndriBlockMax("product-form tree"), _))
-      case _ => exhaustive("boolean model")
-    }
-  }
-
-  /** A scored plain term anywhere in the score tree (positional
-    * operators below a #SCORE do not count). */
-  private def hasTermLeaf(q: Qry): Boolean = q match {
-    case Score(il)   => il.isInstanceOf[Term]
-    case And(as)     => as.exists(hasTermLeaf)
-    case Or(as)      => as.exists(hasTermLeaf)
-    case Sum(as)     => as.exists(hasTermLeaf)
-    case WAnd(_, as) => as.exists(hasTermLeaf)
-    case WSum(_, as) => as.exists(hasTermLeaf)
-    case _: Il       => false
-  }
-
-  /** `#SUM(t1 t2 ...)` over one field → the child-ordered term bag. */
-  private def bagOfWords(ast: Qry): Option[(Seq[String], String)] = ast match {
-    case Sum(args) =>
-      val terms = args.map {
-        case Score(Term(t, f)) => Some((t, f))
-        case _                 => None
-      }
-      if (terms.forall(_.isDefined)) {
-        val ts = terms.flatten
-        val fields = ts.map(_._2).distinct
-        if (fields.size == 1) Some((ts.map(_._1), fields.head)) else None
-      } else None
-    case _ => None
+    BlockMax.topK(index, index.blocks, Qry.asSl(ast), model, k).fold(
+      reason => (Route.Exhaustive(reason), new Planner(index, model).plan(ast)),
+      cands => (Route.BlockMax(s"$model over leaves in one field"), cands))
   }
 
   /** Coarse-score models (constant 1.0 / small-integer tf scores) tie
@@ -264,6 +222,12 @@ final class SearchEngine(val index: Index,
   def rank(scoreDf: DataFrame, k: Int, cacheScores: Boolean): DataFrame = {
     val spark = index.spark
     import spark.implicits._
+    rankedRows(scoreDf, k, cacheScores).toDF("docid", "extid", "rank", "score")
+  }
+
+  /** [[rank]]'s rows, (docid, extid, rank, score) in rank order. */
+  private def rankedRows(scoreDf: DataFrame, k: Int, cacheScores: Boolean)
+      : Seq[(Long, String, Int, Double)] = {
     val narrow = narrowScores(scoreDf, cacheScores)
     try {
       val head = takeHead(narrow, 2 * k)
@@ -274,7 +238,7 @@ final class SearchEngine(val index: Index,
           cls.overflow.toSeq.flatMap { case (sk, need) =>
             boundaryPass(narrow, sk, need)
           }
-      finalizeRank(withExt, k).toDF("docid", "extid", "rank", "score")
+      finalizeRank(withExt, k)
     } finally if (cacheScores) narrow.unpersist(false)
   }
 
@@ -398,8 +362,7 @@ final class SearchEngine(val index: Index,
 /** The execution route [[SearchEngine.routed]] picked, and why. */
 private[graft] sealed trait Route { def reason: String }
 private[graft] object Route {
-  final case class Bmw(reason: String) extends Route
-  final case class IndriBlockMax(reason: String) extends Route
+  final case class BlockMax(reason: String) extends Route
   final case class Exhaustive(reason: String) extends Route
 }
 

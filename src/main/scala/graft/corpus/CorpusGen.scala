@@ -48,8 +48,8 @@ object CorpusGen {
         val z = zipf(rnd, 500) // long tail
         // the deepest tail is HAPAX identifiers (~0.13% of tail tokens,
         // ~99% unique at 400k docs): real code corpora carry a huge
-        // near-unique identifier vocabulary, and segment-sparse terms are
-        // what positional-leaf segment pruning exists for
+        // near-unique identifier vocabulary, and segment-sparse terms
+        // make positional leaves match in few segments
         if (z >= 498) sb.append("uid").append(rnd.nextInt(1 << 22))
         else sb.append("ident").append(z)
       }

@@ -56,48 +56,8 @@ final class Planner(index: Index, model: RetrievalModel) {
 
   // ---------------------------------------------------------------- leaves
 
+  /** (df, ctf) of the query's term leaves, collected by [[plan]]. */
   private var leafStats: Map[(String, String), (Long, Long)] = Map.empty
-
-  /** Collect this query's leaf stats without planning, and return them —
-    * for callers that drive [[planIl]] directly (e.g. [[IndriBlockMax]]
-    * evaluating positional leaves: #WINDOW's df-ascending arg sort needs
-    * the same stats the full plan would see) or that need the term
-    * leaves' ctf themselves. */
-  private[exec] def prepare(q: Qry): Map[(String, String), (Long, Long)] = {
-    def leaves(q: Qry): Seq[(String, String)] = q match {
-      case Term(t, f)    => Seq((t, f))
-      case Syn(as)       => as.flatMap(leaves)
-      case Near(_, as)   => as.flatMap(leaves)
-      case Window(_, as) => as.flatMap(leaves)
-      case Score(c)      => leaves(c)
-      case And(as)       => as.flatMap(leaves)
-      case Or(as)        => as.flatMap(leaves)
-      case Sum(as)       => as.flatMap(leaves)
-      case WAnd(_, as)   => as.flatMap(leaves)
-      case WSum(_, as)   => as.flatMap(leaves)
-    }
-    leafStats = Planner.leafStats(index, leaves(q))
-    leafStats
-  }
-
-  /** Docid restriction applied at every term-leaf scan while set —
-    * [[planIlRestricted]] only. */
-  private var docidPred: Option[Column] = None
-
-  /** Evaluate `q` with a docid predicate at every term-leaf scan
-    * (round-4 VERDICT item 3 — positional-leaf segment pruning): the
-    * restriction lands BELOW the composite's scratch-cache registration
-    * and aggregates, so caches, intermediate joins, and the composite's
-    * lazy ctf hold only the restricted rows, and Catalyst pushes the
-    * ranges through the k-way join into the postings scans. Term-leaf
-    * df/ctf stats stay GLOBAL (the reference sorts #WINDOW args by
-    * collection-wide df, and composite scoring uses the composite's own
-    * stats). */
-  private[exec] def planIlRestricted(q: Il, pred: Column): IlRes = {
-    docidPred = Some(pred)
-    try planIl(q)
-    finally docidPred = None
-  }
 
   // ------------------------------------------------------------------- Il
 
@@ -105,9 +65,8 @@ final class Planner(index: Index, model: RetrievalModel) {
     case Term(t, f) =>
       // len rides inline on posting rows (Lucene-norm style) — scoring
       // needs no doclen join for docs that match
-      val base = index.postings
+      val df = index.postings
         .filter($"term" === t && $"field" === f)
-      val df = docidPred.fold(base)(base.filter)
         .select($"docid", $"tf", $"positions", $"len")
       val (dfc, ctf) = leafStats.getOrElse((t, f), (0L, 0L))
       IlRes(df, f, () => dfc, () => ctf)
@@ -145,17 +104,10 @@ final class Planner(index: Index, model: RetrievalModel) {
       val children0 = args.map(planIl)
       requireSameField(children0, s"#WINDOW/$dist")
       // Args sorted by df ascending, stable (`QryopIlWindow.java:52`,
-      // comparator `Qryop.java:25-33`). Under [[planIlRestricted]] a
-      // composite (#SYN/#NEAR) child's docFreq is its RESTRICTED count,
-      // which can order args differently than the exhaustive plan — but
-      // that cannot change the result: the window kernel is
-      // permutation-invariant over its args (valid states emit the max
-      // VALUE and advance all cursors; invalid states cannot turn valid
-      // until every cursor tied at the min has advanced past it, so the
-      // post-tie state is order-independent — property-tested in
-      // PositionOpsSpec). The reference's df-sort is a DAAT efficiency
-      // choice (smallest list first), which the restricted key serves
-      // equally well.
+      // comparator `Qryop.java:25-33`) — a DAAT efficiency choice
+      // (smallest list first): the window kernel is permutation-invariant
+      // over its args (property-tested in PositionOpsSpec), which lets
+      // [[BlockMax]] match #WINDOW leaves without the global df sort.
       val children = children0.sortBy(c => c.docFreq())
       val field = children.head.field
       if (children.length == 1) {
@@ -273,19 +225,12 @@ final class Planner(index: Index, model: RetrievalModel) {
         SlRes(scores, children.flatMap(_.fields).toSet, _ => lit(0.0))
       case Indri(_, _) =>
         // Docid union; score = (∏ s_or_default)^(1/nArgs)
-        // (`QryopSlAnd.java:134-174`), product in child order.
+        // (`QryopSlAnd.java:134-174`), product in child order; the
+        // default is the geo-mean of child defaults (:186-202)
         val children = args.map(planSl)
         val nArgs = children.length
-        combineIndri(children) { childCol =>
-          val prod = children.indices
-            .foldLeft(lit(1.0))((acc, i) => acc * childCol(i))
-          ScoreExpressions.strictPow(prod, lit(1.0 / nArgs))
-        } { (lens, childDef) =>
-          // default = geo-mean of child defaults (:186-202)
-          val prod = children.indices
-            .foldLeft(lit(1.0))((acc, i) => acc * childDef(i)(lens))
-          ScoreExpressions.strictPow(prod, lit(1.0 / nArgs))
-        }
+        combineIndri(children)(cs =>
+          ScoreExpressions.strictPow(product(cs), lit(1.0 / nArgs)))
       case _ => throw new IllegalStateException("#AND unsupported for BM25")
     }
 
@@ -318,48 +263,39 @@ final class Planner(index: Index, model: RetrievalModel) {
     case WAnd(weights, args) => model match {
       case Indri(_, _) =>
         val children = args.map(planSl)
-        val wn = normalizeWeights(weights)
-        combineIndri(children) { childCol =>
-          children.indices.foldLeft(lit(1.0))((acc, i) =>
-            acc * ScoreExpressions.strictPow(childCol(i), lit(wn(i).toDouble)))
-        } { (lens, childDef) =>
-          children.indices.foldLeft(lit(1.0))((acc, i) =>
-            acc * ScoreExpressions.strictPow(childDef(i)(lens), lit(wn(i).toDouble)))
-        }
+        val wn = Planner.normalizeWeights(weights)
+        combineIndri(children)(cs => product(cs.zip(wn).map { case (c, w) =>
+          ScoreExpressions.strictPow(c, lit(w.toDouble))
+        }))
       case _ => throw new IllegalStateException("#WAND requires Indri")
     }
 
     case WSum(weights, args) => model match {
       case Indri(_, _) =>
         val children = args.map(planSl)
-        val wn = normalizeWeights(weights)
-        combineIndri(children) { childCol =>
-          children.indices.foldLeft(lit(0.0))((acc, i) =>
-            acc + childCol(i) * lit(wn(i).toDouble))
-        } { (lens, childDef) =>
-          children.indices.foldLeft(lit(0.0))((acc, i) =>
-            acc + childDef(i)(lens) * lit(wn(i).toDouble))
-        }
+        val wn = Planner.normalizeWeights(weights)
+        combineIndri(children)(cs => aggregate(
+          array(cs.zip(wn).map { case (c, w) => c * lit(w.toDouble) }: _*),
+          lit(0.0), (acc, x) => acc + x))
       case _ => throw new IllegalStateException("#WSUM requires Indri")
     }
   }
 
-  /** Normalize to Σ=1 in float, like `QryopSlWAnd.normalizeWeight`
-    * (:36-45) — over the FULL weight list (orphaned weights from vanished
-    * terms still count, replicating the parser quirk). */
-  private def normalizeWeights(ws: Seq[Float]): Seq[Float] = {
-    var total = 0.0f
-    ws.foreach(total += _)
-    ws.map(_ / total)
-  }
+  /** `1.0 · c₀ · c₁ ⋯` folded left in child order — an `aggregate` over
+    * the child array rather than a nested Column product, so a wide tree
+    * (PRF's learned #WAND has up to fbTerms children) stays one
+    * expression of bounded depth instead of overflowing Janino's method
+    * size and falling back from whole-stage codegen; same doubles, same
+    * order, so bit-identical. */
+  private def product(cs: Seq[Column]): Column =
+    aggregate(array(cs: _*), lit(1.0), (acc, x) => acc * x)
 
   /** Docid-union combine for Indri operators: one shuffle — children
     * tagged with their index, grouped into a docid→(cid→score) map, then
-    * the caller's fold builds the score with `coalesce(score_i,
-    * default_i(docLen))` per child in child order. */
-  private def combineIndri(children: Seq[SlRes])
-      (scoreOf: (Int => Column) => Column)
-      (defaultOf: (Map[String, Column], Int => (Map[String, Column] => Column)) => Column)
+    * the caller's fold over `coalesce(score_i, default_i(docLen))` per
+    * child in child order. The operator's own default (for a doc missing
+    * from every child) is the same fold over the child defaults. */
+  private def combineIndri(children: Seq[SlRes])(fold: Seq[Column] => Column)
       : SlRes = {
     val fields = children.flatMap(_.fields).toSet
     val tagged = children.zipWithIndex.map { case (c, i) =>
@@ -368,12 +304,10 @@ final class Planner(index: Index, model: RetrievalModel) {
     val grouped = tagged.groupBy($"docid")
       .agg(map_from_entries(collect_list(struct($"cid", $"score"))).as("sm"))
     val (withLens, lens) = joinLens(grouped, fields)
-    val childCol: Int => Column = i =>
-      coalesce(element_at($"sm", lit(i)), children(i).default(lens))
-    val scores = withLens
-      .select($"docid", scoreOf(childCol).as("score"))
-    SlRes(scores, fields,
-      outer => defaultOf(outer, i => children(i).default))
+    val scores = withLens.select($"docid", fold(children.indices.map(i =>
+      coalesce(element_at($"sm", lit(i)), children(i).default(lens))))
+      .as("score"))
+    SlRes(scores, fields, outer => fold(children.map(_.default(outer))))
   }
 
   /** Ordered-sum combine for #SUM (BM25 — no defaults; each doc's score
@@ -422,12 +356,35 @@ final class Planner(index: Index, model: RetrievalModel) {
     * see `Index.scratchLru`); [[graft.index.Index.releaseScratch]]
     * drops them all when serving stops. */
   def plan(q: Qry): DataFrame = {
-    prepare(q)
+    leafStats = Planner.leafStats(index, Planner.termLeaves(q))
     planSl(Qry.asSl(q)).scores
   }
 }
 
 object Planner {
+
+  /** Normalize to Σ=1 in float, like `QryopSlWAnd.normalizeWeight`
+    * (:36-45) — over the FULL weight list (orphaned weights from vanished
+    * terms still count, replicating the parser quirk). */
+  private[exec] def normalizeWeights(ws: Seq[Float]): Seq[Float] = {
+    var total = 0.0f
+    ws.foreach(total += _)
+    ws.map(_ / total)
+  }
+
+  /** Every (term, field) leaf of a query, in tree order. */
+  private def termLeaves(q: Qry): Seq[(String, String)] = q match {
+    case Term(t, f)    => Seq((t, f))
+    case Syn(as)       => as.flatMap(termLeaves)
+    case Near(_, as)   => as.flatMap(termLeaves)
+    case Window(_, as) => as.flatMap(termLeaves)
+    case Score(c)      => termLeaves(c)
+    case And(as)       => as.flatMap(termLeaves)
+    case Or(as)        => as.flatMap(termLeaves)
+    case Sum(as)       => as.flatMap(termLeaves)
+    case WAnd(_, as)   => as.flatMap(termLeaves)
+    case WSum(_, as)   => as.flatMap(termLeaves)
+  }
 
   /** (df, ctf) of every distinct (term, field) leaf, collected in one job
     * — the few query terms against the termStats table (broadcast-semi-

@@ -16,15 +16,18 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * whole-stage codegen (no UDF boxing on the hot path).
   *
   * Model parameters and per-term statistics (rsj, avgDocLen, mle) are
-  * query-time scalars, embedded as Java float literals
-  * (`Float.toString` round-trips exactly).
+  * query-time scalars. They reach the generated code as fields set from
+  * the expression's reference objects, never as Java literals: the code
+  * of two queries that differ only in their statistics is then the same
+  * string, so Spark's codegen cache serves the second one instead of
+  * compiling (and evicting) a new class per query.
   */
-private object FloatLit {
-  def apply(f: Float): String =
-    if (f.isNaN) "Float.NaN"
-    else if (f == Float.PositiveInfinity) "Float.POSITIVE_INFINITY"
-    else if (f == Float.NegativeInfinity) "Float.NEGATIVE_INFINITY"
-    else java.lang.Float.toString(f) + "f"
+private object FloatParam {
+  def apply(ctx: CodegenContext, name: String, v: Float): String = {
+    val ref = ctx.addReferenceObj(name, java.lang.Float.valueOf(v),
+      "java.lang.Float")
+    ctx.addMutableState("float", name, f => s"$f = $ref.floatValue();")
+  }
 }
 
 /** BM25 per-posting score (`QryopSlScore.java:146-157`):
@@ -40,11 +43,13 @@ case class Bm25TermScore(left: Expression, right: Expression,
     val tfWeight: Float = tf / (tf + k1 * (1 - b + b * docLen / avgDocLen))
     (rsj * tfWeight).toDouble
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (r, k, bb, avg) = (FloatParam(ctx, "rsj", rsj), FloatParam(ctx, "k1", k1),
+      FloatParam(ctx, "b", b), FloatParam(ctx, "avgDocLen", avgDocLen))
     defineCodeGen(ctx, ev, (tf, len) =>
-      s"(double)(${FloatLit(rsj)} * ((float)$tf / ((float)$tf + " +
-      s"${FloatLit(k1)} * ((1.0f - ${FloatLit(b)}) + " +
-      s"(${FloatLit(b)} * (float)$len) / ${FloatLit(avgDocLen)}))))")
+      s"(double)($r * ((float)$tf / ((float)$tf + $k * ((1.0f - $bb) + " +
+      s"($bb * (float)$len) / $avg))))")
+  }
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -64,11 +69,13 @@ case class IndriTermScore(left: Expression, right: Expression,
       (1 - lambda) * mle
     s.toDouble
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (m, l, p) = (FloatParam(ctx, "mu", mu), FloatParam(ctx, "lambda", lambda),
+      FloatParam(ctx, "mle", mle))
     defineCodeGen(ctx, ev, (tf, len) =>
-      s"(double)((${FloatLit(lambda)} * ((float)$tf + " +
-      s"${FloatLit(mu)} * ${FloatLit(mle)})) / ((float)$len + ${FloatLit(mu)}) + " +
-      s"(1.0f - ${FloatLit(lambda)}) * ${FloatLit(mle)})")
+      s"(double)(($l * ((float)$tf + $m * $p)) / ((float)$len + $m) + " +
+      s"(1.0f - $l) * $p)")
+  }
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -84,10 +91,12 @@ case class IndriDefaultScore(child: Expression,
     val docLen = lenA.asInstanceOf[Long]
     (((lambda * mu / (docLen + mu)) + (1 - lambda)) * mle).toDouble
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (m, l, p) = (FloatParam(ctx, "mu", mu), FloatParam(ctx, "lambda", lambda),
+      FloatParam(ctx, "mle", mle))
     defineCodeGen(ctx, ev, len =>
-      s"(double)(((${FloatLit(lambda)} * ${FloatLit(mu)}) / ((float)$len + " +
-      s"${FloatLit(mu)}) + (1.0f - ${FloatLit(lambda)})) * ${FloatLit(mle)})")
+      s"(double)((($l * $m) / ((float)$len + $m) + (1.0f - $l)) * $p)")
+  }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

@@ -87,10 +87,12 @@ final class Index(
 
   /** Delta-gap + varbyte compressed posting blocks (north rule), keyed by
     * (term, field, segment) with block-max metadata — the serving form of
-    * the index and the input of the block-max routes
-    * ([[graft.exec.BlockMaxWand]], [[graft.exec.IndriBlockMax]]). An index
-    * with no stored table (a fresh build, a streaming merge) derives it
-    * ONCE and keeps it persisted like the other index tables: the
+    * the index and the input of the block-max engine
+    * ([[graft.exec.BlockMax]]), whose tasks need every partition to hold
+    * whole segments: a stored table is read without splitting a segment
+    * file ([[IndexStore.load]]); an index with no stored table (a fresh
+    * build, a streaming merge) derives it range-partitioned by segment
+    * ONCE and keeps it persisted like the other index tables — the
     * derivation shuffles and sorts every posting, which no routed query
     * may repeat. */
   lazy val blocks: Dataset[PostingBlock] =
@@ -245,9 +247,7 @@ object Index {
     * postings. Output carries `segment` for the partitioned write. */
   def fwdIndexFromSortedPostings(spark: SparkSession,
                                  postingsDir: String): DataFrame = {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.files.maxPartitionBytes", s"${64L << 30}")
-    s2.conf.set("spark.sql.files.openCostInBytes", s"${1L << 30}")
+    val s2 = PostingBlocks.wholeFileSession(spark, 1L << 30)
     import org.apache.spark.sql.functions._
     import s2.implicits._
     s2.read.parquet(postingsDir)

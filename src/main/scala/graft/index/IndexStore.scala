@@ -203,13 +203,7 @@ object IndexStore {
     require(exists(dir), s"no committed index snapshot at $dir")
     val (stats, buckets, indexedFields, analyzer) =
       readStats(s"$dir/stats.json")
-    import spark.implicits._
-    val blocks = spark.read.parquet(s"$dir/postings_blocks")
-      .withColumn("segment", col("segment").cast("long"))
-      .select("term", "field", "segment", "blockId", "firstDocid",
-        "lastDocid", "df", "ctf", "maxTf", "minLen", "maxLen", "block",
-        "lens")
-      .as[PostingBlock]
+    val blocks = readBlocks(spark, s"$dir/postings_blocks")
     new Index(spark,
       spark.read.parquet(s"$dir/docs"),
       spark.read.parquet(s"$dir/postings")
@@ -231,6 +225,42 @@ object IndexStore {
               "segment"))
         else None,
       analyzerOpt = analyzer)
+  }
+
+  /** The stored block table, read so that every scan partition holds
+    * whole segments — the block-max engine's segment tasks rely on it
+    * ([[graft.exec.BlockMax]]). The save writes one file per
+    * `segment=K` dir; a dir holding more (a stray copy, a torn rewrite)
+    * would split a segment across tasks and silently corrupt rankings,
+    * so it is refused here. No file is split: every file counts at least
+    * the largest file's size, so the scan packs whole files into about
+    * `defaultParallelism` partitions. */
+  private def readBlocks(spark: SparkSession, dir: String)
+      : org.apache.spark.sql.Dataset[PostingBlock] = {
+    import scala.jdk.CollectionConverters._
+    def visible(p: java.nio.file.Path) = {
+      val n = p.getFileName.toString
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    val segDirs = Files.list(Paths.get(dir)).iterator().asScala
+      .filter(p => Files.isDirectory(p) && visible(p)).toSeq
+    val largest = segDirs.map { seg =>
+      val files = Files.list(seg).iterator().asScala.filter(visible).toSeq
+      require(files.size == 1,
+        s"corrupt index snapshot: $seg holds ${files.size} data files " +
+        s"(${files.map(_.getFileName).sorted.mkString(", ")}), but a " +
+        "segment's posting blocks must be exactly one file so that one " +
+        "task reads the whole segment; rebuild the snapshot")
+      Files.size(files.head)
+    }.foldLeft(4L << 20)(math.max)
+    val s2 = PostingBlocks.wholeFileSession(spark, largest)
+    import s2.implicits._
+    s2.read.parquet(dir)
+      .withColumn("segment", col("segment").cast("long"))
+      .select("term", "field", "segment", "blockId", "firstDocid",
+        "lastDocid", "df", "ctf", "maxTf", "minLen", "maxLen", "block",
+        "lens")
+      .as[PostingBlock]
   }
 
   def writeStats(stats: IndexStats, path: String, buckets: Int = 64,

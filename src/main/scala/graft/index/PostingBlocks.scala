@@ -34,21 +34,26 @@ object PostingBlocks {
 
   /** postings (term, field, docid, tf, positions) ⋈ doclen → blocks.
     *
-    * The shuffle key (term, field, segment) is the salted repartitioning
-    * of the north rule: segment comes from the docid hash-bucket, so the
-    * postings of a hot term ("the", "if", license headers) land on
-    * `#segments` different reducers instead of one.
+    * The shuffle key is `segment` (the docid bucket of the build): the
+    * output is range-partitioned by segment, so every partition holds
+    * whole segments — the layout the block-max engine's segment tasks
+    * need ([[graft.exec.BlockMax]]), and the one the persisted snapshot
+    * has. Range, not hash: a hash of a few small segment ids often puts
+    * two segments in one partition (then one task derives, and later
+    * scores, both), while range bounds give each segment its own
+    * partition when there are enough; the bounds cost one sampling job,
+    * once. The postings of a hot term ("the", "if", license headers)
+    * still land on `#segments` different reducers, one per segment.
     *
-    * Shape: hash repartition on the group key + SPILLABLE sort within
-    * partitions + a streaming per-partition encoder whose working set is
-    * ONE block (≤ blockSize postings), emitted when the block fills or
-    * the (term, field, segment) key changes. Round 2 used
-    * `groupBy.agg(collect_list)`, which holds every group's full posting
-    * list in the aggregation hash map — at high task concurrency in a
-    * bounded heap (the 1.2M-doc 8-core probe) those collect_list buffers
-    * collapsed scaling to 0.54; the sort spills to disk instead of
-    * ballooning, so per-task memory is O(blockSize) regardless of corpus
-    * size or task count — the property a 1000-executor build needs.
+    * Shape: range repartition + SPILLABLE sort within partitions + a
+    * streaming per-partition encoder whose working set is ONE block
+    * (≤ blockSize postings), emitted when the block fills or the (term,
+    * field, segment) key changes. Round 2 used `groupBy.agg(collect_list)`,
+    * which holds every group's full posting list in the aggregation hash
+    * map — at high task concurrency in a bounded heap (the 1.2M-doc
+    * 8-core probe) those collect_list buffers collapsed scaling to 0.54;
+    * the sort spills to disk instead of ballooning, so per-task memory is
+    * O(blockSize) regardless of corpus size or task count.
     */
   def fromPostings(spark: SparkSession, postings: DataFrame,
                    doclen: DataFrame,
@@ -69,11 +74,11 @@ object PostingBlocks {
       .select($"term", $"field",
         shiftright($"docid", IndexBuilder.BucketShift).as("segment"),
         $"docid", $"tf", $"positions", $"len")
-      .repartition($"term", $"field", $"segment")
-      .sortWithinPartitions($"term", $"field", $"segment", $"docid")
+      .repartitionByRange($"segment")
+      .sortWithinPartitions($"segment", $"term", $"field", $"docid")
       .as[(String, String, Long, Long, Int, Array[Int], Long)]
       .mapPartitions(rows =>
-        streamEncode(rows, blockSize, segmentMajor = false))
+        streamEncode(rows, blockSize))
   }
 
   /** Block build over the PERSISTED postings layout — zero shuffle, zero
@@ -85,40 +90,49 @@ object PostingBlocks {
     * ceiling) so a segment file is never split mid-run — segments are
     * the parallel unit, exactly as the snapshot layout intends; size
     * `buckets` so one segment's postings stay in the low GBs at target
-    * scale. This is the snapshot path; [[fromPostings]] (hash shuffle +
+    * scale. This is the snapshot path; [[fromPostings]] (range shuffle +
     * spillable sort) serves unsorted in-memory postings. */
   def fromSortedPostings(spark: SparkSession, postingsDir: String,
                          blockSize: Int = DefaultBlockSize)
       : Dataset[PostingBlock] = {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.files.maxPartitionBytes", s"${64L << 30}")
-    s2.conf.set("spark.sql.files.openCostInBytes", s"${1L << 30}")
+    val s2 = wholeFileSession(spark, 1L << 30)
     import s2.implicits._
     s2.read.parquet(postingsDir)
       .select($"term", $"field", $"segment".cast("long").as("segment"),
         $"docid", $"tf", $"positions", $"len")
       .as[(String, String, Long, Long, Int, Array[Int], Long)]
       .mapPartitions(rows =>
-        streamEncode(rows, blockSize, segmentMajor = true))
+        streamEncode(rows, blockSize))
   }
 
-  /** Streaming encoder over a (term, field, segment, docid)-sorted row
-    * iterator: buffers at most `blockSize` postings, emits a block on
-    * fill or key change. Pure iterator-to-iterator — Spark pulls blocks
-    * as the output parquet writer wants them.
+  /** A cloned session whose file scans never split a file: the split
+    * size ceiling (64 GiB) is above any segment file, and every file
+    * counts at least `openCost` bytes, so a scan partition is a run of
+    * whole files — whole segments, in a one-file-per-segment layout. */
+  private[index] def wholeFileSession(spark: SparkSession,
+                                      openCost: Long): SparkSession = {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.files.maxPartitionBytes", s"${64L << 30}")
+    s2.conf.set("spark.sql.files.openCostInBytes", s"$openCost")
+    s2
+  }
+
+  /** Streaming encoder over a segment-major row iterator — whole
+    * segments, each sorted by (term, field, docid): buffers at most
+    * `blockSize` postings, emits a block on fill or key change. Pure
+    * iterator-to-iterator — Spark pulls blocks as the output parquet
+    * writer wants them.
     *
     * The encoder DEPENDS on layout invariants (docids ascending within a
     * key, each (term, field, segment) run contiguous) that, if violated,
     * would silently emit corrupt blocks (blockId restarting mid-group,
     * unsorted docids breaking the delta-gap varbyte) — so it ASSERTS them
-    * and fails loudly instead (round-3 ADVICE). `segmentMajor` names the
-    * incoming sort order: true for the persisted layout (whole segment
-    * files, (term, field) sorted inside each, every segment in one file),
-    * false for the shuffle path's (term, field, segment) sort — both
-    * checks are O(1) memory apart from a per-segment set. */
+    * and fails loudly instead (round-3 ADVICE): within a segment, key runs
+    * ascend; a segment, once left, never returns. O(1) memory apart from
+    * a per-segment set. */
   private def streamEncode(
       rows: Iterator[(String, String, Long, Long, Int, Array[Int], Long)],
-      blockSize: Int, segmentMajor: Boolean): Iterator[PostingBlock] =
+      blockSize: Int): Iterator[PostingBlock] =
     new Iterator[PostingBlock] {
       private val in = rows.buffered
       private var blockId = 0
@@ -129,21 +143,16 @@ object PostingBlocks {
       def hasNext: Boolean = in.hasNext
 
       /** New key run — assert the input ordering that makes runs
-        * contiguous, per the declared layout. */
+        * contiguous. */
       private def checkRunStart(key: (String, String, Long)): Unit = {
-        if (lastKey != null) {
-          val ok =
-            if (segmentMajor) {
-              if (key._3 == lastKey._3)
-                Ordering.Tuple2[String, String]
-                  .gt((key._1, key._2), (lastKey._1, lastKey._2))
-              else seenSegments.add(key._3)
-            } else Ordering.Tuple3[String, String, Long].gt(key, lastKey)
-          require(ok, s"posting layout violation: key run for $key is " +
-            s"out of order after $lastKey (segmentMajor=$segmentMajor) — " +
-            "blockId numbering would restart mid-group and emit corrupt " +
-            "blocks")
-        } else if (segmentMajor) seenSegments.add(key._3)
+        val ok =
+          if (lastKey != null && key._3 == lastKey._3)
+            Ordering.Tuple2[String, String]
+              .gt((key._1, key._2), (lastKey._1, lastKey._2))
+          else seenSegments.add(key._3)
+        require(ok, s"posting layout violation: key run for $key is " +
+          s"out of order after $lastKey — blockId numbering would restart " +
+          "mid-group and emit corrupt blocks")
         lastKey = key
         lastDocid = Long.MinValue
       }

@@ -110,26 +110,6 @@ object Similarity {
     (0 until BandCount).map(row.getLong)
   }
 
-  /** Banded-LSH ANN over an UNSTORED frame: candidates share ≥1 of the
-    * probe's band keys; exact cosine top-k within the candidate set. Band
-    * keys are computed scan-side, so this is a full scan per probe — the
-    * ad-hoc/one-shot fallback. The serving path is [[writeBucketed]] +
-    * [[lshTopKStored]], where every band's candidates come from a
-    * partition-pruned scan. */
-  def lshTopKBanded(df: DataFrame, idCol: String, vecCol: String,
-                    probe: Array[Float], probeId: Long, k: Int): DataFrame = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val probeKeys = probeBandKeys(spark, probe)
-    val anyBand = (0 until BandCount)
-      .map(bnd => bandKeyCol(col(vecCol), bnd) === lit(probeKeys(bnd)))
-      .reduce(_ || _)
-    df.filter(anyBand && col(idCol) =!= probeId)
-      .select(col(idCol).as("vec_id"),
-        cosineCol(col(vecCol), lit(probe.map(_.toDouble))).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
   /** Auto-sizing target for [[writeBucketed]] partition dirs: ~32k
     * vectors (~10 MB of 64-dim floats) per dir — below it, the
     * 4×2^BandBits-dir layout is all file-open overhead (round-3 VERDICT
@@ -194,7 +174,7 @@ object Similarity {
     * its own partition-pruned replica (the OR of (band, bucket) point
     * predicates prunes to exactly [[BandCount]] partition dirs), vectors
     * matching on several bands are deduplicated, then exact cosine top-k.
-    * Same answer as the scan-side [[lshTopKBanded]] by construction. */
+    * Same answer as a scan-side banded probe by construction. */
   def lshTopKStored(spark: org.apache.spark.sql.SparkSession, dir: String,
                     idCol: String, vecCol: String, probe: Array[Float],
                     probeId: Long, k: Int): DataFrame = {
@@ -307,16 +287,5 @@ object Similarity {
       .withColumn("sim", dot(col("a_v"), col("b_v")) / (col("a_n") * col("b_n")))
       .filter(col("sim") >= threshold)
       .select("a_id", "b_id", "sim")
-  }
-
-  /** Probe ONE band of the stored layout (plan-audit helper: the spec
-    * asserts every band's probe scan shows PartitionFilters). */
-  def storedBandScan(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     band: Int, bucketKey: Long): DataFrame = {
-    val dirs = ensureCommitted(dir)
-    spark.read.parquet(dir)
-      .filter(col("band") === band &&
-        col("bucket") === lit(bucketKey % dirs) &&
-        col("key") === lit(bucketKey))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Similarity
+import graft.ops.{AnnProbes, Similarity}
 import org.scalatest.funspec.AnyFunSpec
 import java.nio.file.{Files, Paths}
 
@@ -27,7 +27,7 @@ class AnnSpec extends AnyFunSpec {
     val single = recall(
       Similarity.lshTopK(emb, "vec_id", "embedding", probe, 0L, 10))
     val banded = recall(
-      Similarity.lshTopKBanded(emb, "vec_id", "embedding", probe, 0L, 10))
+      AnnProbes.lshTopKBanded(emb, "vec_id", "embedding", probe, 0L, 10))
     assert(banded >= single)
     assert(banded > 0.0)
   }
@@ -49,7 +49,7 @@ class AnnSpec extends AnyFunSpec {
 
     // EVERY band's probe scan prunes on its (band, bucket) partition dirs
     (0 until Similarity.BandCount).foreach { b =>
-      val scan = Similarity.storedBandScan(spark, dir, b, keys(b))
+      val scan = AnnProbes.storedBandScan(spark, dir, b, keys(b))
       val plan = scan.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("band") &&
         plan.contains("bucket"), s"band $b plan:\n${plan.take(2000)}")
@@ -67,7 +67,7 @@ class AnnSpec extends AnyFunSpec {
     val plan = stored.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("band"),
       plan.take(2000))
-    val scanSide = Similarity
+    val scanSide = AnnProbes
       .lshTopKBanded(emb, "vec_id", "embedding", probe, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(stored.select("vec_id").as[Long].collect().toSeq == scanSide)
@@ -86,7 +86,7 @@ class AnnSpec extends AnyFunSpec {
     assert(bucketDirs == 1L)
     val stored = Similarity.lshTopKStored(spark, dir, "vec_id", "embedding",
       probe, 0L, 10)
-    val scanSide = Similarity
+    val scanSide = AnnProbes
       .lshTopKBanded(emb, "vec_id", "embedding", probe, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(stored.select("vec_id").as[Long].collect().toSeq == scanSide)

@@ -3,9 +3,9 @@ package graft
 import graft.analysis.AnalyzerConfig
 import graft.api.{Route, SearchEngine}
 import graft.corpus.CorpusGen
-import graft.exec.BlockMaxWand
+import graft.exec.BlockMax
 import graft.index.{IndexBuilder, IndexConfig, PostingBlocks}
-import graft.model.BM25
+import graft.model._
 import org.scalatest.funspec.AnyFunSpec
 
 /** SURVEY §4 item 5 / §5.3: block-max WAND must be provably
@@ -37,8 +37,9 @@ class BlockMaxWandSpec extends AnyFunSpec {
       .rank(engine.scores(s"#SUM(${terms.mkString(" ")})", model), k)
       .select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toVector
+    val sum = Sum(terms.map(t => Score(Term(t, "body"))))
     val pruned = engine.rank(
-      BlockMaxWand.topK(engine.index, blocks4, model, terms, "body", k), k)
+      BlockMax.topK(engine.index, blocks4, sum, model, k).toOption.get, k)
       .select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toVector
     assert(pruned.length == exhaustive.length, s"[$q] row count")
@@ -88,12 +89,12 @@ class BlockMaxWandSpec extends AnyFunSpec {
     it("free text under BM25 takes the pruned path and matches the " +
        "exhaustive reference") {
       val q = "open inverted index query"
-      assert(engine.routed(q, model, 50)._1.isInstanceOf[Route.Bmw])
+      assert(engine.routed(q, model, 50)._1.isInstanceOf[Route.BlockMax])
       assert(ranked(engine.search(q, model, 50)) ==
         ranked(engine.rank(engine.scores(q, model), 50)))
     }
     it("structured queries fall back to the exhaustive planner") {
-      val q = "#SUM(#NEAR/1(inverted index) open)"
+      val q = "#SUM(#SUM(inverted index) open)" // a #SUM over operators
       assert(engine.routed(q, model, 20)._1.isInstanceOf[Route.Exhaustive])
       assert(ranked(engine.search(q, model, 20)) ==
         ranked(engine.rank(engine.scores(q, model), 20)))

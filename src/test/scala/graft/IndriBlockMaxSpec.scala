@@ -3,7 +3,7 @@ package graft
 import graft.analysis.AnalyzerConfig
 import graft.api.SearchEngine
 import graft.corpus.CorpusGen
-import graft.exec.IndriBlockMax
+import graft.exec.BlockMax
 import graft.index.{IndexBuilder, IndexConfig, PostingBlocks}
 import graft.model._
 import org.scalatest.funspec.AnyFunSpec
@@ -35,11 +35,13 @@ class IndriBlockMaxSpec extends AnyFunSpec {
 
   /** Pruned-vs-exhaustive on one query; also asserts the pruned path was
     * actually taken (extract succeeds). */
-  private def runBoth(q: String, k: Int): Unit = {
+  private def runBoth(q: String, k: Int, model: RetrievalModel = model,
+                      mustRoute: Boolean = true): Boolean = {
     val ast = QueryParser.parseQuery(q, model, cfg).get
-    val cands = IndriBlockMax.topK(engine.index, blocks4, Qry.asSl(ast),
+    val cands = BlockMax.topK(engine.index, blocks4, Qry.asSl(ast),
       model, k)
-    assert(cands.isRight, s"[$q] expected the pruned path: $cands")
+    assert(cands.isRight || !mustRoute, s"[$q] expected the pruned path: $cands")
+    if (cands.isLeft) return false
     val pruned = engine.rank(cands.toOption.get, k)
       .select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toVector
@@ -54,16 +56,16 @@ class IndriBlockMaxSpec extends AnyFunSpec {
                java.lang.Double.doubleToLongBits(es),
           s"[$q] rank ${i + 1} ($pe): score $ps vs $es")
     }
+    true
   }
 
-  describe("positional-leaf segment pruning (round-4 VERDICT item 3)") {
-    it("a rare+hot positional join is restricted to co-occurrence-" +
-       "eligible segments, bit-identically") {
+  describe("positional leaves") {
+    it("a rare+hot #WINDOW is bit-identical") {
       import spark.implicits._
       import org.apache.spark.sql.functions._
       // the term spanning the fewest segments + the hottest term sharing
-      // one of its documents: the hot term's positional scan can skip
-      // every segment the rare term does not reach
+      // one of its documents: the window matches only in the segments
+      // where both occur, which the segment task finds from the blocks
       val rare = blocks4.toDF().filter($"field" === "body")
         .groupBy($"term").agg(countDistinct($"segment").as("nseg"))
         .orderBy($"nseg".asc, $"term".asc)
@@ -82,17 +84,9 @@ class IndriBlockMaxSpec extends AnyFunSpec {
         .select($"segment").distinct().as[Long].collect().toSet
       val (rareSegs, hotSegs) = (segsOf(rare), segsOf(hot))
       assert((rareSegs intersect hotSegs).size < (rareSegs union hotSegs).size,
-        s"fixture must make pruning fire: rare=$rare$rareSegs hot=$hot$hotSegs")
-      val q = s"#WAND(0.6 $hot 0.4 #WINDOW/999($rare $hot))"
-      runBoth(q, 10) // bit-identity through the pruned path
-      // ...and the positional evaluation carries the docid-range
-      // restriction (visible in the candidate plan's list sub-plan)
-      val ast = QueryParser.parseQuery(q, model, cfg).get
-      val cands = IndriBlockMax.topK(engine.index, blocks4,
-        Qry.asSl(ast), model, 10).toOption.get
-      val plan = cands.queryExecution.optimizedPlan.toString
-      assert(plan.contains("docid") &&
-             (plan.contains(">=") && plan.contains("<=")), plan.take(1200))
+        s"fixture: some segments hold one term only: rare=$rare$rareSegs " +
+        s"hot=$hot$hotSegs")
+      runBoth(s"#WAND(0.6 $hot 0.4 #WINDOW/999($rare $hot))", 10)
     }
   }
 
@@ -139,11 +133,39 @@ class IndriBlockMaxSpec extends AnyFunSpec {
     }
   }
 
+  describe("trees with positional leaves vs exhaustive (bit-identical)") {
+    it("80 random seeded BM25 and Indri trees over #NEAR/#WINDOW/#SYN leaves") {
+      val v = vocab.take(12) // hot terms: positional leaves match often
+      val rnd = new scala.util.Random(11)
+      def term: String = v(rnd.nextInt(v.length))
+      def leaf(depth: Int): String = rnd.nextInt(if (depth > 1) 1 else 5) match {
+        case 0 => term
+        case 1 => s"#NEAR/${1 + rnd.nextInt(4)}(${leaf(depth + 1)} $term)"
+        case 2 => s"#WINDOW/${2 + rnd.nextInt(8)}(${leaf(depth + 1)} $term)"
+        case 3 => s"#SYN($term ${leaf(depth + 1)})"
+        case _ => s"#NEAR/3($term $term)"
+      }
+      val routed = (0 until 80).count { i =>
+        val leaves = Seq.fill(1 + rnd.nextInt(3))(leaf(0))
+        val k = Seq(1, 5, 20)(rnd.nextInt(3))
+        if (i % 2 == 0)
+          runBoth(s"#SUM(${leaves.mkString(" ")})", k, BM25(1.2f, 0.75f, 0f))
+        else {
+          // an Indri leaf that matches nowhere (zero ctf) is declined
+          val ws = leaves.map(_ => (1 + rnd.nextInt(9)) / 10.0)
+          runBoth("#WAND(" + ws.zip(leaves).map { case (w, l) => s"$w $l" }
+            .mkString(" ") + s" 0.2 #AND($term $term))", k, mustRoute = false)
+        }
+      }
+      assert(routed >= 60, s"only $routed of 80 trees took the pruned path")
+    }
+  }
+
   describe("fallback to the exhaustive planner") {
     it("falls back on zero-ctf leaves, #WSUM, #OR, and multi-field trees") {
       def ext(q: String) = {
         val ast = QueryParser.parseQuery(q, model, cfg).get
-        IndriBlockMax.topK(engine.index, blocks4, Qry.asSl(ast), model, 10)
+        BlockMax.topK(engine.index, blocks4, Qry.asSl(ast), model, 10)
       }
       assert(ext("#AND(zzznotaterm open)").isLeft)       // mle = 0
       assert(ext("#WSUM(0.5 open 0.5 inverted)").isLeft) // not product-form

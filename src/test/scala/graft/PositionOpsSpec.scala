@@ -54,11 +54,11 @@ class PositionOpsSpec extends AnyFunSpec {
     }
     it("is permutation-invariant over its args (the df-sort is a DAAT " +
        "efficiency choice, not a correctness requirement)") {
-      // Load-bearing for positional-leaf segment pruning: under
-      // Planner.planIlRestricted a composite #WINDOW child's docFreq sort
-      // key is its RESTRICTED count, so the pruned plan may order args
-      // differently than the exhaustive plan. Safe because the kernel's
-      // output is arg-order-independent: valid states emit the max VALUE
+      // Load-bearing for the block-max engine: BlockMax.evalIl matches a
+      // #WINDOW's args in query order, while the exhaustive plan sorts
+      // them by docFreq, so the two may order args differently. Safe
+      // because the kernel's output is arg-order-independent: valid states
+      // emit the max VALUE
       // and advance every cursor; an invalid state cannot become valid
       // until all cursors tied at the min advance past it, so the
       // post-tie state is reached regardless of which tied cursor (the

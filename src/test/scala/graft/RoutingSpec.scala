@@ -3,11 +3,12 @@ package graft
 import graft.analysis.AnalyzerConfig
 import graft.api.{Route, SearchEngine}
 import graft.corpus.CorpusGen
-import graft.exec.Expansion
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.exec.{BlockMax, Expansion}
+import graft.index.{IndexBuilder, IndexConfig, IndexStore}
 import graft.model._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerTaskEnd}
+  SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.shiftright
 import org.scalatest.funspec.AnyFunSpec
 
 /** `SearchEngine.search` picks its execution route from the query's
@@ -45,17 +46,16 @@ class RoutingSpec extends AnyFunSpec {
       s"[$q] under $m via $route")
   }
 
-  private val bmw: PartialFunction[Route, Unit] = { case _: Route.Bmw => }
-  private val indriBlockMax: PartialFunction[Route, Unit] =
-    { case _: Route.IndriBlockMax => }
+  private val blockMax: PartialFunction[Route, Unit] =
+    { case _: Route.BlockMax => }
   private def exhaustive(why: String): PartialFunction[Route, Unit] = {
     case Route.Exhaustive(reason) if reason.contains(why) =>
   }
 
   describe("BM25 bag-of-words → block-max WAND") {
-    it("free text") { check("open inverted index query", bm25)(bmw) }
+    it("free text") { check("open inverted index query", bm25)(blockMax) }
     it("a #SUM with a duplicated term") {
-      check("#SUM(open open inverted)", bm25)(bmw)
+      check("#SUM(open open inverted)", bm25)(blockMax)
     }
     it("a multi-field #SUM stays exhaustive") {
       check("#SUM(open f12.title)", bm25)(exhaustive("one field"))
@@ -63,23 +63,40 @@ class RoutingSpec extends AnyFunSpec {
   }
 
   describe("Indri product-form trees → Indri block-max") {
-    it("free text") { check("open inverted index", indri)(indriBlockMax) }
+    it("free text") { check("open inverted index", indri)(blockMax) }
     it("the SDM shape") {
       check("#WAND(0.7 #AND(open inverted) 0.2 #NEAR/1(open inverted) " +
-        "0.1 #WINDOW/8(open inverted))", indri)(indriBlockMax)
+        "0.1 #WINDOW/8(open inverted))", indri)(blockMax)
     }
     it("a PRF combined #WAND") {
       val fb = Expansion.FbParams(fbDocs = 10, fbTerms = 10, fbMu = 2500.0,
         fbOrigWeight = 0.5)
       val (_, combined) = engine.expand("open inverted index", indri, fb)
-      check(combined, indri, 50)(indriBlockMax)
+      check(combined, indri, 50)(blockMax)
+    }
+  }
+
+  describe("positional leaves → the block-max engine") {
+    it("a BM25 #SUM with a #NEAR/1 leaf") {
+      check("#SUM(open #NEAR/1(inverted index))", bm25)(blockMax)
+    }
+    it("a BM25 #SUM with a #SYN leaf") {
+      check("#SUM(#SYN(open query) inverted)", bm25)(blockMax)
+    }
+    it("a BM25 #SUM with a #WINDOW leaf") {
+      check("#SUM(query #WINDOW/8(inverted index))", bm25)(blockMax)
+    }
+    it("a bare Indri #WINDOW") {
+      check("#WINDOW/8(open inverted)", indri)(blockMax)
+    }
+    it("SDM with a #SYN inside a #NEAR") {
+      check("#WAND(0.7 #AND(open inverted) " +
+        "0.2 #NEAR/1(#SYN(open query) inverted) " +
+        "0.1 #WINDOW/8(open inverted))", indri)(blockMax)
     }
   }
 
   describe("everything else → the exhaustive planner") {
-    it("a bare #WINDOW: no term leaf for the block loop to skip") {
-      check("#WINDOW/8(open inverted)", indri)(exhaustive("no term leaf"))
-    }
     it("#WSUM is not product-form") {
       check("#WSUM(0.5 open 0.5 inverted)", indri)(
         exhaustive("not a product-form"))
@@ -105,6 +122,41 @@ class RoutingSpec extends AnyFunSpec {
     }
   }
 
+  /** (jobs, shuffle records written, shuffle bytes written) of `run`.
+    * Listener events arrive asynchronously but in order, so the end of a
+    * later marker job means every job and task of `run` was counted. */
+  private def measured(run: => Unit): (Int, Long, Long) = {
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) {
+          val w = e.taskMetrics.shuffleWriteMetrics
+          records.addAndGet(w.recordsWritten)
+          bytes.addAndGet(w.bytesWritten)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      run
+      val group = s"marker-${System.nanoTime()}"
+      sc.setJobGroup(group, "listener marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val marker = sc.statusTracker.getJobIdsForGroup(group).head
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!ended.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(ended.contains(marker), "listener never saw the marker job")
+      (jobs.size - 1, records.get, bytes.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   it("an in-memory index derives its block table once: a second routed " +
      "query shuffles no postings") {
     // a fresh build (not loaded, no stored postings_blocks): the block
@@ -113,41 +165,119 @@ class RoutingSpec extends AnyFunSpec {
       IndexConfig(buckets = 4)).cacheAll()
     val eng = new SearchEngine(idx, cfg)
     val postingRows = idx.postings.count()
-
-    /** Shuffle records the jobs of `run` write. Listener events arrive
-      * asynchronously but in order, so the end of a later marker job
-      * means every task of `run` has been counted. */
-    def shuffled(run: => Unit): Long = {
-      val written = new java.util.concurrent.atomic.AtomicLong()
-      val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      val listener = new SparkListener {
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null)
-            written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
-        override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
-      }
-      val sc = spark.sparkContext
-      sc.addSparkListener(listener)
-      try {
-        run
-        val group = s"marker-${System.nanoTime()}"
-        sc.setJobGroup(group, "listener marker")
-        try sc.parallelize(Seq(1), 1).count()
-        finally sc.clearJobGroup()
-        val marker = sc.statusTracker.getJobIdsForGroup(group).head
-        val deadline = System.nanoTime() + 30e9.toLong
-        while (!ended.contains(marker) && System.nanoTime() < deadline)
-          Thread.sleep(10)
-        assert(ended.contains(marker), "listener never saw the marker job")
-      } finally sc.removeSparkListener(listener)
-      written.get
-    }
-
-    val first = shuffled(eng.search("open inverted index", bm25, 10).collect())
+    val first = measured(eng.search("open inverted index", bm25, 10).collect())._2
     assert(first >= postingRows,
       s"the first routed query derives the table: $first < $postingRows")
-    val second = shuffled(eng.search("open inverted index", indri, 10).collect())
+    val second = measured(eng.search("open inverted index", indri, 10).collect())._2
     assert(second < postingRows,
       s"the second routed query re-derived the block table: $second records")
+  }
+
+  describe("Spark jobs of a routed query (no shuffle)") {
+    val fb = Expansion.FbParams(fbDocs = 10, fbTerms = 10, fbMu = 2500.0,
+      fbOrigWeight = 0.5)
+    val terms = Seq("open inverted index" -> bm25, "open inverted index" -> indri)
+    val positional = Seq("#SUM(open #NEAR/1(inverted index))" -> bm25,
+      "#WAND(0.7 #AND(open inverted) 0.2 #NEAR/1(open inverted) " +
+        "0.1 #WINDOW/8(open inverted))" -> indri)
+    def prf(eng: SearchEngine): Unit = {
+      val (_, combined) = eng.expand("open inverted", indri, fb)
+      eng.search(combined, indri, 100)
+    }
+    /** Warm a query shape once (first-use derivations, lazy stats), then
+      * measure it. */
+    def jobsOf(eng: SearchEngine, q: String, m: RetrievalModel) = {
+      eng.search(q, m, 100)
+      measured(eng.search(q, m, 100))
+    }
+    def checkEngine(eng: SearchEngine, where: String): Unit = {
+      terms.foreach { case (q, m) =>
+        val (jobs, _, bytes) = jobsOf(eng, q, m)
+        assert(jobs <= 3 && bytes == 0, s"[$where $q $m] $jobs jobs, $bytes B")
+      }
+      positional.foreach { case (q, m) =>
+        val (jobs, _, bytes) = jobsOf(eng, q, m)
+        assert(jobs <= 4 && bytes == 0, s"[$where $q $m] $jobs jobs, $bytes B")
+      }
+    }
+    it("over a stored snapshot: ≤ 3 jobs, ≤ 4 with positional leaves, " +
+       "and a PRF flow in ≤ 9") {
+      val dir = java.nio.file.Files.createTempDirectory("routing-jobs").toString
+      IndexStore.save(engine.index, dir)
+      val eng = new SearchEngine(IndexStore.load(spark, dir), cfg)
+      checkEngine(eng, "stored")
+      prf(eng)
+      val (jobs, _, bytes) = measured(prf(eng))
+      assert(jobs <= 9 && bytes == 0, s"[stored PRF] $jobs jobs, $bytes B")
+    }
+    it("over an in-memory index: ≤ 3 jobs, ≤ 4 with positional leaves") {
+      checkEngine(engine, "in-memory")
+    }
+  }
+
+  it("a positional leaf over more than 512 segments is routed and " +
+     "bit-identical") {
+    import spark.implicits._
+    val idx = IndexBuilder.build(spark, CorpusGen.df(spark, 1500),
+      IndexConfig(buckets = 1024)).cacheAll()
+    val eng = new SearchEngine(idx, cfg)
+    // the two hottest body terms: they co-occur in most documents
+    val Seq(a, b) = idx.termStats.filter($"field" === "body")
+      .orderBy($"df".desc, $"term").select($"term").as[String].take(2).toSeq
+    val q = s"#SUM($a #WINDOW/4($a $b))"
+    val segs = idx.postings
+      .filter($"field" === "body" && $"term".isin(a, b))
+      .groupBy($"docid").count().filter($"count" === 2)
+      .select(shiftright($"docid", IndexBuilder.BucketShift)).distinct()
+      .as[Long].collect().sorted
+    val runs = 1 + segs.sliding(2).count { case Array(x, y) => y != x + 1 }
+    assert(segs.length > 512 && runs > 1,
+      s"fixture: members co-occur in ${segs.length} segments, $runs runs")
+    val (route, _) = eng.routed(q, bm25, 20)
+    assert(route.isInstanceOf[Route.BlockMax], route)
+    assert(rows(eng.search(q, bm25, 20)) ==
+      rows(eng.rank(eng.scores(q, bm25), 20, false)))
+  }
+
+  it("a stored segment dir holding a second block file is refused at load") {
+    val dir = java.nio.file.Files.createTempDirectory("routing-fault")
+    IndexStore.save(engine.index, dir.toString)
+    import scala.jdk.CollectionConverters._
+    val seg = java.nio.file.Files.list(dir.resolve("postings_blocks"))
+      .iterator().asScala.filter(_.getFileName.toString.startsWith("segment="))
+      .toSeq.sortBy(_.toString).head
+    val file = java.nio.file.Files.list(seg).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    java.nio.file.Files.copy(file, seg.resolve("part-copy.parquet"))
+    val e = intercept[IllegalArgumentException](IndexStore.load(spark, dir.toString))
+    assert(e.getMessage.contains("2 data files") &&
+      e.getMessage.contains(seg.getFileName.toString), e.getMessage)
+  }
+
+  it("a block table whose segments are not contiguous runs is refused " +
+     "at query time") {
+    // one partition in term order: every segment's blocks come back
+    // after another segment's began
+    val mixed = engine.index.blocks.orderBy("term", "segment", "blockId")
+      .coalesce(1)
+    val ast = Sum(Seq("open", "inverted", "index").map(t => Score(Term(t, "body"))))
+    val cands = BlockMax.topK(engine.index, mixed, ast, bm25, 20)
+      .toOption.get
+    val e = intercept[org.apache.spark.SparkException](cands.collect())
+    assert(e.getMessage.contains("not one contiguous run"), e.getMessage)
+  }
+
+  it("the exhaustive route compiles no new class for a second query of " +
+     "the same shape") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(q: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      engine.search(q, bm25, 50).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    // multi-field BM25 stays exhaustive; the second query's rsj and
+    // terms differ, its plan shape does not
+    compiles("#SUM(open f12.title inverted)")
+    assert(compiles("#SUM(query f7.title index)") == 0)
   }
 }
