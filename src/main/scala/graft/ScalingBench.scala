@@ -131,7 +131,7 @@ object ScalingBench {
         def runs(warm: Boolean) = queries.map { case (name, q, m) =>
           val t0 = System.nanoTime()
           // `_pruned` rows time the routed search, their twins the
-          // exhaustive reference
+          // exhaustive `scores`: the same engine with pruning off
           val res =
             if (name.endsWith("_pruned")) engine.search(q, m, 100)
             else engine.rank(engine.scores(q, m), 100, engine.tieProne(m))

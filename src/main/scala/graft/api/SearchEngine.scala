@@ -42,8 +42,10 @@ final class SearchEngine(val index: Index,
         s"Query syntax is incorrect. $queryText"))
 
   /** (docid, score) of EVERY matching document for a raw query string
-    * (post default-op wrap), from the exhaustive planner — the reference
-    * that the pruned routes of [[search]] are rank-identical to. */
+    * (post default-op wrap): the block-max engine with pruning off
+    * ([[Planner]]). The pruned route of [[search]] scores with the same
+    * scorer, so `rank(scores(...))` checks pruning, not arithmetic; the
+    * test-only reference engine checks that. */
   def scores(queryText: String, model: RetrievalModel): DataFrame =
     new Planner(index, model).plan(parse(queryText, model))
 
@@ -164,7 +166,7 @@ final class SearchEngine(val index: Index,
     *    the segment-local block-max engine ([[graft.exec.BlockMax]]),
     *    which declines multi-field trees and zero-ctf Indri leaves;
     *  - anything else (boolean models, `#WSUM`, `#OR`, a `#SUM` over
-    *    operators) → the exhaustive [[Planner]].
+    *    operators) → the same engine unpruned ([[Planner]]).
     * Every route is rank-identical to `rank(scores(...))` (property-tested
     * in BlockMaxWandSpec / IndriBlockMaxSpec / RoutingSpec). */
   private[graft] def routed(queryText: String, model: RetrievalModel,
@@ -316,8 +318,8 @@ final class SearchEngine(val index: Index,
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val cache = tieProne(model)
-    // route and plan serially: parsing + leaf-stat lookups mutate
-    // planner caches
+    // route and plan serially (each plan collects its leaf statistics);
+    // only the phase-1 scoring jobs run concurrently
     val planned: Seq[(Int, DataFrame)] = queries.map { case (qid, q) =>
       qid -> narrowScores(routed(q, model, k)._2, cache)
     }

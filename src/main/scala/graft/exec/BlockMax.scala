@@ -5,59 +5,139 @@ import graft.model._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, collect_list, map_from_entries, struct}
 
 import scala.collection.mutable
 
-/** Block-max pruned top-k for the two additive query families — the one
-  * engine behind [[graft.api.SearchEngine.search]]'s pruned route
-  * (SURVEY §4 item 5; the reference evaluates them exhaustively, DAAT):
+/** The query engine: document-at-a-time evaluation of a query's score
+  * tree over the compressed block table, segment by segment (SURVEY §2–3;
+  * the reference evaluates DAAT over inverted lists), in two modes that
+  * share one exact scorer ([[DocScorer]]):
   *
-  *  - BM25 `#SUM` over scored leaves: the score is a sum of per-leaf
-  *    contributions;
-  *  - Indri product form, any nesting of `#WAND`/`#AND` over scored
-  *    leaves — the reference's flagship SDM shape and PRF's combined
-  *    query. `∏ sᵢ^{uᵢ}` (uᵢ > 0; nested #AND exponents multiply down the
-  *    path) is monotone in every leaf, so in LOG space it is additive: a
-  *    baseline (every leaf at its largest default score) plus per-leaf
-  *    gains.
+  *  - unpruned ([[all]], behind [[Planner.plan]]): every document the
+  *    tree matches, with its score — any operator, any retrieval model,
+  *    any number of fields;
+  *  - pruned ([[topK]], behind [[graft.api.SearchEngine.search]]'s
+  *    block-max route; SURVEY §4 item 5) for the two additive families in
+  *    one field: BM25 `#SUM` over scored leaves (a sum of per-leaf
+  *    contributions) and Indri product form, any nesting of `#WAND`/`#AND`
+  *    over scored leaves — the reference's flagship SDM shape and PRF's
+  *    combined query. `∏ sᵢ^{uᵢ}` (uᵢ > 0; nested #AND exponents multiply
+  *    down the path) is monotone in every leaf, so in LOG space it is
+  *    additive: a baseline (every leaf at its largest default score) plus
+  *    per-leaf gains.
   *
   * A leaf is a plain term or a positional operator (`#NEAR`, `#WINDOW`,
-  * `#SYN`, nested). Both families share one block cursor, one
-  * materialized-list cursor, one worst-first heap and one pivot loop
-  * (Broder et al.'s WAND with Ding & Suel's block maxima, public
-  * literature); a [[Scorer]] supplies the per-leaf gain bounds and the
-  * exact score. Bounds carry an epsilon margin, so float rounding never
-  * flips a prune; accepted documents are scored by replaying the
-  * exhaustive [[Planner]]'s float/double arithmetic in its child order,
-  * so emitted scores are BIT-identical to it (property-tested in
-  * BlockMaxWandSpec and IndriBlockMaxSpec).
+  * `#SYN`, nested), matched inside the segment task from the decoded
+  * blocks' positions with the [[PositionKernels]]; one job before the
+  * scoring job sums their global df/ctf (a scorer statistic) over the same
+  * blocks. The pruned mode is Broder et al.'s WAND with Ding & Suel's
+  * block maxima (public literature): one block cursor, one
+  * materialized-list cursor, one worst-first heap and one pivot loop;
+  * [[Bounds]] supply per-leaf gain bounds with an epsilon margin, so float
+  * rounding never flips a prune. Both modes score a document with the same
+  * [[DocScorer]], so they are BIT-identical to each other (BlockMaxWandSpec,
+  * IndriBlockMaxSpec) and to the test-only reference engine
+  * (EngineVsOracleSpec).
   *
-  * Distribution: the engine is a `mapPartitions` over the block table,
-  * whose partitions hold whole segments (docid buckets) — the stored
-  * snapshot is read without splitting a segment file, a derived table is
-  * range-partitioned by segment ([[graft.index.Index.blocks]]) — so no
-  * query shuffles. Each task runs the pivot loop per segment and emits
-  * that segment's top-k, valid for the global extid tiebreak because
-  * docid order within a segment IS extid order. Positional leaves are
-  * matched inside the task from the decoded blocks' positions with the
-  * [[PositionKernels]] the exhaustive plan uses; one job before the
-  * top-k job sums their global df/ctf (a scorer statistic) over the same
-  * blocks.
+  * Distribution: a `mapPartitions` over the block table filtered to the
+  * query's terms and fields, whose partitions hold whole segments (docid
+  * buckets) — the stored snapshot is read without splitting a segment
+  * file, a derived table is range-partitioned by segment
+  * ([[graft.index.Index.blocks]]) — so no query shuffles, except the one
+  * doc-length join of an Indri tree over more than one field (a
+  * document's length in a field where no leaf matched it comes from
+  * `doclen`). The pruned mode emits each segment's top-k, valid for the
+  * global extid tiebreak because docid order within a segment IS extid
+  * order.
   */
 object BlockMax {
 
-  /** Score tree over leaf ids. */
-  sealed trait PTree
-  final case class PLeaf(id: Int) extends PTree
-  final case class PAnd(children: Seq[PTree]) extends PTree
-  final case class PWAnd(wn: Seq[Float], children: Seq[PTree]) extends PTree
-  final case class PSum(leaves: Seq[Int]) extends PTree
+  /** A query's score tree over numbered leaves. */
+  private sealed trait PTree
+  private final case class PLeaf(id: Int) extends PTree
+  private final case class PAnd(children: Seq[PTree]) extends PTree
+  private final case class POr(children: Seq[PTree]) extends PTree
+  private final case class PSum(children: Seq[PTree]) extends PTree
+  private final case class PWAnd(wn: Seq[Float], children: Seq[PTree]) extends PTree
+  private final case class PWSum(wn: Seq[Float], children: Seq[PTree]) extends PTree
 
-  // ------------------------------------------------------------ scorers
+  // ------------------------------------------------------------ scoring
 
-  /** The additive face of a retrieval model over one query's leaves. */
-  private sealed trait Scorer extends Serializable {
+  /** The exact score of one document — the one score implementation of
+    * every retrieval model. `tf(id)` is 0 for a leaf absent from the
+    * document, `lens(field(id))` its length in leaf `id`'s field; `stat`
+    * is a leaf's BM25 rsj or Indri pMLE. Java float intermediates widen to
+    * double at the end, and operators fold in child order, exactly as the
+    * reference does (SURVEY §2.4). */
+  private final case class DocScorer(tree: PTree, model: RetrievalModel,
+                                     field: Array[Int], stat: Array[Float],
+                                     avgDocLen: Array[Float]) {
+    private val boolean = model == RankedBoolean || model == UnrankedBoolean
+    private val usrWeight: Double = model match {
+      case BM25(_, _, k3) =>
+        val qtf = 1 // QryopSlSum.java:69-75
+        ((k3 + 1) * qtf / (k3 + qtf)).toDouble
+      case _ => 1.0
+    }
+
+    /** A leaf's score at tf > 0 (`QryopSlScore.java:146-157` BM25,
+      * :200-210 Indri) and its Indri default at tf = 0 (:233-247, the
+      * factored form of :243). */
+    def leaf(id: Int, tf: Int, len: Long): Double = model match {
+      case UnrankedBoolean => 1.0
+      case RankedBoolean   => tf.toDouble
+      case BM25(k1, b, _) =>
+        val tfW: Float = tf / (tf + k1 * (1 - b + b * len / avgDocLen(id)))
+        (stat(id) * tfW).toDouble
+      case Indri(mu, lambda) =>
+        val m = stat(id)
+        if (tf > 0) (lambda * (tf + mu * m) / (len + mu) + (1 - lambda) * m).toDouble
+        else (((lambda * mu / (len + mu)) + (1 - lambda)) * m).toDouble
+    }
+
+    /** Whether the document is in the tree's result list: boolean #AND
+      * needs every child, every other operator any. */
+    def matches(tf: Array[Int]): Boolean = matches(tree, tf)
+    private def matches(t: PTree, tf: Array[Int]): Boolean = t match {
+      case PLeaf(id)              => tf(id) > 0
+      case PAnd(cs) if boolean    => cs.forall(matches(_, tf))
+      case PAnd(cs)               => cs.exists(matches(_, tf))
+      case POr(cs)                => cs.exists(matches(_, tf))
+      case PSum(cs)               => cs.exists(matches(_, tf))
+      case PWAnd(_, cs)           => cs.exists(matches(_, tf))
+      case PWSum(_, cs)           => cs.exists(matches(_, tf))
+    }
+
+    def score(tf: Array[Int], lens: Array[Long]): Double = {
+      def eval(t: PTree): Double = t match {
+        case PLeaf(id) => leaf(id, tf(id), lens(field(id)))
+        case PAnd(cs) => model match { // QryopSlAnd.java:65-123, :134-174
+          case RankedBoolean   => cs.map(eval).reduce((a, b) => math.min(a, b))
+          case UnrankedBoolean => 1.0
+          case _ =>
+            StrictMath.pow(cs.foldLeft(1.0)((acc, c) => acc * eval(c)),
+              1.0 / cs.length)
+        }
+        case POr(cs) => // QryopSlOr.java:57-99
+          if (model == UnrankedBoolean) 1.0
+          else cs.filter(matches(_, tf)).map(eval).reduce((a, b) => math.max(a, b))
+        case PSum(cs) => // QryopSlSum.java:55-101: present children only
+          cs.foldLeft(0.0)((acc, c) =>
+            if (matches(c, tf)) acc + eval(c) * usrWeight else acc)
+        case PWAnd(wn, cs) =>
+          cs.zip(wn).foldLeft(1.0) { case (acc, (c, w)) =>
+            acc * StrictMath.pow(eval(c), w.toDouble)
+          }
+        case PWSum(wn, cs) =>
+          cs.zip(wn).foldLeft(0.0) { case (acc, (c, w)) => acc + eval(c) * w }
+      }
+      eval(tree)
+    }
+  }
+
+  /** The pruning face of a retrieval model over one query's leaves. */
+  private sealed trait Bounds extends Serializable {
     /** Upper bound of leaf `id`'s gain over [[baseline]] at any posting
       * with tf ≤ maxTf and len in [minLen, maxLen]; never negative. */
     def gain(id: Int, maxTf: Int, minLen: Long, maxLen: Long): Double
@@ -66,92 +146,46 @@ object BlockMax {
     /** What a document's bound must reach to enter a full heap whose
       * worst score is `worst`. */
     def bar(worst: Double): Double
-    /** Exact score; `tf(id)` is 0 for a leaf absent from the document. */
-    def score(tf: Array[Int], len: Long): Double
   }
 
-  /** BM25 `#SUM` (`QryopSlSum.java:55-101`): child-ordered sum of the
-    * per-posting scores of `QryopSlScore.java:146-157`, float-faithful
-    * like [[Bm25TermScore]]. tf-weight increases in tf and decreases in
-    * docLen, so `rsj·tfW(maxTf, minLen)` (rsj ≥ 0) / `rsj·tfW(1, maxLen)`
-    * (rsj < 0) bounds a block for any (k1, b); a leaf occurring `mult`
-    * times counts `mult` times, and a negative bound counts 0 (a document
-    * missing the leaf scores 0 from it, which is larger). */
-  private final case class Bm25Scorer(children: Array[Int], rsj: Array[Float],
-                                      mult: Array[Int], k1: Float, b: Float,
-                                      avgDocLen: Float, usrWeight: Double)
-      extends Scorer {
-    private def contribution(tf: Int, len: Long, r: Float): Double = {
-      val tfW: Float = tf / (tf + k1 * (1 - b + b * len / avgDocLen))
-      (r * tfW).toDouble
-    }
+  /** BM25 `#SUM`: tf-weight increases in tf and decreases in docLen, so
+    * `rsj·tfW(maxTf, minLen)` (rsj ≥ 0) / `rsj·tfW(1, maxLen)` (rsj < 0)
+    * bounds a block for any (k1, b); a leaf occurring `mult` times counts
+    * `mult` times, and a negative bound counts 0 (a document missing the
+    * leaf scores 0 from it, which is larger). */
+  private final case class Bm25Bounds(s: DocScorer, mult: Array[Int])
+      extends Bounds {
     def gain(id: Int, maxTf: Int, minLen: Long, maxLen: Long): Double = {
-      val r = rsj(id)
       val raw =
-        if (r >= 0) contribution(maxTf, minLen, r) else contribution(1, maxLen, r)
+        if (s.stat(id) >= 0) s.leaf(id, maxTf, minLen) else s.leaf(id, 1, maxLen)
       math.max((raw + 1e-6 * (1.0 + math.abs(raw))) * mult(id), 0.0)
     }
     def baseline: Double = 0.0
     def bar(worst: Double): Double = worst
-    def score(tf: Array[Int], len: Long): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < children.length) {
-        val id = children(i)
-        if (tf(id) > 0) s += contribution(tf(id), len, rsj(id)) * usrWeight
-        i += 1
-      }
-      s
-    }
   }
 
-  /** Indri product form. The Dirichlet score
-    * `λ(tf+μ·pMLE)/(len+μ) + (1-λ)pMLE` increases in tf and decreases in
-    * len, so `present(maxTf, minLen)` bounds a block and `default(1)`
-    * bounds an absent leaf; exact scores replay [[Planner.planSl]]'s
-    * And/WAnd folds and StrictMath.pow calls over the float expressions
-    * of [[IndriTermScore]]/[[IndriDefaultScore]]. */
-  private final case class IndriScorer(tree: PTree, mle: Array[Float],
-                                       u: Array[Double], mu: Float,
-                                       lambda: Float) extends Scorer {
+  /** Indri product form. The Dirichlet score increases in tf and
+    * decreases in len, so the score at (maxTf, minLen) bounds a block and
+    * the default at len 1 bounds an absent leaf; `u` are the leaves'
+    * exponents. */
+  private final case class IndriBounds(s: DocScorer, u: Array[Double])
+      extends Bounds {
     private val Eps = 1e-7
     private def widen(x: Double): Double = x + Eps * (1.0 + math.abs(x))
-    private def present(tf: Int, len: Long, m: Float): Double = {
-      val s: Float = lambda * (tf + mu * m) / (len + mu) + (1 - lambda) * m
-      s.toDouble
-    }
-    private def dflt(len: Long, m: Float): Double =
-      (((lambda * mu / (len + mu)) + (1 - lambda)) * m).toDouble
     private val logDefUb: Array[Double] =
-      mle.map(m => widen(math.log(dflt(1L, m))))
+      u.indices.map(id => widen(math.log(s.leaf(id, 0, 1L)))).toArray
     val baseline: Double = u.indices.map(id => u(id) * logDefUb(id)).sum
     // the margin on the bar scales with the leaf count: float-vs-log
-    // rounding of the exact replay can accumulate across leaves, so a
+    // rounding of the exact score can accumulate across leaves, so a
     // fixed single-eps margin could be outrun by a deep tree; widening
     // only loosens pruning, never flips one
-    private val barEps = Eps * math.max(1, mle.length)
+    private val barEps = Eps * math.max(1, u.length)
     def gain(id: Int, maxTf: Int, minLen: Long, maxLen: Long): Double =
       math.max(u(id) *
-        (widen(math.log(present(maxTf, minLen, mle(id)))) - logDefUb(id)), 0.0)
+        (widen(math.log(s.leaf(id, maxTf, minLen))) - logDefUb(id)), 0.0)
     def bar(worst: Double): Double =
       if (worst <= 0) Double.NegativeInfinity // log of non-positive
       else { val l = math.log(worst); l - barEps * (1.0 + math.abs(l)) }
-    def score(tf: Array[Int], len: Long): Double = {
-      def eval(t: PTree): Double = t match {
-        case PLeaf(id) =>
-          if (tf(id) > 0) present(tf(id), len, mle(id)) else dflt(len, mle(id))
-        case PAnd(cs) =>
-          StrictMath.pow(cs.foldLeft(1.0)((acc, c) => acc * eval(c)),
-            1.0 / cs.length)
-        case PWAnd(wn, cs) =>
-          cs.zip(wn).foldLeft(1.0) { case (acc, (c, w)) =>
-            acc * StrictMath.pow(eval(c), w.toDouble)
-          }
-        case PSum(_) =>
-          throw new IllegalStateException("#SUM is not an Indri operator")
-      }
-      eval(tree)
-    }
   }
 
   // ------------------------------------------------------------ cursors
@@ -175,9 +209,9 @@ object BlockMax {
     * navigation lands INSIDE it; block-boundary skips read metadata
     * only. */
   private final class BlockCursor(id: Int, blocks: Array[PostingBlock],
-                                  scorer: Scorer) extends Cursor(id) {
+                                  bounds: Bounds) extends Cursor(id) {
     private val gains =
-      blocks.map(b => scorer.gain(id, b.maxTf, b.minLen, b.maxLen))
+      blocks.map(b => bounds.gain(id, b.maxTf, b.minLen, b.maxLen))
     val segGain: Double = gains.max
     private var bi = 0
     private var decoded: Array[Posting] = _
@@ -219,10 +253,10 @@ object BlockMax {
 
   /** A positional leaf's list, materialized for one segment; the whole
     * list is one block. */
-  private final class ListCursor(id: Int, l: PList, scorer: Scorer)
+  private final class ListCursor(id: Int, l: PList, bounds: Bounds)
       extends Cursor(id) {
     val segGain: Double = l.docids.indices
-      .map(i => scorer.gain(id, l.tfs(i), l.lens(i), l.lens(i))).max
+      .map(i => bounds.gain(id, l.tfs(i), l.lens(i), l.lens(i))).max
     private var i = 0
     var curDoc: Long = l.docids(0)
     def blockGain: Double = segGain
@@ -235,22 +269,24 @@ object BlockMax {
     def len: Long = l.lens(i)
   }
 
-  // ------------------------------------------------------- segment loop
+  // ------------------------------------------------------ segment loops
 
   /** One segment's pruned evaluation → its local top-k (docid, score). */
-  private def segmentTopK(cursors: Array[Cursor], scorer: Scorer,
-                          nLeaves: Int, k: Int): Iterator[(Long, Double)] = {
+  private def segmentTopK(cursors: Array[Cursor], bounds: Bounds,
+                          scorer: DocScorer, nLeaves: Int,
+                          k: Int): Iterator[(Long, Double)] = {
     // worst-first heap: lowest score first, then HIGHEST docid first
     implicit val ord: Ordering[(Long, Double)] =
       Ordering.by[(Long, Double), (Double, Long)] { case (d, s) => (-s, d) }
     val heap = mutable.PriorityQueue.empty[(Long, Double)]
     def bar: Double =
-      if (heap.size < k) Double.NegativeInfinity else scorer.bar(heap.head._2)
+      if (heap.size < k) Double.NegativeInfinity else bounds.bar(heap.head._2)
     val tfs = new Array[Int](nLeaves)
+    val lens = new Array[Long](1) // one field
     var done = false
     while (!done) {
       val sorted = cursors.filter(_.curDoc != Long.MaxValue).sortBy(_.curDoc)
-      val need = bar - scorer.baseline
+      val need = bar - bounds.baseline
       // pivot: the first prefix whose summed gain can reach the bar
       var acc = 0.0
       var p = -1
@@ -268,11 +304,10 @@ object BlockMax {
           // the pivot index — so the refinement bound, the scoring and
           // the advance all range over that tied set
           val atPivot = sorted.filter(_.curDoc == pivotDoc)
-          if (scorer.baseline + atPivot.map(_.blockGain).sum >= bar) {
+          if (bounds.baseline + atPivot.map(_.blockGain).sum >= bar) {
             java.util.Arrays.fill(tfs, 0)
-            var len = 0L
-            atPivot.foreach { c => tfs(c.id) = c.tf; len = c.len }
-            val s = scorer.score(tfs, len)
+            atPivot.foreach { c => tfs(c.id) = c.tf; lens(0) = c.len }
+            val s = scorer.score(tfs, lens)
             if (heap.size < k) heap.enqueue((pivotDoc, s))
             else {
               val (wd, ws) = heap.head
@@ -296,6 +331,57 @@ object BlockMax {
     heap.dequeueAll.reverseIterator
   }
 
+  /** One segment's unpruned evaluation: a docid-ordered merge of every
+    * leaf's list, emitting each document the tree matches with its
+    * leaves' tfs and its lengths in the query's fields (-1 where no leaf
+    * matched it). `emit` may keep neither array. */
+  private def segmentAll[T](byKey: ByKey, leaves: IndexedSeq[Il],
+                            nFields: Int, scorer: DocScorer)
+                           (emit: (Long, Array[Int], Array[Long]) => T)
+      : Iterator[T] = {
+    val field = scorer.field
+    val byId = leafLists(byKey, leaves, leaves.indices)
+    val lists = leaves.indices.map(byId)
+    val out = mutable.ArrayBuffer.empty[T]
+    val tfs = new Array[Int](lists.length)
+    val lens = new Array[Long](nFields)
+    merge(lists) { (d, at) =>
+      java.util.Arrays.fill(tfs, 0)
+      java.util.Arrays.fill(lens, -1L)
+      lists.indices.foreach { j =>
+        if (at(j) >= 0) {
+          tfs(j) = lists(j).tfs(at(j)); lens(field(j)) = lists(j).lens(at(j))
+        }
+      }
+      if (scorer.matches(tfs)) out += emit(d, tfs, lens)
+    }
+    out.iterator
+  }
+
+  /** A docid-ordered merge of `ls`: `visit(d, at)` for every document,
+    * where `at(j)` is d's index in list j, or -1. */
+  private def merge(ls: Seq[PList])(visit: (Long, Array[Int]) => Unit): Unit = {
+    val ptr = new Array[Int](ls.length)
+    val at = new Array[Int](ls.length)
+    var more = true
+    while (more) {
+      var d = Long.MaxValue
+      ls.indices.foreach { j =>
+        if (ptr(j) < ls(j).docids.length) d = math.min(d, ls(j).docids(ptr(j)))
+      }
+      if (d == Long.MaxValue) more = false
+      else {
+        ls.indices.foreach { j =>
+          val l = ls(j)
+          if (ptr(j) < l.docids.length && l.docids(ptr(j)) == d) {
+            at(j) = ptr(j); ptr(j) += 1
+          } else at(j) = -1
+        }
+        visit(d, at)
+      }
+    }
+  }
+
   // -------------------------------------------------- positional leaves
 
   /** A leaf's matches within one segment: docid-ascending docs with
@@ -314,14 +400,15 @@ object BlockMax {
       blocks.flatMap(b => PostingCodec.decodeLens(b.lens, b.df)))
   }
 
-  /** Evaluate a positional leaf over one segment's decoded term lists,
-    * with the semantics of [[Planner.planIl]]: #SYN unions the members'
-    * positions (sorted, duplicates kept); #NEAR/#WINDOW match documents
-    * holding every argument with the same kernels. #WINDOW's arguments
-    * are not re-sorted by df: the kernel is permutation-invariant over
-    * them (property-tested in PositionOpsSpec). */
-  private def evalIl(il: Il, term: String => PList): PList = il match {
-    case Term(t, _) => term(t)
+  /** Evaluate a leaf over one segment's decoded term lists, with the
+    * reference's semantics: #SYN unions the members' positions (sorted,
+    * duplicates kept, `QryopIlSyn.java:69-81`); #NEAR/#WINDOW match
+    * documents holding every argument with the kernels. #WINDOW's
+    * arguments are not sorted by df (`QryopIlWindow.java:52`): the kernel
+    * is permutation-invariant over them (property-tested in
+    * PositionOpsSpec). */
+  private def evalIl(il: Il, term: ((String, String)) => PList): PList = il match {
+    case Term(t, f) => term((t, f))
     case Syn(as)    => union(as.map(evalIl(_, term)))
     case Near(d, as) =>
       matched(as.map(evalIl(_, term)))(PositionKernels.near(_, d))
@@ -331,29 +418,17 @@ object BlockMax {
   }
 
   private def union(ls: Seq[PList]): PList = {
-    val ptr = new Array[Int](ls.length)
     val (ds, ps, lens) = (mutable.ArrayBuilder.make[Long],
       mutable.ArrayBuilder.make[Array[Int]], mutable.ArrayBuilder.make[Long])
-    var more = true
-    while (more) {
-      var d = Long.MaxValue
+    merge(ls) { (d, at) =>
+      val merged = mutable.ArrayBuilder.make[Int]
+      var len = -1L // any member's: same doc, same field
       ls.indices.foreach { j =>
-        if (ptr(j) < ls(j).docids.length) d = math.min(d, ls(j).docids(ptr(j)))
+        if (at(j) >= 0) { merged ++= ls(j).pos(at(j)); len = ls(j).lens(at(j)) }
       }
-      if (d == Long.MaxValue) more = false
-      else {
-        val merged = mutable.ArrayBuilder.make[Int]
-        var len = -1L // any member's: same doc, same field
-        ls.indices.foreach { j =>
-          val l = ls(j)
-          if (ptr(j) < l.docids.length && l.docids(ptr(j)) == d) {
-            merged ++= l.pos(ptr(j)); len = l.lens(ptr(j)); ptr(j) += 1
-          }
-        }
-        val m = merged.result()
-        java.util.Arrays.sort(m)
-        ds += d; ps += m; lens += len
-      }
+      val m = merged.result()
+      java.util.Arrays.sort(m)
+      ds += d; ps += m; lens += len
     }
     new PList(ds.result(), ps.result(), lens.result())
   }
@@ -388,13 +463,15 @@ object BlockMax {
 
   // ------------------------------------------------------- segment tasks
 
-  /** A partition's blocks, one segment at a time, per term in blockId
-    * order. The partition holds whole segments, each as one contiguous
-    * run (a stored segment file; a derived partition sorted by segment),
-    * so a task holds one segment's blocks at a time; a segment that
-    * comes back after another began is refused, never scored in parts. */
-  private def segments(it: Iterator[PostingBlock])
-      : Iterator[Map[String, Array[PostingBlock]]] = {
+  private type ByKey = Map[(String, String), Array[PostingBlock]]
+
+  /** A partition's blocks, one segment at a time, per (term, field) in
+    * blockId order. The partition holds whole segments, each as one
+    * contiguous run (a stored segment file; a derived partition sorted by
+    * segment), so a task holds one segment's blocks at a time; a segment
+    * that comes back after another began is refused, never scored in
+    * parts. */
+  private def segments(it: Iterator[PostingBlock]): Iterator[ByKey] = {
     val in = it.buffered
     val seen = mutable.HashSet.empty[Long]
     Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
@@ -404,79 +481,108 @@ object BlockMax {
         "segment from all of its blocks at once")
       val run = mutable.ArrayBuffer.empty[PostingBlock]
       while (in.hasNext && in.head.segment == seg) run += in.next()
-      run.toArray.groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.blockId) }
+      run.toArray.groupBy(b => (b.term, b.field))
+        .map { case (key, bs) => key -> bs.sortBy(_.blockId) }
     }
   }
 
-  /** One segment's positional leaves, evaluated from its decoded terms. */
-  private def positionalLists(byTerm: Map[String, Array[PostingBlock]],
-                              leaves: IndexedSeq[Il]): Map[Int, PList] = {
-    val decoded = mutable.HashMap.empty[String, PList]
-    val term: String => PList = t => decoded.getOrElseUpdate(t,
-      decodeAll(byTerm.getOrElse(t, Array.empty[PostingBlock])))
-    leaves.indices.collect {
-      case id if !leaves(id).isInstanceOf[Term] => id -> evalIl(leaves(id), term)
-    }.toMap
+  /** One segment's lists of the leaves `ids`, evaluated from its decoded
+    * terms (each decoded once). */
+  private def leafLists(byKey: ByKey, leaves: IndexedSeq[Il],
+                        ids: Seq[Int]): Map[Int, PList] = {
+    val decoded = mutable.HashMap.empty[(String, String), PList]
+    val term: ((String, String)) => PList = key => decoded.getOrElseUpdate(key,
+      decodeAll(byKey.getOrElse(key, Array.empty[PostingBlock])))
+    ids.map(id => id -> evalIl(leaves(id), term)).toMap
   }
 
-  private def segmentTask(byTerm: Map[String, Array[PostingBlock]],
-                          leaves: IndexedSeq[Il], scorer: Scorer,
+  private def positional(leaves: IndexedSeq[Il]): Seq[Int] =
+    leaves.indices.filterNot(id => leaves(id).isInstanceOf[Term])
+
+  private def segmentTask(byKey: ByKey, leaves: IndexedSeq[Il],
+                          bounds: Bounds, scorer: DocScorer,
                           k: Int): Iterator[(Long, Double)] = {
-    val lists = positionalLists(byTerm, leaves)
+    val lists = leafLists(byKey, leaves, positional(leaves))
     val cursors: Array[Cursor] = leaves.indices.flatMap { id =>
       leaves(id) match {
-        case Term(t, _) => byTerm.get(t).map(new BlockCursor(id, _, scorer))
+        case Term(t, f) => byKey.get((t, f)).map(new BlockCursor(id, _, bounds))
         case _ => Some(lists(id)).filterNot(_.isEmpty)
-          .map(new ListCursor(id, _, scorer))
+          .map(new ListCursor(id, _, bounds))
       }
     }.toArray
-    segmentTopK(cursors, scorer, leaves.length, k)
+    segmentTopK(cursors, bounds, scorer, leaves.length, k)
   }
 
-  // -------------------------------------------------------- extraction
+  // ------------------------------------------------------ query shapes
 
-  /** The score tree and its distinct leaves (a repeated leaf keeps one
-    * id), or why the engine does not serve the shape. */
-  private def extract(ast: Sl, model: RetrievalModel)
-      : Either[String, (PTree, IndexedSeq[Il])] = {
+  /** The score tree of `ast` and its distinct leaves (a repeated leaf
+    * keeps one id), with the reference's operator × model checks
+    * (SURVEY §2.2) and messages. */
+  private def compile(ast: Sl, model: RetrievalModel)
+      : (PTree, IndexedSeq[Il]) = {
     val ids = mutable.LinkedHashMap.empty[Il, Int]
-    def leaf(il: Il): Int = ids.getOrElseUpdate(il, ids.size)
-    def product(q: Sl): Option[PTree] = q match {
-      case Score(il) => Some(PLeaf(leaf(il)))
-      case And(args) if args.nonEmpty =>
-        val cs = args.map(product)
-        if (cs.forall(_.isDefined)) Some(PAnd(cs.flatten)) else None
-      case WAnd(ws, args) if args.nonEmpty && ws.length == args.length =>
-        val cs = args.map(product)
-        val wn = Planner.normalizeWeights(ws)
-        if (cs.forall(_.isDefined) && wn.forall(_ > 0f))
-          Some(PWAnd(wn, cs.flatten))
-        else None
-      case _ => None
+    val boolean = model == RankedBoolean || model == UnrankedBoolean
+    val indri = model.isInstanceOf[Indri]
+    def tree(q: Sl): PTree = q match {
+      case Score(il) =>
+        fieldOf(il)
+        PLeaf(ids.getOrElseUpdate(il, ids.size))
+      case And(as) if boolean || indri => PAnd(as.map(tree))
+      case And(_) => throw new IllegalStateException("#AND unsupported for BM25")
+      case Or(as) if boolean => POr(as.map(tree))
+      case Or(_) => throw new IllegalStateException("#OR unsupported for " + model)
+      case Sum(as) if model.isInstanceOf[BM25] => PSum(as.map(tree))
+      case Sum(_) => throw new IllegalStateException("#SUM unsupported for " + model)
+      case WAnd(ws, as) if indri =>
+        PWAnd(Planner.normalizeWeights(ws), as.map(tree))
+      case WAnd(_, _) => throw new IllegalStateException("#WAND requires Indri")
+      case WSum(ws, as) if indri =>
+        PWSum(Planner.normalizeWeights(ws), as.map(tree))
+      case WSum(_, _) => throw new IllegalStateException("#WSUM requires Indri")
     }
-    val tree: Either[String, PTree] = (model, ast) match {
-      case (_: BM25, Sum(args)) if args.forall(_.isInstanceOf[Score]) =>
-        Right(PSum(args.collect { case Score(il) => leaf(il) }))
-      case (_: BM25, _) => Left("not a #SUM of scored leaves")
-      case (_: Indri, _) =>
-        product(ast).toRight("not a product-form #WAND/#AND tree")
-      case _ => Left("boolean model")
-    }
-    tree.map(t => (t, ids.keys.toIndexedSeq))
+    val t = tree(ast)
+    (t, ids.keys.toIndexedSeq)
   }
 
-  private def fieldsOf(il: Il): Seq[String] = il match {
-    case Term(_, f)    => Seq(f)
-    case Syn(as)       => as.flatMap(fieldsOf)
-    case Near(_, as)   => as.flatMap(fieldsOf)
-    case Window(_, as) => as.flatMap(fieldsOf)
+  /** Why the pruned mode does not serve `ast`, if it does not: a boolean
+    * model, a BM25 tree other than a #SUM of scored leaves, a non-product
+    * Indri tree, or leaves in more than one field. Decided before any
+    * Spark job. */
+  private def declines(ast: Sl, model: RetrievalModel): Option[String] = {
+    def product(q: Sl): Boolean = q match {
+      case Score(_) => true
+      case And(as)  => as.forall(product)
+      case WAnd(ws, as) => ws.length == as.length &&
+        Planner.normalizeWeights(ws).forall(_ > 0f) && as.forall(product)
+      case _ => false
+    }
+    val shape = (model, ast) match {
+      case (_: BM25, Sum(as)) if as.forall(_.isInstanceOf[Score]) => None
+      case (_: BM25, _) => Some("not a #SUM of scored leaves")
+      case (_: Indri, _) if !product(ast) =>
+        Some("not a product-form #WAND/#AND tree")
+      case (_: Indri, _) => None
+      case _ => Some("boolean model")
+    }
+    shape.orElse(
+      if (Planner.termLeaves(ast).map(_._2).distinct.size != 1)
+        Some("leaves span more than one field")
+      else None)
   }
 
-  private def termsOf(il: Il): Seq[String] = il match {
-    case Term(t, _)    => Seq(t)
-    case Syn(as)       => as.flatMap(termsOf)
-    case Near(_, as)   => as.flatMap(termsOf)
-    case Window(_, as) => as.flatMap(termsOf)
+  /** The field a leaf is scored in: its first term's. `#NEAR`/`#WINDOW`
+    * arguments must share one (`QryopIlNear.java:142-143`). */
+  private def fieldOf(il: Il): String = il match {
+    case Term(_, f)    => f
+    case Syn(as)       => as.map(fieldOf).head
+    case Near(d, as)   => sameField(as, s"#NEAR/$d")
+    case Window(d, as) => sameField(as, s"#WINDOW/$d")
+  }
+
+  private def sameField(as: Seq[Il], op: String): String = {
+    val fs = as.map(fieldOf)
+    require(fs.distinct.size == 1, s"Error: Arguments must be in the same field: $op")
+    fs.head
   }
 
   private def exponents(t: PTree, u: Double, out: Array[Double]): Unit =
@@ -485,91 +591,143 @@ object BlockMax {
       case PAnd(cs)      => cs.foreach(exponents(_, u / cs.length, out))
       case PWAnd(wn, cs) =>
         cs.zip(wn).foreach { case (c, w) => exponents(c, u * w, out) }
-      case PSum(_)       =>
+      case _             =>
     }
 
   // ------------------------------------------------------------ driver
 
+  /** The blocks of the given leaves' terms in their fields. */
+  private def blocksOf(blocks: Dataset[PostingBlock],
+                       leaves: Seq[Il]): Dataset[PostingBlock] = {
+    val pairs = leaves.flatMap(Planner.termLeaves)
+    blocks.filter(col("field").isin(pairs.map(_._2).distinct: _*) &&
+      col("term").isin(pairs.map(_._1).distinct: _*))
+  }
+
+  /** A compiled query: its tree, leaves and their fields, and the
+    * statistics its model needs — the term leaves' (df, ctf) from
+    * [[Planner.leafStats]] (which validates the fields) and, only when
+    * forced, the positional leaves' from one job over `blocks`. */
+  private final class Compiled(index: Index, blocks: Dataset[PostingBlock],
+                               ast: Sl, model: RetrievalModel) {
+    val termStats = Planner.leafStats(index, Planner.termLeaves(ast))
+    val (tree, leaves) = compile(ast, model)
+    val fields: IndexedSeq[String] = leaves.map(fieldOf).distinct
+    val field: Array[Int] = leaves.map(l => fields.indexOf(fieldOf(l))).toArray
+
+    /** The scorer; forces the positional-stats job for BM25 and Indri. */
+    lazy val scorer: DocScorer = {
+      val fs = fields.map(index.fieldStats)
+      lazy val posStats = positionalStats()
+      def st(id: Int): (Long, Long) = leaves(id) match {
+        case Term(t, f) => termStats.getOrElse((t, f), (0L, 0L))
+        case _          => posStats.getOrElse(id, (0L, 0L))
+      }
+      val stat = Array.tabulate(leaves.length)(id => model match {
+        case _: BM25 => // QryopSlScore.java:146, no max(0,·) floor
+          val df = st(id)._1
+          StrictMath.log((index.stats.numDocs - df + 0.5) / (df + 0.5)).toFloat
+        case _: Indri => // (float) ctf / cl (:200)
+          st(id)._2.toFloat / fs(field(id)).collectionLength
+        case _ => 0f
+      })
+      DocScorer(tree, model, field, stat, field.map(fs(_).avgDocLen))
+    }
+
+    /** The positional leaves' global (df, ctf), matched per segment. */
+    private def positionalStats(): Map[Int, (Long, Long)] = {
+      val ids = positional(leaves)
+      if (ids.isEmpty) return Map.empty
+      val spark = index.spark
+      import spark.implicits._
+      val lv = leaves
+      blocksOf(blocks, ids.map(leaves))
+        .mapPartitions(segments(_).flatMap(byKey =>
+          leafLists(byKey, lv, positional(lv)).iterator.map { case (id, l) =>
+            (id, l.docids.length.toLong, l.ctf)
+          }))
+        .collect()
+        .groupBy(_._1).map { case (id, xs) =>
+          id -> (xs.map(_._2).sum, xs.map(_._3).sum)
+        }
+    }
+  }
+
   /** Pruned (docid, score) top-k candidates of each segment — feed them to
     * `SearchEngine.rank` for the global extid-tiebroken top-k — or
-    * Left(reason) when the shape or the statistics call for the
-    * exhaustive planner: a boolean model, a BM25 tree other than a #SUM of
-    * scored leaves, a non-product Indri tree, leaves in more than one
-    * field, or an Indri leaf with zero ctf (its default score is 0, which
-    * zeroes every document alike). `blocks` must hold whole segments per
-    * partition ([[graft.index.Index.blocks]] does). */
+    * Left(reason) when the shape or the statistics call for the unpruned
+    * mode: see [[declines]], or an Indri leaf with zero ctf (its default
+    * score is 0, which zeroes every document alike). `blocks` must hold
+    * whole segments per partition ([[graft.index.Index.blocks]] does). */
   def topK(index: Index, blocks: Dataset[PostingBlock], ast: Sl,
            model: RetrievalModel, k: Int): Either[String, DataFrame] = {
-    val (tree, leaves) = extract(ast, model) match {
-      case Right(x) => x
-      case Left(why) => return Left(why)
-    }
-    val fields = leaves.flatMap(fieldsOf).distinct
-    if (fields.size != 1) return Left("leaves span more than one field")
-    val field = fields.head
-    val terms = leaves.flatMap(termsOf).distinct
-    // the exhaustive planner's leaf-stat job: same field validation
-    val termStats = Planner.leafStats(index, terms.map((_, field)))
-    def termStat(t: String) = termStats.getOrElse((t, field), (0L, 0L))
-    val cl = index.fieldStats(field).collectionLength
+    declines(ast, model).foreach(why => return Left(why))
+    val q = new Compiled(index, blocks, ast, model)
+    val field = q.fields.head
     if (model.isInstanceOf[Indri]) {
-      if (cl <= 0) return Left(s"field $field holds no documents")
-      if (leaves.exists { case Term(t, _) => termStat(t)._2 == 0L
-                          case _          => false })
+      if (index.fieldStats(field).collectionLength <= 0)
+        return Left(s"field $field holds no documents")
+      if (q.leaves.exists {
+            case Term(t, f) => q.termStats.get((t, f)).forall(_._2 == 0L)
+            case _          => false
+          })
         return Left("zero-ctf leaf")
+    }
+    val scorer = q.scorer
+    val bounds: Bounds = (model, q.tree) match {
+      case (_: BM25, PSum(cs)) =>
+        Bm25Bounds(scorer, q.leaves.indices.map(id => cs.count(_ == PLeaf(id))).toArray)
+      case (_: Indri, tree) =>
+        if (scorer.stat.exists(_ <= 0f)) return Left("zero-ctf leaf")
+        val u = new Array[Double](q.leaves.length)
+        exponents(tree, 1.0, u)
+        IndriBounds(scorer, u)
+      case (other, _) => throw new IllegalStateException(s"no bounds for $other")
     }
     val spark = index.spark
     import spark.implicits._
-    val inField = blocks.filter(col("field") === field)
-    // the positional leaves' global (df, ctf), matched per segment
-    val positional = leaves.indices.filterNot(id => leaves(id).isInstanceOf[Term])
-    val posStats: Map[Int, (Long, Long)] =
-      if (positional.isEmpty) Map.empty
-      else {
-        val lv = leaves
-        inField.filter(col("term").isin(positional.flatMap(id =>
-            termsOf(leaves(id))).distinct: _*))
-          .mapPartitions(segments(_).flatMap(byTerm =>
-            positionalLists(byTerm, lv).iterator.map { case (id, l) =>
-              (id, l.docids.length.toLong, l.ctf)
-            }))
-          .collect()
-          .groupBy(_._1).map { case (id, xs) =>
-            id -> (xs.map(_._2).sum, xs.map(_._3).sum)
-          }
-      }
-    val stat: Int => (Long, Long) = id => leaves(id) match {
-      case Term(t, _) => termStat(t)
-      case _          => posStats.getOrElse(id, (0L, 0L))
-    }
-    val scorer: Scorer = model match {
-      case BM25(k1, b, k3) =>
-        val n = index.stats.numDocs
-        val children = tree match {
-          case PSum(ls) => ls.toArray
-          case _ => throw new IllegalStateException("BM25 tree is a #SUM")
-        }
-        val qtf = 1 // QryopSlSum.java:69-75
-        Bm25Scorer(children,
-          leaves.indices.map { id =>
-            val df = stat(id)._1 // QryopSlScore.java:146, no max(0,·) floor
-            StrictMath.log((n - df + 0.5) / (df + 0.5)).toFloat
-          }.toArray,
-          leaves.indices.map(id => children.count(_ == id)).toArray,
-          k1, b, index.fieldStats(field).avgDocLen,
-          ((k3 + 1) * qtf / (k3 + qtf)).toDouble)
-      case Indri(mu, lambda) =>
-        // (float) ctf / cl (QryopSlScore.java:200)
-        val mle = leaves.indices.map(id => stat(id)._2.toFloat / cl).toArray
-        if (mle.exists(_ <= 0f)) return Left("zero-ctf leaf")
-        val u = new Array[Double](leaves.length)
-        exponents(tree, 1.0, u)
-        IndriScorer(tree, mle, u, mu, lambda)
-      case other => throw new IllegalStateException(s"no scorer for $other")
-    }
-    val (lv, kk) = (leaves, k)
-    Right(inField.filter(col("term").isin(terms: _*))
-      .mapPartitions(segments(_).flatMap(segmentTask(_, lv, scorer, kk)))
+    val (lv, kk) = (q.leaves, k)
+    Right(blocksOf(blocks, lv)
+      .mapPartitions(segments(_).flatMap(segmentTask(_, lv, bounds, scorer, kk)))
       .toDF("docid", "score"))
+  }
+
+  /** Every document the query matches, with its exact score: the
+    * unpruned mode. An Indri tree over more than one field first left-joins
+    * the matched documents' missing field lengths from `doclen` (0 where a
+    * document has none — Lucene's missing norm). */
+  private[exec] def all(index: Index, blocks: Dataset[PostingBlock], ast: Sl,
+                        model: RetrievalModel): DataFrame = {
+    val q = new Compiled(index, blocks, ast, model)
+    val spark = index.spark
+    import spark.implicits._
+    val (lv, nf, scorer) = (q.leaves, q.fields.length, q.scorer)
+    val inQuery = blocksOf(blocks, lv)
+    if (!model.isInstanceOf[Indri] || nf == 1)
+      return inQuery.mapPartitions(segments(_).flatMap(byKey =>
+          segmentAll(byKey, lv, nf, scorer)((d, tf, lens) =>
+            (d, scorer.score(tf, lens)))))
+        .toDF("docid", "score")
+    val rows = inQuery.mapPartitions(segments(_).flatMap(byKey =>
+        segmentAll(byKey, lv, nf, scorer)((d, tf, lens) =>
+          (d, tf.clone(), lens.clone()))))
+      .toDF("docid", "tf", "lens")
+    // lengths of the matched documents only: doclen is semi-joined to
+    // their docids before the per-document map aggregate
+    val fs = q.fields
+    val lenm = index.doclen.filter(col("field").isin(fs: _*))
+      .join(rows.select(col("docid")), Seq("docid"), "left_semi")
+      .groupBy(col("docid"))
+      .agg(map_from_entries(collect_list(struct(col("field"), col("len"))))
+        .as("lenm"))
+    rows.join(lenm, Seq("docid"), "left")
+      .as[(Long, Array[Int], Array[Long], Option[Map[String, Long]])]
+      .map { case (d, tf, lens, lm) =>
+        fs.indices.foreach { f =>
+          if (lens(f) < 0) lens(f) = lm.flatMap(_.get(fs(f))).getOrElse(0L)
+        }
+        (d, scorer.score(tf, lens))
+      }
+      .toDF("docid", "score")
   }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * FP-exactly.
   *
   * Numeric fidelity (`QryExpansion.java:180-203`): pMLE is a Java FLOAT
-  * quotient (as [[FloatDivide]]); everything else is double; log is
-  * StrictMath (determinism, see [[StrictPow]]).
+  * quotient (`(float) ctf / collectionLength`); everything else is
+  * double; log is StrictMath (determinism, see [[StrictPow]]).
   *
   * Term-selection tiebreak: the reference's heap fill order comes from
   * HashMap iteration (nondeterministic across JVMs,

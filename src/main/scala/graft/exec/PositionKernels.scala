@@ -1,13 +1,7 @@
 package graft.exec
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
+import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Primitive-int kernels for the reference's greedy positional matchers,
   * operating directly on Catalyst [[ArrayData]] — no `Seq[Seq[Int]]`
@@ -18,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   *
   * Inputs are the engine's own position lists: non-null, ascending ints
   * (the index builder emits them sorted). Null elements are not handled —
-  * the planner never produces them.
+  * the engine never produces them.
   */
 object PositionKernels {
   private val Empty: UnsafeArrayData =
@@ -59,9 +53,11 @@ object PositionKernels {
   /** `#WINDOW/n` unordered — if max-min <= n-1 emit MAX and advance ALL
     * pointers, else advance only MIN (strict-comparison `validation`
     * quirk preserved: minIdx/maxIdx move only on strict </>, max test is
-    * an else-if of the min test). Args must already be df-ascending
-    * (caller sorts). Every emission advances all pointers, so the result
-    * holds at most min(list lengths) entries. */
+    * an else-if of the min test). The reference sorts the args by df
+    * first (`QryopIlWindow.java:52`); the result does not depend on their
+    * order (property-tested in PositionOpsSpec), so callers need not.
+    * Every emission advances all pointers, so the result holds at most
+    * min(list lengths) entries. */
   def window(ps: ArrayData, distance: Int): ArrayData = {
     val k = ps.numElements()
     val lists = new Array[ArrayData](k)
@@ -110,55 +106,4 @@ object PositionKernels {
     if (t == 0) Empty
     else UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(temp, t))
   }
-}
-
-/** Codegen'd replacement for the former `udf((ps: Seq[Seq[Int]], d: Int)
-  * => ...)` position matchers — the last row-at-a-time UDFs on the hot
-  * path (every matching doc of a positional query, and every SDM
-  * positional leaf, paid Seq-of-Seq boxing per row; same promotion that
-  * bought [[graft.ops.DotProduct]] 5-10×). Generated code is a single
-  * static call on [[ArrayData]], so the projection stays inside
-  * whole-stage codegen with no serialization barrier.
-  *
-  * `ordered=true` ⇒ #NEAR chain; false ⇒ #WINDOW. Returns an empty array
-  * (not null) when the doc does not match, like the UDF returned
-  * `Seq.empty` — callers filter `size > 0`.
-  */
-case class PositionMatch(child: Expression, distance: Int, ordered: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(ArrayType(IntegerType, _), _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"position_match needs array<array<int>>, got ${other.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val ps = input.asInstanceOf[ArrayData]
-    if (ordered) PositionKernels.near(ps, distance)
-    else PositionKernels.window(ps, distance)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (ordered) "near" else "window"
-    defineCodeGen(ctx, ev,
-      c => s"graft.exec.PositionKernels.$fn($c, $distance)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PositionExpressions {
-  /** Greedy `#NEAR/distance` over an `array<array<int>>` column. */
-  def near(posLists: Column, distance: Int): Column =
-    ColumnBridge.column(
-      PositionMatch(ColumnBridge.expression(posLists), distance, ordered = true))
-
-  /** Greedy `#WINDOW/distance` over a df-ascending `array<array<int>>`. */
-  def window(posLists: Column, distance: Int): Column =
-    ColumnBridge.column(
-      PositionMatch(ColumnBridge.expression(posLists), distance, ordered = false))
 }

@@ -133,54 +133,6 @@ final class Index(
     docs.cache(); postings.cache(); doclen.cache(); termStats.cache()
     this
   }
-
-  /** Bounded LRU of composite-Il scratch caches (NEAR/WINDOW/SYN
-    * intermediates), keyed by canonicalized logical plan.
-    *
-    * Three requirements meet here: (1) a query's cache must outlive
-    * [[graft.exec.Planner.plan]] — the caller's final action consumes
-    * the composite through several plan references, and an end-of-plan
-    * release was measured to recompute an SDM query 5.6× over; (2) a
-    * long-lived serving process must not accrete storage (round-2
-    * VERDICT: the unbounded version leaked one frame per composite
-    * query for the life of the JVM); (3) REPEATED queries — the hot-set
-    * reality of serving — should reuse prior work: Spark's CacheManager
-    * already substitutes any cached plan into new queries by canonical
-    * equality, so keeping an entry alive makes an identical #NEAR re-run
-    * hit the cached rows (measured 2.6× on a repeated NEAR/1 at 400k
-    * docs). An access-ordered LRU with unpersist-on-evict gives all
-    * three: hot composites stay, cold ones are released, storage is
-    * bounded at [[Index.ScratchCapacity]] small frames (MEMORY_AND_DISK,
-    * so even a pathological hot-set spills rather than OOMs).
-    * [[releaseScratch]] drops everything — the explicit hook for a
-    * process that stops serving. */
-  private val scratchLru = new java.util.LinkedHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
-      16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-          DataFrame]): Boolean =
-      if (size() > Index.ScratchCapacity) {
-        e.getValue.unpersist(blocking = false); true
-      } else false
-  }
-
-  /** Cache `df` as query scratch (or touch the existing entry for the
-    * same canonical plan). Returns `df`; reads through CacheManager's
-    * plan substitution either way. */
-  private[graft] def registerScratch(df: DataFrame): DataFrame =
-    scratchLru.synchronized {
-      val key = df.queryExecution.logical.canonicalized
-      if (scratchLru.get(key) == null) scratchLru.put(key, df.cache())
-      df
-    }
-
-  /** Unpersist every tracked scratch cache. */
-  def releaseScratch(): Unit = scratchLru.synchronized {
-    scratchLru.values.forEach(_.unpersist(blocking = false))
-    scratchLru.clear()
-  }
 }
 
 object Index {
@@ -231,9 +183,6 @@ object Index {
         col("stemsTf.term").as("stems"), col("stemsTf.tf").as("stemFreq"),
         positions.as("positions"))
   }
-
-  /** Max composite scratch caches kept per index (see `scratchLru`). */
-  val ScratchCapacity = 32
 
   /** Forward-index derivation off the PERSISTED postings layout — ZERO
     * shuffle: [[IndexStore.save]] writes postings one-file-per-segment,

@@ -4,23 +4,17 @@ import graft.analysis.AnalyzerConfig
 import graft.api.SearchEngine
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.model.{BM25, Indri, RankedBoolean}
+import graft.model.{BM25, Indri, RankedBoolean, UnrankedBoolean}
 import org.scalatest.funspec.AnyFunSpec
 
-/** A long-lived serving process must not accrete executor storage:
-  * composite-Il scratch caches (NEAR/WINDOW/SYN) live in a BOUNDED
-  * access-ordered LRU on the Index, keyed by canonical plan — repeats
-  * of a hot query reuse the cached composite (CacheManager substitutes
-  * cached plans by canonical equality), eviction unpersists, capacity
-  * 32 (round-2 VERDICT item 2 — `withLazyStats` pinned every composite
-  * for the life of the JVM; an end-of-plan release was tried and
-  * measured 5.6× slower on SDM because the caller's action consumes
-  * the cache through several plan references; a release-at-next-query
-  * policy was tried and measured 2.6× slower on repeated NEAR because
-  * it forfeits hot-query reuse). This spec doubles as the reuse test:
-  * if canonical keys failed to match across repeats, the LRU would
-  * grow toward capacity and the count assertion would fail. LeToR
-  * candidate frames are collected LocalRelations — nothing to leak. */
+/** A long-lived serving process must not accrete executor storage: a
+  * query persists nothing that outlives it. The index's own tables
+  * (postings, doclen, termStats, docs and the derived block table) are
+  * persisted once per index; every query reads them and leaves the
+  * persisted-RDD count where it found it — boolean queries too, whose
+  * tie-prone score frame `rank` caches only until their candidate set is
+  * closed. LeToR candidate frames are collected LocalRelations —
+  * nothing to leak. */
 class CacheLifecycleSpec extends AnyFunSpec {
 
   private val cfg = AnalyzerConfig.code
@@ -41,25 +35,25 @@ class CacheLifecycleSpec extends AnyFunSpec {
     spark.sparkContext.getPersistentRDDs.size
 
   it("100 NEAR/WINDOW/SYN queries do not grow the persistent-RDD count") {
+    val eng = engine // index tables materialized, no query run yet
+    val before = cachedRddCount
     val queries = Seq(
+      ("#AND(def class val)", RankedBoolean),
+      ("#OR(ident1 ident2 x3)", UnrankedBoolean),
       ("#NEAR/2(inverted index)", RankedBoolean),
       ("#WINDOW/8(open query)", RankedBoolean),
       ("#SYN(open inverted)", RankedBoolean),
-      // Indri forces composite df/ctf stats (the cache's one reuse)
       ("#AND(#NEAR/1(inverted index) open)", Indri(2500f, 0.4f)),
-      ("#WINDOW/4(index query)", Indri(2500f, 0.4f)))
-    // warm-up: JIT + any lazily-built index tables
-    queries.foreach { case (q, m) => engine.search(q, m, 10).collect() }
-    val before = cachedRddCount
-    (0 until 20).foreach { _ =>
-      queries.foreach { case (q, m) => engine.search(q, m, 10).collect() }
+      ("#WINDOW/4(index query)", Indri(2500f, 0.4f)),
+      ("#AND(def scala.title)", Indri(2500f, 0.4f)),
+      ("#WSUM(0.5 open 0.5 #NEAR/1(inverted index) 0.2 f12.title)",
+        Indri(2500f, 0.4f)),
+      ("#SUM(open f12.title #SYN(query index))", BM25(1.2f, 0.75f, 0f)))
+    (0 until 10).foreach { _ =>
+      queries.foreach { case (q, m) => eng.search(q, m, 10).collect() }
     }
-    val after = cachedRddCount
-    assert(after <= before,
-      s"persistent RDD count grew $before -> $after over 100 queries")
-    // explicit release drops the final query's scratch too
-    engine.index.releaseScratch()
-    assert(cachedRddCount <= after)
+    assert(cachedRddCount == before,
+      s"persistent RDD count went $before -> $cachedRddCount over 100 queries")
   }
 
   it("letor feature assembly leaves no cache behind") {

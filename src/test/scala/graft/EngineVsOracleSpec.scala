@@ -33,16 +33,8 @@ class EngineVsOracleSpec extends AnyFunSpec {
     new SearchEngine(idx, cfg)
   }
 
-  private lazy val oracle: RefEngine = {
-    val docs = corpus.map { d =>
-      val extid = s"${d.repo}/${d.path}@${d.commit}"
-      extid -> Map(
-        "body" -> d.content,
-        "title" -> d.path,
-        "url" -> s"${d.repo}/${d.path}")
-    }
-    new RefEngine(docs, cfg)
-  }
+  private lazy val oracle: RefEngine =
+    RefEngine.of(corpus, Seq("body", "title", "url"), cfg)
 
   private def check(name: String, query: String,
                     model: RetrievalModel, k: Int = 100): Unit = {
@@ -99,6 +91,14 @@ class EngineVsOracleSpec extends AnyFunSpec {
     check("fields title", "#AND(f12.title src.title)", RankedBoolean)
     check("fields url", "#OR(repo.url)", RankedBoolean)
     check("fields mixed models", "#SUM(def scala.title)", BM25())
+    check("fields Indri doc lengths", "#AND(def scala.title)", Indri())
+    check("fields Indri #WSUM", "#WSUM(0.5 def 0.5 scala.title)", Indri())
+
+    // nesting and degenerate statistics
+    check("zero-ctf Indri leaf (every score ties)", "#AND(open zzznotaterm)",
+      Indri())
+    check("BM25 #SUM over a #SUM", "#SUM(#SUM(open inverted) index)", BM25())
+    check("O6 #AND over #OR ranked", "#AND(#OR(def val) class)", RankedBoolean)
   }
 
   describe("negative-RSJ BM25 (no max(0,·) floor — SURVEY §2.4)") {
@@ -117,10 +117,7 @@ class EngineVsOracleSpec extends AnyFunSpec {
           fields = Seq("body"))).cacheAll()
       new SearchEngine(idx, ecfg)
     }
-    lazy val eOracle: RefEngine = new RefEngine(
-      corpus.map { d =>
-        (s"${d.repo}/${d.path}@${d.commit}", Map("body" -> d.content))
-      }, ecfg)
+    lazy val eOracle: RefEngine = RefEngine.of(corpus, Seq("body"), ecfg)
     it("BM25 free text through stopword removal + Krovetz stemming") {
       // "the"/"all" are stopwords (vanish); "licensed"→"license"? —
       // whatever KStem yields, BOTH sides run the same chain and the

@@ -25,10 +25,7 @@ class ExpansionSpec extends AnyFunSpec {
     new SearchEngine(idx, cfg)
   }
 
-  private lazy val oracle: RefEngine = new RefEngine(
-    corpus.map { d =>
-      (s"${d.repo}/${d.path}@${d.commit}", Map("body" -> d.content))
-    }, cfg)
+  private lazy val oracle: RefEngine = RefEngine.of(corpus, Seq("body"), cfg)
 
   private val model = Indri(2500f, 0.4f)
 

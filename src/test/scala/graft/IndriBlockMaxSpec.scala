@@ -6,13 +6,15 @@ import graft.corpus.CorpusGen
 import graft.exec.BlockMax
 import graft.index.{IndexBuilder, IndexConfig, PostingBlocks}
 import graft.model._
+import graft.oracle.RefEngine
 import org.scalatest.funspec.AnyFunSpec
 
 /** Round-3 VERDICT item 5: Dirichlet block-max pruning for product-form
   * Indri queries (#WAND/#AND over term + positional leaves — the
   * reference's flagship SDM shape) must be rank-identical — same extids,
-  * BIT-identical scores — to the exhaustive planner, with a block size
-  * small enough (4) that multi-block skipping is genuinely exercised. */
+  * BIT-identical scores — to the exhaustive planner and to the test-only
+  * reference engine, with a block size small enough (4) that multi-block
+  * skipping is genuinely exercised. */
 class IndriBlockMaxSpec extends AnyFunSpec {
 
   private lazy val spark = TestSpark.spark
@@ -33,30 +35,38 @@ class IndriBlockMaxSpec extends AnyFunSpec {
       .select($"term").as[String].take(60).toSeq
   }
 
-  /** Pruned-vs-exhaustive on one query; also asserts the pruned path was
-    * actually taken (extract succeeds). */
+  private lazy val oracle = RefEngine.of(CorpusGen.docs(200), Seq("body"), cfg)
+
+  private def ranked(df: org.apache.spark.sql.DataFrame) =
+    df.select("extid", "score").collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toVector
+
+  private def assertSame(q: String, got: Seq[(String, Double)],
+                         want: Seq[(String, Double)], what: String): Unit = {
+    assert(got.length == want.length, s"[$q] row count vs $what")
+    got.zip(want).zipWithIndex.foreach { case (((ge, gs), (we, ws)), i) =>
+      assert(ge == we, s"[$q] rank ${i + 1}: extid $ge vs $what $we")
+      assert(java.lang.Double.doubleToLongBits(gs) ==
+             java.lang.Double.doubleToLongBits(ws),
+        s"[$q] rank ${i + 1} ($ge): score $gs vs $what $ws")
+    }
+  }
+
+  /** Pruned vs exhaustive vs the reference engine on one query; also
+    * asserts the pruned path was taken (unless `mustRoute` is off) and
+    * returns whether it was. The exhaustive mode shares its scorer with
+    * the pruned one, so only the reference engine checks the arithmetic. */
   private def runBoth(q: String, k: Int, model: RetrievalModel = model,
                       mustRoute: Boolean = true): Boolean = {
     val ast = QueryParser.parseQuery(q, model, cfg).get
     val cands = BlockMax.topK(engine.index, blocks4, Qry.asSl(ast),
       model, k)
     assert(cands.isRight || !mustRoute, s"[$q] expected the pruned path: $cands")
-    if (cands.isLeft) return false
-    val pruned = engine.rank(cands.toOption.get, k)
-      .select("extid", "score").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toVector
-    val exhaustive = engine.rank(engine.scores(q, model), k)
-      .select("extid", "score").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toVector
-    assert(pruned.length == exhaustive.length, s"[$q] row count")
-    pruned.zip(exhaustive).zipWithIndex.foreach {
-      case (((pe, ps), (ee, es)), i) =>
-        assert(pe == ee, s"[$q] rank ${i + 1}: extid $pe vs $ee")
-        assert(java.lang.Double.doubleToLongBits(ps) ==
-               java.lang.Double.doubleToLongBits(es),
-          s"[$q] rank ${i + 1} ($pe): score $ps vs $es")
-    }
-    true
+    val exhaustive = ranked(engine.rank(engine.scores(q, model), k))
+    assertSame(q, exhaustive, oracle.topkQuery(q, model, k), "reference engine")
+    cands.foreach(c => assertSame(q, ranked(engine.rank(c, k)), exhaustive,
+      "exhaustive"))
+    cands.isRight
   }
 
   describe("positional leaves") {

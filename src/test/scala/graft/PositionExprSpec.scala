@@ -1,22 +1,16 @@
 package graft
 
-import graft.exec.{PositionExpressions, PositionKernels, PositionOps}
+import graft.exec.{PositionKernels, PositionOps}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions._
 import org.scalatest.funspec.AnyFunSpec
 
 import scala.util.Random
 
-/** The codegen'd [[graft.exec.PositionMatch]] expression must be
-  * indistinguishable from the [[PositionOps]] transliteration it replaced
-  * (round-5 promotion of the last hot row-at-a-time UDFs). Two gates:
-  *
-  *  1. kernel ≡ PositionOps on thousands of random position-list tuples
-  *     (deterministic seed), exercised directly on ArrayData — no Spark;
-  *  2. the Spark expression matches the old UDF column-for-column on a
-  *     generated corpus AND its projection stays inside whole-stage
-  *     codegen (no ScalaUDF / BatchEvalPython barrier in the plan).
-  */
+/** The block-max engine's positional [[PositionKernels]] must be
+  * indistinguishable from the [[PositionOps]] transliterations of the
+  * reference: kernel ≡ PositionOps on thousands of random position-list
+  * tuples (deterministic seeds), exercised directly on ArrayData — no
+  * Spark. */
 class PositionExprSpec extends AnyFunSpec {
 
   private def toArrayData(ps: Seq[Seq[Int]]): ArrayData =
@@ -53,72 +47,6 @@ class PositionExprSpec extends AnyFunSpec {
         val got = PositionKernels.window(toArrayData(ps), d).toIntArray.toSeq
         assert(got == expect, s"window case $i: ps=$ps d=$d")
       }
-    }
-  }
-
-  describe("PositionMatch expression in a Spark plan") {
-    lazy val spark = TestSpark.spark
-
-    it("matches the legacy UDF and stays inside whole-stage codegen") {
-      import spark.implicits._
-      val rng = new Random(7)
-      val rows = (1 to 500).map { id =>
-        val ps = randLists(rng).take(3) // fixed arity for a stable schema
-        val padded = ps ++ Seq.fill(3 - ps.length)(ps.head)
-        (id, padded(0), padded(1), padded(2))
-      }
-      val df = rows.toDF("id", "p0", "p1", "p2")
-        .withColumn("ps", array($"p0", $"p1", $"p2"))
-
-      val nearU = udf((ps: Seq[Seq[Int]], d: Int) =>
-        PositionOps.nearPositions(ps, d))
-      val winU = udf((ps: Seq[Seq[Int]], d: Int) =>
-        PositionOps.windowPositions(ps, d))
-
-      val out = df.select($"id",
-        PositionExpressions.near($"ps", 3).as("near_e"),
-        nearU($"ps", lit(3)).as("near_u"),
-        PositionExpressions.window($"ps", 4).as("win_e"),
-        winU($"ps", lit(4)).as("win_u"))
-
-      val bad = out.filter($"near_e" =!= $"near_u" || $"win_e" =!= $"win_u")
-      assert(bad.count() == 0)
-
-      // The expression-only projection must not fall out of codegen: no
-      // ScalaUDF anywhere in its physical plan. A parquet round-trip
-      // defeats ConvertToLocalRelation (which would otherwise constant-
-      // fold the whole projection at optimize time).
-      val tmp = java.nio.file.Files
-        .createTempDirectory("posexpr").toString + "/ps"
-      df.select($"id", $"ps").write.mode("overwrite").parquet(tmp)
-      val exprOnly = spark.read.parquet(tmp).select(
-        PositionExpressions.near($"ps", 3).as("n"),
-        PositionExpressions.window($"ps", 4).as("w"))
-      val plan = exprOnly.queryExecution.executedPlan.toString
-      assert(!plan.contains("ScalaUDF"), plan)
-      // `*(n)` is the WholeStageCodegen marker in the simple plan string;
-      // the Project carrying positionmatch must be inside a codegen span.
-      assert(plan.linesIterator.exists(l =>
-        l.contains("*(") && l.contains("positionmatch")), plan)
-      // and the codegen'd path computes the same thing as the local eval
-      val viaParquet = spark.read.parquet(tmp).select($"id",
-        PositionExpressions.near($"ps", 3).as("near_e"),
-        PositionExpressions.window($"ps", 4).as("win_e"))
-      val localRows = out.select($"id", $"near_u", $"win_u")
-      val joinedBad = viaParquet.join(localRows, "id")
-        .filter($"near_e" =!= $"near_u" || $"win_e" =!= $"win_u")
-      assert(joinedBad.count() == 0)
-    }
-
-    it("empty-match docs yield empty arrays the size>0 filter drops") {
-      import spark.implicits._
-      val df = Seq((1, Seq(Seq(1), Seq(50)))).toDF("id", "ps")
-      val n = df.select(PositionExpressions.near($"ps", 2).as("p"))
-        .filter(size($"p") > 0)
-      assert(n.count() == 0)
-      val w = df.select(PositionExpressions.window($"ps", 2).as("p"))
-        .filter(size($"p") > 0)
-      assert(w.count() == 0)
     }
   }
 }

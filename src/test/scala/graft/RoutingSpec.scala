@@ -6,6 +6,7 @@ import graft.corpus.CorpusGen
 import graft.exec.{BlockMax, Expansion}
 import graft.index.{IndexBuilder, IndexConfig, IndexStore}
 import graft.model._
+import graft.oracle.RefEngine
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.shiftright
@@ -13,8 +14,9 @@ import org.scalatest.funspec.AnyFunSpec
 
 /** `SearchEngine.search` picks its execution route from the query's
   * shape. Each shape must take the expected route, and every route must
-  * return exactly the exhaustive reference `rank(scores(q, m), k, …)`:
-  * same docids, extids and ranks, bit-identical scores. */
+  * return exactly the exhaustive `rank(scores(q, m), k, …)` — same
+  * docids, extids and ranks, bit-identical scores — and the test-only
+  * reference engine's top-k, which shares no scoring code with either. */
 class RoutingSpec extends AnyFunSpec {
 
   private lazy val spark = TestSpark.spark
@@ -34,7 +36,18 @@ class RoutingSpec extends AnyFunSpec {
         java.lang.Double.doubleToLongBits(r.getDouble(3))))
       .sortBy(_._3)
 
-  /** Asserts the route kind, then search ≡ the exhaustive reference. */
+  private lazy val oracle =
+    RefEngine.of(CorpusGen.docs(200), Seq("body", "title"), cfg)
+
+  /** (extid, score bits) in rank order. */
+  private def bits(rows: Seq[(Long, String, Int, Long)]) =
+    rows.map { case (_, e, _, s) => (e, s) }
+  private def bits(oracle: RefEngine, q: String, m: RetrievalModel, k: Int) =
+    oracle.topkQuery(q, m, k)
+      .map { case (e, s) => (e, java.lang.Double.doubleToLongBits(s)) }
+
+  /** Asserts the route kind, then search ≡ the exhaustive reference ≡
+    * the reference engine. */
   private def check(q: String, m: RetrievalModel, k: Int = 20)
                    (expected: PartialFunction[Route, Unit]): Unit = {
     val (route, _) = engine.routed(q, m, k)
@@ -44,6 +57,8 @@ class RoutingSpec extends AnyFunSpec {
     assert(got ==
       rows(engine.rank(engine.scores(q, m), k, engine.tieProne(m))),
       s"[$q] under $m via $route")
+    assert(bits(got) == bits(oracle, q, m, k),
+      s"[$q] under $m via $route vs the reference engine")
   }
 
   private val blockMax: PartialFunction[Route, Unit] =
@@ -119,6 +134,22 @@ class RoutingSpec extends AnyFunSpec {
       for (m <- Seq(RankedBoolean, UnrankedBoolean);
            q <- Seq("#AND(open inverted)", "#OR(open inverted)"))
         check(q, m)(exhaustive("boolean model"))
+    }
+  }
+
+  describe("the exhaustive plan (`scores`) shuffles nothing") {
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def exchanges(q: String, m: RetrievalModel): Int =
+      Plans.collect(engine.scores(q, m).queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }.length
+    for ((q, m) <- Seq("#AND(open inverted index)" -> RankedBoolean,
+                       "#NEAR/1(open inverted)" -> RankedBoolean,
+                       "#SUM(open scala.title inverted)" -> bm25,
+                       "#AND(open zzznotaterm)" -> indri))
+      it(s"$q [$m]") { assert(exchanges(q, m) == 0) }
+    it("but a multi-field Indri tree joins the doc lengths it lacks") {
+      assert(exchanges("#AND(open scala.title)", indri) > 0)
     }
   }
 
@@ -235,8 +266,10 @@ class RoutingSpec extends AnyFunSpec {
       s"fixture: members co-occur in ${segs.length} segments, $runs runs")
     val (route, _) = eng.routed(q, bm25, 20)
     assert(route.isInstanceOf[Route.BlockMax], route)
-    assert(rows(eng.search(q, bm25, 20)) ==
-      rows(eng.rank(eng.scores(q, bm25), 20, false)))
+    val got = rows(eng.search(q, bm25, 20))
+    assert(got == rows(eng.rank(eng.scores(q, bm25), 20, false)))
+    assert(bits(got) ==
+      bits(RefEngine.of(CorpusGen.docs(1500), Seq("body"), cfg), q, bm25, 20))
   }
 
   it("a stored segment dir holding a second block file is refused at load") {

@@ -6,8 +6,8 @@ import scala.collection.mutable.ArrayBuffer
   * These are deliberately NOT textbook proximity predicates — the greedy
   * single-consume matching changes tf, which changes scores (SURVEY §2
   * O3/O4 "hard parts"). Pure functions kept as the test-side reference:
-  * the engine runs the codegen'd kernels of [[PositionExpressions]], and
-  * PositionExprSpec checks them against these.
+  * the engine runs the primitive-int [[PositionKernels]] on decoded
+  * blocks, and PositionExprSpec checks them against these.
   */
 object PositionOps extends Serializable {
 

@@ -398,3 +398,15 @@ final class RefEngine(docsIn: Seq[(String, Map[String, String])],
     (learned, combined)
   }
 }
+
+object RefEngine {
+  /** The oracle over generated docs, indexing `fields` with the text
+    * `IndexBuilder.fieldText` gives them (body, title, url). */
+  def of(corpus: Seq[graft.corpus.CorpusDoc], fields: Seq[String],
+         cfg: AnalyzerConfig): RefEngine =
+    new RefEngine(corpus.map { d =>
+      val text = Map("body" -> d.content, "title" -> d.path,
+        "url" -> s"${d.repo}/${d.path}")
+      s"${d.repo}/${d.path}@${d.commit}" -> fields.map(f => f -> text(f)).toMap
+    }, cfg)
+}
