@@ -157,25 +157,23 @@ final class SearchEngine(val index: Index,
              k: Int = 100): DataFrame =
     rank(routed(queryText, model, k)._2, k, tieProne(model))
 
-  /** The query router: picks the execution route from the parsed AST and
-    * returns it with the (docid, score) candidates of that route.
-    *  - a BM25 `#SUM` of scored leaves (terms, `#NEAR`, `#WINDOW`, `#SYN`;
-    *    free text under BM25 always is — the default-op wrap) or an Indri
-    *    product-form `#WAND`/`#AND` tree — the reference's flagship SDM
-    *    shape, PRF's combined query, a bare `#WINDOW` — in one field →
-    *    the segment-local block-max engine ([[graft.exec.BlockMax]]),
-    *    which declines multi-field trees and zero-ctf Indri leaves;
+  /** The parsed query's (docid, score) candidates and the execution
+    * route the block-max engine chose for them from the compiled query
+    * ([[graft.exec.BlockMax.candidates]]):
+    *  - a BM25 `#SUM` of scored leaves (terms, `#NEAR`, `#WINDOW`, `#SYN`,
+    *    in any fields; free text under BM25 always is — the default-op
+    *    wrap), or an Indri product-form `#WAND`/`#AND` tree in one field —
+    *    the reference's flagship SDM shape, PRF's combined query, a bare
+    *    `#WINDOW` — with no zero-ctf leaf → pruned;
     *  - anything else (boolean models, `#WSUM`, `#OR`, a `#SUM` over
-    *    operators) → the same engine unpruned ([[Planner]]).
+    *    operators, multi-field or zero-ctf Indri trees) → unpruned, with
+    *    the reason.
     * Every route is rank-identical to `rank(scores(...))` (property-tested
     * in BlockMaxWandSpec / IndriBlockMaxSpec / RoutingSpec). */
   private[graft] def routed(queryText: String, model: RetrievalModel,
-                            k: Int): (Route, DataFrame) = {
-    val ast = parse(queryText, model)
-    BlockMax.topK(index, index.blocks, Qry.asSl(ast), model, k).fold(
-      reason => (Route.Exhaustive(reason), new Planner(index, model).plan(ast)),
-      cands => (Route.BlockMax(s"$model over leaves in one field"), cands))
-  }
+                            k: Int): (Route, DataFrame) =
+    BlockMax.candidates(index, index.blocks,
+      Qry.asSl(parse(queryText, model)), model, k)
 
   /** Coarse-score models (constant 1.0 / small-integer tf scores) tie
     * MANY docs at the k boundary, so their rank() calls routinely take
@@ -209,19 +207,17 @@ final class SearchEngine(val index: Index,
     * The final (score desc, extid asc) order + rank numbering happen on
     * ≤2k driver rows; result is a LocalRelation.
     *
-    * EAGER: calling rank() runs the phase-1 job (and up to two small
-    * point-lookup jobs) immediately and returns a local frame — it is the
-    * terminal action of a query, not a lazy transformation. */
-  def rank(scoreDf: DataFrame, k: Int): DataFrame =
-    rank(scoreDf, k, cacheScores = false)
-
-  /** `cacheScores = true` persists the narrow (docid, score) frame across
+    * `cacheScores = true` persists the narrow (docid, score) frame across
     * the phases, so the boundary-tie overflow pass (step 3) reuses
     * phase 1's computation instead of re-executing the full query lineage
     * — worth it exactly for the coarse-score models where ties at the k
     * boundary are the COMMON case ([[tieProne]]); float-scored models
-    * skip the cache write. */
-  def rank(scoreDf: DataFrame, k: Int, cacheScores: Boolean): DataFrame = {
+    * skip the cache write.
+    *
+    * EAGER: calling rank() runs the phase-1 job (and up to two small
+    * point-lookup jobs) immediately and returns a local frame — it is the
+    * terminal action of a query, not a lazy transformation. */
+  def rank(scoreDf: DataFrame, k: Int, cacheScores: Boolean = false): DataFrame = {
     val spark = index.spark
     import spark.implicits._
     rankedRows(scoreDf, k, cacheScores).toDF("docid", "extid", "rank", "score")
@@ -231,17 +227,9 @@ final class SearchEngine(val index: Index,
   private def rankedRows(scoreDf: DataFrame, k: Int, cacheScores: Boolean)
       : Seq[(Long, String, Int, Double)] = {
     val narrow = narrowScores(scoreDf, cacheScores)
-    try {
-      val head = takeHead(narrow, 2 * k)
-      val cls = classifyHead(head, k)
-      val ext = extidsOf(cls.survivors.map(_._1))
-      val withExt =
-        cls.survivors.map { case (d, s) => (d, s, ext(d)) }.toSeq ++
-          cls.overflow.toSeq.flatMap { case (sk, need) =>
-            boundaryPass(narrow, sk, need)
-          }
-      finalizeRank(withExt, k)
-    } finally if (cacheScores) narrow.unpersist(false)
+    try ranked(Seq(narrow -> classified(narrow, k, cacheScores)), k,
+      cacheScores).head
+    finally if (cacheScores) narrow.unpersist(false)
   }
 
   // ------------------------------------------------- rank internals
@@ -283,6 +271,32 @@ final class SearchEngine(val index: Index,
         HeadClass(above, Some((sk, k - above.length)))
       }
     }
+
+  /** Phase 1 of one frame; a cached frame whose candidate set is closed
+    * (the common case) is dropped at once. */
+  private def classified(narrow: DataFrame, k: Int,
+                         cached: Boolean): HeadClass = {
+    val cls = classifyHead(takeHead(narrow, 2 * k), k)
+    if (cached && cls.overflow.isEmpty) narrow.unpersist(false)
+    cls
+  }
+
+  /** Phases 2–3 of classified frames: ONE extid job for every frame's
+    * survivors, then each overflow's boundary pass (dropping its cached
+    * frame) and the final order. */
+  private def ranked(frames: Seq[(DataFrame, HeadClass)], k: Int,
+                     cached: Boolean): Seq[Seq[(Long, String, Int, Double)]] = {
+    val ext = extidsOf(frames.flatMap(_._2.survivors.map(_._1)).distinct)
+    frames.map { case (narrow, cls) =>
+      val withExt =
+        cls.survivors.map { case (d, s) => (d, s, ext(d)) }.toSeq ++
+          cls.overflow.toSeq.flatMap { case (sk, need) =>
+            try boundaryPass(narrow, sk, need)
+            finally if (cached) narrow.unpersist(false)
+          }
+      finalizeRank(withExt, k)
+    }
+  }
 
   private def extidsOf(ids: Seq[Long]): Map[Long, String] =
     if (ids.isEmpty) Map.empty
@@ -328,35 +342,19 @@ final class SearchEngine(val index: Index,
         math.min(8, math.max(1, queries.length)))
       implicit val ec: scala.concurrent.ExecutionContextExecutorService =
         ExecutionContext.fromExecutorService(pool)
-      // classify INSIDE each future and drop the cached frame as soon as
-      // a query's candidate set is closed (the common case): peak cached
-      // frames = the thread-pool width + the rare overflow queries, not
-      // the whole batch — the serial rank() path held at most one frame
-      // and a large batch of tie-prone queries must not hold N
-      // corpus-scale frames through the whole run
-      val classified =
+      // classify INSIDE each future, which drops the cached frame as soon
+      // as a query's candidate set is closed (the common case): peak
+      // cached frames = the thread-pool width + the rare overflow
+      // queries, not the whole batch — the serial rank() path held at
+      // most one frame and a large batch of tie-prone queries must not
+      // hold N corpus-scale frames through the whole run
+      val frames =
         try Await.result(
-          Future.sequence(planned.map { case (qid, narrow) =>
-            Future {
-              val cls = classifyHead(takeHead(narrow, 2 * k), k)
-              if (cache && cls.overflow.isEmpty) narrow.unpersist(false)
-              (qid, narrow, cls)
-            }
+          Future.sequence(planned.map { case (_, narrow) =>
+            Future(narrow -> classified(narrow, k, cache))
           }), Duration.Inf)
         finally pool.shutdown()
-      // ONE extid job for every query's survivors
-      val ext = extidsOf(
-        classified.flatMap(_._3.survivors.map(_._1)).distinct)
-      classified.map { case (qid, narrow, cls) =>
-        val withExt =
-          cls.survivors.map { case (d, s) => (d, s, ext(d)) }.toSeq ++
-            cls.overflow.toSeq.flatMap { case (sk, need) =>
-              val rows = boundaryPass(narrow, sk, need)
-              if (cache) narrow.unpersist(false)
-              rows
-            }
-        qid -> finalizeRank(withExt, k)
-      }
+      planned.map(_._1).zip(ranked(frames, k, cache))
     } finally if (cache) planned.foreach(_._2.unpersist(false)) // safety net
   }
 }

@@ -1,5 +1,6 @@
 package graft.exec
 
+import graft.api.Route
 import graft.index.{Index, Posting, PostingBlock, PostingCodec}
 import graft.model._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -11,21 +12,21 @@ import scala.collection.mutable
 
 /** The query engine: document-at-a-time evaluation of a query's score
   * tree over the compressed block table, segment by segment (SURVEY §2–3;
-  * the reference evaluates DAAT over inverted lists), in two modes that
-  * share one exact scorer ([[DocScorer]]):
+  * the reference evaluates DAAT over inverted lists). [[candidates]]
+  * compiles a query once and itself chooses one of two modes, which share
+  * one exact scorer ([[DocScorer]]):
   *
-  *  - unpruned ([[all]], behind [[Planner.plan]]): every document the
+  *  - pruned (SURVEY §4 item 5) for the two additive families: BM25
+  *    `#SUM` over scored leaves in any fields (a sum of per-leaf
+  *    contributions) and Indri product form in one field, any nesting of
+  *    `#WAND`/`#AND` over scored leaves — the reference's flagship SDM
+  *    shape and PRF's combined query. `∏ sᵢ^{uᵢ}` (uᵢ > 0; nested #AND
+  *    exponents multiply down the path) is monotone in every leaf, so in
+  *    LOG space it is additive: a baseline (every leaf at its largest
+  *    default score) plus per-leaf gains;
+  *  - unpruned (also [[all]], behind [[Planner.plan]]): every document the
   *    tree matches, with its score — any operator, any retrieval model,
-  *    any number of fields;
-  *  - pruned ([[topK]], behind [[graft.api.SearchEngine.search]]'s
-  *    block-max route; SURVEY §4 item 5) for the two additive families in
-  *    one field: BM25 `#SUM` over scored leaves (a sum of per-leaf
-  *    contributions) and Indri product form, any nesting of `#WAND`/`#AND`
-  *    over scored leaves — the reference's flagship SDM shape and PRF's
-  *    combined query. `∏ sᵢ^{uᵢ}` (uᵢ > 0; nested #AND exponents multiply
-  *    down the path) is monotone in every leaf, so in LOG space it is
-  *    additive: a baseline (every leaf at its largest default score) plus
-  *    per-leaf gains.
+  *    any number of fields.
   *
   * A leaf is a plain term or a positional operator (`#NEAR`, `#WINDOW`,
   * `#SYN`, nested), matched inside the segment task from the decoded
@@ -45,7 +46,7 @@ import scala.collection.mutable
   * buckets) — the stored snapshot is read without splitting a segment
   * file, a derived table is range-partitioned by segment
   * ([[graft.index.Index.blocks]]) — so no query shuffles, except the one
-  * doc-length join of an Indri tree over more than one field (a
+  * doc-length join of an unpruned Indri tree over more than one field (a
   * document's length in a field where no leaf matched it comes from
   * `doclen`). The pruned mode emits each segment's top-k, valid for the
   * global extid tiebreak because docid order within a segment IS extid
@@ -273,7 +274,7 @@ object BlockMax {
 
   /** One segment's pruned evaluation → its local top-k (docid, score). */
   private def segmentTopK(cursors: Array[Cursor], bounds: Bounds,
-                          scorer: DocScorer, nLeaves: Int,
+                          scorer: DocScorer, nLeaves: Int, nFields: Int,
                           k: Int): Iterator[(Long, Double)] = {
     // worst-first heap: lowest score first, then HIGHEST docid first
     implicit val ord: Ordering[(Long, Double)] =
@@ -282,7 +283,7 @@ object BlockMax {
     def bar: Double =
       if (heap.size < k) Double.NegativeInfinity else bounds.bar(heap.head._2)
     val tfs = new Array[Int](nLeaves)
-    val lens = new Array[Long](1) // one field
+    val lens = new Array[Long](nFields)
     var done = false
     while (!done) {
       val sorted = cursors.filter(_.curDoc != Long.MaxValue).sortBy(_.curDoc)
@@ -306,7 +307,7 @@ object BlockMax {
           val atPivot = sorted.filter(_.curDoc == pivotDoc)
           if (bounds.baseline + atPivot.map(_.blockGain).sum >= bar) {
             java.util.Arrays.fill(tfs, 0)
-            atPivot.foreach { c => tfs(c.id) = c.tf; lens(0) = c.len }
+            atPivot.foreach { c => tfs(c.id) = c.tf; lens(scorer.field(c.id)) = c.len }
             val s = scorer.score(tfs, lens)
             if (heap.size < k) heap.enqueue((pivotDoc, s))
             else {
@@ -499,7 +500,7 @@ object BlockMax {
   private def positional(leaves: IndexedSeq[Il]): Seq[Int] =
     leaves.indices.filterNot(id => leaves(id).isInstanceOf[Term])
 
-  private def segmentTask(byKey: ByKey, leaves: IndexedSeq[Il],
+  private def segmentTask(byKey: ByKey, leaves: IndexedSeq[Il], nFields: Int,
                           bounds: Bounds, scorer: DocScorer,
                           k: Int): Iterator[(Long, Double)] = {
     val lists = leafLists(byKey, leaves, positional(leaves))
@@ -510,7 +511,7 @@ object BlockMax {
           .map(new ListCursor(id, _, bounds))
       }
     }.toArray
-    segmentTopK(cursors, bounds, scorer, leaves.length, k)
+    segmentTopK(cursors, bounds, scorer, leaves.length, nFields, k)
   }
 
   // ------------------------------------------------------ query shapes
@@ -533,41 +534,36 @@ object BlockMax {
       case Or(_) => throw new IllegalStateException("#OR unsupported for " + model)
       case Sum(as) if model.isInstanceOf[BM25] => PSum(as.map(tree))
       case Sum(_) => throw new IllegalStateException("#SUM unsupported for " + model)
-      case WAnd(ws, as) if indri =>
-        PWAnd(Planner.normalizeWeights(ws), as.map(tree))
+      case WAnd(ws, as) if indri => PWAnd(normalizeWeights(ws), as.map(tree))
       case WAnd(_, _) => throw new IllegalStateException("#WAND requires Indri")
-      case WSum(ws, as) if indri =>
-        PWSum(Planner.normalizeWeights(ws), as.map(tree))
+      case WSum(ws, as) if indri => PWSum(normalizeWeights(ws), as.map(tree))
       case WSum(_, _) => throw new IllegalStateException("#WSUM requires Indri")
     }
     val t = tree(ast)
     (t, ids.keys.toIndexedSeq)
   }
 
-  /** Why the pruned mode does not serve `ast`, if it does not: a boolean
-    * model, a BM25 tree other than a #SUM of scored leaves, a non-product
-    * Indri tree, or leaves in more than one field. Decided before any
-    * Spark job. */
-  private def declines(ast: Sl, model: RetrievalModel): Option[String] = {
-    def product(q: Sl): Boolean = q match {
-      case Score(_) => true
-      case And(as)  => as.forall(product)
-      case WAnd(ws, as) => ws.length == as.length &&
-        Planner.normalizeWeights(ws).forall(_ > 0f) && as.forall(product)
-      case _ => false
-    }
-    val shape = (model, ast) match {
-      case (_: BM25, Sum(as)) if as.forall(_.isInstanceOf[Score]) => None
-      case (_: BM25, _) => Some("not a #SUM of scored leaves")
-      case (_: Indri, _) if !product(ast) =>
-        Some("not a product-form #WAND/#AND tree")
-      case (_: Indri, _) => None
-      case _ => Some("boolean model")
-    }
-    shape.orElse(
-      if (Planner.termLeaves(ast).map(_._2).distinct.size != 1)
-        Some("leaves span more than one field")
-      else None)
+  /** Normalize to Σ=1 in float, like `QryopSlWAnd.normalizeWeight`
+    * (:36-45) — over the FULL weight list (orphaned weights from vanished
+    * terms still count, replicating the parser quirk). */
+  private def normalizeWeights(ws: Seq[Float]): Seq[Float] = {
+    var total = 0.0f
+    ws.foreach(total += _)
+    ws.map(_ / total)
+  }
+
+  /** Every (term, field) leaf of a query, in tree order. */
+  private def termLeaves(q: Qry): Seq[(String, String)] = q match {
+    case Term(t, f)    => Seq((t, f))
+    case Syn(as)       => as.flatMap(termLeaves)
+    case Near(_, as)   => as.flatMap(termLeaves)
+    case Window(_, as) => as.flatMap(termLeaves)
+    case Score(c)      => termLeaves(c)
+    case And(as)       => as.flatMap(termLeaves)
+    case Or(as)        => as.flatMap(termLeaves)
+    case Sum(as)       => as.flatMap(termLeaves)
+    case WAnd(_, as)   => as.flatMap(termLeaves)
+    case WSum(_, as)   => as.flatMap(termLeaves)
   }
 
   /** The field a leaf is scored in: its first term's. `#NEAR`/`#WINDOW`
@@ -585,6 +581,16 @@ object BlockMax {
     fs.head
   }
 
+  /** Indri product form: any nesting of `#AND` and positively weighted
+    * `#WAND` over scored leaves. */
+  private def product(t: PTree): Boolean = t match {
+    case PLeaf(_)      => true
+    case PAnd(cs)      => cs.forall(product)
+    case PWAnd(wn, cs) =>
+      wn.length == cs.length && wn.forall(_ > 0f) && cs.forall(product)
+    case _             => false
+  }
+
   private def exponents(t: PTree, u: Double, out: Array[Double]): Unit =
     t match {
       case PLeaf(id)     => out(id) += u
@@ -596,27 +602,60 @@ object BlockMax {
 
   // ------------------------------------------------------------ driver
 
+  /** (df, ctf) of every distinct (term, field) leaf, collected in one job
+    * — the few query terms against the termStats table (broadcast-semi-
+    * join analog of `InvList`'s df/ctf fetch, `InvList.java:68-106`).
+    * Every query runs it first, so each validates its fields alike. */
+  private def leafStats(index: Index, leaves0: Seq[(String, String)])
+      : Map[(String, String), (Long, Long)] = {
+    val ls = leaves0.distinct
+    // Unknown field = syntax error (reference indexes a fixed field set,
+    // `QryEval/src/QryEval.java:467`; silently matching nothing hid typos)
+    ls.map(_._2).distinct.foreach { f =>
+      require(index.indexedFields.contains(f),
+        s"Query syntax is incorrect. Unknown field: $f")
+      // Legacy snapshots carry no indexedFields; a default-named field
+      // accepted only through the DefaultFields union matched nothing at
+      // build time, so a typo would look identical — warn (round-3
+      // ADVICE).
+      if (index.legacyAssumedFields.contains(f))
+        System.err.println(s"[graft] WARNING: field '$f' accepted via the" +
+          " legacy default-field fallback (snapshot lists no" +
+          " indexedFields); it holds no documents and matches nothing")
+    }
+    if (ls.isEmpty) return Map.empty
+    import index.spark.implicits._
+    val conds = ls.map { case (t, f) => $"term" === t && $"field" === f }
+      .reduce(_ || _)
+    index.termStats.filter(conds)
+      .select($"term", $"field", $"df", $"ctf")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
+      .toMap
+  }
+
   /** The blocks of the given leaves' terms in their fields. */
   private def blocksOf(blocks: Dataset[PostingBlock],
                        leaves: Seq[Il]): Dataset[PostingBlock] = {
-    val pairs = leaves.flatMap(Planner.termLeaves)
+    val pairs = leaves.flatMap(termLeaves)
     blocks.filter(col("field").isin(pairs.map(_._2).distinct: _*) &&
       col("term").isin(pairs.map(_._1).distinct: _*))
   }
 
-  /** A compiled query: its tree, leaves and their fields, and the
-    * statistics its model needs — the term leaves' (df, ctf) from
-    * [[Planner.leafStats]] (which validates the fields) and, only when
-    * forced, the positional leaves' from one job over `blocks`. */
-  private final class Compiled(index: Index, blocks: Dataset[PostingBlock],
-                               ast: Sl, model: RetrievalModel) {
-    val termStats = Planner.leafStats(index, Planner.termLeaves(ast))
+  /** A compiled query — built once per query, whichever mode runs it: its
+    * tree, leaves and their fields, and the statistics its model needs —
+    * the term leaves' (df, ctf) from [[leafStats]] (which validates the
+    * fields, before the operator × model checks) and, under BM25 and
+    * Indri, the positional leaves' from one job over `blocks`. */
+  private final class Compiled(val index: Index,
+                               val blocks: Dataset[PostingBlock],
+                               ast: Sl, val model: RetrievalModel) {
+    val termStats = leafStats(index, termLeaves(ast))
     val (tree, leaves) = compile(ast, model)
     val fields: IndexedSeq[String] = leaves.map(fieldOf).distinct
     val field: Array[Int] = leaves.map(l => fields.indexOf(fieldOf(l))).toArray
 
-    /** The scorer; forces the positional-stats job for BM25 and Indri. */
-    lazy val scorer: DocScorer = {
+    val scorer: DocScorer = {
       val fs = fields.map(index.fieldStats)
       lazy val posStats = positionalStats()
       def st(id: Int): (Long, Long) = leaves(id) match {
@@ -653,57 +692,70 @@ object BlockMax {
     }
   }
 
-  /** Pruned (docid, score) top-k candidates of each segment — feed them to
-    * `SearchEngine.rank` for the global extid-tiebroken top-k — or
-    * Left(reason) when the shape or the statistics call for the unpruned
-    * mode: see [[declines]], or an Indri leaf with zero ctf (its default
-    * score is 0, which zeroes every document alike). `blocks` must hold
-    * whole segments per partition ([[graft.index.Index.blocks]] does). */
-  def topK(index: Index, blocks: Dataset[PostingBlock], ast: Sl,
-           model: RetrievalModel, k: Int): Either[String, DataFrame] = {
-    declines(ast, model).foreach(why => return Left(why))
-    val q = new Compiled(index, blocks, ast, model)
-    val field = q.fields.head
-    if (model.isInstanceOf[Indri]) {
-      if (index.fieldStats(field).collectionLength <= 0)
-        return Left(s"field $field holds no documents")
-      if (q.leaves.exists {
-            case Term(t, f) => q.termStats.get((t, f)).forall(_._2 == 0L)
-            case _          => false
-          })
-        return Left("zero-ctf leaf")
+  /** The pruned mode's bounds for a compiled query, or why it runs
+    * unpruned: a boolean model; under BM25 a tree other than a `#SUM` of
+    * scored leaves; under Indri a tree that is not product-form, terms in
+    * more than one field (an absent leaf's default score needs the
+    * document's length in that leaf's field), a field with no documents,
+    * or a zero-ctf leaf (its default score is 0, which zeroes every
+    * document alike). BM25 scores only the leaves a document holds, each
+    * with its own posting's length, so its leaves may span fields. */
+  private def pruning(q: Compiled): Either[String, Bounds] =
+    (q.model, q.tree) match {
+      case (_: BM25, PSum(cs)) if cs.forall(_.isInstanceOf[PLeaf]) =>
+        Right(Bm25Bounds(q.scorer,
+          q.leaves.indices.map(id => cs.count(_ == PLeaf(id))).toArray))
+      case (_: BM25, _) => Left("not a #SUM of scored leaves")
+      case (_: Indri, t) if !product(t) =>
+        Left("not a product-form #WAND/#AND tree")
+      case (_: Indri, t) =>
+        q.leaves.flatMap(termLeaves).map(_._2).distinct match {
+          case Seq(f) if q.index.fieldStats(f).collectionLength <= 0 =>
+            Left(s"field $f holds no documents")
+          case Seq(_) if q.scorer.stat.exists(_ <= 0f) => Left("zero-ctf leaf")
+          case Seq(_) =>
+            val u = new Array[Double](q.leaves.length)
+            exponents(t, 1.0, u)
+            Right(IndriBounds(q.scorer, u))
+          case _ => Left("leaves span more than one field")
+        }
+      case _ => Left("boolean model")
     }
-    val scorer = q.scorer
-    val bounds: Bounds = (model, q.tree) match {
-      case (_: BM25, PSum(cs)) =>
-        Bm25Bounds(scorer, q.leaves.indices.map(id => cs.count(_ == PLeaf(id))).toArray)
-      case (_: Indri, tree) =>
-        if (scorer.stat.exists(_ <= 0f)) return Left("zero-ctf leaf")
-        val u = new Array[Double](q.leaves.length)
-        exponents(tree, 1.0, u)
-        IndriBounds(scorer, u)
-      case (other, _) => throw new IllegalStateException(s"no bounds for $other")
-    }
-    val spark = index.spark
-    import spark.implicits._
-    val (lv, kk) = (q.leaves, k)
-    Right(blocksOf(blocks, lv)
-      .mapPartitions(segments(_).flatMap(segmentTask(_, lv, bounds, scorer, kk)))
-      .toDF("docid", "score"))
-  }
 
-  /** Every document the query matches, with its exact score: the
-    * unpruned mode. An Indri tree over more than one field first left-joins
-    * the matched documents' missing field lengths from `doclen` (0 where a
-    * document has none — Lucene's missing norm). */
-  private[exec] def all(index: Index, blocks: Dataset[PostingBlock], ast: Sl,
-                        model: RetrievalModel): DataFrame = {
+  /** A query's (docid, score) candidates for the global top `k` — feed
+    * them to `SearchEngine.rank` for the extid-tiebroken ranking — and the
+    * route that produced them. The query is compiled once, then run
+    * pruned (each segment's top `k`) when [[pruning]] gives bounds, else
+    * unpruned (every match) with the reason. The operator × model checks
+    * throw here, before any scoring job. `blocks` must hold whole
+    * segments per partition ([[graft.index.Index.blocks]] does). */
+  def candidates(index: Index, blocks: Dataset[PostingBlock], ast: Sl,
+                 model: RetrievalModel, k: Int): (Route, DataFrame) = {
     val q = new Compiled(index, blocks, ast, model)
     val spark = index.spark
     import spark.implicits._
     val (lv, nf, scorer) = (q.leaves, q.fields.length, q.scorer)
-    val inQuery = blocksOf(blocks, lv)
-    if (!model.isInstanceOf[Indri] || nf == 1)
+    pruning(q).fold(
+      why => (Route.Exhaustive(why), unpruned(q)),
+      bounds => (Route.BlockMax(s"$model, each segment's top $k"),
+        blocksOf(blocks, lv).mapPartitions(segments(_).flatMap(
+          segmentTask(_, lv, nf, bounds, scorer, k))).toDF("docid", "score")))
+  }
+
+  /** Every document the query matches, with its exact score. */
+  private[exec] def all(index: Index, blocks: Dataset[PostingBlock], ast: Sl,
+                        model: RetrievalModel): DataFrame =
+    unpruned(new Compiled(index, blocks, ast, model))
+
+  /** The unpruned mode. An Indri tree over more than one field first
+    * left-joins the matched documents' missing field lengths from
+    * `doclen` (0 where a document has none — Lucene's missing norm). */
+  private def unpruned(q: Compiled): DataFrame = {
+    val spark = q.index.spark
+    import spark.implicits._
+    val (lv, nf, scorer) = (q.leaves, q.fields.length, q.scorer)
+    val inQuery = blocksOf(q.blocks, lv)
+    if (!q.model.isInstanceOf[Indri] || nf == 1)
       return inQuery.mapPartitions(segments(_).flatMap(byKey =>
           segmentAll(byKey, lv, nf, scorer)((d, tf, lens) =>
             (d, scorer.score(tf, lens)))))
@@ -715,7 +767,7 @@ object BlockMax {
     // lengths of the matched documents only: doclen is semi-joined to
     // their docids before the per-document map aggregate
     val fs = q.fields
-    val lenm = index.doclen.filter(col("field").isin(fs: _*))
+    val lenm = q.index.doclen.filter(col("field").isin(fs: _*))
       .join(rows.select(col("docid")), Seq("docid"), "left_semi")
       .groupBy(col("docid"))
       .agg(map_from_entries(collect_list(struct(col("field"), col("len"))))

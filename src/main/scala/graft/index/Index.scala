@@ -77,7 +77,7 @@ final class Index(
 
   /** Fields accepted ONLY through the legacy DefaultFields union (empty
     * for modern snapshots / fresh builds). A query against one of these
-    * may be a typo the union is hiding — [[graft.exec.Planner]] warns. */
+    * may be a typo the union is hiding — [[graft.exec.BlockMax]] warns. */
   lazy val legacyAssumedFields: Set[String] =
     if (indexedFieldsOpt.isDefined) Set.empty
     else Index.DefaultFields -- stats.fields.keySet
@@ -102,7 +102,7 @@ final class Index(
 
   /** Forward index (doc vector) — reference `TermVector`
     * (`QryEval/src/TermVector.java:19-89`): the persisted snapshot table
-    * when one was loaded, otherwise derived on demand from postings
+    * when one was loaded, otherwise assembled on demand from postings
     * ([[Index.fwdIndexOf]]). */
   lazy val fwdIndex: DataFrame =
     fwdIndexStoredOpt.map(_.drop("segment"))
@@ -110,11 +110,10 @@ final class Index(
 
   /** Forward vectors of SPECIFIC docids — the pruned read PRF / LeToR /
     * snippet must use (round-3 VERDICT item 2: a join never pushes below
-    * the fwdIndex aggregate, so the un-pruned read re-aggregates the full
-    * postings table per query). An `isin` FILTER on the grouping column
-    * does push below the groupBy to the scan; against a persisted
-    * snapshot the derived `segment` predicate additionally prunes
-    * partition directories. */
+    * the assembly, so the un-pruned read re-assembles the full postings
+    * table per query). In memory, the `isin` FILTER runs on the postings
+    * before their exchange; against a persisted snapshot the derived
+    * `segment` predicate additionally prunes partition directories. */
   def fwdVectors(docids: Seq[Long]): DataFrame = {
     import org.apache.spark.sql.functions._
     fwdIndexStoredOpt match {
@@ -141,47 +140,22 @@ object Index {
   val DefaultFields: Set[String] =
     Set("body", "title", "url", "inlink", "keywords")
 
-  /** Forward-index derivation from a postings frame — reference
-    * `TermVector` (`QryEval/src/TermVector.java:19-89`): `stems` sorted
-    * ascending (Lucene TermsEnum order), `stemFreq` aligned, and
-    * `positions(p)` = the 1-BASED index into `stems` of the word at
-    * position p — 0 marks a stopword/gap position, and the array ends at
-    * the LAST indexed position (`TermVector.java:58-88`: length = max
-    * position + 1, slots default 0). Pure expressions: position → stem
-    * pairs flattened into a map, then a sequence scan — no UDF. Shared by
-    * the on-demand [[Index.fwdIndex]] and the snapshot write
-    * ([[IndexStore.save]]). */
+  /** Forward index of in-memory postings — reference `TermVector`
+    * (`QryEval/src/TermVector.java:19-89`): the postings are exchanged by
+    * docid, sorted by (docid, field, term) within each partition and fed
+    * to the run assembler [[assembleFwd]], which the snapshot write uses
+    * too ([[fwdIndexFromSortedPostings]]). */
   def fwdIndexOf(postings: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.Column
-    // (pos, stemIdx) pairs sorted by position, derived from the agg
-    // output. The gap-fill below deliberately avoids BOTH (a) a
-    // per-position `element_at` on a MAP column — Spark map lookups are
-    // LINEAR scans, and CollapseProject additionally inlines a derived
-    // map column into the lambda so it is rebuilt per element (the
-    // original form measured O(len²)/doc: 503 s to write 400k docs'
-    // forward index, vs ~25 s for the whole rest of the build) — and
-    // (b) lambdas referencing derived columns at all: `zip_with` over
-    // the pairs and their shift-by-one evaluates the (inlined) pairs
-    // expression a constant 3 times per ROW, never per element.
-    def pairsSorted: Column = sort_array(flatten(transform(col("stemsTf"),
-      (s, i) => transform(s.getField("positions"),
-        p => struct(p.as("pos"), (i + lit(1)).cast("int").as("stem"))))))
-    val prevShift = concat(
-      array(struct(lit(-1).as("pos"), lit(0).as("stem"))),
-      slice(pairsSorted, lit(1), size(pairsSorted) - 1))
-    val positions = flatten(zip_with(pairsSorted, prevShift,
-      (cur, prev) => concat(
-        array_repeat(lit(0),
-          cur.getField("pos") - prev.getField("pos") - 1),
-        array(cur.getField("stem")))))
+    import postings.sparkSession.implicits._
     postings
-      .groupBy("docid", "field")
-      .agg(sort_array(collect_list(
-        struct(col("term"), col("tf"), col("positions")))).as("stemsTf"))
-      .select(col("docid"), col("field"),
-        col("stemsTf.term").as("stems"), col("stemsTf.tf").as("stemFreq"),
-        positions.as("positions"))
+      .select($"docid", $"field", $"term", $"tf", $"positions",
+        org.apache.spark.sql.functions.lit(0L).as("segment"))
+      .repartition($"docid")
+      .sortWithinPartitions($"docid", $"field", $"term")
+      .as[(Long, String, String, Int, Array[Int], Long)]
+      .mapPartitions(rows => assembleFwd(rows))
+      .toDF("docid", "field", "stems", "stemFreq", "positions", "segment")
+      .drop("segment")
   }
 
   /** Forward-index derivation off the PERSISTED postings layout — ZERO
@@ -209,9 +183,11 @@ object Index {
   }
 
   /** Streaming (docid, field)-run assembler over a sorted row iterator:
-    * stems arrive term-sorted within the run; positions are gap-filled
-    * from the merged (pos → stemIdx) pairs (0 = stopword gap, array ends
-    * at the last indexed position — `TermVector.java:58-88`). */
+    * `stems` arrive term-sorted within the run (Lucene TermsEnum order),
+    * `stemFreq` aligned, and `positions(p)` = the 1-BASED index into
+    * `stems` of the word at position p — 0 marks a stopword/gap position,
+    * and the array ends at the LAST indexed position
+    * (`TermVector.java:58-88`). */
   private def assembleFwd(
       rows: Iterator[(Long, String, String, Int, Array[Int], Long)])
       : Iterator[(Long, String, Array[String], Array[Int], Array[Int], Long)] =

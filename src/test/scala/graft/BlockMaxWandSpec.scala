@@ -6,12 +6,14 @@ import graft.corpus.CorpusGen
 import graft.exec.BlockMax
 import graft.index.{IndexBuilder, IndexConfig, PostingBlocks}
 import graft.model._
+import graft.oracle.RefEngine
 import org.scalatest.funspec.AnyFunSpec
 
 /** SURVEY §4 item 5 / §5.3: block-max WAND must be provably
   * rank-identical — same extids, bit-identical scores — to the exhaustive
-  * DAAT path, across many random bag-of-words queries and a block size
-  * small enough (4) that multi-block skipping is genuinely exercised. */
+  * DAAT path and to the test-only reference engine, across many random
+  * bag-of-words queries (some over two fields) and a block size small
+  * enough (4) that multi-block skipping is genuinely exercised. */
 class BlockMaxWandSpec extends AnyFunSpec {
 
   private lazy val spark = TestSpark.spark
@@ -19,29 +21,42 @@ class BlockMaxWandSpec extends AnyFunSpec {
 
   private lazy val (engine, blocks4) = {
     val idx = IndexBuilder.build(spark, CorpusGen.df(spark, 200),
-      IndexConfig(buckets = 4)).cacheAll()
+      IndexConfig(buckets = 4, fields = Seq("body", "title"))).cacheAll()
     val b4 = PostingBlocks
       .fromPostings(spark, idx.postings, idx.doclen, blockSize = 4).cache()
     (new SearchEngine(idx, AnalyzerConfig.code), b4)
   }
 
-  private def vocab: Seq[String] = {
+  /** A field's terms, hottest first. */
+  private def vocab(field: String, n: Int): Seq[String] = {
     import spark.implicits._
-    engine.index.termStats.orderBy($"df".desc)
-      .select($"term").as[String].take(60).toSeq
+    engine.index.termStats.filter($"field" === field)
+      .orderBy($"df".desc, $"term").select($"term").as[String].take(n).toSeq
   }
+  private def vocab: Seq[String] = vocab("body", 60)
 
+  private lazy val oracle = RefEngine.of(CorpusGen.docs(200),
+    Seq("body", "title"), AnalyzerConfig.code)
+
+  /** `terms` are body terms, or `term.title`. */
   private def runBoth(terms: Seq[String], k: Int): Unit = {
-    val q = terms.mkString(" ")
-    val exhaustive = engine
-      .rank(engine.scores(s"#SUM(${terms.mkString(" ")})", model), k)
+    val q = s"#SUM(${terms.mkString(" ")})"
+    val exhaustive = engine.rank(engine.scores(q, model), k)
       .select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toVector
-    val sum = Sum(terms.map(t => Score(Term(t, "body"))))
-    val pruned = engine.rank(
-      BlockMax.topK(engine.index, blocks4, sum, model, k).toOption.get, k)
+    val sum = Sum(terms.map(_.split('.') match {
+      case Array(t, f) => Score(Term(t, f))
+      case Array(t)    => Score(Term(t, "body"))
+    }))
+    val (route, cands) = BlockMax.candidates(engine.index, blocks4, sum, model, k)
+    assert(route.isInstanceOf[Route.BlockMax], s"[$q] took $route")
+    val pruned = engine.rank(cands, k)
       .select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toVector
+    def bits(rows: Seq[(String, Double)]) =
+      rows.map { case (e, s) => (e, java.lang.Double.doubleToLongBits(s)) }
+    assert(bits(exhaustive) == bits(oracle.topkQuery(q, model, k)),
+      s"[$q] exhaustive vs the reference engine")
     assert(pruned.length == exhaustive.length, s"[$q] row count")
     pruned.zip(exhaustive).zipWithIndex.foreach {
       case (((pe, ps), (ee, es)), i) =>
@@ -73,10 +88,17 @@ class BlockMaxWandSpec extends AnyFunSpec {
     }
     it("100 random seeded queries, k ∈ {1, 5, 20}") {
       val v = vocab
+      // every other query also holds title terms: BM25 scores each
+      // present leaf with its own field's length, so a #SUM over two
+      // fields is pruned too
+      val title = vocab("title", 20).map(_ + ".title")
       val rnd = new scala.util.Random(42)
-      (0 until 100).foreach { _ =>
+      val rndTitle = new scala.util.Random(43)
+      (0 until 100).foreach { i =>
         val n = 1 + rnd.nextInt(5)
-        val terms = Seq.fill(n)(v(rnd.nextInt(v.length)))
+        val body = Seq.fill(n)(v(rnd.nextInt(v.length)))
+        val terms = if (i % 2 == 0) body else rndTitle.shuffle(body ++
+          Seq.fill(1 + rndTitle.nextInt(2))(title(rndTitle.nextInt(title.length))))
         runBoth(terms, Seq(1, 5, 20)(rnd.nextInt(3)))
       }
     }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.analysis.AnalyzerConfig
-import graft.api.SearchEngine
+import graft.api.{Route, SearchEngine}
 import graft.corpus.CorpusGen
 import graft.exec.BlockMax
 import graft.index.{IndexBuilder, IndexConfig, PostingBlocks}
@@ -23,7 +23,7 @@ class IndriBlockMaxSpec extends AnyFunSpec {
 
   private lazy val (engine, blocks4) = {
     val idx = IndexBuilder.build(spark, CorpusGen.df(spark, 200),
-      IndexConfig(buckets = 4)).cacheAll()
+      IndexConfig(buckets = 4, fields = Seq("body", "title"))).cacheAll()
     val b4 = PostingBlocks
       .fromPostings(spark, idx.postings, idx.doclen, blockSize = 4).cache()
     (new SearchEngine(idx, cfg), b4)
@@ -31,11 +31,12 @@ class IndriBlockMaxSpec extends AnyFunSpec {
 
   private def vocab: Seq[String] = {
     import spark.implicits._
-    engine.index.termStats.orderBy($"df".desc)
-      .select($"term").as[String].take(60).toSeq
+    engine.index.termStats.filter($"field" === "body")
+      .orderBy($"df".desc, $"term").select($"term").as[String].take(60).toSeq
   }
 
-  private lazy val oracle = RefEngine.of(CorpusGen.docs(200), Seq("body"), cfg)
+  private lazy val oracle =
+    RefEngine.of(CorpusGen.docs(200), Seq("body", "title"), cfg)
 
   private def ranked(df: org.apache.spark.sql.DataFrame) =
     df.select("extid", "score").collect()
@@ -59,14 +60,15 @@ class IndriBlockMaxSpec extends AnyFunSpec {
   private def runBoth(q: String, k: Int, model: RetrievalModel = model,
                       mustRoute: Boolean = true): Boolean = {
     val ast = QueryParser.parseQuery(q, model, cfg).get
-    val cands = BlockMax.topK(engine.index, blocks4, Qry.asSl(ast),
-      model, k)
-    assert(cands.isRight || !mustRoute, s"[$q] expected the pruned path: $cands")
+    val (route, cands) = BlockMax.candidates(engine.index, blocks4,
+      Qry.asSl(ast), model, k)
+    val pruned = route.isInstanceOf[Route.BlockMax]
+    assert(pruned || !mustRoute, s"[$q] expected the pruned path: $route")
     val exhaustive = ranked(engine.rank(engine.scores(q, model), k))
     assertSame(q, exhaustive, oracle.topkQuery(q, model, k), "reference engine")
-    cands.foreach(c => assertSame(q, ranked(engine.rank(c, k)), exhaustive,
-      "exhaustive"))
-    cands.isRight
+    if (pruned)
+      assertSame(q, ranked(engine.rank(cands, k)), exhaustive, "exhaustive")
+    pruned
   }
 
   describe("positional leaves") {
@@ -173,13 +175,14 @@ class IndriBlockMaxSpec extends AnyFunSpec {
 
   describe("fallback to the exhaustive planner") {
     it("falls back on zero-ctf leaves, #WSUM, #OR, and multi-field trees") {
-      def ext(q: String) = {
+      def declined(q: String) = {
         val ast = QueryParser.parseQuery(q, model, cfg).get
-        BlockMax.topK(engine.index, blocks4, Qry.asSl(ast), model, 10)
+        BlockMax.candidates(engine.index, blocks4, Qry.asSl(ast), model, 10)
+          ._1.isInstanceOf[Route.Exhaustive]
       }
-      assert(ext("#AND(zzznotaterm open)").isLeft)       // mle = 0
-      assert(ext("#WSUM(0.5 open 0.5 inverted)").isLeft) // not product-form
-      assert(ext("#AND(open f12.title)").isLeft)         // multi-field
+      assert(declined("#AND(zzznotaterm open)"))       // mle = 0
+      assert(declined("#WSUM(0.5 open 0.5 inverted)")) // not product-form
+      assert(declined("#AND(open f12.title)"))         // multi-field
       // and the routed search still answers them (exhaustive fallback)
       val q = "#WSUM(0.5 open 0.5 inverted)"
       val r = engine.search(q, model, 5)

@@ -46,16 +46,23 @@ class RoutingSpec extends AnyFunSpec {
     oracle.topkQuery(q, m, k)
       .map { case (e, s) => (e, java.lang.Double.doubleToLongBits(s)) }
 
+  /** The same index saved and loaded back. */
+  private lazy val stored = {
+    val dir = java.nio.file.Files.createTempDirectory("routing-stored").toString
+    IndexStore.save(engine.index, dir)
+    new SearchEngine(IndexStore.load(spark, dir), cfg)
+  }
+
   /** Asserts the route kind, then search ≡ the exhaustive reference ≡
     * the reference engine. */
-  private def check(q: String, m: RetrievalModel, k: Int = 20)
+  private def check(q: String, m: RetrievalModel, k: Int = 20,
+                    eng: SearchEngine = engine)
                    (expected: PartialFunction[Route, Unit]): Unit = {
-    val (route, _) = engine.routed(q, m, k)
+    val (route, _) = eng.routed(q, m, k)
     assert(expected.isDefinedAt(route), s"[$q] under $m took $route")
-    val got = rows(engine.search(q, m, k))
+    val got = rows(eng.search(q, m, k))
     assert(got.nonEmpty || q.contains("zzz"), s"[$q] fixture matches nothing")
-    assert(got ==
-      rows(engine.rank(engine.scores(q, m), k, engine.tieProne(m))),
+    assert(got == rows(eng.rank(eng.scores(q, m), k, eng.tieProne(m))),
       s"[$q] under $m via $route")
     assert(bits(got) == bits(oracle, q, m, k),
       s"[$q] under $m via $route vs the reference engine")
@@ -72,8 +79,8 @@ class RoutingSpec extends AnyFunSpec {
     it("a #SUM with a duplicated term") {
       check("#SUM(open open inverted)", bm25)(blockMax)
     }
-    it("a multi-field #SUM stays exhaustive") {
-      check("#SUM(open f12.title)", bm25)(exhaustive("one field"))
+    it("a multi-field #SUM is routed") {
+      check("#SUM(open f12.title)", bm25)(blockMax)
     }
   }
 
@@ -120,7 +127,16 @@ class RoutingSpec extends AnyFunSpec {
       check("#AND(open f12.title)", indri)(exhaustive("more than one field"))
     }
     it("a zero-ctf term") {
-      check("#AND(zzznotaterm open)", indri)(exhaustive("zero-ctf"))
+      val q = "#AND(zzznotaterm open)"
+      check(q, indri)(exhaustive("zero-ctf"))
+      compiledOnce(engine, q, indri, statsJobs = 1)
+    }
+    it("an SDM whose #NEAR/1 leaf matches nowhere, over a stored snapshot") {
+      // "inverted" occurs only in the phrase "open inverted index"
+      val q = "#WAND(0.7 #AND(open inverted) 0.2 #NEAR/1(inverted open) " +
+        "0.1 #WINDOW/8(open inverted))"
+      check(q, indri, eng = stored)(exhaustive("zero-ctf"))
+      compiledOnce(stored, q, indri, statsJobs = 2)
     }
     it("#OR is rejected under Indri on every route alike") {
       val q = "#OR(open inverted)"
@@ -188,6 +204,23 @@ class RoutingSpec extends AnyFunSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Warm a query shape once (first-use derivations, lazy stats), then
+    * measure it. */
+  private def jobsOf(eng: SearchEngine, q: String, m: RetrievalModel) = {
+    eng.search(q, m, 100)
+    measured(eng.search(q, m, 100))
+  }
+
+  /** A declined query compiles once: its `statsJobs` statistics jobs
+    * (leaf stats, and positional stats with positional leaves) run once
+    * each, then the ranking's two (the 2k head, then the extids of the
+    * docs above a tied boundary or its overflow pass). */
+  private def compiledOnce(eng: SearchEngine, q: String, m: RetrievalModel,
+                           statsJobs: Int): Unit = {
+    val (jobs, _, _) = jobsOf(eng, q, m)
+    assert(jobs <= statsJobs + 2, s"[$q] $jobs jobs")
+  }
+
   it("an in-memory index derives its block table once: a second routed " +
      "query shuffles no postings") {
     // a fresh build (not loaded, no stored postings_blocks): the block
@@ -215,12 +248,6 @@ class RoutingSpec extends AnyFunSpec {
       val (_, combined) = eng.expand("open inverted", indri, fb)
       eng.search(combined, indri, 100)
     }
-    /** Warm a query shape once (first-use derivations, lazy stats), then
-      * measure it. */
-    def jobsOf(eng: SearchEngine, q: String, m: RetrievalModel) = {
-      eng.search(q, m, 100)
-      measured(eng.search(q, m, 100))
-    }
     def checkEngine(eng: SearchEngine, where: String): Unit = {
       terms.foreach { case (q, m) =>
         val (jobs, _, bytes) = jobsOf(eng, q, m)
@@ -233,12 +260,9 @@ class RoutingSpec extends AnyFunSpec {
     }
     it("over a stored snapshot: ≤ 3 jobs, ≤ 4 with positional leaves, " +
        "and a PRF flow in ≤ 9") {
-      val dir = java.nio.file.Files.createTempDirectory("routing-jobs").toString
-      IndexStore.save(engine.index, dir)
-      val eng = new SearchEngine(IndexStore.load(spark, dir), cfg)
-      checkEngine(eng, "stored")
-      prf(eng)
-      val (jobs, _, bytes) = measured(prf(eng))
+      checkEngine(stored, "stored")
+      prf(stored)
+      val (jobs, _, bytes) = measured(prf(stored))
       assert(jobs <= 9 && bytes == 0, s"[stored PRF] $jobs jobs, $bytes B")
     }
     it("over an in-memory index: ≤ 3 jobs, ≤ 4 with positional leaves") {
@@ -294,8 +318,7 @@ class RoutingSpec extends AnyFunSpec {
     val mixed = engine.index.blocks.orderBy("term", "segment", "blockId")
       .coalesce(1)
     val ast = Sum(Seq("open", "inverted", "index").map(t => Score(Term(t, "body"))))
-    val cands = BlockMax.topK(engine.index, mixed, ast, bm25, 20)
-      .toOption.get
+    val (_, cands) = BlockMax.candidates(engine.index, mixed, ast, bm25, 20)
     val e = intercept[org.apache.spark.SparkException](cands.collect())
     assert(e.getMessage.contains("not one contiguous run"), e.getMessage)
   }
@@ -305,12 +328,12 @@ class RoutingSpec extends AnyFunSpec {
     import org.apache.spark.metrics.source.CodegenMetrics
     def compiles(q: String): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      engine.search(q, bm25, 50).collect()
+      engine.search(q, RankedBoolean, 50).collect()
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     }
-    // multi-field BM25 stays exhaustive; the second query's rsj and
-    // terms differ, its plan shape does not
-    compiles("#SUM(open f12.title inverted)")
-    assert(compiles("#SUM(query f7.title index)") == 0)
+    // boolean models run unpruned; the second query's terms differ, its
+    // plan shape does not
+    compiles("#AND(open scala.title inverted)")
+    assert(compiles("#AND(query java.title index)") == 0)
   }
 }
