@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * SQL-expressible with DuckDB oracle SQL over the same parquet tables.
   *
   * The search-engine queries run through the REAL engine path (corpus →
-  * [[IndexBuilder]] → [[graft.exec.Planner]] → top-k), not hand-written
+  * [[IndexBuilder]] → the routed [[SearchEngine.search]] → top-k, or
+  * [[SearchEngine.scores]] for a full scored set), not hand-written
   * shortcuts; the oracle SQL re-derives the same answer relationally —
   * float-faithfully for BM25 (DuckDB FLOAT arithmetic is IEEE single,
-  * same as the engine's float-exact Catalyst expressions), exactly for
+  * like the engine scorer's plain float arithmetic), exactly for
   * integer-valued scores, and rounded to 6 decimals only where `pow` is
   * involved (libm vs StrictMath can differ in the last ulp).
   *

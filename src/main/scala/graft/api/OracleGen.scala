@@ -13,7 +13,7 @@ import graft.ops.{Dedup, Similarity, TextOps}
   *    as DECIMAL and silently changes arithmetic);
   *  - float-faithful scoring wraps every operand in CAST(... AS FLOAT) —
   *    DuckDB FLOAT arithmetic is IEEE single precision, matching the
-  *    engine's float-exact Catalyst expressions bit-for-bit;
+  *    float arithmetic of the engine's scorer bit-for-bit;
   *  - `sum()` is wrapped in CAST(... AS BIGINT) (DuckDB returns HUGEINT).
   */
 object OracleGen {

@@ -7,8 +7,9 @@ import graft.model._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Facade: parse → plan → execute → rank — the reference's per-query
-  * lifecycle E1 (SURVEY §3) as one declarative Spark plan.
+/** Facade: parse → evaluate → rank — the reference's per-query
+  * lifecycle E1 (SURVEY §3): one parse, the block-max engine's segment
+  * tasks ([[graft.exec.BlockMax]]), then the extid-tiebroken ranking.
   */
 final class SearchEngine(val index: Index,
                          val analyzer: AnalyzerConfig = AnalyzerConfig.code) {

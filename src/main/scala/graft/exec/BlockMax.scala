@@ -3,10 +3,9 @@ package graft.exec
 import graft.api.Route
 import graft.index.{Index, Posting, PostingBlock, PostingCodec}
 import graft.model._
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, collect_list, map_from_entries, struct}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.functions.{col, collect_list, first,
+  map_from_entries, struct}
 
 import scala.collection.mutable
 
@@ -14,7 +13,7 @@ import scala.collection.mutable
   * tree over the compressed block table, segment by segment (SURVEY §2–3;
   * the reference evaluates DAAT over inverted lists). [[candidates]]
   * compiles a query once and itself chooses one of two modes, which share
-  * one exact scorer ([[DocScorer]]):
+  * one segment loop ([[walk]]) and one exact scorer ([[DocScorer]]):
   *
   *  - pruned (SURVEY §4 item 5) for the two additive families: BM25
   *    `#SUM` over scored leaves in any fields (a sum of per-leaf
@@ -32,11 +31,13 @@ import scala.collection.mutable
   * `#SYN`, nested), matched inside the segment task from the decoded
   * blocks' positions with the [[PositionKernels]]; one job before the
   * scoring job sums their global df/ctf (a scorer statistic) over the same
-  * blocks. The pruned mode is Broder et al.'s WAND with Ding & Suel's
-  * block maxima (public literature): one block cursor, one
-  * materialized-list cursor, one worst-first heap and one pivot loop;
-  * [[Bounds]] supply per-leaf gain bounds with an epsilon margin, so float
-  * rounding never flips a prune. Both modes score a document with the same
+  * blocks. The loop is Broder et al.'s WAND with Ding & Suel's block
+  * maxima (public literature) over one block cursor per term leaf and one
+  * materialized-list cursor per positional leaf. The pruned mode feeds it
+  * a worst-first heap and [[Bounds]] — per-leaf gain bounds with an
+  * epsilon margin, so float rounding never flips a prune; the unpruned
+  * mode runs it [[Unbounded]], so it reaches every document a leaf holds
+  * and emits those the tree matches. Both score a document with the same
   * [[DocScorer]], so they are BIT-identical to each other (BlockMaxWandSpec,
   * IndriBlockMaxSpec) and to the test-only reference engine
   * (EngineVsOracleSpec).
@@ -55,8 +56,10 @@ import scala.collection.mutable
 object BlockMax {
 
   /** A query's score tree over numbered leaves. */
-  private sealed trait PTree
-  private final case class PLeaf(id: Int) extends PTree
+  private sealed trait PTree { def children: Seq[PTree] }
+  private final case class PLeaf(id: Int) extends PTree {
+    def children: Seq[PTree] = Nil
+  }
   private final case class PAnd(children: Seq[PTree]) extends PTree
   private final case class POr(children: Seq[PTree]) extends PTree
   private final case class PSum(children: Seq[PTree]) extends PTree
@@ -99,15 +102,10 @@ object BlockMax {
 
     /** Whether the document is in the tree's result list: boolean #AND
       * needs every child, every other operator any. */
-    def matches(tf: Array[Int]): Boolean = matches(tree, tf)
-    private def matches(t: PTree, tf: Array[Int]): Boolean = t match {
-      case PLeaf(id)              => tf(id) > 0
-      case PAnd(cs) if boolean    => cs.forall(matches(_, tf))
-      case PAnd(cs)               => cs.exists(matches(_, tf))
-      case POr(cs)                => cs.exists(matches(_, tf))
-      case PSum(cs)               => cs.exists(matches(_, tf))
-      case PWAnd(_, cs)           => cs.exists(matches(_, tf))
-      case PWSum(_, cs)           => cs.exists(matches(_, tf))
+    def matches(tf: Array[Int], t: PTree = tree): Boolean = t match {
+      case PLeaf(id)           => tf(id) > 0
+      case PAnd(cs) if boolean => cs.forall(matches(tf, _))
+      case _                   => t.children.exists(matches(tf, _))
     }
 
     def score(tf: Array[Int], lens: Array[Long]): Double = {
@@ -122,10 +120,10 @@ object BlockMax {
         }
         case POr(cs) => // QryopSlOr.java:57-99
           if (model == UnrankedBoolean) 1.0
-          else cs.filter(matches(_, tf)).map(eval).reduce((a, b) => math.max(a, b))
+          else cs.filter(matches(tf, _)).map(eval).reduce((a, b) => math.max(a, b))
         case PSum(cs) => // QryopSlSum.java:55-101: present children only
           cs.foldLeft(0.0)((acc, c) =>
-            if (matches(c, tf)) acc + eval(c) * usrWeight else acc)
+            if (matches(tf, c)) acc + eval(c) * usrWeight else acc)
         case PWAnd(wn, cs) =>
           cs.zip(wn).foldLeft(1.0) { case (acc, (c, w)) =>
             acc * StrictMath.pow(eval(c), w.toDouble)
@@ -196,7 +194,6 @@ object BlockMax {
   private abstract class Cursor(val id: Int) {
     var curDoc: Long
     def advanceTo(target: Long): Unit
-    final def next(): Unit = advanceTo(curDoc + 1)
     /** tf and len at curDoc. */
     def tf: Int
     def len: Long
@@ -270,117 +267,135 @@ object BlockMax {
     def len: Long = l.lens(i)
   }
 
-  // ------------------------------------------------------ segment loops
+  // ------------------------------------------------------- segment loop
 
-  /** One segment's pruned evaluation → its local top-k (docid, score). */
-  private def segmentTopK(cursors: Array[Cursor], bounds: Bounds,
-                          scorer: DocScorer, nLeaves: Int, nFields: Int,
-                          k: Int): Iterator[(Long, Double)] = {
+  /** Where the segment loop sends the documents it reaches: `bar` is what
+    * a document's bound must reach; `visit` gets every leaf's tf (0 =
+    * absent) and the lengths in the query's fields (-1 where no leaf holds
+    * the document), and keeps neither array. */
+  private abstract class Sink[T] {
+    def bar: Double
+    def visit(doc: Long, tf: Array[Int], lens: Array[Long]): Unit
+    def result: Iterator[T]
+  }
+
+  /** The pruned mode's sink: the segment's top k (docid, score) in a
+    * worst-first heap, whose worst score sets the bar once it is full. */
+  private final class TopK(scorer: DocScorer, bounds: Bounds, k: Int)
+      extends Sink[(Long, Double)] {
     // worst-first heap: lowest score first, then HIGHEST docid first
-    implicit val ord: Ordering[(Long, Double)] =
-      Ordering.by[(Long, Double), (Double, Long)] { case (d, s) => (-s, d) }
-    val heap = mutable.PriorityQueue.empty[(Long, Double)]
+    private val heap = mutable.PriorityQueue.empty[(Long, Double)](
+      Ordering.by[(Long, Double), (Double, Long)] { case (d, s) => (-s, d) })
     def bar: Double =
       if (heap.size < k) Double.NegativeInfinity else bounds.bar(heap.head._2)
+    def visit(doc: Long, tf: Array[Int], lens: Array[Long]): Unit = {
+      val s = scorer.score(tf, lens)
+      // a full heap gives up its worst only to a better document
+      if (heap.size == k &&
+          { val (wd, ws) = heap.head; s > ws || (s == ws && doc < wd) })
+        heap.dequeue()
+      if (heap.size < k) heap.enqueue((doc, s))
+    }
+    def result: Iterator[(Long, Double)] = heap.dequeueAll.reverseIterator
+  }
+
+  /** The unpruned mode's sink: every document the tree matches, as
+    * `emit` makes it. */
+  private final class Matches[T](scorer: DocScorer,
+                                 emit: (Long, Array[Int], Array[Long]) => T)
+      extends Sink[T] {
+    private val out = mutable.ArrayBuffer.empty[T]
+    def bar: Double = Double.NegativeInfinity
+    def visit(doc: Long, tf: Array[Int], lens: Array[Long]): Unit =
+      if (scorer.matches(tf)) out += emit(doc, tf, lens)
+    def result: Iterator[T] = out.iterator
+  }
+
+  /** The bound of the unpruned mode, which never prunes: every gain is 0
+    * and the bar −∞, so the loop reaches every document a cursor holds. */
+  private object Unbounded extends Bounds {
+    def gain(id: Int, maxTf: Int, minLen: Long, maxLen: Long): Double = 0.0
+    def baseline: Double = 0.0
+    def bar(worst: Double): Double = Double.NegativeInfinity
+  }
+
+  /** One segment's document-at-a-time walk — the one loop of both modes.
+    * The cursors stay ordered by current docid in `cs`, in place, with
+    * the exhausted ones dropped off its end. The pivot is the first
+    * cursor whose prefix's segment gains can reach the sink's bar; its
+    * document is visited, with every leaf that holds it, when those
+    * leaves' block gains reach the bar too, else they skip past their
+    * blocks. The loop allocates nothing per document; a sink may. */
+  private def walk[T](cs: Array[Cursor], bounds: Bounds, field: Array[Int],
+                      nLeaves: Int, nFields: Int, sink: Sink[T]): Iterator[T] = {
     val tfs = new Array[Int](nLeaves)
     val lens = new Array[Long](nFields)
-    var done = false
-    while (!done) {
-      val sorted = cursors.filter(_.curDoc != Long.MaxValue).sortBy(_.curDoc)
+    var n = cs.length
+    // restores the docid order after cs(0 until q) advanced
+    def reorder(q: Int): Unit = {
+      var i = q - 1
+      while (i >= 0) {
+        val c = cs(i)
+        var j = i + 1
+        while (j < n && cs(j).curDoc < c.curDoc) { cs(j - 1) = cs(j); j += 1 }
+        cs(j - 1) = c
+        i -= 1
+      }
+      while (n > 0 && cs(n - 1).curDoc == Long.MaxValue) n -= 1
+    }
+    reorder(n)
+    while (n > 0) {
+      val bar = sink.bar
       val need = bar - bounds.baseline
       // pivot: the first prefix whose summed gain can reach the bar
       var acc = 0.0
       var p = -1
       var i = 0
-      while (p < 0 && i < sorted.length) {
-        acc += sorted(i).segGain
+      while (p < 0 && i < n) {
+        acc += cs(i).segGain
         if (acc >= need) p = i
         i += 1
       }
-      if (p < 0) done = true // no remaining doc can enter the heap
+      if (p < 0) n = 0 // no remaining doc can reach the bar
       else {
-        val pivotDoc = sorted(p).curDoc
-        if (sorted(0).curDoc == pivotDoc) {
-          // every cursor AT pivotDoc contributes — including ties beyond
-          // the pivot index — so the refinement bound, the scoring and
-          // the advance all range over that tied set
-          val atPivot = sorted.filter(_.curDoc == pivotDoc)
-          if (bounds.baseline + atPivot.map(_.blockGain).sum >= bar) {
-            java.util.Arrays.fill(tfs, 0)
-            atPivot.foreach { c => tfs(c.id) = c.tf; lens(scorer.field(c.id)) = c.len }
-            val s = scorer.score(tfs, lens)
-            if (heap.size < k) heap.enqueue((pivotDoc, s))
-            else {
-              val (wd, ws) = heap.head
-              if (s > ws || (s == ws && pivotDoc < wd)) {
-                heap.dequeue(); heap.enqueue((pivotDoc, s))
-              }
-            }
-            atPivot.foreach(_.next())
-          } else {
-            // skip past the bounded blocks: the next doc that can score
-            var skipTo = Long.MaxValue
-            atPivot.foreach(c => skipTo = math.min(skipTo, c.blockLastDoc + 1))
-            sorted.find(_.curDoc > pivotDoc)
-              .foreach(c => skipTo = math.min(skipTo, c.curDoc))
-            atPivot.foreach(c => if (c.curDoc < skipTo) c.advanceTo(skipTo))
+        val pivotDoc = cs(p).curDoc
+        // the cursors that advance, cs(0 until m): those before the pivot
+        // to align them, else every one AT pivotDoc — ties beyond the
+        // pivot index too — for the refinement bound, visit and advance
+        var m = 0
+        var gain = 0.0
+        while (m < n && cs(m).curDoc == pivotDoc) {
+          gain += cs(m).blockGain; m += 1
+        }
+        i = 0
+        if (m == 0) {
+          m = p
+          while (i < m) {
+            if (cs(i).curDoc < pivotDoc) cs(i).advanceTo(pivotDoc)
+            i += 1
           }
-        } else // align the cursors before the pivot
-          sorted.take(p).foreach(c => if (c.curDoc < pivotDoc) c.advanceTo(pivotDoc))
-      }
-    }
-    heap.dequeueAll.reverseIterator
-  }
-
-  /** One segment's unpruned evaluation: a docid-ordered merge of every
-    * leaf's list, emitting each document the tree matches with its
-    * leaves' tfs and its lengths in the query's fields (-1 where no leaf
-    * matched it). `emit` may keep neither array. */
-  private def segmentAll[T](byKey: ByKey, leaves: IndexedSeq[Il],
-                            nFields: Int, scorer: DocScorer)
-                           (emit: (Long, Array[Int], Array[Long]) => T)
-      : Iterator[T] = {
-    val field = scorer.field
-    val byId = leafLists(byKey, leaves, leaves.indices)
-    val lists = leaves.indices.map(byId)
-    val out = mutable.ArrayBuffer.empty[T]
-    val tfs = new Array[Int](lists.length)
-    val lens = new Array[Long](nFields)
-    merge(lists) { (d, at) =>
-      java.util.Arrays.fill(tfs, 0)
-      java.util.Arrays.fill(lens, -1L)
-      lists.indices.foreach { j =>
-        if (at(j) >= 0) {
-          tfs(j) = lists(j).tfs(at(j)); lens(field(j)) = lists(j).lens(at(j))
+        } else if (bounds.baseline + gain >= bar) {
+          java.util.Arrays.fill(tfs, 0)
+          java.util.Arrays.fill(lens, -1L)
+          while (i < m) {
+            val c = cs(i)
+            tfs(c.id) = c.tf; lens(field(c.id)) = c.len
+            c.advanceTo(pivotDoc + 1); i += 1
+          }
+          sink.visit(pivotDoc, tfs, lens)
+        } else {
+          // skip past the bounded blocks: the next doc that can score
+          var skipTo = if (m < n) cs(m).curDoc else Long.MaxValue
+          while (i < m) {
+            skipTo = math.min(skipTo, cs(i).blockLastDoc + 1); i += 1
+          }
+          i = 0
+          while (i < m) { cs(i).advanceTo(skipTo); i += 1 }
         }
-      }
-      if (scorer.matches(tfs)) out += emit(d, tfs, lens)
-    }
-    out.iterator
-  }
-
-  /** A docid-ordered merge of `ls`: `visit(d, at)` for every document,
-    * where `at(j)` is d's index in list j, or -1. */
-  private def merge(ls: Seq[PList])(visit: (Long, Array[Int]) => Unit): Unit = {
-    val ptr = new Array[Int](ls.length)
-    val at = new Array[Int](ls.length)
-    var more = true
-    while (more) {
-      var d = Long.MaxValue
-      ls.indices.foreach { j =>
-        if (ptr(j) < ls(j).docids.length) d = math.min(d, ls(j).docids(ptr(j)))
-      }
-      if (d == Long.MaxValue) more = false
-      else {
-        ls.indices.foreach { j =>
-          val l = ls(j)
-          if (ptr(j) < l.docids.length && l.docids(ptr(j)) == d) {
-            at(j) = ptr(j); ptr(j) += 1
-          } else at(j) = -1
-        }
-        visit(d, at)
+        reorder(m)
       }
     }
+    sink.result
   }
 
   // -------------------------------------------------- positional leaves
@@ -391,8 +406,6 @@ object BlockMax {
                             val pos: Array[Array[Int]],
                             val lens: Array[Long]) {
     val tfs: Array[Int] = pos.map(_.length)
-    def isEmpty: Boolean = docids.isEmpty
-    def ctf: Long = pos.iterator.map(_.length.toLong).sum
   }
 
   private def decodeAll(blocks: Array[PostingBlock]): PList = {
@@ -419,24 +432,25 @@ object BlockMax {
   }
 
   private def union(ls: Seq[PList]): PList = {
-    val (ds, ps, lens) = (mutable.ArrayBuilder.make[Long],
-      mutable.ArrayBuilder.make[Array[Int]], mutable.ArrayBuilder.make[Long])
-    merge(ls) { (d, at) =>
-      val merged = mutable.ArrayBuilder.make[Int]
+    val ds = ls.flatMap(_.docids).distinct.sorted.toArray
+    val ptr = new Array[Int](ls.length)
+    val (ps, lens) = ds.map { d =>
       var len = -1L // any member's: same doc, same field
-      ls.indices.foreach { j =>
-        if (at(j) >= 0) { merged ++= ls(j).pos(at(j)); len = ls(j).lens(at(j)) }
-      }
-      val m = merged.result()
+      val m = Array.concat(ls.indices.map { j =>
+        val l = ls(j)
+        if (ptr(j) < l.docids.length && l.docids(ptr(j)) == d) {
+          len = l.lens(ptr(j)); ptr(j) += 1; l.pos(ptr(j) - 1)
+        } else Array.emptyIntArray
+      }: _*)
       java.util.Arrays.sort(m)
-      ds += d; ps += m; lens += len
-    }
-    new PList(ds.result(), ps.result(), lens.result())
+      (m, len)
+    }.unzip
+    new PList(ds, ps, lens)
   }
 
   /** Documents holding every argument, with the kernel's match positions
     * (empty ⇒ no match). */
-  private def matched(ls: Seq[PList])(kernel: ArrayData => ArrayData): PList = {
+  private def matched(ls: Seq[PList])(kernel: Array[Array[Int]] => Array[Int]): PList = {
     val (ds, ps, lens) = (mutable.ArrayBuilder.make[Long],
       mutable.ArrayBuilder.make[Array[Int]], mutable.ArrayBuilder.make[Long])
     val ptr = new Array[Int](ls.length)
@@ -453,9 +467,7 @@ object BlockMax {
         j += 1
       }
       if (all) {
-        val args = new GenericArrayData(ls.indices.map(j =>
-          UnsafeArrayData.fromPrimitiveArray(ls(j).pos(ptr(j))): Any).toArray)
-        val m = kernel(args).toIntArray()
+        val m = kernel(Array.tabulate(ls.length)(j => ls(j).pos(ptr(j))))
         if (m.nonEmpty) { ds += d; ps += m; lens += first.lens(i) }
       }
     }
@@ -487,31 +499,36 @@ object BlockMax {
     }
   }
 
-  /** One segment's lists of the leaves `ids`, evaluated from its decoded
-    * terms (each decoded once). */
-  private def leafLists(byKey: ByKey, leaves: IndexedSeq[Il],
-                        ids: Seq[Int]): Map[Int, PList] = {
+  /** One segment's lists of the positional leaves, evaluated from its
+    * decoded terms (each decoded once). */
+  private def leafLists(byKey: ByKey, leaves: IndexedSeq[Il]): Map[Int, PList] = {
     val decoded = mutable.HashMap.empty[(String, String), PList]
     val term: ((String, String)) => PList = key => decoded.getOrElseUpdate(key,
       decodeAll(byKey.getOrElse(key, Array.empty[PostingBlock])))
-    ids.map(id => id -> evalIl(leaves(id), term)).toMap
+    positional(leaves).map(id => id -> evalIl(leaves(id), term)).toMap
   }
 
   private def positional(leaves: IndexedSeq[Il]): Seq[Int] =
     leaves.indices.filterNot(id => leaves(id).isInstanceOf[Term])
 
-  private def segmentTask(byKey: ByKey, leaves: IndexedSeq[Il], nFields: Int,
-                          bounds: Bounds, scorer: DocScorer,
-                          k: Int): Iterator[(Long, Double)] = {
-    val lists = leafLists(byKey, leaves, positional(leaves))
-    val cursors: Array[Cursor] = leaves.indices.flatMap { id =>
-      leaves(id) match {
-        case Term(t, f) => byKey.get((t, f)).map(new BlockCursor(id, _, bounds))
-        case _ => Some(lists(id)).filterNot(_.isEmpty)
-          .map(new ListCursor(id, _, bounds))
-      }
-    }.toArray
-    segmentTopK(cursors, bounds, scorer, leaves.length, nFields, k)
+  /** The query's segment tasks: a `mapPartitions` over its blocks that
+    * walks each segment ([[walk]]) into a fresh sink, with a cursor per
+    * leaf the segment holds — a term leaf's blocks, a positional leaf's
+    * list matched from its terms' decoded blocks. */
+  private def segmentTasks[T: Encoder](q: Compiled, bounds: Bounds)
+                                      (sink: () => Sink[T]): Dataset[T] = {
+    val (leaves, field, nf) = (q.leaves, q.scorer.field, q.fields.length)
+    blocksOf(q.blocks, leaves).mapPartitions(segments(_).flatMap { byKey =>
+      val lists = leafLists(byKey, leaves)
+      val cursors: Array[Cursor] = leaves.indices.flatMap { id =>
+        leaves(id) match {
+          case Term(t, f) => byKey.get((t, f)).map(new BlockCursor(id, _, bounds))
+          case _ => Some(lists(id)).filter(_.docids.nonEmpty)
+            .map(new ListCursor(id, _, bounds))
+        }
+      }.toArray
+      walk(cursors, bounds, field, leaves.length, nf, sink())
+    })
   }
 
   // ------------------------------------------------------ query shapes
@@ -554,16 +571,8 @@ object BlockMax {
 
   /** Every (term, field) leaf of a query, in tree order. */
   private def termLeaves(q: Qry): Seq[(String, String)] = q match {
-    case Term(t, f)    => Seq((t, f))
-    case Syn(as)       => as.flatMap(termLeaves)
-    case Near(_, as)   => as.flatMap(termLeaves)
-    case Window(_, as) => as.flatMap(termLeaves)
-    case Score(c)      => termLeaves(c)
-    case And(as)       => as.flatMap(termLeaves)
-    case Or(as)        => as.flatMap(termLeaves)
-    case Sum(as)       => as.flatMap(termLeaves)
-    case WAnd(_, as)   => as.flatMap(termLeaves)
-    case WSum(_, as)   => as.flatMap(termLeaves)
+    case Term(t, f) => Seq((t, f))
+    case _          => q.children.flatMap(termLeaves)
   }
 
   /** The field a leaf is scored in: its first term's. `#NEAR`/`#WINDOW`
@@ -584,11 +593,10 @@ object BlockMax {
   /** Indri product form: any nesting of `#AND` and positively weighted
     * `#WAND` over scored leaves. */
   private def product(t: PTree): Boolean = t match {
-    case PLeaf(_)      => true
-    case PAnd(cs)      => cs.forall(product)
-    case PWAnd(wn, cs) =>
+    case PLeaf(_) | PAnd(_) => t.children.forall(product)
+    case PWAnd(wn, cs)      =>
       wn.length == cs.length && wn.forall(_ > 0f) && cs.forall(product)
-    case _             => false
+    case _                  => false
   }
 
   private def exponents(t: PTree, u: Double, out: Array[Double]): Unit =
@@ -677,13 +685,12 @@ object BlockMax {
     private def positionalStats(): Map[Int, (Long, Long)] = {
       val ids = positional(leaves)
       if (ids.isEmpty) return Map.empty
-      val spark = index.spark
-      import spark.implicits._
+      import index.spark.implicits._
       val lv = leaves
       blocksOf(blocks, ids.map(leaves))
         .mapPartitions(segments(_).flatMap(byKey =>
-          leafLists(byKey, lv, positional(lv)).iterator.map { case (id, l) =>
-            (id, l.docids.length.toLong, l.ctf)
+          leafLists(byKey, lv).iterator.map { case (id, l) =>
+            (id, l.docids.length.toLong, l.tfs.map(_.toLong).sum)
           }))
         .collect()
         .groupBy(_._1).map { case (id, xs) =>
@@ -732,14 +739,13 @@ object BlockMax {
   def candidates(index: Index, blocks: Dataset[PostingBlock], ast: Sl,
                  model: RetrievalModel, k: Int): (Route, DataFrame) = {
     val q = new Compiled(index, blocks, ast, model)
-    val spark = index.spark
-    import spark.implicits._
-    val (lv, nf, scorer) = (q.leaves, q.fields.length, q.scorer)
+    import index.spark.implicits._
+    val scorer = q.scorer
     pruning(q).fold(
       why => (Route.Exhaustive(why), unpruned(q)),
       bounds => (Route.BlockMax(s"$model, each segment's top $k"),
-        blocksOf(blocks, lv).mapPartitions(segments(_).flatMap(
-          segmentTask(_, lv, nf, bounds, scorer, k))).toDF("docid", "score")))
+        segmentTasks(q, bounds)(() => new TopK(scorer, bounds, k))
+          .toDF("docid", "score")))
   }
 
   /** Every document the query matches, with its exact score. */
@@ -747,36 +753,32 @@ object BlockMax {
                         model: RetrievalModel): DataFrame =
     unpruned(new Compiled(index, blocks, ast, model))
 
-  /** The unpruned mode. An Indri tree over more than one field first
-    * left-joins the matched documents' missing field lengths from
-    * `doclen` (0 where a document has none — Lucene's missing norm). */
+  /** The unpruned mode: the segment loop under [[Unbounded]]. An Indri
+    * tree over more than one field then fills each matched document's
+    * missing field lengths from `doclen` (0 where a document has none —
+    * Lucene's missing norm): its rows, referenced once, are joined to the
+    * query fields' `doclen` rows and grouped back by docid. The join is
+    * inner: `doclen` is grouped from the postings, so a document that
+    * holds a leaf's posting has a row in that leaf's field. */
   private def unpruned(q: Compiled): DataFrame = {
-    val spark = q.index.spark
-    import spark.implicits._
-    val (lv, nf, scorer) = (q.leaves, q.fields.length, q.scorer)
-    val inQuery = blocksOf(q.blocks, lv)
-    if (!q.model.isInstanceOf[Indri] || nf == 1)
-      return inQuery.mapPartitions(segments(_).flatMap(byKey =>
-          segmentAll(byKey, lv, nf, scorer)((d, tf, lens) =>
-            (d, scorer.score(tf, lens)))))
+    import q.index.spark.implicits._
+    val scorer = q.scorer
+    def rows[T: Encoder](emit: (Long, Array[Int], Array[Long]) => T) =
+      segmentTasks(q, Unbounded)(() => new Matches(scorer, emit))
+    if (!q.model.isInstanceOf[Indri] || q.fields.length == 1)
+      return rows((d, tf, lens) => (d, scorer.score(tf, lens)))
         .toDF("docid", "score")
-    val rows = inQuery.mapPartitions(segments(_).flatMap(byKey =>
-        segmentAll(byKey, lv, nf, scorer)((d, tf, lens) =>
-          (d, tf.clone(), lens.clone()))))
-      .toDF("docid", "tf", "lens")
-    // lengths of the matched documents only: doclen is semi-joined to
-    // their docids before the per-document map aggregate
     val fs = q.fields
-    val lenm = q.index.doclen.filter(col("field").isin(fs: _*))
-      .join(rows.select(col("docid")), Seq("docid"), "left_semi")
+    rows((d, tf, lens) => (d, tf.clone(), lens.clone()))
+      .toDF("docid", "tf", "lens")
+      .join(q.index.doclen.filter(col("field").isin(fs: _*)), "docid")
       .groupBy(col("docid"))
-      .agg(map_from_entries(collect_list(struct(col("field"), col("len"))))
-        .as("lenm"))
-    rows.join(lenm, Seq("docid"), "left")
-      .as[(Long, Array[Int], Array[Long], Option[Map[String, Long]])]
+      .agg(first(col("tf")), first(col("lens")),
+        map_from_entries(collect_list(struct(col("field"), col("len")))))
+      .as[(Long, Array[Int], Array[Long], Map[String, Long])]
       .map { case (d, tf, lens, lm) =>
         fs.indices.foreach { f =>
-          if (lens(f) < 0) lens(f) = lm.flatMap(_.get(fs(f))).getOrElse(0L)
+          if (lens(f) < 0) lens(f) = lm.getOrElse(fs(f), 0L)
         }
         (d, scorer.score(tf, lens))
       }

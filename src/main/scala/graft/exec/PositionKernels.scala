@@ -1,53 +1,45 @@
 package graft.exec
 
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
-
 /** Primitive-int kernels for the reference's greedy positional matchers,
-  * operating directly on Catalyst [[ArrayData]] — no `Seq[Seq[Int]]`
-  * boxing, no CatalystTypeConverters round-trip. Semantics are the exact
-  * transliterations in the test-only `PositionOps`
-  * (`QryEval/src/QryopIlNear.java:74-120`, `QryopIlWindow.java:92-166`);
-  * a property spec asserts kernel ≡ PositionOps on random inputs.
+  * over the decoded position lists of one document — one `Array[Int]` per
+  * argument, no boxing. Semantics are the exact transliterations in the
+  * test-only `PositionOps` (`QryEval/src/QryopIlNear.java:74-120`,
+  * `QryopIlWindow.java:92-166`); a property spec asserts kernel ≡
+  * PositionOps on random inputs.
   *
-  * Inputs are the engine's own position lists: non-null, ascending ints
-  * (the index builder emits them sorted). Null elements are not handled —
-  * the engine never produces them.
+  * Inputs are the engine's own position lists: non-empty, ascending ints
+  * (the index builder emits them sorted).
   */
 object PositionKernels {
-  private val Empty: UnsafeArrayData =
-    UnsafeArrayData.fromPrimitiveArray(Array.emptyIntArray)
-
   /** `#NEAR/n` ordered chain — greedy single-consume, result = matched
     * positions of the LAST argument; empty ⇒ no match. */
-  def near(ps: ArrayData, distance: Int): ArrayData = {
-    val k = ps.numElements()
-    var prev: Array[Int] = ps.getArray(0).toIntArray()
+  def near(ps: Array[Array[Int]], distance: Int): Array[Int] = {
+    val k = ps.length
+    var prev: Array[Int] = ps(0)
     var prevLen = prev.length
     var j = 1
     while (j < k) {
-      val cur = ps.getArray(j)
-      val curLen = cur.numElements()
+      val cur = ps(j)
+      val curLen = cur.length
       val temp = new Array[Int](if (prevLen < curLen) prevLen else curLen)
       var t = 0
       var m = 0
       var n = 0
       while (m < prevLen && n < curLen) {
         val prevPos = prev(m)
-        val nextPos = cur.getInt(n)
+        val nextPos = cur(n)
         if (nextPos < prevPos) n += 1
         else if (nextPos - prevPos <= distance) {
           temp(t) = nextPos; t += 1; n += 1; m += 1
         } else m += 1
       }
-      if (t == 0) return Empty
+      if (t == 0) return Array.emptyIntArray
       prev = temp
       prevLen = t
       j += 1
     }
-    if (prevLen == prev.length) UnsafeArrayData.fromPrimitiveArray(prev)
-    else UnsafeArrayData.fromPrimitiveArray(
-      java.util.Arrays.copyOf(prev, prevLen))
+    if (prevLen == prev.length) prev
+    else java.util.Arrays.copyOf(prev, prevLen)
   }
 
   /** `#WINDOW/n` unordered — if max-min <= n-1 emit MAX and advance ALL
@@ -58,19 +50,16 @@ object PositionKernels {
     * order (property-tested in PositionOpsSpec), so callers need not.
     * Every emission advances all pointers, so the result holds at most
     * min(list lengths) entries. */
-  def window(ps: ArrayData, distance: Int): ArrayData = {
-    val k = ps.numElements()
-    val lists = new Array[ArrayData](k)
+  def window(lists: Array[Array[Int]], distance: Int): Array[Int] = {
+    val k = lists.length
     val posPtr = new Array[Int](k)
     val termPos = new Array[Int](k)
     val termLength = new Array[Int](k)
     var i = 0
     var minTotal = Int.MaxValue
     while (i < k) {
-      val l = ps.getArray(i)
-      lists(i) = l
-      termLength(i) = l.numElements()
-      termPos(i) = l.getInt(0)
+      termLength(i) = lists(i).length
+      termPos(i) = lists(i)(0)
       if (termLength(i) < minTotal) minTotal = termLength(i)
       i += 1
     }
@@ -95,15 +84,14 @@ object PositionKernels {
         while (j < k && !broke) {
           posPtr(j) += 1
           if (posPtr(j) >= termLength(j)) { hasMorePos = false; broke = true }
-          else { termPos(j) = lists(j).getInt(posPtr(j)); j += 1 }
+          else { termPos(j) = lists(j)(posPtr(j)); j += 1 }
         }
       } else {
         posPtr(minIdx) += 1
         if (posPtr(minIdx) >= termLength(minIdx)) hasMorePos = false
-        else termPos(minIdx) = lists(minIdx).getInt(posPtr(minIdx))
+        else termPos(minIdx) = lists(minIdx)(posPtr(minIdx))
       }
     }
-    if (t == 0) Empty
-    else UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(temp, t))
+    java.util.Arrays.copyOf(temp, t)
   }
 }

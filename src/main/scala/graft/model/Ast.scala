@@ -7,19 +7,26 @@ package graft.model
   * (`QryEval/src/QryopSl.java:27-45`).
   */
 sealed trait Qry {
+  /** The operands; a term has none. */
+  def children: Seq[Qry] = this match {
+    case Term(_, _)     => Nil
+    case Score(c)       => Seq(c)
+    case Syn(as)        => as
+    case Near(_, as)    => as
+    case Window(_, as)  => as
+    case And(as)        => as
+    case Or(as)         => as
+    case Sum(as)        => as
+    case WAnd(_, as)    => as
+    case WSum(_, as)    => as
+  }
+
   /** True when the subtree has no term leaves (parser drops empty ops,
     * `QryEval/src/QryEval.java:452-453`). */
   def isEmpty: Boolean = this match {
-    case Term(_, _)     => false
-    case Syn(as)        => as.isEmpty
-    case Near(_, as)    => as.isEmpty
-    case Window(_, as)  => as.isEmpty
-    case Score(c)       => c.isEmpty
-    case And(as)        => as.isEmpty
-    case Or(as)         => as.isEmpty
-    case Sum(as)        => as.isEmpty
-    case WAnd(_, as)    => as.isEmpty
-    case WSum(_, as)    => as.isEmpty
+    case Term(_, _) => false
+    case Score(c)   => c.isEmpty
+    case _          => children.isEmpty
   }
 }
 

@@ -148,6 +148,13 @@ class IndriBlockMaxSpec extends AnyFunSpec {
   describe("trees with positional leaves vs exhaustive (bit-identical)") {
     it("80 random seeded BM25 and Indri trees over #NEAR/#WINDOW/#SYN leaves") {
       val v = vocab.take(12) // hot terms: positional leaves match often
+      val titles = {
+        import spark.implicits._
+        engine.index.termStats.filter($"field" === "title")
+          .orderBy($"df".desc, $"term").select($"term").as[String].take(8)
+      }
+      val bools = Seq(RankedBoolean -> "#AND", RankedBoolean -> "#OR",
+        UnrankedBoolean -> "#AND", UnrankedBoolean -> "#OR")
       val rnd = new scala.util.Random(11)
       def term: String = v(rnd.nextInt(v.length))
       def leaf(depth: Int): String = rnd.nextInt(if (depth > 1) 1 else 5) match {
@@ -160,14 +167,22 @@ class IndriBlockMaxSpec extends AnyFunSpec {
       val routed = (0 until 80).count { i =>
         val leaves = Seq.fill(1 + rnd.nextInt(3))(leaf(0))
         val k = Seq(1, 5, 20)(rnd.nextInt(3))
-        if (i % 2 == 0)
-          runBoth(s"#SUM(${leaves.mkString(" ")})", k, BM25(1.2f, 0.75f, 0f))
-        else {
-          // an Indri leaf that matches nowhere (zero ctf) is declined
-          val ws = leaves.map(_ => (1 + rnd.nextInt(9)) / 10.0)
-          runBoth("#WAND(" + ws.zip(leaves).map { case (w, l) => s"$w $l" }
-            .mkString(" ") + s" 0.2 #AND($term $term))", k, mustRoute = false)
-        }
+        val routedRow =
+          if (i % 2 == 0)
+            runBoth(s"#SUM(${leaves.mkString(" ")})", k, BM25(1.2f, 0.75f, 0f))
+          else {
+            // an Indri leaf that matches nowhere (zero ctf) is declined
+            val ws = leaves.map(_ => (1 + rnd.nextInt(9)) / 10.0)
+            runBoth("#WAND(" + ws.zip(leaves).map { case (w, l) => s"$w $l" }
+              .mkString(" ") + s" 0.2 #AND($term $term))", k, mustRoute = false)
+          }
+        // the same leaves under the unpruned mode's other shapes: a
+        // boolean #AND/#OR, and an Indri #AND over two fields
+        val (bm, op) = bools(i % bools.length)
+        runBoth(s"$op(${leaves.mkString(" ")})", k, bm, mustRoute = false)
+        runBoth(s"#AND(${leaves.mkString(" ")} ${titles(i % titles.length)}.title)",
+          k, mustRoute = false)
+        routedRow
       }
       assert(routed >= 60, s"only $routed of 80 trees took the pruned path")
     }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.exec.{PositionKernels, PositionOps}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.scalatest.funspec.AnyFunSpec
 
 import scala.util.Random
@@ -9,12 +8,9 @@ import scala.util.Random
 /** The block-max engine's positional [[PositionKernels]] must be
   * indistinguishable from the [[PositionOps]] transliterations of the
   * reference: kernel ≡ PositionOps on thousands of random position-list
-  * tuples (deterministic seeds), exercised directly on ArrayData — no
+  * tuples (deterministic seeds), exercised directly on int arrays — no
   * Spark. */
 class PositionExprSpec extends AnyFunSpec {
-
-  private def toArrayData(ps: Seq[Seq[Int]]): ArrayData =
-    new GenericArrayData(ps.map(l => new GenericArrayData(l.toArray)).toArray)
 
   /** Random ascending distinct position lists, like real postings. */
   private def randLists(rng: Random): Seq[Seq[Int]] = {
@@ -34,7 +30,7 @@ class PositionExprSpec extends AnyFunSpec {
         val ps = randLists(rng)
         val d = 1 + rng.nextInt(8)
         val expect = PositionOps.nearPositions(ps, d)
-        val got = PositionKernels.near(toArrayData(ps), d).toIntArray.toSeq
+        val got = PositionKernels.near(ps.map(_.toArray).toArray, d).toSeq
         assert(got == expect, s"near case $i: ps=$ps d=$d")
       }
     }
@@ -44,7 +40,7 @@ class PositionExprSpec extends AnyFunSpec {
         val ps = randLists(rng)
         val d = 1 + rng.nextInt(8)
         val expect = PositionOps.windowPositions(ps, d)
-        val got = PositionKernels.window(toArrayData(ps), d).toIntArray.toSeq
+        val got = PositionKernels.window(ps.map(_.toArray).toArray, d).toSeq
         assert(got == expect, s"window case $i: ps=$ps d=$d")
       }
     }

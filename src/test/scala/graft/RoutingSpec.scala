@@ -165,7 +165,14 @@ class RoutingSpec extends AnyFunSpec {
                        "#AND(open zzznotaterm)" -> indri))
       it(s"$q [$m]") { assert(exchanges(q, m) == 0) }
     it("but a multi-field Indri tree joins the doc lengths it lacks") {
+      val plan = engine.scores("#AND(open scala.title)", indri)
+        .queryExecution.executedPlan
       assert(exchanges("#AND(open scala.title)", indri) > 0)
+      // the segment tasks run once: one scan of the block table
+      val blockScans = Plans.collect(plan) {
+        case s if s.children.isEmpty && s.output.exists(_.name == "blockId") => s
+      }
+      assert(blockScans.length == 1, plan.toString)
     }
   }
 
