@@ -8,10 +8,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference `QryEval/src/QryExpansion.java:120-211`).
   *
   * Shape: the feedback set is ≤ fbDocs documents, so the expansion is a
-  * driver-side fold over three pushed-down reads — the feedback docs'
+  * driver-side fold over two pushed-down reads — the feedback docs'
   * forward vectors ([[Index.fwdVectors]], partition- and row-pruned),
-  * their body lengths, and the ctf of their (bounded) vocabulary
-  * ([[vocabScan]], an `isin` filter on termStats). Every vocabulary term
+  * which also give their body lengths, and the ctf of their (bounded)
+  * vocabulary ([[vocabScan]], an `isin` filter on termStats). Every vocabulary term
   * scores a present-or-default contribution for EVERY feedback doc,
   * accumulated in doc rank order — the reference's doc loop,
   * FP-exactly.
@@ -50,20 +50,21 @@ object Expansion {
   def learnedQuery(index: Index, topDocs: Seq[(Long, Double)],
                    fbMu: Double, fbTerms: Int): String = {
     val ids = topDocs.map(_._1).distinct
-    // (term → tf) per feedback doc — the reference's TermVector
-    // (`QryExpansion.java:131-151`)
-    val vectors: Map[Long, Map[String, Int]] = index.fwdVectors(ids)
+    val rows = index.fwdVectors(ids)
       .filter(col("field") === "body")
       .select(col("docid"), col("stems"), col("stemFreq").cast("array<int>"))
       .collect()
+    // (term → tf) per feedback doc — the reference's TermVector
+    // (`QryExpansion.java:131-151`)
+    val vectors: Map[Long, Map[String, Int]] = rows
       .map(r => r.getLong(0) ->
         r.getSeq[String](1).zip(r.getSeq[Int](2))
           .filterNot { case (t, _) => SkipRe.findFirstIn(t).isDefined }.toMap)
       .toMap
-    val lens: Map[Long, Long] = index.doclen
-      .filter(col("field") === "body" && col("docid").isin(ids: _*))
-      .select(col("docid"), col("len")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // body length: a vector's stemFreq, taken before the SkipRe filter,
+    // sums to the doc's surviving-token count — the `len` doclen stores
+    val lens: Map[Long, Long] = rows
+      .map(r => r.getLong(0) -> r.getSeq[Int](2).map(_.toLong).sum).toMap
     val vocab = vectors.valuesIterator.flatMap(_.keys).toSeq.distinct
     val ctfs: Array[(String, Long)] = vocabScan(index, vocab).collect()
       .map(r => (r.getString(0), r.getLong(1)))

@@ -90,7 +90,8 @@ object LeToR {
 
     // grid: candidate × field × query term, tf where present; len is NULL
     // when the doc has no vector in the field (→ NaN features, reference
-    // `termVec == null`)
+    // `termVec == null`). Over a snapshot the term/field filter reaches
+    // the block scan, below the decode (PostingBlocks.toPostings).
     val tfs = index.postings
       .filter($"term".isin(terms: _*) && $"field".isin(Fields: _*))
       .join(cand, "docid")

@@ -19,13 +19,14 @@ final case class IndexStats(numDocs: Long, fields: Map[String, FieldStats])
   * Lucene index + DocLengthStore (SURVEY §1).
   *
   *  - docs      (docid, extid, repo, path, commit, lang, sha256)
-  *  - postings  (term, field, docid, tf, positions: array<int>)
+  *  - postings  (term, field, docid, tf, positions: array<int>, len)
   *  - doclen    (docid, field, len)
   *  - termStats (term, field, df, ctf)
   *
-  * `postings` carries exact positions (like Lucene's positional postings);
-  * the compressed block form lives in `postings_blocks` when the index is
-  * persisted (see [[IndexStore]]).
+  * `postings` carries exact positions (like Lucene's positional postings).
+  * A persisted index stores them once, as the compressed `postings_blocks`,
+  * and a loaded one decodes `postings` from those blocks (see
+  * [[IndexStore]]).
   */
 final class Index(
     val spark: SparkSession,

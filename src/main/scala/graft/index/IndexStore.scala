@@ -14,29 +14,79 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *
   * ```
   * dir/
-  *   postings/segment=K/   docid-bucket-partitioned, term-sorted files
+  *   postings_blocks/segment=K/  the postings, stored once: delta-gap +
+  *                         varbyte blocks, one file per segment
   *   docs/  doclen/  termstats/
+  *   fwdindex/segment=K/   forward index (TermVector analog)
   *   manifest/             per-(table, segment) lineage + metrics rows
   *   stats.json            global statistics (exact aggregates)
   *   _done_<table>         per-table checkpoint markers (resume points)
-  *   SNAPSHOT.json         atomic commit record — written LAST; a load
-  *                         refuses a dir without it
+  *   SNAPSHOT.json         atomic commit record — written LAST, with each
+  *                         committed table's bytes; a load refuses a dir
+  *                         without it
   * ```
   *
+  * Every table is written with one codec, [[Codec]]. The row-form
+  * postings (term, field, docid, tf, positions, len) are a STAGING table
+  * (`postings/`): the derived tables stream off it, and it is deleted
+  * before the commit; a load decodes the logical `postings` table from
+  * the blocks.
+  *
   * Resume: `save` skips any table whose `_done_` marker exists, so a
-  * killed build re-runs only the unfinished tables/partitions; the
+  * killed build re-runs only the unfinished tables/partitions (writing
+  * the staging table again if one of them derives from it); the
   * snapshot is only committed when every table landed.
   */
 object IndexStore {
 
+  /** The committed tables, each recorded with its bytes in
+    * SNAPSHOT.json. */
   private val Tables =
-    Seq("docs", "postings", "postings_blocks", "doclen", "termstats",
-      "fwdindex")
+    Seq("docs", "postings_blocks", "doclen", "termstats", "fwdindex")
+
+  /** The sorted row-form postings every derived table streams off,
+    * deleted before the commit. */
+  private val Staging = "postings"
+
+  /** The tables read back from [[Staging]]. */
+  private val Derived =
+    Seq("doclen", "termstats", "postings_blocks", "fwdindex", "manifest")
+
+  /** The Parquet codec of every snapshot table. zstd, not Spark's
+    * default snappy: at 1,000 docs it halves the committed bytes (the
+    * block table by about a third), with serving and ingest CPU per
+    * operation unchanged within run-to-run noise. */
+  private val Codec = "zstd"
+
+  private def writer(df: DataFrame) =
+    df.write.mode(SaveMode.Overwrite).option("compression", Codec)
 
   def exists(dir: String): Boolean =
     Files.exists(Paths.get(dir, "SNAPSHOT.json"))
 
   private def marker(dir: String, t: String) = Paths.get(dir, s"_done_$t")
+
+  /** Postings partitioned by docid segment (the build salt), one file per
+    * segment, sorted by (term, field, docid) inside it: the layout
+    * [[PostingBlocks.fromSortedPostings]] and
+    * [[Index.fwdIndexFromSortedPostings]] stream off with no shuffle or
+    * sort.
+    *
+    * `repartition(buckets, segment)` bounds the dynamic-partition write
+    * to ~ONE file per segment — without it, every write task opens a
+    * parquet writer per segment dir (tasks × segments files), and the
+    * per-file open/commit overhead dominates the whole build (measured
+    * 22s for an otherwise-instant write). The sortWithinPartitions key
+    * leads with `segment` so the planned-write sorter sees its required
+    * partition-column ordering already satisfied and the (term, field,
+    * docid) file order survives. */
+  private[graft] def writeSortedPostings(index: Index, path: String): Unit =
+    writer(index.postings
+      .withColumn("segment",
+        shiftright(col("docid"), IndexBuilder.BucketShift))
+      .repartition(index.buckets, col("segment"))
+      .sortWithinPartitions("segment", "term", "field", "docid"))
+      .partitionBy("segment").parquet(path)
 
   def save(index: Index, dir: String): Unit = {
     Files.createDirectories(Paths.get(dir))
@@ -49,36 +99,15 @@ object IndexStore {
         Files.createFile(marker(dir, name))
       }
 
-    // Staged build: the corpus is tokenized EXACTLY ONCE (the postings
-    // write); every other table derives from the persisted columnar
-    // postings via read-back — at 100 TB the corpus pass is the cost
-    // that must not repeat, while postings re-reads are pruned columnar
-    // scans.
-    //
-    // postings partitioned by docid segment (the build salt): query-time
-    // term lookups prune via parquet row-group stats on the sorted term
-    // column inside every segment; segment dirs are the parallel unit.
-    //
-    // `repartition(buckets, segment)` bounds the dynamic-partition write
-    // to ~ONE file per segment — without it, every write task opens a
-    // parquet writer per segment dir (tasks × segments files), and the
-    // per-file open/commit overhead dominates the whole build (measured
-    // 22s for an otherwise-instant write). The sortWithinPartitions key
-    // leads with `segment` so the planned-write sorter sees its required
-    // partition-column ordering already satisfied and the (term, field,
-    // docid) file order survives — that order gives query scans term
-    // row-group pruning AND lets the block build stream off this layout
-    // with no shuffle or sort (PostingBlocks.fromSortedPostings).
-    writeTable("postings") {
-      index.postings
-        .withColumn("segment",
-          shiftright(col("docid"), IndexBuilder.BucketShift))
-        .repartition(index.buckets, col("segment"))
-        .sortWithinPartitions("segment", "term", "field", "docid")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("segment").parquet(s"$dir/postings")
-    }
-    def postingsOnDisk = spark.read.parquet(s"$dir/postings")
+    // Staged build: the corpus is tokenized EXACTLY ONCE (the staging
+    // write); every derived table reads the persisted columnar postings
+    // back — at 100 TB the corpus pass is the cost that must not repeat,
+    // while postings re-reads are columnar scans. A resume whose derived
+    // tables all landed needs no staging table.
+    val staging = s"$dir/$Staging"
+    if (Derived.exists(t => !Files.exists(marker(dir, t))))
+      writeTable(Staging)(writeSortedPostings(index, staging))
+    def postingsOnDisk = spark.read.parquet(staging)
     def doclenOnDisk = spark.read.parquet(s"$dir/doclen")
 
     // Every derived table depends ONLY on the persisted postings (doc
@@ -106,11 +135,10 @@ object IndexStore {
       catch { case e: Throwable => failed = true; throw e }
     }
     val doclenF = Future(grouped(writeTable("doclen") {
-      IndexBuilder.doclenOf(postingsOnDisk)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/doclen")
+      writer(IndexBuilder.doclenOf(postingsOnDisk)).parquet(s"$dir/doclen")
     }))
     val docsF = Future(grouped(writeTable("docs") {
-      index.docs.write.mode(SaveMode.Overwrite).parquet(s"$dir/docs")
+      writer(index.docs).parquet(s"$dir/docs")
     }))
     // Global stats from the PERSISTED tables, scheduled as soon as docs
     // + doclen land (they do not wait for blocks/fwdindex/manifest).
@@ -126,18 +154,18 @@ object IndexStore {
       doclenF,
       docsF,
       Future(grouped(writeTable("termstats") {
-        IndexBuilder.termStatsOf(postingsOnDisk)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/termstats")
+        writer(IndexBuilder.termStatsOf(postingsOnDisk))
+          .parquet(s"$dir/termstats")
       })),
       // the compressed serving form (north rule: delta-gap + varbyte
-      // blocks with block-max metadata), partitioned like the postings.
-      // Streamed straight off the persisted sorted layout — no shuffle,
-      // no sort, O(blockSize) memory per task; each scan partition holds
-      // whole segments, so the dynamic partitionBy still writes one file
-      // per segment dir.
+      // blocks with block-max metadata) — the one stored form of the
+      // postings, partitioned like the staging table. Streamed straight
+      // off the persisted sorted layout — no shuffle, no sort,
+      // O(blockSize) memory per task; each scan partition holds whole
+      // segments, so the dynamic partitionBy still writes one file per
+      // segment dir.
       Future(grouped(writeTable("postings_blocks") {
-        PostingBlocks.fromSortedPostings(spark, s"$dir/postings")
-          .write.mode(SaveMode.Overwrite)
+        writer(PostingBlocks.fromSortedPostings(spark, staging).toDF())
           .partitionBy("segment").parquet(s"$dir/postings_blocks")
       })),
       // forward index (TermVector analog), partitioned by docid segment:
@@ -149,23 +177,21 @@ object IndexStore {
       // Postings); whole segments per scan partition keep the dynamic
       // partitionBy at one file per segment dir.
       Future(grouped(writeTable("fwdindex") {
-        Index.fwdIndexFromSortedPostings(spark, s"$dir/postings")
-          .write.mode(SaveMode.Overwrite)
+        writer(Index.fwdIndexFromSortedPostings(spark, staging))
           .partitionBy("segment").parquet(s"$dir/fwdindex")
       })),
       // lineage + metrics manifest (north rule): per-segment row counts,
       // term counts, build wall-clock.
-      Future(grouped(if (!Files.exists(marker(dir, "manifest"))) {
+      Future(grouped(writeTable("manifest") {
         val buildMillis = System.currentTimeMillis() - t0
-        postingsOnDisk
+        writer(postingsOnDisk
           .groupBy("segment")
           .agg(count(lit(1)).as("postingCount"),
             approx_count_distinct(col("term")).as("termCountApprox"),
             max(col("docid")).as("maxDocid"))
           .withColumn("buildMillis", lit(buildMillis))
-          .withColumn("snapshotId", lit(t0))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/manifest")
-        Files.createFile(marker(dir, "manifest"))
+          .withColumn("snapshotId", lit(t0)))
+          .parquet(s"$dir/manifest")
       })))
     // On any table failure: cancel the sibling jobs (they share the job
     // group) and drain the remaining futures before rethrowing, so the
@@ -186,17 +212,34 @@ object IndexStore {
       }
       finally pool.shutdown()
 
+    // every derived table landed: the postings live on in the blocks only
+    graft.util.Scratch.deleteRecursively(staging)
+    Files.deleteIfExists(marker(dir, Staging))
+
     writeStats(stats, s"$dir/stats.json", index.buckets,
       index.indexedFields.toSeq.sorted, index.analyzerOpt)
 
     // atomic commit: tmp + move
-    val snap = s"""{"snapshotId":$t0,"formatVersion":1,""" +
+    val bytes = Tables.map(t => s""""$t":${tableBytes(s"$dir/$t")}""")
+    val snap = s"""{"snapshotId":$t0,"formatVersion":2,""" +
       s""""tables":[${Tables.map("\"" + _ + "\"").mkString(",")}],""" +
+      s""""tableBytes":{${bytes.mkString(",")}},""" +
       s""""numDocs":${stats.numDocs}}"""
     val tmp = Paths.get(dir, "SNAPSHOT.json.tmp")
     Files.writeString(tmp, snap)
     Files.move(tmp, Paths.get(dir, "SNAPSHOT.json"),
       StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Bytes of a table's files, Hadoop checksum files excluded. */
+  private def tableBytes(dir: String): Long = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !p.getFileName.toString.endsWith(".crc"))
+      .map(p => Files.size(p)).sum
+    finally s.close()
   }
 
   def load(spark: SparkSession, dir: String): Index = {
@@ -206,8 +249,9 @@ object IndexStore {
     val blocks = readBlocks(spark, s"$dir/postings_blocks")
     new Index(spark,
       spark.read.parquet(s"$dir/docs"),
-      spark.read.parquet(s"$dir/postings")
-        .select("term", "field", "docid", "tf", "positions", "len"),
+      // the postings are stored once, as blocks: the row form is decoded
+      // from them, after any term/field filter on it reaches the scan
+      PostingBlocks.toPostings(blocks),
       spark.read.parquet(s"$dir/doclen"),
       spark.read.parquet(s"$dir/termstats"),
       statsThunk = () => stats,

@@ -193,16 +193,23 @@ object PostingBlocks {
       }
     }
 
-  /** Decode back to the row form (term, field, docid, tf, positions) —
-    * inverse of [[fromPostings]] up to row order (property-tested). */
-  def toPostings(spark: SparkSession,
-                 blocks: Dataset[PostingBlock]): DataFrame = {
-    import spark.implicits._
+  /** Decode back to the row form (term, field, docid, tf, positions,
+    * len) — inverse of [[fromPostings]] up to row order (property-tested).
+    * The decode is a generator over the block rows, so a filter on `term`
+    * or `field` above it is pushed below it, into the block scan: a
+    * term-filtered read of a snapshot decodes only its terms' blocks. */
+  def toPostings(blocks: Dataset[PostingBlock]): DataFrame = {
+    val decode = udf((block: Array[Byte], firstDocid: Long,
+                      lens: Array[Byte]) => {
+      val ps = PostingCodec.decode(block, firstDocid)
+      val ls = PostingCodec.decodeLens(lens, ps.length)
+      ps.indices.map(i => (ps(i).docid, ps(i).tf, ps(i).positions, ls(i)))
+    })
     blocks
-      .flatMap { b =>
-        PostingCodec.decode(b.block, b.firstDocid).map(p =>
-          (b.term, b.field, p.docid, p.tf, p.positions))
-      }
-      .toDF("term", "field", "docid", "tf", "positions")
+      .select(col("term"), col("field"), explode(
+        decode(col("block"), col("firstDocid"), col("lens"))).as("p"))
+      .select(col("term"), col("field"), col("p._1").as("docid"),
+        col("p._2").as("tf"), col("p._3").as("positions"),
+        col("p._4").as("len"))
   }
 }

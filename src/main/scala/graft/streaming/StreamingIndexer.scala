@@ -9,8 +9,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Incremental (streaming) index ingestion: a corpus stream
   * `(repo, path, commit, lang, content)` lands as per-micro-batch index
-  * SEGMENTS, each a self-contained mini-index (postings + doclen +
-  * termstats + docs) with its own manifest row and commit marker —
+  * SEGMENTS, each a self-contained mini-index (postings + doclen + docs)
+  * with its own manifest row and commit marker —
   * Lucene's segment model re-expressed as Structured Streaming
   * `foreachBatch` over the same build pipeline the batch path uses
   * (reference analog: the Lucene index the reference opens is itself
@@ -53,17 +53,14 @@ object StreamingIndexer {
       df.withColumn("docid", col("docid") + shift)
 
     // Staged like IndexStore.save: the batch text is tokenized EXACTLY
-    // ONCE (the postings write); doclen/termstats/stats derive from the
-    // persisted columnar postings. Writing each table from the in-memory
-    // lineage instead would re-run the tokenize UDF per table (~4 passes
-    // per micro-batch).
+    // ONCE (the postings write); doclen/stats derive from the persisted
+    // columnar postings. Writing each table from the in-memory lineage
+    // instead would re-run the tokenize UDF per table. No termstats:
+    // loadMerged aggregates them over the merged postings.
     Files.createDirectories(Paths.get(segDir))
     rebase(idx.postings).write.mode("overwrite").parquet(s"$segDir/postings")
-    val postingsOnDisk = spark.read.parquet(s"$segDir/postings")
-    IndexBuilder.doclenOf(postingsOnDisk)
+    IndexBuilder.doclenOf(spark.read.parquet(s"$segDir/postings"))
       .write.mode("overwrite").parquet(s"$segDir/doclen")
-    IndexBuilder.termStatsOf(postingsOnDisk)
-      .write.mode("overwrite").parquet(s"$segDir/termstats")
     rebase(idx.docs).write.mode("overwrite").parquet(s"$segDir/docs")
     // stats from the PERSISTED tables, bound once — reading them through
     // idx.stats here would force the lazy statsOf over the in-memory

@@ -4,7 +4,7 @@ import graft.analysis.AnalyzerConfig
 import graft.api.SearchEngine
 import graft.corpus.CorpusGen
 import graft.exec.Expansion
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{Index, IndexBuilder, IndexConfig, IndexStore}
 import graft.model._
 import graft.oracle.RefEngine
 import org.scalatest.funspec.AnyFunSpec
@@ -26,6 +26,13 @@ class ExpansionSpec extends AnyFunSpec {
   }
 
   private lazy val oracle: RefEngine = RefEngine.of(corpus, Seq("body"), cfg)
+
+  /** `engine`'s index, saved and loaded back. */
+  private lazy val stored: Index = {
+    val dir = graft.util.Scratch.dir("exp-stored")
+    IndexStore.save(engine.index, dir)
+    IndexStore.load(spark, dir)
+  }
 
   private val model = Indri(2500f, 0.4f)
 
@@ -60,10 +67,27 @@ class ExpansionSpec extends AnyFunSpec {
     check("fbTerms > vocab", "zzznotaterm open", 3, 10000, 2500.0, 0.5)
   }
 
+  describe("PRF over a stored snapshot") {
+    it("learns the reference's query in 2 Spark jobs: the feedback " +
+       "vectors give their body lengths") {
+      val (query, fbDocs, fbTerms, fbMu) = ("open inverted index", 10, 10, 2500.0)
+      val topDocs = engine.search(query, model, fbDocs)
+        .select("docid", "score").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      Expansion.learnedQuery(stored, topDocs, fbMu, fbTerms) // warm stats
+      var learned = ""
+      val (jobs, _, _) = SparkJobs.measured(spark) {
+        learned = Expansion.learnedQuery(stored, topDocs, fbMu, fbTerms)
+      }
+      assert(jobs == 2, s"$jobs Spark jobs")
+      assert(learned ==
+        oracle.expandQuery(query, model, fbDocs, fbTerms, fbMu, 0.5)._1)
+    }
+  }
+
   describe("expansion vocabulary scan (round-4 VERDICT item 4)") {
     it("filters termStats with a pushable In/InSet — no corpus-wide " +
        "probe, and over a snapshot the predicate reaches the parquet scan") {
-      import graft.index.IndexStore
       import org.apache.spark.sql.catalyst.expressions.{In, InSet}
       val terms = Seq("open", "inverted", "index")
       // in-memory index: the optimized plan carries the In/InSet filter
@@ -78,10 +102,7 @@ class ExpansionSpec extends AnyFunSpec {
       }))
       assert(hasIn, plan.toString)
       // snapshot-backed index: the predicate is PUSHED to the scan
-      val dir = java.nio.file.Files.createTempDirectory("exp-vocab").toString
-      IndexStore.save(engine.index, dir)
-      val loaded = IndexStore.load(spark, dir)
-      val exec = Expansion.vocabScan(loaded, terms)
+      val exec = Expansion.vocabScan(stored, terms)
         .queryExecution.executedPlan.toString
       assert(exec.contains("PushedFilters") &&
              (exec.contains("In(term") || exec.contains("In(`term`")), exec)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funspec.AnyFunSpec
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import java.util.Comparator
 
 /** SURVEY §5.5 resume tests + §5.3 salt-invariance property: a killed
@@ -41,6 +42,11 @@ class IndexStoreSpec extends AnyFunSpec {
   describe("IndexStore snapshot + resume (north rule: per-partition checkpoints)") {
     lazy val idx = IndexBuilder.build(spark, CorpusGen.df(spark, 100),
       IndexConfig(buckets = 4))
+    lazy val saved: Path = {
+      val d = graft.util.Scratch.dir("graft-index-")
+      IndexStore.save(idx, d)
+      Paths.get(d)
+    }
 
     it("save → load round-trips every table and the stats") {
       val dir = freshDir().toString
@@ -53,7 +59,7 @@ class IndexStoreSpec extends AnyFunSpec {
       assert(collectSet(loaded.doclen) == collectSet(idx.doclen))
       assert(collectSet(loaded.termStats) == collectSet(idx.termStats))
       // compressed serving form round-trips to the same logical postings
-      val viaBlocks = PostingBlocks.toPostings(spark, loaded.blocks)
+      val viaBlocks = PostingBlocks.toPostings(loaded.blocks)
       assert(collectSet(viaBlocks.select("term", "field", "docid", "tf", "positions"))
         == collectSet(idx.postings.select("term", "field", "docid", "tf", "positions")))
       // persisted forward index equals the derived one
@@ -124,19 +130,25 @@ class IndexStoreSpec extends AnyFunSpec {
 
     it("a killed build resumes: finished tables are skipped, the index is identical") {
       val dir = freshDir()
-      IndexStore.save(idx, dir.toString)
-      // simulate a crash AFTER docs/postings landed but BEFORE doclen:
-      // wipe the snapshot, doclen's marker and data
-      Files.delete(dir.resolve("SNAPSHOT.json"))
+      // crash before the commit: every table lands, then stats.json
+      // cannot be written (a directory stands in its place)
+      Files.createDirectory(dir.resolve("stats.json"))
+      assertThrows[java.io.IOException](IndexStore.save(idx, dir.toString))
+      assert(!IndexStore.exists(dir.toString))
+      Files.delete(dir.resolve("stats.json"))
+      // ...and doclen is lost too: wipe its marker and data, so the
+      // resume must stage the row-form postings again to rebuild it
       Files.delete(dir.resolve("_done_doclen"))
       rmTree(dir.resolve("doclen"))
-      assert(!IndexStore.exists(dir.toString))
 
-      val mtimeBefore = Files.getLastModifiedTime(dir.resolve("postings"))
+      val committed = Seq("docs", "postings_blocks", "termstats", "fwdindex")
+      def mtimes = committed.map(t => t -> Files.getLastModifiedTime(dir.resolve(t)))
+      val mtimeBefore = mtimes
       IndexStore.save(idx, dir.toString) // resume
       assert(IndexStore.exists(dir.toString))
       // finished tables untouched (checkpoint skip), missing one rebuilt
-      assert(Files.getLastModifiedTime(dir.resolve("postings")) == mtimeBefore)
+      assert(mtimes == mtimeBefore)
+      assert(!Files.exists(dir.resolve("postings")))
       val loaded = IndexStore.load(spark, dir.toString)
       assert(collectSet(loaded.doclen) == collectSet(idx.doclen))
       assert(loaded.stats == idx.stats)
@@ -149,6 +161,54 @@ class IndexStoreSpec extends AnyFunSpec {
         IndexStore.load(spark, dir.toString)
       }
       rmTree(dir)
+    }
+
+    it("a committed snapshot stores its postings once, as zstd blocks, " +
+       "and a term-filtered postings read filters the block scan") {
+      import spark.implicits._
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      val dir = saved
+      assert(!Files.exists(dir.resolve("postings")) &&
+        !Files.exists(dir.resolve("_done_postings")))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val dataFiles = Files.walk(dir).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      assert(dataFiles.size >= 6, dataFiles)
+      dataFiles.foreach { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), conf))
+        val codecs = try r.getFooter.getBlocks.asScala
+          .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+        finally r.close()
+        assert(codecs == Set("ZSTD"), s"$f: $codecs")
+      }
+      val loaded = IndexStore.load(spark, dir.toString)
+      def filtered(i: Index) = i.postings
+        .filter($"term".isin("open", "index") && $"field".isin("body", "title"))
+      val scan = filtered(loaded).queryExecution.executedPlan.toString
+        .split("\n").filter(_.contains("FileScan")).toSeq
+      assert(scan.size == 1 && scan.head.contains("postings_blocks") &&
+        scan.head.contains("PushedFilters: [") &&
+        scan.head.contains("In(term") && scan.head.contains("In(field"), scan)
+      assert(collectSet(filtered(loaded)) == collectSet(filtered(idx)))
+    }
+
+    it("SNAPSHOT.json records each committed table's bytes") {
+      val snap = Files.readString(saved.resolve("SNAPSHOT.json"))
+      val recorded = """"(\w+)":(\d+)""".r
+        .findAllMatchIn(""""tableBytes":\{([^}]*)\}""".r
+          .findFirstMatchIn(snap).get.group(1))
+        .map(m => m.group(1) -> m.group(2).toLong).toMap
+      def bytes(p: Path): Long = Files.walk(p).iterator().asScala
+        .filter(f => Files.isRegularFile(f) &&
+          !f.getFileName.toString.endsWith(".crc"))
+        .map(f => Files.size(f)).sum
+      assert(recorded.keySet ==
+        Set("docs", "postings_blocks", "doclen", "termstats", "fwdindex"))
+      recorded.foreach { case (t, b) => assert(b == bytes(saved.resolve(t)), t) }
+      assert(recorded.values.sum ==
+        recorded.keys.toSeq.map(t => bytes(saved.resolve(t))).sum)
     }
 
     it("manifest records per-segment lineage + metrics") {

@@ -4,7 +4,7 @@ import graft.analysis.AnalyzerConfig
 import graft.api.SearchEngine
 import graft.corpus.CorpusGen
 import graft.exec.LeToR
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{Index, IndexBuilder, IndexConfig, IndexStore}
 import graft.model.{BM25, Indri}
 import org.apache.spark.sql.functions._
 import org.scalatest.funspec.AnyFunSpec
@@ -75,6 +75,20 @@ class LeToRSpec extends AnyFunSpec {
         }
       val norm = LeToR.normalize(feats)
       norm.select("f14").as[Double].collect().foreach(v => assert(v == 0.0))
+    }
+  }
+
+  describe("over a stored snapshot") {
+    it("raw features equal the in-memory index's: the grid reads the " +
+       "postings decoded from the blocks") {
+      val dir = graft.util.Scratch.dir("letor-stored")
+      IndexStore.save(engine.index, dir)
+      val stored = IndexStore.load(spark, dir)
+      val q = "open inverted index"
+      val cands = engine.search(q, bm25, 30).select(col("docid"))
+      def raw(i: Index) = LeToR.rawFeatures(i, q, cfg, cands, bm25, indri)
+        .collect().map(_.toString).toSet
+      assert(raw(stored) == raw(engine.index))
     }
   }
 

@@ -74,12 +74,12 @@ class PostingCodecSpec extends AnyFunSpec {
       val blocks = PostingBlocks
         .fromPostings(spark, idx.postings, idx.doclen, blockSize = 7).cache()
 
-      // round-trip
+      // round-trip, doc lengths included
       val orig = idx.postings
-        .select($"term", $"field", $"docid", $"tf", $"positions")
-        .as[(String, String, Long, Int, Seq[Int])].collect().toSet
-      val rt = PostingBlocks.toPostings(spark, blocks)
-        .as[(String, String, Long, Int, Seq[Int])].collect().toSet
+        .select($"term", $"field", $"docid", $"tf", $"positions", $"len")
+        .as[(String, String, Long, Int, Seq[Int], Long)].collect().toSet
+      val rt = PostingBlocks.toPostings(blocks)
+        .as[(String, String, Long, Int, Seq[Int], Long)].collect().toSet
       assert(rt == orig)
 
       // per-block invariants
@@ -119,9 +119,10 @@ class PostingCodecSpec extends AnyFunSpec {
       import spark.implicits._
       val idx = IndexBuilder.build(spark, CorpusGen.df(spark, 150),
         IndexConfig(buckets = 4))
+      // the sorted layout of the snapshot save's staging step
       val dir = java.nio.file.Files
         .createTempDirectory("codec-sorted-").toString
-      graft.index.IndexStore.save(idx, dir)
+      graft.index.IndexStore.writeSortedPostings(idx, s"$dir/postings")
 
       def key(b: graft.index.PostingBlock) =
         (b.term, b.field, b.segment, b.blockId, b.firstDocid, b.lastDocid,
