@@ -51,11 +51,11 @@ final class SearchEngine(val index: Index,
     new Planner(index, model).plan(parse(queryText, model))
 
   /** O18 internal↔external id lookup (`QryEval/src/QryEval.java:295-323`):
-    * pushed-down point filters against the docs table (the reference's
-    * stored-field read / externalId TermQuery). */
-  def externalId(docid: Long): Option[String] =
-    index.docs.filter(col("docid") === docid).select("extid")
-      .collect().headOption.map(_.getString(0))
+    * internal → external reads the driver's extid map (the reference's
+    * stored-field read); external → internal, off the query path, is a
+    * pushed-down point filter against the docs table (its externalId
+    * TermQuery). */
+  def externalId(docid: Long): Option[String] = index.extids.get(docid)
 
   def internalId(extid: String): Option[Long] =
     index.docs.filter(col("extid") === extid).select("docid")
@@ -149,11 +149,8 @@ final class SearchEngine(val index: Index,
   }
 
   /** Ranked top-k: descending score, ascending extid tiebreak
-    * (`ScoreList.java:54-80`) — the tiebreak is part of the distributed
-    * sort key, so `orderBy(...).limit(k)` lowers to Catalyst's
-    * TakeOrderedAndProject (the reference's bounded heap,
-    * `QryEval.java:640-660`, distributed). The candidates come from the
-    * route [[routed]] picks from the query's shape. */
+    * (`ScoreList.java:54-80`), by [[rank]]'s two phases. The candidates
+    * come from the route [[routed]] picks from the query's shape. */
   def search(queryText: String, model: RetrievalModel,
              k: Int = 100): DataFrame =
     rank(routed(queryText, model, k)._2, k, tieProne(model))
@@ -197,13 +194,15 @@ final class SearchEngine(val index: Index,
     *     score is inside the fetch, so the candidate set is closed with
     *     one distributed pass (extid only breaks EQUAL-score ties, and
     *     all equal-score candidates are in hand).
-    *  2. extids for the ≤2k survivors: a pushed-down `isin` point lookup
-    *     against docs — never a corpus shuffle.
+    *  2. extids for the ≤2k survivors from the driver's extid map
+    *     ([[graft.index.Index.extids]]) — no Spark job.
     *  3. Only when the boundary tie group overflows the fetch (a
     *     constant-score query — the reference would compare extids of
-    *     every tied doc too, `ScoreList.java:46-78`): one distributed
-    *     `TakeOrderedAndProject` by extid over JUST the tied docs,
-    *     the single case that must touch doc rows beyond 2k.
+    *     every tied doc too, `ScoreList.java:46-78`): one pass over JUST
+    *     the tied docs, keeping in each partition each segment's `need`
+    *     smallest docids — docid order within a segment is extid order,
+    *     so the answer is among them — and the driver takes the `need`
+    *     smallest extids of what it collects.
     *
     * The final (score desc, extid asc) order + rank numbering happen on
     * ≤2k driver rows; result is a LocalRelation.
@@ -215,9 +214,9 @@ final class SearchEngine(val index: Index,
     * boundary are the COMMON case ([[tieProne]]); float-scored models
     * skip the cache write.
     *
-    * EAGER: calling rank() runs the phase-1 job (and up to two small
-    * point-lookup jobs) immediately and returns a local frame — it is the
-    * terminal action of a query, not a lazy transformation. */
+    * EAGER: calling rank() runs the phase-1 job (and the overflow pass,
+    * when one is needed) immediately and returns a local frame — it is
+    * the terminal action of a query, not a lazy transformation. */
   def rank(scoreDf: DataFrame, k: Int, cacheScores: Boolean = false): DataFrame = {
     val spark = index.spark
     import spark.implicits._
@@ -282,12 +281,12 @@ final class SearchEngine(val index: Index,
     cls
   }
 
-  /** Phases 2–3 of classified frames: ONE extid job for every frame's
-    * survivors, then each overflow's boundary pass (dropping its cached
-    * frame) and the final order. */
+  /** Phases 2–3 of classified frames: each frame's survivors' extids,
+    * then its overflow's boundary pass (dropping its cached frame) and the
+    * final order. */
   private def ranked(frames: Seq[(DataFrame, HeadClass)], k: Int,
                      cached: Boolean): Seq[Seq[(Long, String, Int, Double)]] = {
-    val ext = extidsOf(frames.flatMap(_._2.survivors.map(_._1)).distinct)
+    val ext = index.extids
     frames.map { case (narrow, cls) =>
       val withExt =
         cls.survivors.map { case (d, s) => (d, s, ext(d)) }.toSeq ++
@@ -299,19 +298,19 @@ final class SearchEngine(val index: Index,
     }
   }
 
-  private def extidsOf(ids: Seq[Long]): Map[Long, String] =
-    if (ids.isEmpty) Map.empty
-    else index.docs.filter(col("docid").isin(ids: _*))
-      .select(col("docid"), col("extid"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-
+  /** The `need` docs scoring exactly `sk` with the smallest extids. A
+    * frame's partitions may split segments, so each keeps its own `need`
+    * smallest docids per segment: a superset of each segment's. */
   private def boundaryPass(narrow: DataFrame, sk: Double,
-                           need: Int): Seq[(Long, Double, String)] =
-    narrow.filter(col("score") === sk)
-      .join(index.docs.select(col("docid"), col("extid")), "docid")
-      .orderBy(asc("extid")).limit(need)
-      .select(col("docid"), col("extid"))
-      .collect().map(r => (r.getLong(0), sk, r.getString(1))).toSeq
+                           need: Int): Seq[(Long, Double, String)] = {
+    import index.spark.implicits._
+    val ext = index.extids
+    narrow.filter(col("score") === sk).select(col("docid")).as[Long]
+      .mapPartitions(SearchEngine.smallestPerSegment(_, need))
+      .collect()
+      .map(d => (d, sk, ext(d)))
+      .sortBy(_._3).take(need).toSeq
+  }
 
   private def finalizeRank(withExt: Seq[(Long, Double, String)],
                            k: Int): Seq[(Long, String, Int, Double)] =
@@ -320,12 +319,10 @@ final class SearchEngine(val index: Index,
       .take(k).zipWithIndex
       .map { case ((d, s, e), i) => (d, e, i + 1, s) }
 
-  /** Batched E1 evaluation (round-4 VERDICT item 6): the serial per-query
-    * loop pays two-to-three DRIVER round-trips per query; here every
-    * query's phase-1 top-k job is submitted concurrently (the scheduler
-    * interleaves their tasks instead of idling between small jobs) and
-    * the surviving docids of ALL queries resolve extids in ONE docs
-    * point-lookup job. The rare boundary-overflow passes stay per-query.
+  /** Batched E1 evaluation (round-4 VERDICT item 6): every query's
+    * phase-1 top-k job is submitted concurrently (the scheduler
+    * interleaves their tasks instead of idling between small jobs). The
+    * rare boundary-overflow passes stay per-query.
     * Per-query results are identical to [[search]] by construction (same
     * route and classify/boundary/finalize helpers). */
   def searchBatch(queries: Seq[(Int, String)], model: RetrievalModel,
@@ -333,8 +330,8 @@ final class SearchEngine(val index: Index,
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val cache = tieProne(model)
-    // route and plan serially (each plan collects its leaf statistics);
-    // only the phase-1 scoring jobs run concurrently
+    // route and plan serially (a plan with positional leaves collects
+    // their statistics); only the phase-1 scoring jobs run concurrently
     val planned: Seq[(Int, DataFrame)] = queries.map { case (qid, q) =>
       qid -> narrowScores(routed(q, model, k)._2, cache)
     }
@@ -357,6 +354,21 @@ final class SearchEngine(val index: Index,
         finally pool.shutdown()
       planned.map(_._1).zip(ranked(frames, k, cache))
     } finally if (cache) planned.foreach(_._2.unpersist(false)) // safety net
+  }
+}
+
+private object SearchEngine {
+  /** Each segment's (`docid >> BucketShift`) `need` smallest docids. */
+  def smallestPerSegment(docids: Iterator[Long], need: Int): Iterator[Long] = {
+    val heaps = scala.collection.mutable.HashMap
+      .empty[Long, scala.collection.mutable.PriorityQueue[Long]]
+    docids.foreach { d =>
+      val h = heaps.getOrElseUpdate(d >> graft.index.IndexBuilder.BucketShift,
+        scala.collection.mutable.PriorityQueue.empty[Long]) // largest first
+      if (h.size < need) h += d
+      else if (d < h.head) { h.dequeue(); h += d }
+    }
+    heaps.valuesIterator.flatMap(_.iterator)
   }
 }
 

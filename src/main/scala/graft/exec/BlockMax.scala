@@ -51,7 +51,10 @@ import scala.collection.mutable
   * document's length in a field where no leaf matched it comes from
   * `doclen`). The pruned mode emits each segment's top-k, valid for the
   * global extid tiebreak because docid order within a segment IS extid
-  * order.
+  * order. What a query looks up by key stays on the driver: term leaves'
+  * df/ctf in [[graft.index.Index.lexicon]], the ranking's extids in
+  * [[graft.index.Index.extids]]. So a query of term leaves runs one Spark
+  * job, the scoring; positional leaves add one, their statistics.
   */
 object BlockMax {
 
@@ -610,10 +613,11 @@ object BlockMax {
 
   // ------------------------------------------------------------ driver
 
-  /** (df, ctf) of every distinct (term, field) leaf, collected in one job
-    * — the few query terms against the termStats table (broadcast-semi-
-    * join analog of `InvList`'s df/ctf fetch, `InvList.java:68-106`).
-    * Every query runs it first, so each validates its fields alike. */
+  /** (df, ctf) of every distinct (term, field) leaf, (0, 0) for a term
+    * its field never holds, read from the driver's [[Index.lexicon]] (the
+    * reference's `InvList` df/ctf fetch, `InvList.java:68-106`) — no
+    * Spark job. Every query runs it first, so each validates its fields
+    * alike. */
   private def leafStats(index: Index, leaves0: Seq[(String, String)])
       : Map[(String, String), (Long, Long)] = {
     val ls = leaves0.distinct
@@ -631,15 +635,9 @@ object BlockMax {
           " legacy default-field fallback (snapshot lists no" +
           " indexedFields); it holds no documents and matches nothing")
     }
-    if (ls.isEmpty) return Map.empty
-    import index.spark.implicits._
-    val conds = ls.map { case (t, f) => $"term" === t && $"field" === f }
-      .reduce(_ || _)
-    index.termStats.filter(conds)
-      .select($"term", $"field", $"df", $"ctf")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
+    ls.map { case (t, f) =>
+      (t, f) -> index.lexicon.get(t, f).getOrElse((0L, 0L))
+    }.toMap
   }
 
   /** The blocks of the given leaves' terms in their fields. */
@@ -667,7 +665,7 @@ object BlockMax {
       val fs = fields.map(index.fieldStats)
       lazy val posStats = positionalStats()
       def st(id: Int): (Long, Long) = leaves(id) match {
-        case Term(t, f) => termStats.getOrElse((t, f), (0L, 0L))
+        case Term(t, f) => termStats((t, f))
         case _          => posStats.getOrElse(id, (0L, 0L))
       }
       val stat = Array.tabulate(leaves.length)(id => model match {

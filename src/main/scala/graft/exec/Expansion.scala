@@ -8,10 +8,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference `QryEval/src/QryExpansion.java:120-211`).
   *
   * Shape: the feedback set is ≤ fbDocs documents, so the expansion is a
-  * driver-side fold over two pushed-down reads — the feedback docs'
+  * driver-side fold over one pushed-down read — the feedback docs'
   * forward vectors ([[Index.fwdVectors]], partition- and row-pruned),
-  * which also give their body lengths, and the ctf of their (bounded)
-  * vocabulary ([[vocabScan]], an `isin` filter on termStats). Every vocabulary term
+  * which also give their body lengths — and the ctf of their (bounded)
+  * vocabulary from the driver's [[Index.lexicon]]. Every vocabulary term
   * scores a present-or-default contribution for EVERY feedback doc,
   * accumulated in doc rank order — the reference's doc loop,
   * FP-exactly.
@@ -35,16 +35,6 @@ object Expansion {
     * kept for fidelity). */
   private val SkipRe = "(?i).+(\\.|,).*".r
 
-  /** (term, ctf) for a bounded feedback vocabulary: a FILTER (pushable
-    * In/InSet predicate), never a join against the corpus-wide termStats
-    * table — over a snapshot this reaches the parquet scan and prunes row
-    * groups (plan-asserted in ExpansionSpec). */
-  private[graft] def vocabScan(index: Index,
-                               terms: Seq[String]): org.apache.spark.sql.DataFrame =
-    index.termStats
-      .filter(col("field") === "body" && col("term").isin(terms: _*))
-      .select(col("term"), col("ctf"))
-
   /** The learned `#WAND(w1 t1 w2 t2 )` query for rank-ordered
     * (docid, score) feedback docs. */
   def learnedQuery(index: Index, topDocs: Seq[(Long, Double)],
@@ -66,8 +56,8 @@ object Expansion {
     val lens: Map[Long, Long] = rows
       .map(r => r.getLong(0) -> r.getSeq[Int](2).map(_.toLong).sum).toMap
     val vocab = vectors.valuesIterator.flatMap(_.keys).toSeq.distinct
-    val ctfs: Array[(String, Long)] = vocabScan(index, vocab).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
+    val ctfs: Seq[(String, Long)] =
+      vocab.flatMap(t => index.lexicon.get(t, "body").map(s => (t, s._2)))
 
     val cl = index.fieldStats("body").collectionLength
     val docs = topDocs.map { case (d, s) =>

@@ -81,13 +81,6 @@ object LeToR {
       .collect().map(_.getLong(0)).sorted.toSeq
     val cand = broadcast(candIds.toDF("docid"))
 
-    // per-field per-term global stats (df, ctf) — broadcast-small
-    val stats = index.termStats
-      .filter($"term".isin(terms: _*) && $"field".isin(Fields: _*))
-      .select($"term", $"field", $"df", $"ctf")
-      .collect().map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3))).toMap
-
     // grid: candidate × field × query term, tf where present; len is NULL
     // when the doc has no vector in the field (→ NaN features, reference
     // `termVec == null`). Over a snapshot the term/field filter reaches
@@ -106,7 +99,7 @@ object LeToR {
     // per-(docid, field) term-expression triple
     def perTermCols(field: String): (Column, Column, Column) = {
       val cases = terms.map { t =>
-        val (df, ctf) = stats.getOrElse((t, field), (0L, 0L))
+        val (df, ctf) = index.lexicon.get(t, field).getOrElse((0L, 0L))
         val qtf = tt(t)
         // BM25 term (`FeatureVector.java:446-476` BM25Evaluation): only
         // present stems contribute; rsj has no max(0,·) floor

@@ -15,6 +15,72 @@ final case class FieldStats(field: String, docCount: Long,
   * the reference's `READER.numDocs()` (`QryopSlScore.java:141`). */
 final case class IndexStats(numDocs: Long, fields: Map[String, FieldStats])
 
+/** The term dictionary, on the driver: (term, field) → (df, ctf), the
+  * statistics the reference reads per query term from its own index
+  * (`InvList.java:68-106`). Per field, the terms sorted with parallel
+  * df/ctf arrays, found by binary search. */
+final class Lexicon private (fields: Map[String, Lexicon.Terms]) {
+  /** (df, ctf) of `term` in `field`; None when the field never holds it. */
+  def get(term: String, field: String): Option[(Long, Long)] =
+    fields.get(field).flatMap { f =>
+      val i = java.util.Arrays.binarySearch(
+        f.terms.asInstanceOf[Array[AnyRef]], term)
+      if (i >= 0) Some((f.df(i), f.ctf(i))) else None
+    }
+}
+
+object Lexicon {
+  private final case class Terms(terms: Array[String], df: Array[Long],
+                                 ctf: Array[Long])
+
+  /** Collects a `(term, field, df, ctf)` table in one job. */
+  def apply(termStats: DataFrame): Lexicon = {
+    import termStats.sparkSession.implicits._
+    val rows = termStats.select("term", "field", "df", "ctf")
+      .as[(String, String, Long, Long)].collect()
+    new Lexicon(rows.groupBy(_._2).map { case (f, rs) =>
+      val s = rs.sortBy(_._1)
+      f -> Terms(s.map(_._1), s.map(_._3), s.map(_._4))
+    })
+  }
+}
+
+/** docid → extid, on the driver: the reference's external-id read
+  * (`QryEval.java:295-323`). Sorted docids, found by binary search, and
+  * their extids' UTF-8 bytes back to back in one array (`ends(i)` ends the
+  * i-th): 37.8 MB for 400k synthetic documents, against 51.5 MB with a
+  * String per document. */
+final class ExtidMap private (docids: Array[Long], utf8: Array[Byte],
+                              ends: Array[Int]) {
+  def get(docid: Long): Option[String] = {
+    val i = java.util.Arrays.binarySearch(docids, docid)
+    if (i < 0) None
+    else {
+      val from = if (i == 0) 0 else ends(i - 1)
+      Some(new String(utf8, from, ends(i) - from,
+        java.nio.charset.StandardCharsets.UTF_8))
+    }
+  }
+
+  def apply(docid: Long): String =
+    get(docid).getOrElse(throw new NoSuchElementException(s"docid $docid"))
+}
+
+object ExtidMap {
+  /** Collects a `(docid, extid, …)` table in one job. */
+  def apply(docs: DataFrame): ExtidMap = {
+    import docs.sparkSession.implicits._
+    val rows = docs.select("docid", "extid").as[(Long, String)].collect()
+      .sortBy(_._1)
+    val utf8 = new java.io.ByteArrayOutputStream()
+    val ends = rows.map { case (_, e) =>
+      utf8.write(e.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      utf8.size()
+    }
+    new ExtidMap(rows.map(_._1), utf8.toByteArray, ends)
+  }
+}
+
 /** A built inverted index: the Spark-shaped equivalent of the reference's
   * Lucene index + DocLengthStore (SURVEY §1).
   *
@@ -82,6 +148,12 @@ final class Index(
   lazy val legacyAssumedFields: Set[String] =
     if (indexedFieldsOpt.isDefined) Set.empty
     else Index.DefaultFields -- stats.fields.keySet
+
+  /** The term dictionary and the extid map: built once, from `termStats`
+    * and `docs`, on first use, then read by every query instead of a
+    * Spark job per lookup. Driver-only: no task closure ships them. */
+  @transient lazy val lexicon: Lexicon = Lexicon(termStats)
+  @transient lazy val extids: ExtidMap = ExtidMap(docs)
 
   def fieldStats(field: String): FieldStats =
     stats.fields.getOrElse(field, FieldStats(field, 0L, 0L))

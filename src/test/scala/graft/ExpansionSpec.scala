@@ -7,6 +7,7 @@ import graft.exec.Expansion
 import graft.index.{Index, IndexBuilder, IndexConfig, IndexStore}
 import graft.model._
 import graft.oracle.RefEngine
+import graft.streaming.StreamingIndexer
 import org.scalatest.funspec.AnyFunSpec
 
 /** O16 PRF expansion (SURVEY §2.6): the learned `#WAND` query — weights
@@ -68,44 +69,46 @@ class ExpansionSpec extends AnyFunSpec {
   }
 
   describe("PRF over a stored snapshot") {
-    it("learns the reference's query in 2 Spark jobs: the feedback " +
-       "vectors give their body lengths") {
+    it("learns the reference's query in 1 Spark job: the feedback " +
+       "vectors give their body lengths, the lexicon their ctfs") {
       val (query, fbDocs, fbTerms, fbMu) = ("open inverted index", 10, 10, 2500.0)
       val topDocs = engine.search(query, model, fbDocs)
         .select("docid", "score").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      Expansion.learnedQuery(stored, topDocs, fbMu, fbTerms) // warm stats
+      Expansion.learnedQuery(stored, topDocs, fbMu, fbTerms) // warm lexicon
       var learned = ""
       val (jobs, _, _) = SparkJobs.measured(spark) {
         learned = Expansion.learnedQuery(stored, topDocs, fbMu, fbTerms)
       }
-      assert(jobs == 2, s"$jobs Spark jobs")
+      assert(jobs == 1, s"$jobs Spark jobs")
       assert(learned ==
         oracle.expandQuery(query, model, fbDocs, fbTerms, fbMu, 0.5)._1)
     }
   }
 
-  describe("expansion vocabulary scan (round-4 VERDICT item 4)") {
-    it("filters termStats with a pushable In/InSet — no corpus-wide " +
-       "probe, and over a snapshot the predicate reaches the parquet scan") {
-      import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-      val terms = Seq("open", "inverted", "index")
-      // in-memory index: the optimized plan carries the In/InSet filter
-      val plan = Expansion.vocabScan(engine.index, terms)
-        .queryExecution.optimizedPlan
-      val hasIn = plan.expressions.exists(_.exists {
-        case _: In | _: InSet => true
-        case _                => false
-      }) || plan.children.exists(_.expressions.exists(_.exists {
-        case _: In | _: InSet => true
-        case _                => false
-      }))
-      assert(hasIn, plan.toString)
-      // snapshot-backed index: the predicate is PUSHED to the scan
-      val exec = Expansion.vocabScan(stored, terms)
-        .queryExecution.executedPlan.toString
-      assert(exec.contains("PushedFilters") &&
-             (exec.contains("In(term") || exec.contains("In(`term`")), exec)
+  describe("the driver's lexicon (the expansion's and every query's " +
+           "df/ctf source)") {
+    it("holds every termStats row, and nothing for an unknown term or " +
+       "field, on an in-memory, a stored and a streaming-merged index") {
+      import spark.implicits._
+      val dir = graft.util.Scratch.dir("exp-stream")
+      val (b1, b2) = corpus.splitAt(corpus.length / 2)
+      val streamCfg = IndexConfig(analyzer = cfg, buckets = 8)
+      StreamingIndexer.processBatch(dir, streamCfg)(b1.toDF(), 0L)
+      StreamingIndexer.processBatch(dir, streamCfg)(b2.toDF(), 1L)
+      val merged = StreamingIndexer.loadMerged(spark, dir)
+      for ((name, idx) <- Seq("in-memory" -> engine.index,
+                              "stored" -> stored, "streaming" -> merged)) {
+        val rows = idx.termStats.select("term", "field", "df", "ctf")
+          .as[(String, String, Long, Long)].collect()
+        assert(rows.length > 100, s"[$name] fixture vocabulary")
+        rows.foreach { case (t, f, df, ctf) =>
+          assert(idx.lexicon.get(t, f).contains((df, ctf)), s"[$name] $t.$f")
+        }
+        val (t, _, _, _) = rows.head
+        assert(idx.lexicon.get("zzznotaterm", "body").isEmpty, name)
+        assert(idx.lexicon.get(t, "nosuchfield").isEmpty, name)
+      }
     }
   }
 }

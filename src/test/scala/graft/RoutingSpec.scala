@@ -127,14 +127,14 @@ class RoutingSpec extends AnyFunSpec {
     it("a zero-ctf term") {
       val q = "#AND(zzznotaterm open)"
       check(q, indri)(exhaustive("zero-ctf"))
-      compiledOnce(engine, q, indri, statsJobs = 1)
+      compiledOnce(engine, q, indri, statsJobs = 0)
     }
     it("an SDM whose #NEAR/1 leaf matches nowhere, over a stored snapshot") {
       // "inverted" occurs only in the phrase "open inverted index"
       val q = "#WAND(0.7 #AND(open inverted) 0.2 #NEAR/1(inverted open) " +
         "0.1 #WINDOW/8(open inverted))"
       check(q, indri, eng = stored)(exhaustive("zero-ctf"))
-      compiledOnce(stored, q, indri, statsJobs = 2)
+      compiledOnce(stored, q, indri, statsJobs = 1)
     }
     it("#OR is rejected under Indri on every route alike") {
       val q = "#OR(open inverted)"
@@ -185,13 +185,13 @@ class RoutingSpec extends AnyFunSpec {
   }
 
   /** A declined query compiles once: its `statsJobs` statistics jobs
-    * (leaf stats, and positional stats with positional leaves) run once
-    * each, then the ranking's two (the 2k head, then the extids of the
-    * docs above a tied boundary or its overflow pass). */
+    * (positional stats, with positional leaves) run once each, then the
+    * ranking's 2k head. These queries tie nothing at the k-th score, so
+    * no overflow pass runs. */
   private def compiledOnce(eng: SearchEngine, q: String, m: RetrievalModel,
                            statsJobs: Int): Unit = {
     val (jobs, _, _) = jobsOf(eng, q, m)
-    assert(jobs <= statsJobs + 2, s"[$q] $jobs jobs")
+    assert(jobs <= statsJobs + 1, s"[$q] $jobs jobs")
   }
 
   it("an in-memory index derives its block table once: a second routed " +
@@ -224,21 +224,21 @@ class RoutingSpec extends AnyFunSpec {
     def checkEngine(eng: SearchEngine, where: String): Unit = {
       terms.foreach { case (q, m) =>
         val (jobs, _, bytes) = jobsOf(eng, q, m)
-        assert(jobs <= 3 && bytes == 0, s"[$where $q $m] $jobs jobs, $bytes B")
+        assert(jobs <= 1 && bytes == 0, s"[$where $q $m] $jobs jobs, $bytes B")
       }
       positional.foreach { case (q, m) =>
         val (jobs, _, bytes) = jobsOf(eng, q, m)
-        assert(jobs <= 4 && bytes == 0, s"[$where $q $m] $jobs jobs, $bytes B")
+        assert(jobs <= 2 && bytes == 0, s"[$where $q $m] $jobs jobs, $bytes B")
       }
     }
-    it("over a stored snapshot: ≤ 3 jobs, ≤ 4 with positional leaves, " +
-       "and a PRF flow in ≤ 9") {
+    it("over a stored snapshot: ≤ 1 job, ≤ 2 with positional leaves, " +
+       "and a PRF flow in ≤ 3") {
       checkEngine(stored, "stored")
       prf(stored)
       val (jobs, _, bytes) = measured(prf(stored))
-      assert(jobs <= 9 && bytes == 0, s"[stored PRF] $jobs jobs, $bytes B")
+      assert(jobs <= 3 && bytes == 0, s"[stored PRF] $jobs jobs, $bytes B")
     }
-    it("over an in-memory index: ≤ 3 jobs, ≤ 4 with positional leaves") {
+    it("over an in-memory index: ≤ 1 job, ≤ 2 with positional leaves") {
       checkEngine(engine, "in-memory")
     }
   }
