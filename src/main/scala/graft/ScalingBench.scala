@@ -134,7 +134,7 @@ object ScalingBench {
           // exhaustive `scores`: the same engine with pruning off
           val res =
             if (name.endsWith("_pruned")) engine.search(q, m, 100)
-            else engine.rank(engine.scores(q, m), 100, engine.tieProne(m))
+            else engine.rank(engine.scores(q, m), 100)
           res.collect()
           name -> (System.nanoTime() - t0) / 1e9
         }

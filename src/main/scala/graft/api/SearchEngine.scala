@@ -137,8 +137,8 @@ final class SearchEngine(val index: Index,
              initial: Option[Seq[(Long, Double)]] = None): (String, String) = {
     // rank order straight from the ranked rows, on the driver
     val topDocs = initial.getOrElse(
-      rankedRows(routed(queryText, model, fb.fbDocs)._2, fb.fbDocs,
-        tieProne(model)).map { case (d, _, _, s) => (d, s) })
+      rankedRows(routed(queryText, model, fb.fbDocs)._2, fb.fbDocs)
+        .map { case (d, _, _, s) => (d, s) })
     val learned = graft.exec.Expansion
       .learnedQuery(index, topDocs, fb.fbMu, fb.fbTerms)
     // Java string concatenation of doubles (`QryEval.java:182-183`)
@@ -149,11 +149,11 @@ final class SearchEngine(val index: Index,
   }
 
   /** Ranked top-k: descending score, ascending extid tiebreak
-    * (`ScoreList.java:54-80`), by [[rank]]'s two phases. The candidates
-    * come from the route [[routed]] picks from the query's shape. */
+    * (`ScoreList.java:54-80`), by [[rank]]'s one pass over the candidates
+    * of the route [[routed]] picks from the query's shape. */
   def search(queryText: String, model: RetrievalModel,
              k: Int = 100): DataFrame =
-    rank(routed(queryText, model, k)._2, k, tieProne(model))
+    rank(routed(queryText, model, k)._2, k)
 
   /** The parsed query's (docid, score) candidates and the execution
     * route the block-max engine chose for them from the compiled query
@@ -173,202 +173,111 @@ final class SearchEngine(val index: Index,
     BlockMax.candidates(index, index.blocks,
       Qry.asSl(parse(queryText, model)), model, k)
 
-  /** Coarse-score models (constant 1.0 / small-integer tf scores) tie
-    * MANY docs at the k boundary, so their rank() calls routinely take
-    * the overflow branch — cache the narrow score frame for them so that
-    * branch reuses phase 1's computation instead of re-executing the
-    * query. Float-scored models (BM25/Indri) tie only on duplicate docs
-    * and skip the cache. */
-  private[graft] def tieProne(model: RetrievalModel): Boolean = model match {
-    case UnrankedBoolean | RankedBoolean => true
-    case _                               => false
-  }
-
-  /** Two-phase top-k (round-3 VERDICT item 3 — the single-plan form
-    * joined the CORPUS-SCALE docs table on every query BEFORE the limit,
-    * a per-query full docs scan/shuffle at 100 TB):
+  /** Top-k of any (docid, score) frame in the reference's total order,
+    * score desc then extid asc, in one Spark job and with no docs join:
+    *  1. each partition keeps each segment's (`docid >> BucketShift`) k
+    *     best rows by (score desc, docid asc) — docid order within a
+    *     segment is extid order — less those scoring below the
+    *     partition's own k-th score ([[SearchEngine.partitionTopK]]);
+    *  2. the driver gives the collected rows their extids from
+    *     [[graft.index.Index.extids]] and takes the first k by (score
+    *     desc, extid asc) ([[SearchEngine.merge]]).
+    * Exact for any partitioning, segments split or not: a doc in the
+    * global top k is in its segment's top k under both orders, and fewer
+    * than k docs score above it, so it survives its partition's cut.
     *
-    *  1. `TakeOrderedAndProject` over the narrow (docid, score) frame by
-    *     (score desc, docid asc), fetching `2k` rows — NO docs join. If
-    *     the 2k-th row scores below the k-th, every doc tied at the k-th
-    *     score is inside the fetch, so the candidate set is closed with
-    *     one distributed pass (extid only breaks EQUAL-score ties, and
-    *     all equal-score candidates are in hand).
-    *  2. extids for the ≤2k survivors from the driver's extid map
-    *     ([[graft.index.Index.extids]]) — no Spark job.
-    *  3. Only when the boundary tie group overflows the fetch (a
-    *     constant-score query — the reference would compare extids of
-    *     every tied doc too, `ScoreList.java:46-78`): one pass over JUST
-    *     the tied docs, keeping in each partition each segment's `need`
-    *     smallest docids — docid order within a segment is extid order,
-    *     so the answer is among them — and the driver takes the `need`
-    *     smallest extids of what it collects.
-    *
-    * The final (score desc, extid asc) order + rank numbering happen on
-    * ≤2k driver rows; result is a LocalRelation.
-    *
-    * `cacheScores = true` persists the narrow (docid, score) frame across
-    * the phases, so the boundary-tie overflow pass (step 3) reuses
-    * phase 1's computation instead of re-executing the full query lineage
-    * — worth it exactly for the coarse-score models where ties at the k
-    * boundary are the COMMON case ([[tieProne]]); float-scored models
-    * skip the cache write.
-    *
-    * EAGER: calling rank() runs the phase-1 job (and the overflow pass,
-    * when one is needed) immediately and returns a local frame — it is
-    * the terminal action of a query, not a lazy transformation. */
-  def rank(scoreDf: DataFrame, k: Int, cacheScores: Boolean = false): DataFrame = {
+    * EAGER: calling rank() runs the job and returns a local frame
+    * (docid, extid, rank, score) — it is the terminal action of a query,
+    * not a lazy transformation. */
+  def rank(scoreDf: DataFrame, k: Int): DataFrame = {
     val spark = index.spark
     import spark.implicits._
-    rankedRows(scoreDf, k, cacheScores).toDF("docid", "extid", "rank", "score")
+    rankedRows(scoreDf, k).toDF("docid", "extid", "rank", "score")
   }
+
+  /** The three-argument form from when [[rank]] could cache its score
+    * frame for a second pass. There is no second pass now, so
+    * `cacheScores` is ignored. Kept so that callers that still pass the
+    * flag, graftbench's traced serve path (`graftbench.Serve`) among
+    * them, compile unchanged. */
+  @deprecated("the flag is ignored; call rank(scoreDf, k)", "0.1.0")
+  def rank(scoreDf: DataFrame, k: Int, cacheScores: Boolean): DataFrame =
+    rank(scoreDf, k)
 
   /** [[rank]]'s rows, (docid, extid, rank, score) in rank order. */
-  private def rankedRows(scoreDf: DataFrame, k: Int, cacheScores: Boolean)
-      : Seq[(Long, String, Int, Double)] = {
-    val narrow = narrowScores(scoreDf, cacheScores)
-    try ranked(Seq(narrow -> classified(narrow, k, cacheScores)), k,
-      cacheScores).head
-    finally if (cacheScores) narrow.unpersist(false)
-  }
-
-  // ------------------------------------------------- rank internals
-  // (shared by rank() and the batched E1 path searchBatch())
-
-  private def narrowScores(scoreDf: DataFrame,
-                           cacheScores: Boolean): DataFrame = {
-    val narrow = scoreDf
-      .select(col("docid").cast("long"), col("score").cast("double"))
-    if (cacheScores)
-      narrow.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else narrow
-  }
-
-  private def takeHead(narrow: DataFrame, m: Int): Array[(Long, Double)] =
-    narrow.orderBy(desc("score"), asc("docid")).limit(m)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-
-  /** survivors = head rows that are definitely in the candidate set;
-    * overflow = Some((sk, need)) when the boundary tie group at the k-th
-    * score overflowed the 2k fetch and a distributed extid pass over the
-    * tied docs must fill the remaining seats. */
-  private final case class HeadClass(survivors: Array[(Long, Double)],
-                                     overflow: Option[(Double, Int)])
-
-  private def classifyHead(head: Array[(Long, Double)],
-                           k: Int): HeadClass =
-    if (head.length <= k) HeadClass(head, None) // frame exhausted
-    else {
-      val sk = head(k - 1)._2
-      if (head.length < 2 * k || head.last._2 < sk)
-        // closed: all docs scoring ≥ sk are within the fetched 2k
-        HeadClass(head.filter(_._2 >= sk), None)
-      else {
-        // docs with score > sk are definite (fewer than k of them); the
-        // remaining seats are filled by the globally smallest extids at
-        // exactly sk
-        val above = head.takeWhile(_._2 > sk)
-        HeadClass(above, Some((sk, k - above.length)))
-      }
-    }
-
-  /** Phase 1 of one frame; a cached frame whose candidate set is closed
-    * (the common case) is dropped at once. */
-  private def classified(narrow: DataFrame, k: Int,
-                         cached: Boolean): HeadClass = {
-    val cls = classifyHead(takeHead(narrow, 2 * k), k)
-    if (cached && cls.overflow.isEmpty) narrow.unpersist(false)
-    cls
-  }
-
-  /** Phases 2–3 of classified frames: each frame's survivors' extids,
-    * then its overflow's boundary pass (dropping its cached frame) and the
-    * final order. */
-  private def ranked(frames: Seq[(DataFrame, HeadClass)], k: Int,
-                     cached: Boolean): Seq[Seq[(Long, String, Int, Double)]] = {
-    val ext = index.extids
-    frames.map { case (narrow, cls) =>
-      val withExt =
-        cls.survivors.map { case (d, s) => (d, s, ext(d)) }.toSeq ++
-          cls.overflow.toSeq.flatMap { case (sk, need) =>
-            try boundaryPass(narrow, sk, need)
-            finally if (cached) narrow.unpersist(false)
-          }
-      finalizeRank(withExt, k)
-    }
-  }
-
-  /** The `need` docs scoring exactly `sk` with the smallest extids. A
-    * frame's partitions may split segments, so each keeps its own `need`
-    * smallest docids per segment: a superset of each segment's. */
-  private def boundaryPass(narrow: DataFrame, sk: Double,
-                           need: Int): Seq[(Long, Double, String)] = {
+  private def rankedRows(scoreDf: DataFrame,
+                         k: Int): Seq[(Long, String, Int, Double)] = {
     import index.spark.implicits._
-    val ext = index.extids
-    narrow.filter(col("score") === sk).select(col("docid")).as[Long]
-      .mapPartitions(SearchEngine.smallestPerSegment(_, need))
+    val kept = scoreDf
+      .select(col("docid").cast("long"), col("score").cast("double"))
+      .as[(Long, Double)]
+      .mapPartitions(SearchEngine.partitionTopK(_, k))
       .collect()
-      .map(d => (d, sk, ext(d)))
-      .sortBy(_._3).take(need).toSeq
+    SearchEngine.merge(kept.toSeq, index.extids(_), k)
   }
 
-  private def finalizeRank(withExt: Seq[(Long, Double, String)],
-                           k: Int): Seq[(Long, String, Int, Double)] =
-    withExt
-      .sortBy { case (_, s, e) => (-s, e) }
-      .take(k).zipWithIndex
-      .map { case ((d, s, e), i) => (d, e, i + 1, s) }
-
-  /** Batched E1 evaluation (round-4 VERDICT item 6): every query's
-    * phase-1 top-k job is submitted concurrently (the scheduler
-    * interleaves their tasks instead of idling between small jobs). The
-    * rare boundary-overflow passes stay per-query.
-    * Per-query results are identical to [[search]] by construction (same
-    * route and classify/boundary/finalize helpers). */
+  /** Batched E1 evaluation: each query is routed serially (a plan with
+    * positional leaves collects their statistics), then every query's
+    * ranking job is submitted concurrently, so the scheduler interleaves
+    * their tasks instead of idling between small jobs. Per-query results
+    * are [[search]]'s: the same route and the same ranking. */
   def searchBatch(queries: Seq[(Int, String)], model: RetrievalModel,
                   k: Int = 100): Seq[(Int, Seq[(Long, String, Int, Double)])] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val cache = tieProne(model)
-    // route and plan serially (a plan with positional leaves collects
-    // their statistics); only the phase-1 scoring jobs run concurrently
-    val planned: Seq[(Int, DataFrame)] = queries.map { case (qid, q) =>
-      qid -> narrowScores(routed(q, model, k)._2, cache)
-    }
-    try {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, math.max(1, queries.length)))
-      implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-        ExecutionContext.fromExecutorService(pool)
-      // classify INSIDE each future, which drops the cached frame as soon
-      // as a query's candidate set is closed (the common case): peak
-      // cached frames = the thread-pool width + the rare overflow
-      // queries, not the whole batch — the serial rank() path held at
-      // most one frame and a large batch of tie-prone queries must not
-      // hold N corpus-scale frames through the whole run
-      val frames =
-        try Await.result(
-          Future.sequence(planned.map { case (_, narrow) =>
-            Future(narrow -> classified(narrow, k, cache))
-          }), Duration.Inf)
-        finally pool.shutdown()
-      planned.map(_._1).zip(ranked(frames, k, cache))
-    } finally if (cache) planned.foreach(_._2.unpersist(false)) // safety net
+    val planned = queries.map { case (qid, q) => qid -> routed(q, model, k)._2 }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(8, math.max(1, queries.length)))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.sequence(planned.map { case (qid, df) =>
+      Future(qid -> rankedRows(df, k))
+    }), Duration.Inf)
+    finally pool.shutdown()
   }
 }
 
-private object SearchEngine {
-  /** Each segment's (`docid >> BucketShift`) `need` smallest docids. */
-  def smallestPerSegment(docids: Iterator[Long], need: Int): Iterator[Long] = {
-    val heaps = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.PriorityQueue[Long]]
-    docids.foreach { d =>
-      val h = heaps.getOrElseUpdate(d >> graft.index.IndexBuilder.BucketShift,
-        scala.collection.mutable.PriorityQueue.empty[Long]) // largest first
-      if (h.size < need) h += d
-      else if (d < h.head) { h.dequeue(); h += d }
+private[graft] object SearchEngine {
+  /** One partition's share of a top k: each segment's (`docid >>
+    * BucketShift`) k best rows by (score desc, docid asc), less those
+    * scoring below the k-th best score among them, which is the
+    * partition's k-th score. */
+  def partitionTopK(rows: Iterator[(Long, Double)],
+                    k: Int): Iterator[(Long, Double)] = {
+    // worst first: the lower score, then the larger docid. Scores compare
+    // by Double.compare, so NaN scores tie with each other, as in Spark.
+    val worstFirst: Ordering[(Long, Double)] = (a, b) => {
+      val c = java.lang.Double.compare(b._2, a._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
     }
-    heaps.valuesIterator.flatMap(_.iterator)
+    val heaps = scala.collection.mutable.HashMap
+      .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Double)]]
+    if (k > 0) rows.foreach { r =>
+      val h = heaps.getOrElseUpdate(r._1 >> graft.index.IndexBuilder.BucketShift,
+        scala.collection.mutable.PriorityQueue.empty(worstFirst))
+      if (h.size < k) h += r
+      else if (worstFirst.lt(r, h.head)) { h.dequeue(); h += r }
+    }
+    val kept = heaps.valuesIterator.flatMap(_.iterator).toArray
+    if (kept.length <= k) kept.iterator
+    else {
+      val scores = kept.map(_._2)
+      java.util.Arrays.sort(scores)
+      val kth = scores(scores.length - k)
+      kept.iterator.filter(r => java.lang.Double.compare(r._2, kth) >= 0)
+    }
+  }
+
+  /** The first k of `rows` by (score desc, extid asc), numbered from 1:
+    * (docid, extid, rank, score). */
+  def merge(rows: Seq[(Long, Double)], extid: Long => String,
+            k: Int): Seq[(Long, String, Int, Double)] = {
+    val byRank: Ordering[(Long, Double, String)] = (a, b) => {
+      val c = java.lang.Double.compare(b._2, a._2)
+      if (c != 0) c else a._3.compareTo(b._3)
+    }
+    rows.map { case (d, s) => (d, s, extid(d)) }.sorted(byRank)
+      .take(k).zipWithIndex
+      .map { case ((d, s, e), i) => (d, e, i + 1, s) }
   }
 }
 

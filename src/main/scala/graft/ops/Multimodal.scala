@@ -128,11 +128,4 @@ object Multimodal {
       items.map(decode)
     }
   }
-
-  /** DataFrame adapter for [[extractFeatures]]. */
-  def extractFeaturesDf(spark: SparkSession, bin: DataFrame)
-      : Dataset[MediaFeatures] = {
-    import spark.implicits._
-    extractFeatures(spark, bin.select(col("doc_id"), col("media")).as[MediaItem])
-  }
 }

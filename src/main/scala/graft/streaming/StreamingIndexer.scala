@@ -120,13 +120,25 @@ object StreamingIndexer {
     val doclen = table("doclen")
     val docs = table("docs")
     val termStats = IndexBuilder.termStatsOf(postings)
-    // Analyzer identity rides with every segment's stats.json (same field
-    // SearchEngine validates for batch snapshots): segments stemmed with
-    // different analyzers cannot be merged into one queryable vocabulary,
-    // and a merged index with no recorded analyzer would wrongly trip —
-    // or wrongly pass — the query-time mismatch guard.
-    val analyzers = segs.map(b =>
-      IndexStore.readStats(s"$dir/seg=$b/stats.json")._4)
+    val recorded = segs.map(b => IndexStore.readStats(s"$dir/seg=$b/stats.json"))
+    // The bucket count and the indexed fields ride with every segment's
+    // stats.json: without them a merged index would accept the default
+    // fields and compact to the default bucket count.
+    val buckets = recorded.map(_._2).distinct
+    require(buckets.size == 1,
+      s"streaming segments under $dir record bucket counts " +
+      s"${buckets.mkString(", ")} — they cannot be merged")
+    val fields = recorded.map(_._3).filter(_.nonEmpty).distinct
+    require(fields.size <= 1,
+      s"streaming segments under $dir record indexed fields " +
+      s"${fields.map(_.mkString("[", ",", "]")).mkString(", ")} — they " +
+      "cannot be merged")
+    // Analyzer identity rides there too (same field SearchEngine
+    // validates for batch snapshots): segments stemmed with different
+    // analyzers cannot be merged into one queryable vocabulary, and a
+    // merged index with no recorded analyzer would wrongly trip — or
+    // wrongly pass — the query-time mismatch guard.
+    val analyzers = recorded.map(_._4)
     val distinctRecorded = analyzers.flatten.distinct
     require(distinctRecorded.size <= 1,
       s"streaming segments under $dir record ${distinctRecorded.size} " +
@@ -144,6 +156,10 @@ object StreamingIndexer {
     val analyzer = if (legacy.isEmpty) distinctRecorded.headOption else None
     new Index(spark, docs, postings, doclen, termStats,
       statsThunk = () => IndexBuilder.statsOf(docs, doclen),
+      buckets = buckets.head,
+      // a legacy segment records no fields: the legacy fallback applies
+      indexedFieldsOpt =
+        if (recorded.exists(_._3.isEmpty)) None else fields.headOption,
       analyzerOpt = analyzer)
   }
 }

@@ -10,12 +10,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, shiftright, spark_partition_id}
 import org.scalatest.funspec.AnyFunSpec
 
-/** `SearchEngine.rank`'s overflow pass: when the docs tied at the k-th
-  * score outnumber the 2k head, the remaining seats go to the tied docs
-  * with the smallest extids, found by keeping each segment's smallest
-  * docids (docid order within a segment is extid order). Over many
-  * segments, and over a frame whose partitions split segments, the
-  * result must be bit-identical to the test-only reference engine. */
+/** `SearchEngine.rank` over ties across segments: when many more than k
+  * docs tie at the k-th score, in several segments, the seats go to the
+  * tied docs with the smallest extids, found by keeping each segment's
+  * best docids (docid order within a segment is extid order) and
+  * merging by extid on the driver. Over many segments, and over a frame
+  * whose partitions split segments, the result must be bit-identical to
+  * the test-only reference engine. */
 class BoundaryPassSpec extends AnyFunSpec {
 
   private lazy val spark = TestSpark.spark
@@ -47,8 +48,8 @@ class BoundaryPassSpec extends AnyFunSpec {
     bits(df.select("extid", "score").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq)
 
-  /** The fixture overflows: more than 2k docs score at least the k-th
-    * score, and the docs tied at it lie in several segments. */
+  /** The hard case: more than 2k docs score at least the k-th score, and
+    * the docs tied at it lie in several segments. */
   private def assertOverflows(scores: DataFrame, k: Int): Unit = {
     val s = scores.select(col("docid"), col("score")).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sortBy(-_._2)
@@ -81,10 +82,8 @@ class BoundaryPassSpec extends AnyFunSpec {
           shiftright(col("docid"), IndexBuilder.BucketShift).as("seg"))
         .distinct().groupBy("seg").count().filter(col("count") > 1).count()
       assert(parts > 0, s"[$q] no segment is split across partitions")
-      Seq(false, true).foreach { cache =>
-        assert(ranked(engine.rank(frame, k, cache)) ==
-          bits(oracle.topkQuery(q, m, k)), s"[$q] under $m, cache=$cache")
-      }
+      assert(ranked(engine.rank(frame, k)) ==
+        bits(oracle.topkQuery(q, m, k)), s"[$q] under $m")
     }
   }
 }

@@ -12,9 +12,8 @@ import org.scalatest.funspec.AnyFunSpec
   * (postings, doclen, termStats, docs and the derived block table) are
   * persisted once per index; every query reads them and leaves the
   * persisted-RDD count where it found it — boolean queries too, whose
-  * tie-prone score frame `rank` caches only until their candidate set is
-  * closed. LeToR candidate frames are collected LocalRelations —
-  * nothing to leak. */
+  * constant scores tie many docs at the k-th score. LeToR candidate
+  * frames are collected LocalRelations — nothing to leak. */
 class CacheLifecycleSpec extends AnyFunSpec {
 
   private val cfg = AnalyzerConfig.code

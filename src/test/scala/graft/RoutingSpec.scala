@@ -12,7 +12,7 @@ import org.scalatest.funspec.AnyFunSpec
 
 /** `SearchEngine.search` picks its execution route from the query's
   * shape. Each shape must take the expected route, and every route must
-  * return exactly the exhaustive `rank(scores(q, m), k, …)` — same
+  * return exactly the exhaustive `rank(scores(q, m), k)` — same
   * docids, extids and ranks, bit-identical scores — and the test-only
   * reference engine's top-k, which shares no scoring code with either. */
 class RoutingSpec extends AnyFunSpec {
@@ -60,7 +60,7 @@ class RoutingSpec extends AnyFunSpec {
     assert(expected.isDefinedAt(route), s"[$q] under $m took $route")
     val got = rows(eng.search(q, m, k))
     assert(got.nonEmpty || q.contains("zzz"), s"[$q] fixture matches nothing")
-    assert(got == rows(eng.rank(eng.scores(q, m), k, eng.tieProne(m))),
+    assert(got == rows(eng.rank(eng.scores(q, m), k)),
       s"[$q] under $m via $route")
     assert(bits(got) == bits(oracle, q, m, k),
       s"[$q] under $m via $route vs the reference engine")
@@ -179,15 +179,15 @@ class RoutingSpec extends AnyFunSpec {
 
   /** Warm a query shape once (first-use derivations, lazy stats), then
     * measure it. */
-  private def jobsOf(eng: SearchEngine, q: String, m: RetrievalModel) = {
-    eng.search(q, m, 100)
-    measured(eng.search(q, m, 100))
+  private def jobsOf(eng: SearchEngine, q: String, m: RetrievalModel,
+                     k: Int = 100) = {
+    eng.search(q, m, k)
+    measured(eng.search(q, m, k))
   }
 
   /** A declined query compiles once: its `statsJobs` statistics jobs
     * (positional stats, with positional leaves) run once each, then the
-    * ranking's 2k head. These queries tie nothing at the k-th score, so
-    * no overflow pass runs. */
+    * ranking job. */
   private def compiledOnce(eng: SearchEngine, q: String, m: RetrievalModel,
                            statsJobs: Int): Unit = {
     val (jobs, _, _) = jobsOf(eng, q, m)
@@ -217,6 +217,16 @@ class RoutingSpec extends AnyFunSpec {
     val positional = Seq("#SUM(open #NEAR/1(inverted index))" -> bm25,
       "#WAND(0.7 #AND(open inverted) 0.2 #NEAR/1(open inverted) " +
         "0.1 #WINDOW/8(open inverted))" -> indri)
+    // tie-prone: at k = 5, constant or small-integer scores tie far more
+    // than 2k docs at the k-th score, across segments
+    lazy val tied = {
+      import spark.implicits._
+      val body = engine.index.termStats.filter($"field" === "body")
+        .orderBy($"df".desc, $"term").select($"term", $"df", $"ctf")
+        .as[(String, Long, Long)].collect()
+      val (hot, flat) = (body.head._1, body.find(t => t._2 == t._3).get._1)
+      Seq(s"#OR($hot)" -> UnrankedBoolean, s"#AND($hot $flat)" -> RankedBoolean)
+    }
     def prf(eng: SearchEngine): Unit = {
       val (_, combined) = eng.expand("open inverted", indri, fb)
       eng.search(combined, indri, 100)
@@ -224,6 +234,10 @@ class RoutingSpec extends AnyFunSpec {
     def checkEngine(eng: SearchEngine, where: String): Unit = {
       terms.foreach { case (q, m) =>
         val (jobs, _, bytes) = jobsOf(eng, q, m)
+        assert(jobs <= 1 && bytes == 0, s"[$where $q $m] $jobs jobs, $bytes B")
+      }
+      tied.foreach { case (q, m) =>
+        val (jobs, _, bytes) = jobsOf(eng, q, m, k = 5)
         assert(jobs <= 1 && bytes == 0, s"[$where $q $m] $jobs jobs, $bytes B")
       }
       positional.foreach { case (q, m) =>
@@ -264,7 +278,7 @@ class RoutingSpec extends AnyFunSpec {
     val (route, _) = eng.routed(q, bm25, 20)
     assert(route.isInstanceOf[Route.BlockMax], route)
     val got = rows(eng.search(q, bm25, 20))
-    assert(got == rows(eng.rank(eng.scores(q, bm25), 20, false)))
+    assert(got == rows(eng.rank(eng.scores(q, bm25), 20)))
     assert(bits(got) ==
       bits(RefEngine.of(CorpusGen.docs(1500), Seq("body"), cfg), q, bm25, 20))
   }

@@ -4,7 +4,7 @@ import graft.analysis.AnalyzerConfig
 import graft.api.SearchEngine
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.model.BM25
+import graft.model.{BM25, Indri}
 import graft.streaming.StreamingIndexer
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funspec.AnyFunSpec
@@ -150,6 +150,43 @@ class StreamingIndexerSpec extends AnyFunSpec {
       assert(warning.contains("legacy segments 1 "), warning)
       // the guard is off indeed: a mismatched profile is not refused
       new SearchEngine(merged, AnalyzerConfig.code)
+    }
+
+    it("a merged index keeps its segments' indexed fields and bucket " +
+       "count: an unindexed field is refused as by its batch build") {
+      import spark.implicits._
+      val dir = Files.createTempDirectory("graft-stream8-").toString
+      val bodyOnly = IndexConfig(AnalyzerConfig.code, buckets = 4,
+        fields = Seq("body"))
+      val docs = CorpusGen.docs(30)
+      StreamingIndexer.processBatch(dir, bodyOnly)(docs.take(15).toDF(), 0L)
+      StreamingIndexer.processBatch(dir, bodyOnly)(docs.drop(15).toDF(), 1L)
+      val merged = StreamingIndexer.loadMerged(spark, dir)
+      assert(merged.buckets == 4)
+      def refusal(idx: graft.index.Index): String =
+        intercept[IllegalArgumentException](
+          new SearchEngine(idx, AnalyzerConfig.code)
+            .search("#AND(open scala.title)", Indri(), 10)).getMessage
+      val batch = refusal(IndexBuilder.build(spark, docs.toDF(), bodyOnly))
+      assert(batch.contains("Unknown field: title"), batch)
+      assert(refusal(merged) == batch)
+    }
+
+    it("refuses to merge segments with different bucket counts or " +
+       "indexed fields") {
+      import spark.implicits._
+      def refusal(second: IndexConfig): String = {
+        val dir = Files.createTempDirectory("graft-stream9-").toString
+        StreamingIndexer.processBatch(dir, cfg)(CorpusGen.docs(10).toDF(), 0L)
+        StreamingIndexer.processBatch(dir, second)(
+          CorpusGen.docs(20).drop(10).toDF(), 1L)
+        intercept[IllegalArgumentException](
+          StreamingIndexer.loadMerged(spark, dir)).getMessage
+      }
+      val buckets = refusal(cfg.copy(buckets = 4))
+      assert(buckets.contains("bucket counts 8, 4"), buckets)
+      val fields = refusal(cfg.copy(fields = Seq("body", "title")))
+      assert(fields.contains("indexed fields [body], [body,title]"), fields)
     }
 
     it("compaction: merged segments persist via IndexStore and reload identically") {

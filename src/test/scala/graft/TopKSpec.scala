@@ -7,8 +7,8 @@ import graft.model.{BM25, Indri, RankedBoolean, UnrankedBoolean}
 import org.apache.spark.sql.functions._
 import org.scalatest.funspec.AnyFunSpec
 
-/** O12 two-phase top-k (round-3 VERDICT item 3): `SearchEngine.rank` must
-  * never join the corpus-scale docs table before the top-k cut, yet stay
+/** O12 top-k: `SearchEngine.rank` must never join the corpus-scale docs
+  * table before the top-k cut, yet stay
   * rank-identical to the reference's (score desc, extid asc) total order
   * — including when equal-score tie groups cross the k boundary and when
   * extid order disagrees with docid order (hash-bucketed docids do not
@@ -54,9 +54,9 @@ class TopKSpec extends AnyFunSpec {
   it("resolves boundary tie groups larger than the 2k fetch " +
      "(constant-score query → every doc tied)") {
     // UnrankedBoolean: all scores 1.0 — the tie group IS the result set,
-    // which exceeds 2k for small k, forcing the global boundary pass
+    // tied across segments, so extid decides every seat
     val s = engine.scores("#OR(the a index)", UnrankedBoolean)
-    assert(s.count() > 10, "fixture must out-size the 2k fetch")
+    assert(s.count() > 10, "fixture must tie more than 2k docs")
     assert(got(s, 5) == expected(s, 5))
   }
 
@@ -74,25 +74,19 @@ class TopKSpec extends AnyFunSpec {
     assert(got(empty, 10).isEmpty)
   }
 
-  it("with cacheScores the overflow boundary pass reuses the cached " +
-     "frame — the query lineage executes ONCE (round-4 VERDICT item 7)") {
+  it("the scoring lineage of a constant-score frame runs exactly once") {
     val acc = spark.sparkContext.longAccumulator("scoreEvals")
     val base = engine.scores("#OR(the a index)", UnrankedBoolean)
     val n = base.count()
-    assert(n > 10, "fixture must out-size the 2k fetch so the " +
-      "constant-score overflow branch is taken")
+    assert(n > 10, "fixture must tie more than 2k docs at the k-th score")
     // nondeterministic pins the counting filter in place (a deterministic
     // udf gets pushed below the #OR aggregate and counts pre-agg rows)
     val counted = udf((_: Long) => { acc.add(1); true }).asNondeterministic()
     val instrumented = base.filter(counted(col("docid")))
-    val r = engine.rank(instrumented, 5, cacheScores = true)
+    val r = engine.rank(instrumented, 5)
     assert(r.count() == 5)
     assert(acc.value == n,
       s"expected one pass over $n score rows, saw ${acc.value}")
-    // sanity: the uncached path re-executes (documents the trade)
-    acc.reset()
-    engine.rank(instrumented, 5, cacheScores = false)
-    assert(acc.value == 2 * n, s"uncached should run twice: ${acc.value}")
   }
 
   it("searchBatch equals per-query search, including overflow queries " +
@@ -103,7 +97,7 @@ class TopKSpec extends AnyFunSpec {
       val qs = Seq(
         1 -> "open inverted index",
         // #OR/#AND throw under BM25 (the reference NPEs there too) — the
-        // boolean models get the constant-score overflow case instead;
+        // boolean models get the constant-score case instead;
         // Indri free text takes the block-max route, 4 the zero-ctf
         // fallback
         2 -> (if (boolean) "#OR(the a index)" else "the a index"),
