@@ -27,7 +27,6 @@ object ScaleData {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     (0 until copies).map { k =>

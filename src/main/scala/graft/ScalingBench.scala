@@ -17,7 +17,7 @@ import java.nio.file.Files
   * (steady-state) wall-clock.
   *
   *   job    = full index build: tokenize → salted postings → doclen/
-  *            termstats/compressed blocks derivations → snapshot commit
+  *            compressed blocks/fwdindex derivations → snapshot commit
   *            (`IndexBuilder.build` + `IndexStore.save`)
   *   metric = files/sec; efficiency = (thru_4N / thru_N) / 4
   *
@@ -47,8 +47,8 @@ object ScalingBench {
       // driver renames are fixed per-run cost that caps scaling
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "WARN") // under spark-submit (see Main)
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
     s
   }
 

@@ -36,8 +36,10 @@ object Main {
       .config("spark.sql.adaptive.enabled", "true")
       // task-side output commit (see ScalingBench.session)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      // spark-submit configures logging before the app jar (and its
+      // log4j2.properties) is on the classpath: set WARN at context start
+      .config("spark.log.level", "WARN")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val algorithm = params.getOrElse("retrievalAlgorithm", "UnrankedBoolean")
     val letor = algorithm.equalsIgnoreCase("letor")

@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.analysis.{AnalyzerConfig, Stemming}
+import graft.analysis.AnalyzerConfig
 import graft.exec.{BlockMax, Planner}
 import graft.index.Index
 import graft.model._
@@ -16,26 +16,14 @@ final class SearchEngine(val index: Index,
 
   // The query-time analyzer MUST be the build-time analyzer — a mismatch
   // stems/stops query terms differently from the index's vocabulary and
-  // every query silently matches wrong (usually zero) postings. Snapshots
-  // record their analyzer in stats.json (round-4 ADVICE); fail loudly
+  // every query silently matches wrong (usually zero) postings. Every
+  // index records its analyzer (stats.json for a snapshot); fail loudly
   // here instead.
-  index.analyzerOpt match {
-    case Some(built) =>
-      require(built == analyzer,
-        s"analyzer mismatch: the index was built with $built but is " +
-        s"being queried with $analyzer — query stems/stopwords would " +
-        "silently diverge from the indexed vocabulary. Query with the " +
-        "build-time config, or rebuild the index.")
-    case None =>
-      // legacy snapshot with no recorded analyzer: the pre-KStem english
-      // profiles used a different stemmer, so a KStem query config cannot
-      // be trusted against it
-      require(analyzer.stemming != Stemming.KStem,
-        "this index snapshot predates analyzer recording in stats.json " +
-        "and cannot be safely queried with the KStem english profile " +
-        "(legacy english snapshots were stemmed differently). Rebuild " +
-        "the index, or query with AnalyzerConfig.englishLight / code.")
-  }
+  require(index.analyzer == analyzer,
+    s"analyzer mismatch: the index was built with ${index.analyzer} but " +
+    s"is being queried with $analyzer — query stems/stopwords would " +
+    "silently diverge from the indexed vocabulary. Query with the " +
+    "build-time config, or rebuild the index.")
 
   private def parse(queryText: String, model: RetrievalModel): Qry =
     QueryParser.parseQuery(queryText, model, analyzer)

@@ -626,14 +626,6 @@ object BlockMax {
     ls.map(_._2).distinct.foreach { f =>
       require(index.indexedFields.contains(f),
         s"Query syntax is incorrect. Unknown field: $f")
-      // Legacy snapshots carry no indexedFields; a default-named field
-      // accepted only through the DefaultFields union matched nothing at
-      // build time, so a typo would look identical — warn (round-3
-      // ADVICE).
-      if (index.legacyAssumedFields.contains(f))
-        System.err.println(s"[graft] WARNING: field '$f' accepted via the" +
-          " legacy default-field fallback (snapshot lists no" +
-          " indexedFields); it holds no documents and matches nothing")
     }
     ls.map { case (t, f) =>
       (t, f) -> index.lexicon.get(t, f).getOrElse((0L, 0L))

@@ -87,67 +87,60 @@ object ExtidMap {
   *  - docs      (docid, extid, repo, path, commit, lang, sha256)
   *  - postings  (term, field, docid, tf, positions: array<int>, len)
   *  - doclen    (docid, field, len)
-  *  - termStats (term, field, df, ctf)
+  *  - blocks    the postings as compressed blocks with per-block
+  *              df/ctf/max-tf/length bounds ([[PostingBlock]])
   *
   * `postings` carries exact positions (like Lucene's positional postings).
   * A persisted index stores them once, as the compressed `postings_blocks`,
   * and a loaded one decodes `postings` from those blocks (see
-  * [[IndexStore]]).
+  * [[IndexStore]]). The term statistics are not stored apart: like the
+  * reference's term dictionary, which points at the postings it counts
+  * (`InvList.java:68-106`), [[termStats]] sums the blocks' own df/ctf.
   */
 final class Index(
     val spark: SparkSession,
     val docs: DataFrame,
     val postings: DataFrame,
     val doclen: DataFrame,
-    val termStats: DataFrame,
     /** Global statistics, computed on first use (exact aggregates over
       * docs/doclen) — loading a snapshot supplies the persisted values,
       * a fresh build defers the two counting jobs until a scorer needs
       * them. */
     statsThunk: () => IndexStats,
-    /** Pre-built compressed block table (set when loaded from an
-      * [[IndexStore]] snapshot); otherwise derived on demand. */
-    blocksOpt: Option[Dataset[PostingBlock]] = None,
     /** docid-bucket count of the build (the salt domain) — the store
       * repartitions persisted tables to ~1 file per segment. */
-    val buckets: Int = 64,
-    /** Fields this index was built with (IndexConfig.fields), persisted
-      * in stats.json. None (legacy snapshots) ⇒ derived from the fields
-      * that actually contain documents. */
-    indexedFieldsOpt: Option[Seq[String]] = None,
-    /** Persisted forward-index table (docid, field, stems, stemFreq,
-      * positions, segment), set when loaded from an [[IndexStore]]
-      * snapshot that carries one. With it, PRF / LeToR / snippet reads
-      * are partition-pruned columnar scans; without it [[fwdIndex]] is
-      * re-aggregated from postings on every action. */
-    fwdIndexStoredOpt: Option[DataFrame] = None,
+    val buckets: Int,
+    /** Fields this index was built with (IndexConfig.fields), recorded in
+      * stats.json. Queries against any other field are a syntax error
+      * (silently matching nothing hid typos). */
+    val indexedFields: Set[String],
     /** The analyzer the corpus was tokenized with (stopwords + stemming
       * variant), recorded in stats.json on save and validated by
       * [[graft.api.SearchEngine]] — querying with a different analyzer
-      * produces silently wrong/empty matches. None for legacy snapshots
-      * that predate the field. */
-    val analyzerOpt: Option[graft.analysis.AnalyzerConfig] = None)
+      * produces silently wrong/empty matches. */
+    val analyzer: graft.analysis.AnalyzerConfig,
+    /** Pre-built compressed block table (set when loaded from an
+      * [[IndexStore]] snapshot); otherwise derived on demand. */
+    blocksOpt: Option[Dataset[PostingBlock]] = None,
+    /** Persisted forward-index table (docid, field, stems, stemFreq,
+      * positions, segment), set when loaded from an [[IndexStore]]
+      * snapshot. With it, PRF / LeToR / snippet reads are
+      * partition-pruned columnar scans; without it [[fwdIndex]] is
+      * re-aggregated from postings on every action. */
+    fwdIndexStoredOpt: Option[DataFrame] = None)
   extends Serializable {
 
   lazy val stats: IndexStats = statsThunk()
 
-  /** Known fields — queries against any other field are a syntax error
-    * (the round-1 behavior of silently matching nothing hid typos).
-    * Legacy snapshots (no indexedFields in stats.json) fall back to the
-    * stats-derived fields UNION the default field set: stats only list
-    * fields with ≥1 doclen row, so a field that was indexed but empty
-    * corpus-wide (e.g. keywords when lang is blank everywhere) must not
-    * turn a legitimate query into a syntax error. */
-  lazy val indexedFields: Set[String] =
-    indexedFieldsOpt.map(_.toSet)
-      .getOrElse(stats.fields.keySet ++ Index.DefaultFields)
-
-  /** Fields accepted ONLY through the legacy DefaultFields union (empty
-    * for modern snapshots / fresh builds). A query against one of these
-    * may be a typo the union is hiding — [[graft.exec.BlockMax]] warns. */
-  lazy val legacyAssumedFields: Set[String] =
-    if (indexedFieldsOpt.isDefined) Set.empty
-    else Index.DefaultFields -- stats.fields.keySet
+  /** (term, field, df, ctf): the per-block df/ctf of [[blocks]], summed
+    * per (term, field) — exact, since a posting lies in one block. Over a
+    * stored snapshot the scan reads those four columns only, never the
+    * encoded postings. */
+  lazy val termStats: DataFrame = {
+    import org.apache.spark.sql.functions.{col, sum}
+    blocks.groupBy("term", "field")
+      .agg(sum(col("df")).as("df"), sum(col("ctf")).as("ctf"))
+  }
 
   /** The term dictionary and the extid map: built once, from `termStats`
     * and `docs`, on first use, then read by every query instead of a
@@ -202,17 +195,12 @@ final class Index(
   }
 
   def cacheAll(): Index = {
-    docs.cache(); postings.cache(); doclen.cache(); termStats.cache()
+    docs.cache(); postings.cache(); doclen.cache()
     this
   }
 }
 
 object Index {
-  /** The reference's full field set (`QryEval/src/QryEval.java:467`) —
-    * the legacy-snapshot fallback for [[Index.indexedFields]]. */
-  val DefaultFields: Set[String] =
-    Set("body", "title", "url", "inlink", "keywords")
-
   /** Forward index of in-memory postings — reference `TermVector`
     * (`QryEval/src/TermVector.java:19-89`): the postings are exchanged by
     * docid, sorted by (docid, field, term) within each partition and fed

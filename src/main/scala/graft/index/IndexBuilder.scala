@@ -176,25 +176,15 @@ object IndexBuilder {
       .select(col("docid"), col("ft.field").as("field"), col("ft.text").as("text"))
   }
 
-  /** Derivations from the postings table — everything downstream of the
-    * single tokenize pass reads columnar postings, never the corpus:
-    *
-    *  - doclen: `len = Σ tf` over a doc's terms (token count surviving
-    *    the analyzer = Lucene-norm semantics,
-    *    `QryEval/src/DocLenStoreSimilarity.java:29-36`)
-    *  - termStats: exact global df/ctf (SURVEY §1.5) — two-stage
-    *    (salted partial → global) via Spark's partial aggregation;
-    *    pure sums/counts, so exact.
-    */
+  /** doclen from the postings table — downstream of the single tokenize
+    * pass, it reads columnar postings, never the corpus: `len = Σ tf`
+    * over a doc's terms (token count surviving the analyzer = Lucene-norm
+    * semantics, `QryEval/src/DocLenStoreSimilarity.java:29-36`). */
   def doclenOf(postings: DataFrame): DataFrame =
     if (postings.columns.contains("len"))
       postings.groupBy("docid", "field").agg(first(col("len")).as("len"))
     else
       postings.groupBy("docid", "field").agg(sum(col("tf")).as("len"))
-
-  def termStatsOf(postings: DataFrame): DataFrame =
-    postings.groupBy("term", "field")
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"))
 
   /** Global statistics from docs + doclen (exact aggregates). Called
     * lazily — only when a scorer first needs them. */
@@ -218,11 +208,12 @@ object IndexBuilder {
 
     // Shuffle-free posting construction: one tokenize pass, rows leave
     // the scan in final posting shape. This is the ONLY pass over the
-    // corpus text: doclen, termStats, stats, and the compressed blocks
-    // all derive from postings (re-read from parquet when persisted —
-    // see IndexStore.save). Downstream shuffles (the segment-layout
-    // write, termStats aggregation) operate on the compact posting rows;
-    // hot-term skew is absorbed there by the docid-bucket salt.
+    // corpus text: doclen, stats, and the compressed blocks (and with
+    // them the term statistics) all derive from postings (re-read from
+    // parquet when persisted — see IndexStore.save). Downstream shuffles
+    // (the segment-layout write, the block derivation) operate on the
+    // compact posting rows; hot-term skew is absorbed there by the
+    // docid-bucket salt.
     val postings = fieldText(docsAll, cfg.fields)
       .select(col("docid"), col("field"),
         explode(docTermsUdf(cfg.analyzer)(col("text"))).as("dt"))
@@ -231,9 +222,8 @@ object IndexBuilder {
         col("dt._3").as("len"))
 
     val doclen = doclenOf(postings)
-    new Index(spark, docs, postings, doclen, termStatsOf(postings),
+    new Index(spark, docs, postings, doclen,
       statsThunk = () => statsOf(docs, doclen), buckets = buckets,
-      indexedFieldsOpt = Some(cfg.fields),
-      analyzerOpt = Some(cfg.analyzer))
+      indexedFields = cfg.fields.toSet, analyzer = cfg.analyzer)
   }
 }

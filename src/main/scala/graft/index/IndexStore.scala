@@ -16,14 +16,17 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * dir/
   *   postings_blocks/segment=K/  the postings, stored once: delta-gap +
   *                         varbyte blocks, one file per segment
-  *   docs/  doclen/  termstats/
+  *                         with per-block df/ctf ([[Index.termStats]])
+  *   docs/  doclen/
   *   fwdindex/segment=K/   forward index (TermVector analog)
   *   manifest/             per-(table, segment) lineage + metrics rows
-  *   stats.json            global statistics (exact aggregates)
+  *   stats.json            global statistics (exact aggregates), the
+  *                         bucket count, the indexed fields and the
+  *                         analyzer identity
   *   _done_<table>         per-table checkpoint markers (resume points)
   *   SNAPSHOT.json         atomic commit record — written LAST, with each
   *                         committed table's bytes; a load refuses a dir
-  *                         without it
+  *                         without it, and a table whose bytes differ
   * ```
   *
   * Every table is written with one codec, [[Codec]]. The row-form
@@ -42,7 +45,7 @@ object IndexStore {
   /** The committed tables, each recorded with its bytes in
     * SNAPSHOT.json. */
   private val Tables =
-    Seq("docs", "postings_blocks", "doclen", "termstats", "fwdindex")
+    Seq("docs", "postings_blocks", "doclen", "fwdindex")
 
   /** The sorted row-form postings every derived table streams off,
     * deleted before the commit. */
@@ -50,7 +53,7 @@ object IndexStore {
 
   /** The tables read back from [[Staging]]. */
   private val Derived =
-    Seq("doclen", "termstats", "postings_blocks", "fwdindex", "manifest")
+    Seq("doclen", "postings_blocks", "fwdindex", "manifest")
 
   /** The Parquet codec of every snapshot table. zstd, not Spark's
     * default snappy: at 1,000 docs it halves the committed bytes (the
@@ -153,10 +156,6 @@ object IndexStore {
     val derived = Seq(
       doclenF,
       docsF,
-      Future(grouped(writeTable("termstats") {
-        writer(IndexBuilder.termStatsOf(postingsOnDisk))
-          .parquet(s"$dir/termstats")
-      })),
       // the compressed serving form (north rule: delta-gap + varbyte
       // blocks with block-max metadata) — the one stored form of the
       // postings, partitioned like the staging table. Streamed straight
@@ -217,7 +216,7 @@ object IndexStore {
     Files.deleteIfExists(marker(dir, Staging))
 
     writeStats(stats, s"$dir/stats.json", index.buckets,
-      index.indexedFields.toSeq.sorted, index.analyzerOpt)
+      index.indexedFields.toSeq.sorted, index.analyzer)
 
     // atomic commit: tmp + move
     val bytes = Tables.map(t => s""""$t":${tableBytes(s"$dir/$t")}""")
@@ -246,29 +245,44 @@ object IndexStore {
     require(exists(dir), s"no committed index snapshot at $dir")
     val (stats, buckets, indexedFields, analyzer) =
       readStats(s"$dir/stats.json")
-    val blocks = readBlocks(spark, s"$dir/postings_blocks")
+    val blocks = readBlocks(spark, dir)
     new Index(spark,
       spark.read.parquet(s"$dir/docs"),
       // the postings are stored once, as blocks: the row form is decoded
       // from them, after any term/field filter on it reaches the scan
       PostingBlocks.toPostings(blocks),
       spark.read.parquet(s"$dir/doclen"),
-      spark.read.parquet(s"$dir/termstats"),
       statsThunk = () => stats,
-      blocksOpt = Some(blocks),
       buckets = buckets,
-      indexedFieldsOpt =
-        if (indexedFields.nonEmpty) Some(indexedFields) else None,
-      // legacy snapshots (pre-round-4) carry no fwdindex table — fall
-      // back to on-demand derivation from postings
-      fwdIndexStoredOpt =
-        if (Files.exists(Paths.get(dir, "fwdindex")))
-          Some(spark.read.parquet(s"$dir/fwdindex")
-            .withColumn("segment", col("segment").cast("long"))
-            .select("docid", "field", "stems", "stemFreq", "positions",
-              "segment"))
-        else None,
-      analyzerOpt = analyzer)
+      indexedFields = indexedFields.toSet,
+      analyzer = analyzer,
+      blocksOpt = Some(blocks),
+      fwdIndexStoredOpt = Some(spark.read.parquet(s"$dir/fwdindex")
+        .withColumn("segment", col("segment").cast("long"))
+        .select("docid", "field", "stems", "stemFreq", "positions",
+          "segment")))
+  }
+
+  /** Refuses a snapshot whose SNAPSHOT.json does not parse, or a table
+    * that no longer holds the bytes it records (a truncated, torn or
+    * deleted file). Metadata only: no data is read. */
+  private def checkTableBytes(dir: String): Unit = {
+    val path = Paths.get(dir, "SNAPSHOT.json")
+    val Snap = ("""\{"snapshotId":\d+,"formatVersion":\d+,"tables":\[[^\]]*\],""" +
+      """"tableBytes":\{([^}]*)\},"numDocs":\d+\}""").r
+    val recorded = Files.readString(path).trim match {
+      case Snap(bytes) => """"(\w+)":(\d+)""".r.findAllMatchIn(bytes)
+      case _ => throw new IllegalArgumentException(
+        s"corrupt index snapshot: $path does not parse; rebuild the snapshot")
+    }
+    recorded.foreach { m =>
+      val (t, table) = (m.group(1), Paths.get(dir, m.group(1)))
+      val actual = if (Files.isDirectory(table)) tableBytes(table.toString) else -1L
+      require(actual == m.group(2).toLong,
+        s"corrupt index snapshot: table $t under $dir " +
+        (if (actual < 0) "is missing" else s"holds $actual bytes") +
+        s", but $path records ${m.group(2)}; rebuild the snapshot")
+    }
   }
 
   /** The stored block table, read so that every scan partition holds
@@ -278,9 +292,12 @@ object IndexStore {
     * would split a segment across tasks and silently corrupt rankings,
     * so it is refused here. No file is split: every file counts at least
     * the largest file's size, so the scan packs whole files into about
-    * `defaultParallelism` partitions. */
-  private def readBlocks(spark: SparkSession, dir: String)
+    * `defaultParallelism` partitions. The snapshot's table bytes are
+    * checked ([[checkTableBytes]]) before Spark opens any file, so a
+    * torn file is refused by name rather than failing a footer read. */
+  private def readBlocks(spark: SparkSession, snapshot: String)
       : org.apache.spark.sql.Dataset[PostingBlock] = {
+    val dir = s"$snapshot/postings_blocks"
     import scala.jdk.CollectionConverters._
     def visible(p: java.nio.file.Path) = {
       val n = p.getFileName.toString
@@ -297,6 +314,7 @@ object IndexStore {
         "task reads the whole segment; rebuild the snapshot")
       Files.size(files.head)
     }.foldLeft(4L << 20)(math.max)
+    checkTableBytes(snapshot)
     val s2 = PostingBlocks.wholeFileSession(spark, largest)
     import s2.implicits._
     s2.read.parquet(dir)
@@ -307,9 +325,8 @@ object IndexStore {
       .as[PostingBlock]
   }
 
-  def writeStats(stats: IndexStats, path: String, buckets: Int = 64,
-                 indexedFields: Seq[String] = Seq.empty,
-                 analyzer: Option[AnalyzerConfig] = None): Unit = {
+  def writeStats(stats: IndexStats, path: String, buckets: Int,
+                 indexedFields: Seq[String], analyzer: AnalyzerConfig): Unit = {
     val fields = stats.fields.values.map(f =>
       s"""{"field":"${f.field}","docCount":${f.docCount},""" +
       s""""collectionLength":${f.collectionLength}}""").mkString(",")
@@ -317,62 +334,64 @@ object IndexStore {
     // the analyzer IDENTITY is part of the snapshot: a snapshot queried
     // with a differently-configured analyzer silently mismatches stems
     // and stopwords (round-4 ADVICE) — SearchEngine validates this field.
-    val an = analyzer.map { a =>
-      val stem = a.stemming match {
-        case Stemming.None  => "none"
-        case Stemming.SStem => "sstem"
-        case Stemming.KStem => "kstem"
-      }
-      // stats.json is hand-rolled JSON read back by regex: a stopword
-      // containing a quote, backslash, or bracket would either corrupt
-      // the file or silently truncate the parse — and a silently-dropped
-      // analyzer record defeats the mismatch guard this field exists
-      // for. Stopwords are analyzer-produced tokens (never those chars
-      // in practice), so fail LOUDLY at save rather than escape.
-      a.stopwords.find(w => w.exists(c => c == '"' || c == '\\' ||
-          c == '[' || c == ']')).foreach { bad =>
-        throw new IllegalArgumentException(
-          s"stopword '$bad' contains JSON-breaking characters " +
-          "(\" \\ [ ]) and cannot be recorded in the snapshot's " +
-          "analyzer identity")
-      }
-      val stops = a.stopwords.toSeq.sorted.map("\"" + _ + "\"").mkString(",")
-      s""","analyzer":{"stemming":"$stem","stopwords":[$stops]}"""
-    }.getOrElse("")
+    val stem = analyzer.stemming match {
+      case Stemming.None  => "none"
+      case Stemming.SStem => "sstem"
+      case Stemming.KStem => "kstem"
+    }
+    // stats.json is hand-rolled JSON read back by regex: a stopword
+    // containing a quote, backslash, or bracket would either corrupt the
+    // file or silently truncate the parse — and a silently-dropped
+    // analyzer record defeats the mismatch guard this field exists for.
+    // Stopwords are analyzer-produced tokens (never those chars in
+    // practice), so fail LOUDLY at save rather than escape.
+    analyzer.stopwords.find(w => w.exists(c => c == '"' || c == '\\' ||
+        c == '[' || c == ']')).foreach { bad =>
+      throw new IllegalArgumentException(
+        s"stopword '$bad' contains JSON-breaking characters " +
+        "(\" \\ [ ]) and cannot be recorded in the snapshot's " +
+        "analyzer identity")
+    }
+    val stops = analyzer.stopwords.toSeq.sorted.map("\"" + _ + "\"").mkString(",")
     Files.writeString(Paths.get(path),
       s"""{"numDocs":${stats.numDocs},"buckets":$buckets,""" +
-      s""""indexedFields":[$idxf]$an,"fields":[$fields]}""")
+      s""""indexedFields":[$idxf],""" +
+      s""""analyzer":{"stemming":"$stem","stopwords":[$stops]},""" +
+      s""""fields":[$fields]}""")
   }
 
+  /** (stats, bucket count, indexed fields, analyzer) of a stats.json.
+    * Every one is required: a snapshot that records no bucket count,
+    * indexed fields or analyzer predates them and must be rebuilt. */
   def readStats(path: String)
-      : (IndexStats, Int, Seq[String], Option[AnalyzerConfig]) = {
+      : (IndexStats, Int, Seq[String], AnalyzerConfig) = {
     val s = Files.readString(Paths.get(path))
-    val numDocs = """"numDocs":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-    val buckets = """"buckets":(\d+)""".r.findFirstMatchIn(s)
-      .map(_.group(1).toInt).getOrElse(64)
-    val idxf = """"indexedFields":\[([^\]]*)\]""".r.findFirstMatchIn(s)
-      .map(m => """"([^"]+)"""".r.findAllMatchIn(m.group(1))
-        .map(_.group(1)).toSeq)
-      .getOrElse(Seq.empty)
-    val analyzer =
-      """"analyzer":\{"stemming":"(\w+)","stopwords":\[([^\]]*)\]\}""".r
-        .findFirstMatchIn(s).map { m =>
-          val stem = m.group(1) match {
-            case "none"  => Stemming.None
-            case "sstem" => Stemming.SStem
-            case "kstem" => Stemming.KStem
-            case other => throw new IllegalStateException(
-              s"$path records unknown stemming variant '$other'")
-          }
-          val stops = """"([^"]+)"""".r.findAllMatchIn(m.group(2))
-            .map(_.group(1)).toSet
-          AnalyzerConfig(stopwords = stops, stemming = stem)
-        }
+    def find(re: String, what: String) = re.r.findFirstMatchIn(s).getOrElse(
+      throw new IllegalArgumentException(
+        s"$path records no $what; the index snapshot predates it — rebuild it"))
+    val numDocs = find(""""numDocs":(\d+)""", "numDocs").group(1).toLong
+    val buckets = find(""""buckets":(\d+)""", "buckets").group(1).toInt
+    val idxf = """"([^"]+)"""".r.findAllMatchIn(
+        find(""""indexedFields":\[([^\]]+)\]""", "indexedFields").group(1))
+      .map(_.group(1)).toSeq
+    val an = find(
+      """"analyzer":\{"stemming":"(\w+)","stopwords":\[([^\]]*)\]\}""",
+      "analyzer")
+    val stem = an.group(1) match {
+      case "none"  => Stemming.None
+      case "sstem" => Stemming.SStem
+      case "kstem" => Stemming.KStem
+      case other => throw new IllegalStateException(
+        s"$path records unknown stemming variant '$other'")
+    }
+    val stops = """"([^"]+)"""".r.findAllMatchIn(an.group(2))
+      .map(_.group(1)).toSet
     val fieldRe =
       """\{"field":"([^"]+)","docCount":(\d+),"collectionLength":(\d+)\}""".r
     val fields = fieldRe.findAllMatchIn(s).map { m =>
       m.group(1) -> FieldStats(m.group(1), m.group(2).toLong, m.group(3).toLong)
     }.toMap
-    (IndexStats(numDocs, fields), buckets, idxf, analyzer)
+    (IndexStats(numDocs, fields), buckets, idxf,
+      AnalyzerConfig(stopwords = stops, stemming = stem))
   }
 }

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *  - blockId orders the ≤ blockSize-posting blocks within a segment;
   *  - firstDocid/lastDocid bound the block (skip without decode);
   *  - df/ctf are per-block counts (sum over blocks = per-(term,field,
-  *    segment) totals; global df/ctf live in termStats);
+  *    segment) totals, and over every segment the global df/ctf,
+  *    [[Index.termStats]]);
   *  - maxTf/minLen/maxLen bound any posting's BM25 contribution: tf-weight
   *    is increasing in tf and decreasing in docLen, so
   *    `tfW(maxTf, minLen)` (rsj ≥ 0) / `tfW(1, maxLen)` (rsj < 0) bounds

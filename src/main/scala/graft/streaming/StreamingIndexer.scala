@@ -55,8 +55,7 @@ object StreamingIndexer {
     // Staged like IndexStore.save: the batch text is tokenized EXACTLY
     // ONCE (the postings write); doclen/stats derive from the persisted
     // columnar postings. Writing each table from the in-memory lineage
-    // instead would re-run the tokenize UDF per table. No termstats:
-    // loadMerged aggregates them over the merged postings.
+    // instead would re-run the tokenize UDF per table.
     Files.createDirectories(Paths.get(segDir))
     rebase(idx.postings).write.mode("overwrite").parquet(s"$segDir/postings")
     IndexBuilder.doclenOf(spark.read.parquet(s"$segDir/postings"))
@@ -69,7 +68,7 @@ object StreamingIndexer {
       spark.read.parquet(s"$segDir/docs"),
       spark.read.parquet(s"$segDir/doclen"))
     IndexStore.writeStats(segStats, s"$segDir/stats.json",
-      cfg.buckets, cfg.fields, Some(cfg.analyzer))
+      cfg.buckets, cfg.fields, cfg.analyzer)
     // manifest row: per-segment lineage + build metrics (north rule)
     val m = s"""{"segment":$batchId,"numDocs":${segStats.numDocs},""" +
       s""""committedAtMs":${System.currentTimeMillis()}}"""
@@ -109,7 +108,8 @@ object StreamingIndexer {
   }
 
   /** Merge all committed segments into one queryable [[Index]] — exact
-    * global statistics via associative aggregates. */
+    * global statistics via associative aggregates; the term statistics
+    * sum the merged block table ([[Index.termStats]]). */
   def loadMerged(spark: SparkSession, dir: String): Index = {
     val segs = committedSegments(dir)
     require(segs.nonEmpty, s"no committed streaming segments under $dir")
@@ -119,47 +119,29 @@ object StreamingIndexer {
     val postings = table("postings")
     val doclen = table("doclen")
     val docs = table("docs")
-    val termStats = IndexBuilder.termStatsOf(postings)
     val recorded = segs.map(b => IndexStore.readStats(s"$dir/seg=$b/stats.json"))
-    // The bucket count and the indexed fields ride with every segment's
-    // stats.json: without them a merged index would accept the default
-    // fields and compact to the default bucket count.
+    // The bucket count, the indexed fields and the analyzer ride with
+    // every segment's stats.json (readStats refuses a segment missing
+    // one): without them a merged index would compact to another bucket
+    // count, accept fields it never indexed, or stem queries unlike its
+    // vocabulary — the query-time guards need exactly one of each.
     val buckets = recorded.map(_._2).distinct
     require(buckets.size == 1,
       s"streaming segments under $dir record bucket counts " +
       s"${buckets.mkString(", ")} — they cannot be merged")
-    val fields = recorded.map(_._3).filter(_.nonEmpty).distinct
-    require(fields.size <= 1,
+    val fields = recorded.map(_._3).distinct
+    require(fields.size == 1,
       s"streaming segments under $dir record indexed fields " +
       s"${fields.map(_.mkString("[", ",", "]")).mkString(", ")} — they " +
       "cannot be merged")
-    // Analyzer identity rides there too (same field SearchEngine
-    // validates for batch snapshots): segments stemmed with different
-    // analyzers cannot be merged into one queryable vocabulary, and a
-    // merged index with no recorded analyzer would wrongly trip — or
-    // wrongly pass — the query-time mismatch guard.
-    val analyzers = recorded.map(_._4)
-    val distinctRecorded = analyzers.flatten.distinct
-    require(distinctRecorded.size <= 1,
-      s"streaming segments under $dir record ${distinctRecorded.size} " +
+    val analyzers = recorded.map(_._4).distinct
+    require(analyzers.size == 1,
+      s"streaming segments under $dir record ${analyzers.size} " +
       "different analyzer configs — they were built by different streams " +
       "and cannot be merged")
-    val legacy = segs.zip(analyzers).collect { case (b, None) => b }
-    // a legacy segment predates analyzer recording: nothing to check its
-    // vocabulary against, so the merge records none either
-    if (legacy.nonEmpty && distinctRecorded.nonEmpty)
-      System.err.println(s"[graft] WARNING: streaming segments under $dir " +
-        s"mix recorded analyzers with legacy segments ${legacy.mkString(",")}" +
-        " that record none; the merged index records no analyzer, so " +
-        "SearchEngine's analyzer guard is OFF for it until the legacy " +
-        "segments are rebuilt")
-    val analyzer = if (legacy.isEmpty) distinctRecorded.headOption else None
-    new Index(spark, docs, postings, doclen, termStats,
+    new Index(spark, docs, postings, doclen,
       statsThunk = () => IndexBuilder.statsOf(docs, doclen),
-      buckets = buckets.head,
-      // a legacy segment records no fields: the legacy fallback applies
-      indexedFieldsOpt =
-        if (recorded.exists(_._3.isEmpty)) None else fields.headOption,
-      analyzerOpt = analyzer)
+      buckets = buckets.head, indexedFields = fields.head.toSet,
+      analyzer = analyzers.head)
   }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funspec.AnyFunSpec
 
 /** A long-lived serving process must not accrete executor storage: a
   * query persists nothing that outlives it. The index's own tables
-  * (postings, doclen, termStats, docs and the derived block table) are
+  * (postings, doclen, docs and the derived block table) are
   * persisted once per index; every query reads them and leaves the
   * persisted-RDD count where it found it — boolean queries too, whose
   * constant scores tie many docs at the k-th score. LeToR candidate

@@ -39,6 +39,25 @@ class IndexStoreSpec extends AnyFunSpec {
   private def collectSet(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
 
+  private def copyOf(src: Path): Path = {
+    val dst = freshDir()
+    Files.walk(src).iterator().asScala.foreach { p =>
+      val to = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else Files.copy(p, to)
+    }
+    dst
+  }
+
+  /** Deletes the first match of `re` from a snapshot's stats.json. */
+  private def dropFromStats(dir: Path, re: String): Unit = {
+    val f = dir.resolve("stats.json")
+    val s = Files.readString(f)
+    val cut = re.r.replaceFirstIn(s, "")
+    assert(cut != s, s"$re not in $s")
+    Files.writeString(f, cut)
+  }
+
   describe("IndexStore snapshot + resume (north rule: per-partition checkpoints)") {
     lazy val idx = IndexBuilder.build(spark, CorpusGen.df(spark, 100),
       IndexConfig(buckets = 4))
@@ -68,13 +87,13 @@ class IndexStoreSpec extends AnyFunSpec {
     }
 
     it("records the analyzer identity and refuses a mismatched query config") {
-      import graft.analysis.{AnalyzerConfig, Stemming}
+      import graft.analysis.AnalyzerConfig
       val dir = freshDir().toString
       val eidx = IndexBuilder.build(spark, CorpusGen.df(spark, 30),
         IndexConfig(analyzer = AnalyzerConfig.english, buckets = 2))
       IndexStore.save(eidx, dir)
       val loaded = IndexStore.load(spark, dir)
-      assert(loaded.analyzerOpt.contains(AnalyzerConfig.english))
+      assert(loaded.analyzer == AnalyzerConfig.english)
       // matching config constructs fine
       new graft.api.SearchEngine(loaded, AnalyzerConfig.english)
       // differently-stemmed config fails loudly instead of silently
@@ -83,21 +102,43 @@ class IndexStoreSpec extends AnyFunSpec {
         new graft.api.SearchEngine(loaded, AnalyzerConfig.code)
       }
       assert(e1.getMessage.contains("analyzer mismatch"))
-      // a legacy snapshot (no analyzer field) refuses the KStem profile
-      val statsPath = Paths.get(dir, "stats.json")
-      val legacy = Files.readString(statsPath)
-        .replaceAll(""","analyzer":\{[^}]*\}""", "")
-      Files.writeString(statsPath, legacy)
-      val legacyIdx = IndexStore.load(spark, dir)
-      assert(legacyIdx.analyzerOpt.isEmpty)
-      val e2 = intercept[IllegalArgumentException] {
-        new graft.api.SearchEngine(legacyIdx, AnalyzerConfig.english)
-      }
-      assert(e2.getMessage.contains("predates analyzer recording"))
-      // ...but still serves the safe profiles
-      new graft.api.SearchEngine(legacyIdx, AnalyzerConfig.code)
-      new graft.api.SearchEngine(legacyIdx, AnalyzerConfig.englishLight)
       rmTree(Paths.get(dir))
+    }
+
+    it("refuses a snapshot that records no analyzer, fields or bucket " +
+       "count, or has no fwdindex, naming what is missing") {
+      val cases = Seq[(String, Path => Unit)](
+        "records no analyzer" ->
+          (d => dropFromStats(d, ""","analyzer":\{[^}]*\}""")),
+        "records no indexedFields" ->
+          (d => dropFromStats(d, ""","indexedFields":\[[^\]]*\]""")),
+        "records no buckets" -> (d => dropFromStats(d, ""","buckets":\d+""")),
+        "table fwdindex" -> (d => rmTree(d.resolve("fwdindex"))))
+      cases.foreach { case (expected, damage) =>
+        val dir = copyOf(saved)
+        damage(dir)
+        val e = intercept[IllegalArgumentException](
+          IndexStore.load(spark, dir.toString))
+        assert(e.getMessage.contains(expected), e.getMessage)
+        rmTree(dir)
+      }
+    }
+
+    it("refuses a torn table or an unparseable SNAPSHOT.json at load") {
+      def truncated(file: Path => Path): String = {
+        val dir = copyOf(saved)
+        val f = file(dir)
+        Files.write(f, Files.readAllBytes(f).dropRight(7))
+        try intercept[IllegalArgumentException](
+          IndexStore.load(spark, dir.toString)).getMessage
+        finally rmTree(dir)
+      }
+      val torn = truncated(d => Files.walk(d.resolve("postings_blocks"))
+        .iterator().asScala.find(_.getFileName.toString.endsWith(".parquet"))
+        .get)
+      assert(torn.contains("table postings_blocks"), torn)
+      val unparsed = truncated(_.resolve("SNAPSHOT.json"))
+      assert(unparsed.contains("SNAPSHOT.json does not parse"), unparsed)
     }
 
     it("fwdVectors over a snapshot is a partition-pruned point read " +
@@ -141,7 +182,7 @@ class IndexStoreSpec extends AnyFunSpec {
       Files.delete(dir.resolve("_done_doclen"))
       rmTree(dir.resolve("doclen"))
 
-      val committed = Seq("docs", "postings_blocks", "termstats", "fwdindex")
+      val committed = Seq("docs", "postings_blocks", "fwdindex")
       def mtimes = committed.map(t => t -> Files.getLastModifiedTime(dir.resolve(t)))
       val mtimeBefore = mtimes
       IndexStore.save(idx, dir.toString) // resume
@@ -205,7 +246,8 @@ class IndexStoreSpec extends AnyFunSpec {
           !f.getFileName.toString.endsWith(".crc"))
         .map(f => Files.size(f)).sum
       assert(recorded.keySet ==
-        Set("docs", "postings_blocks", "doclen", "termstats", "fwdindex"))
+        Set("docs", "postings_blocks", "doclen", "fwdindex"))
+      assert(!Files.exists(saved.resolve("termstats")))
       recorded.foreach { case (t, b) => assert(b == bytes(saved.resolve(t)), t) }
       assert(recorded.values.sum ==
         recorded.keys.toSeq.map(t => bytes(saved.resolve(t))).sum)

@@ -100,14 +100,32 @@ class PostingCodecSpec extends AnyFunSpec {
           assert(p.docid >> IndexBuilder.BucketShift == b.segment))
       }
 
-      // per-(term,field) sums over blocks == global termStats (df, ctf)
-      val fromBlocks = blocks.groupBy($"term", $"field")
-        .agg(org.apache.spark.sql.functions.sum($"df").as("df"),
-             org.apache.spark.sql.functions.sum($"ctf").as("ctf"))
+    }
+
+    it("termStats (summed over the blocks) = df/ctf counted over the " +
+       "postings, in memory and stored; the stored scan reads only " +
+       "term, field, df and ctf") {
+      import spark.implicits._
+      import org.apache.spark.sql.functions.{count, lit, sum}
+      val idx = IndexBuilder.build(spark, CorpusGen.df(spark, 120),
+        IndexConfig(buckets = 4))
+      def rows(i: graft.index.Index) = i.termStats
+        .select($"term", $"field", $"df", $"ctf")
         .as[(String, String, Long, Long)].collect().toSet
-      val fromStats = idx.termStats
+      val counted = idx.postings.groupBy($"term", $"field")
+        .agg(count(lit(1)).as("df"), sum($"tf").as("ctf"))
         .as[(String, String, Long, Long)].collect().toSet
-      assert(fromBlocks == fromStats)
+      assert(rows(idx) == counted)
+      val dir = graft.util.Scratch.dir("codec-termstats-")
+      graft.index.IndexStore.save(idx, dir)
+      val stored = graft.index.IndexStore.load(spark, dir)
+      assert(rows(stored) == counted)
+      val scans = stored.termStats.queryExecution.executedPlan.toString
+        .split("\n").filter(_.contains("FileScan")).toSeq
+      assert(scans.size == 1 && scans.head.contains(
+        "ReadSchema: struct<term:string,field:string,df:int,ctf:bigint>"),
+        scans)
+      graft.util.Scratch.deleteRecursively(dir)
     }
 
     it("fromSortedPostings ≡ fromPostings over a persisted snapshot") {

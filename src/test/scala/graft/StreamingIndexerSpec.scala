@@ -99,7 +99,7 @@ class StreamingIndexerSpec extends AnyFunSpec {
       StreamingIndexer.processBatch(dir, english)(
         CorpusGen.docs(30).drop(20).toDF(), 1L)
       val merged = StreamingIndexer.loadMerged(spark, dir)
-      assert(merged.analyzerOpt.contains(AnalyzerConfig.english))
+      assert(merged.analyzer == AnalyzerConfig.english)
       // the profile the index was built with is queryable...
       new SearchEngine(merged, AnalyzerConfig.english)
       // ...and a mismatched profile fails loudly instead of silently
@@ -123,8 +123,7 @@ class StreamingIndexerSpec extends AnyFunSpec {
       assert(e.getMessage.contains("different analyzer"))
     }
 
-    it("warns that the analyzer guard is off when recorded and legacy " +
-       "segments are merged") {
+    it("refuses a segment that records no analyzer") {
       import spark.implicits._
       val dir = Files.createTempDirectory("graft-stream7-").toString
       val english = IndexConfig(AnalyzerConfig.english, buckets = 8)
@@ -132,24 +131,15 @@ class StreamingIndexerSpec extends AnyFunSpec {
         CorpusGen.docs(10).toDF(), 0L)
       StreamingIndexer.processBatch(dir, english)(
         CorpusGen.docs(20).drop(10).toDF(), 1L)
-      // rewrite segment 1's stats.json as a legacy segment would have it:
-      // no analyzer record
-      val statsPath = s"$dir/seg=1/stats.json"
-      val (stats, buckets, fields, _) =
-        graft.index.IndexStore.readStats(statsPath)
-      graft.index.IndexStore.writeStats(stats, statsPath, buckets, fields)
-      val err = new java.io.ByteArrayOutputStream()
-      val stderr = System.err
-      System.setErr(new java.io.PrintStream(err, true))
-      val merged =
-        try StreamingIndexer.loadMerged(spark, dir)
-        finally System.setErr(stderr)
-      assert(merged.analyzerOpt.isEmpty)
-      val warning = err.toString
-      assert(warning.contains("analyzer guard is OFF"), warning)
-      assert(warning.contains("legacy segments 1 "), warning)
-      // the guard is off indeed: a mismatched profile is not refused
-      new SearchEngine(merged, AnalyzerConfig.code)
+      // segment 1's stats.json without its analyzer record: merging it
+      // would leave the query-time analyzer guard nothing to check
+      val statsPath = java.nio.file.Paths.get(dir, "seg=1", "stats.json")
+      Files.writeString(statsPath, Files.readString(statsPath)
+        .replaceFirst(""","analyzer":\{[^}]*\}""", ""))
+      val e = intercept[IllegalArgumentException](
+        StreamingIndexer.loadMerged(spark, dir))
+      assert(e.getMessage.contains("seg=1/stats.json records no analyzer"),
+        e.getMessage)
     }
 
     it("a merged index keeps its segments' indexed fields and bucket " +
